@@ -89,6 +89,18 @@ def _corpus_marker(binlog_dir: str, *knobs: object) -> str:
     return f"{binlog_dir}.{_fixture_hash(*knobs)}.complete"
 
 
+def _reset_corpus(binlog_dir: str) -> None:
+    """Clear a corpus before regenerating it, with every completion marker
+    of earlier writers: a stale marker would vouch for these new bytes
+    if the fixture hash ever returned to its old value."""
+    import glob
+    import shutil
+
+    shutil.rmtree(binlog_dir, ignore_errors=True)
+    for marker in glob.glob(f"{glob.escape(binlog_dir)}.*.complete"):
+        os.remove(marker)
+
+
 def _ensure_e2e_oracle_parquet() -> str:
     """Dual-write the generated changelog as logical change rows so DuckDB
     can replay the same stream in SQL (fixtures.changelog_to_pandas)."""
@@ -119,9 +131,7 @@ def _ensure_e2e_binlog(
         compress, text_wire, widen,
     )
     if not os.path.exists(done_marker):
-        import shutil
-
-        shutil.rmtree(binlog_dir, ignore_errors=True)
+        _reset_corpus(binlog_dir)
         txns = generate_changelog(**_E2E_KNOBS)
         paths = write_binlog_files(
             txns, binlog_dir, txns_per_file=40,
@@ -244,7 +254,8 @@ def cdc_stream_apply_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = stream_apply(
         spark, changelog, store, available_now=True, max_files_per_trigger=8
     )
-    q.awaitTermination(600)
+    if not q.awaitTermination(600):
+        raise TimeoutError("stream_apply run 1 did not finish within 600 s")
     # run 2: the older half arrives LATE against the same checkpoint —
     # rank-based merge must not let it regress any key
     write_changelog(
@@ -254,7 +265,8 @@ def cdc_stream_apply_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     q2 = stream_apply(
         spark, changelog, store, available_now=True, max_files_per_trigger=8
     )
-    q2.awaitTermination(600)
+    if not q2.awaitTermination(600):
+        raise TimeoutError("stream_apply run 2 did not finish within 600 s")
     changes.unpersist()
     return read_stream_state(spark, store).select(
         "conv_id", "turn_idx", "role", "text",
@@ -372,9 +384,7 @@ def _ensure_ignore_server_binlog() -> str:
         binlog_dir, _E2E_KNOBS, 40, _FOREIGN_SERVER_ID
     )
     if not os.path.exists(done_marker):
-        import shutil
-
-        shutil.rmtree(binlog_dir, ignore_errors=True)
+        _reset_corpus(binlog_dir)
         txns = generate_changelog(**_E2E_KNOBS)
         write_binlog_files(
             txns, binlog_dir, txns_per_file=40,
@@ -444,9 +454,7 @@ def cdc_replay_default_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     binlog_dir = os.path.join(tempfile.gettempdir(), "cdc_e2e_binlog_default")
     done_marker = _corpus_marker(binlog_dir, _E2E_KNOBS, 40, _DEFAULT_E2E_DDL)
     if not os.path.exists(done_marker):
-        import shutil
-
-        shutil.rmtree(binlog_dir, ignore_errors=True)
+        _reset_corpus(binlog_dir)
         txns = generate_changelog(**_E2E_KNOBS)
         write_binlog_files(
             txns, binlog_dir, txns_per_file=40, row_metadata="minimal",
@@ -585,9 +593,7 @@ def cdc_replay_truncate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     binlog_dir = os.path.join(tempfile.gettempdir(), "cdc_e2e_binlog_truncate")
     done_marker = _corpus_marker(binlog_dir, _TRUNC_KNOBS, 40)
     if not os.path.exists(done_marker):
-        import shutil
-
-        shutil.rmtree(binlog_dir, ignore_errors=True)
+        _reset_corpus(binlog_dir)
         txns = generate_changelog(**_TRUNC_KNOBS)
         write_binlog_files(txns, binlog_dir, txns_per_file=40)
         with open(done_marker, "w") as f:
@@ -653,9 +659,7 @@ def _ensure_rows_query_e2e() -> None:
     done_marker = _corpus_marker(_E2E_RQ_BINLOG_DIR, _E2E_KNOBS, 40, "rq")
     if os.path.exists(done_marker):
         return
-    import shutil
-
-    shutil.rmtree(_E2E_RQ_BINLOG_DIR, ignore_errors=True)
+    _reset_corpus(_E2E_RQ_BINLOG_DIR)
     txns = generate_changelog(**_E2E_KNOBS)
     write_binlog_files(
         txns, _E2E_RQ_BINLOG_DIR, txns_per_file=40, rows_query=True
@@ -729,9 +733,7 @@ def _ensure_partition_e2e() -> None:
     )
     if os.path.exists(done_marker):
         return
-    import shutil
-
-    shutil.rmtree(_E2E_PART_BINLOG_DIR, ignore_errors=True)
+    _reset_corpus(_E2E_PART_BINLOG_DIR)
     txns = generate_changelog(**_E2E_KNOBS)
     write_binlog_files(
         txns, _E2E_PART_BINLOG_DIR, txns_per_file=40, partitions=_E2E_PARTS
@@ -817,9 +819,7 @@ def _ensure_failover_e2e() -> None:
     )
     if os.path.exists(done_marker):
         return
-    import shutil
-
-    shutil.rmtree(_E2E_FAILOVER_BINLOG_DIR, ignore_errors=True)
+    _reset_corpus(_E2E_FAILOVER_BINLOG_DIR)
     write_binlog_files(
         txns, _E2E_FAILOVER_BINLOG_DIR, txns_per_file=40,
         failover=(_E2E_FAILOVER_AT, _E2E_FAILOVER_UUID),
@@ -973,9 +973,7 @@ def _ensure_quarantine_binlog() -> str:
     )
     done = _corpus_marker(binlog_dir, _QUAR_KNOBS, 40, "poison")
     if not os.path.exists(done):
-        import shutil
-
-        shutil.rmtree(binlog_dir, ignore_errors=True)
+        _reset_corpus(binlog_dir)
         txns = generate_changelog(**_QUAR_KNOBS)
         write_binlog_files(txns, binlog_dir, txns_per_file=40)
         t = _quarantine_poison_txn(txns)
@@ -1073,9 +1071,7 @@ def _ensure_multitable_e2e() -> None:
     )
     if os.path.exists(done_marker):
         return
-    import shutil
-
-    shutil.rmtree(_E2E_MULTI_BINLOG_DIR, ignore_errors=True)
+    _reset_corpus(_E2E_MULTI_BINLOG_DIR)
     write_binlog_files(
         txns, _E2E_MULTI_BINLOG_DIR, txns_per_file=40, sidecar=True
     )
@@ -1148,9 +1144,7 @@ def _ensure_xa_e2e() -> None:
     )
     if os.path.exists(done_marker) and os.path.exists(_E2E_XA_ORACLE_PARQUET):
         return
-    import shutil
-
-    shutil.rmtree(_E2E_XA_BINLOG_DIR, ignore_errors=True)
+    _reset_corpus(_E2E_XA_BINLOG_DIR)
     txns = generate_changelog(**_E2E_KNOBS)
     plan = plan_xa_modes(txns, _E2E_XA_TXNS_PER_FILE)
     write_binlog_files(

@@ -32,6 +32,7 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -703,6 +704,135 @@ class _FileDecoder:
         pq.write_table(table, p, filesystem=filesystem)
 
 
+class _LatestPerSegment(AccumulatorParam):
+    """``{segment: facts}`` accumulator merge where the later report wins:
+    a retried or recomputed decode task overwrites its segment's entry
+    instead of adding to it."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, value1, value2):
+        value1.update(value2)
+        return value1
+
+
+def _segment_row_stats(frames, name, covered, min_pos_excl) -> list[dict]:
+    """Per-gtid_source ledger facts of one decoded segment: committed-row
+    count, position bounds, collapsed GTID-seq islands and the newest
+    header timestamp. Applies the filters ``run_batch`` applies in Spark —
+    the ``xid`` gate, the covered-GtidSet anti-join (``covered`` =
+    ``GtidSet.to_intervals()`` tuples) and ``pos > min_pos_excl`` — so
+    the facts count exactly the rows those filters keep. Islands via numpy
+    unique+diff: the distributed form of GtidSet.add_gtid's collapse
+    (uuid_set.rs:29-98)."""
+    if not frames:
+        return []
+    pdf = pd.concat(frames, ignore_index=True)
+    pdf = pdf[pdf["xid"].notna()]
+    if min_pos_excl is not None:
+        pdf = pdf[pdf["pos"] > min_pos_excl]
+    if covered and len(pdf):
+        by_src: dict = {}
+        for uuid, s, e in covered:
+            by_src.setdefault(uuid, []).append((int(s), int(e)))
+        drop = np.zeros(len(pdf), dtype=bool)
+        src_arr = pdf["gtid_source"].to_numpy(dtype=object)
+        seq_arr = pdf["gtid_seq"].to_numpy()
+        for source, ivs in by_src.items():
+            ivs.sort()
+            starts = np.array([i[0] for i in ivs], dtype="int64")
+            ends = np.array([i[1] for i in ivs], dtype="int64")
+            sel = np.nonzero(src_arr == source)[0]
+            if len(sel):
+                sq = seq_arr[sel].astype("int64")
+                k = np.searchsorted(starts, sq, side="right") - 1
+                cov = (k >= 0) & (sq <= ends[np.maximum(k, 0)])
+                drop[sel[cov]] = True
+        pdf = pdf[~drop]
+    out = []
+    for s, g in pdf.groupby("gtid_source", dropna=False, sort=False):
+        if pd.isna(s):
+            s, starts, ends = None, [], []
+        else:
+            seqs = np.unique(g["gtid_seq"].to_numpy(dtype="int64"))
+            breaks = np.nonzero(np.diff(seqs) > 1)[0]
+            starts = seqs[np.concatenate(([0], breaks + 1))].tolist()
+            ends = seqs[np.concatenate((breaks, [len(seqs) - 1]))].tolist()
+        ts_max = g["ts"].max()
+        out.append({
+            "src_file": name,
+            "gtid_source": s,
+            "events": len(g),
+            "min_pos": int(g["pos"].min()),
+            "max_pos": int(g["pos"].max()),
+            "starts": starts,
+            "ends": ends,
+            "max_ts": 0 if pd.isna(ts_max) else int(pd.Timestamp(ts_max).value // 10**9),
+        })
+    return out
+
+
+class SegmentStats:
+    """Ledger facts per segment, reported by the decode task that yields
+    the segment's rows — one decode pass serves both the merge and the
+    ledger. Each task computes its segment's row stats
+    (``_segment_row_stats``) and its TRUNCATE/DROP/RENAME fences
+    (``ddl.scan_truncates`` on the bytes it already holds), both
+    restricted to positions after the resume checkpoint, and adds them to
+    a ``_LatestPerSegment`` accumulator under the segment's name. The
+    driver reads them with ``collect`` after an action has run every
+    decode task. One instance per batch; it empties the accumulator."""
+
+    COLS = ["gtid_source", "gtid_seq", "pos", "xid", "ts"]
+
+    @staticmethod
+    def accumulator(spark: SparkSession):
+        """The accumulator instances report through; create one per
+        long-lived consumer and reuse it (the driver keeps every
+        accumulator registered for the life of the process)."""
+        return spark.sparkContext.accumulator({}, _LatestPerSegment())
+
+    def __init__(self, acc, covered: list, resume_file: str, resume_pos: int):
+        acc.value = {}
+        self.acc = acc
+        self.covered = covered
+        self.resume_key = _segment_sort_key(resume_file) if resume_file else None
+        self.resume_pos = resume_pos
+
+    def report(self, name: str, content: bytes, frames: list, spec) -> None:
+        """Executor side: ``frames`` hold ``COLS`` of every yielded frame.
+        Segments before the resume file contribute nothing (the position
+        predicate drops all their rows)."""
+        rows: list = []
+        fences: list = []
+        key = _segment_sort_key(name)
+        if self.resume_key is None or key >= self.resume_key:
+            from .ddl import scan_truncates
+
+            min_pos_excl = self.resume_pos if key == self.resume_key else None
+            rows = _segment_row_stats(frames, name, self.covered, min_pos_excl)
+            fences = [
+                {**t, "src_file": name}
+                for t in scan_truncates(content, name, spec.database, spec.table)
+                if min_pos_excl is None or t["pos"] > min_pos_excl
+            ]
+        self.acc.add({name: (rows, fences)})
+
+    def collect(self, files: list[str]) -> tuple[list[dict], list[dict]]:
+        """Driver side: (row stats, fences) of ``files``. A segment with no
+        report means its decode task never finished, so the facts would be
+        incomplete: raise rather than commit them."""
+        got = self.acc.value
+        missing = [f for f in files if f not in got]
+        if missing:
+            raise RuntimeError(f"no decode stats reported for segments {missing}")
+        return (
+            [r for f in files for r in got[f][0]],
+            [t for f in files for t in got[f][1]],
+        )
+
+
 def decode_binlog_dir(
     spark: SparkSession,
     binlog_dir: str,
@@ -715,6 +845,7 @@ def decode_binlog_dir(
     attach_partition_id: bool = False,
     on_error: str = "fail",
     quarantine_dir: Optional[str] = None,
+    stats: Optional[SegmentStats] = None,
 ) -> DataFrame:
     """binlog directory → change-event DataFrame (distributed decode).
 
@@ -728,6 +859,9 @@ def decode_binlog_dir(
     decoder for consumers that only read keys + after images (the merge
     pipeline). The scalar fallback always decodes full values (rare, and
     correctness-identical for such consumers).
+
+    ``stats``: each task also reports its segment's ledger facts through
+    this ``SegmentStats`` once it has yielded the segment's last frame.
     """
     # One file = one sequential decode unit, so decode parallelism must be
     # one task per segment. ``binaryFile`` packs small segments into shared
@@ -777,7 +911,6 @@ def decode_binlog_dir(
                             raise
                         frames = None
                 if frames is not None:
-                    yield from frames
                     if quarantine_dir is not None:
                         # fast path decoded the segment clean — drop any
                         # stale dead-letter record a prior run left behind
@@ -788,14 +921,20 @@ def decode_binlog_dir(
                 else:
                     # scalar fallback: constructs the fast path can't
                     # express (rare types, partial images, wide tables)
-                    decoder = _FileDecoder(
+                    frames = _FileDecoder(
                         spec, xa_outcomes=xa_outcomes,
                         attach_origin_query=attach_origin_query,
                         attach_partition_id=attach_partition_id,
                         on_error=on_error,
                         quarantine_dir=quarantine_dir,
-                    )
-                    yield from decoder.decode_file(path, content)
+                    ).decode_file(path, content)
+                seen = []
+                for frame in frames:
+                    if stats is not None:
+                        seen.append(frame[SegmentStats.COLS])
+                    yield frame
+                if stats is not None:
+                    stats.report(name, content, seen, spec)
 
     return pdf_paths.mapInPandas(decode, schema=schema)
 

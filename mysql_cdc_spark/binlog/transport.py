@@ -239,13 +239,10 @@ class BinlogSocketClient:
                     encode_ssl_request_command(), first_seq=seq
                 )
                 seq += 1
+                # SNI at every level (servers with several certificates
+                # pick by it); only require_verify_full checks the name
                 self.channel.upgrade_to_ssl(
-                    self._ssl_context(),
-                    server_hostname=(
-                        self.host
-                        if level >= SSL_MODES["require_verify_full"]
-                        else None
-                    ),
+                    self._ssl_context(), server_hostname=self.host
                 )
                 use_ssl = True
         plugin = hs["auth_plugin_name"] or "mysql_native_password"

@@ -363,12 +363,16 @@ def encode_authenticate_command(
     """Client handshake response; authenticate_command.rs:49-70.
     Capabilities mirror the reference's fixed set (LONG_FLAG |
     PROTOCOL_41 | SECURE_CONNECTION | PLUGIN_AUTH, plus CONNECT_WITH_DB
-    when a database is given). ``sha256_password`` has no scramble
+    when a database is given, plus SSL over an upgraded channel — the
+    response must repeat the SSLRequest's capability word, or a server
+    checking the two rejects the login). ``sha256_password`` has no scramble
     response: the auth data is the clear password over TLS, or the
     1-byte RSA public-key request over an insecure channel."""
     caps = LONG_FLAG | PROTOCOL_41 | SECURE_CONNECTION | PLUGIN_AUTH
     if database is not None:
         caps |= CONNECT_WITH_DB
+    if use_ssl:
+        caps |= SSL
     out = bytearray(struct.pack("<IIB", caps, max_packet_size, client_collation))
     out += bytes(23)  # reserved
     out += _null_term(username)

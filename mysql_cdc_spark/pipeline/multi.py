@@ -15,8 +15,8 @@ engine routes each table to its own MERGE target + ledger:
   repeated part is the cheap part. At deploy scale this is exactly the
   standard fan-out: one shared segment store, N independent apply jobs —
   adding a table never touches another table's pipeline.
-- Tables replay concurrently (one driver thread each; the session's FAIR
-  scheduler pools interleave their jobs like the stats/merge pair).
+- Tables replay concurrently (one driver thread each; Spark interleaves
+  their jobs on the shared task slots).
 - Transactions touching several tracked tables (one GTID, multiple
   TABLE_MAP+rows pairs — how a server logs a multi-table transaction;
   ``fixtures.write_binlog_files(sidecar=True)`` generates the shape)

@@ -26,7 +26,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..binlog.decoder import TRANSCRIPTS, TableSpec, decode_binlog_dir, discover_columns
+from ..binlog.decoder import (
+    TRANSCRIPTS,
+    SegmentStats,
+    TableSpec,
+    decode_binlog_dir,
+)
 from ..gtid import GtidSet, Gtid, Uuid
 from .ledger import Ledger, LedgerEntry
 from .order import (
@@ -70,73 +75,6 @@ def _after_position_predicate(max_file: str, max_pos: int):
             )
         )
     )
-
-
-def _scalar_segment_stats(content, name, spec, intervals, min_pos_excl,
-                          xa_outcomes=None, on_error="fail"):
-    """Fallback stats for segments outside the vectorized fast path:
-    scalar decode, then the same filters/aggregation in pandas."""
-    import numpy as np
-    import pandas as pd
-
-    from ..binlog.decoder import _FileDecoder
-
-    cols = ["src_file", "gtid_source", "gtid_seq", "pos", "xid", "ts"]
-    d = _FileDecoder(spec, xa_outcomes=xa_outcomes, on_error=on_error)
-    frames = [f[cols] for f in d.decode_file(name, content)]
-    pdf = (
-        pd.concat(frames, ignore_index=True)
-        if frames
-        else pd.DataFrame(columns=cols)
-    )
-    pdf = pdf[pdf["xid"].notna()]
-    if min_pos_excl is not None and len(pdf):
-        pdf = pdf[pdf["pos"] > min_pos_excl]
-    if intervals and len(pdf):
-        by_src: dict = {}
-        for uuid, s, e in intervals:
-            by_src.setdefault(uuid, []).append((int(s), int(e)))
-        drop = np.zeros(len(pdf), dtype=bool)
-        src_arr = pdf["gtid_source"].to_numpy(dtype=object)
-        seq_arr = pdf["gtid_seq"].to_numpy()
-        for source, ivs in by_src.items():
-            ivs.sort()
-            starts = np.array([i[0] for i in ivs], dtype="int64")
-            ends = np.array([i[1] for i in ivs], dtype="int64")
-            sel = np.nonzero(src_arr == source)[0]
-            if len(sel):
-                sq = seq_arr[sel].astype("int64")
-                k = np.searchsorted(starts, sq, side="right") - 1
-                cov = (k >= 0) & (sq <= ends[np.maximum(k, 0)])
-                drop[sel[cov]] = True
-        pdf = pdf[~drop]
-    out = {
-        "src_file": [], "gtid_source": [], "events": [],
-        "min_pos": [], "max_pos": [], "starts": [], "ends": [], "max_ts": [],
-    }
-    for (f, s), g in pdf.groupby(["src_file", "gtid_source"], dropna=False, sort=False):
-        out["src_file"].append(f)
-        out["gtid_source"].append(None if pd.isna(s) else s)
-        out["events"].append(len(g))
-        out["min_pos"].append(int(g["pos"].min()))
-        out["max_pos"].append(int(g["pos"].max()))
-        ts_max = g["ts"].max()
-        out["max_ts"].append(
-            0 if pd.isna(ts_max) else int(pd.Timestamp(ts_max).value // 10**9)
-        )
-        if pd.isna(s):
-            starts = ends = np.array([], dtype="int64")
-        else:
-            seqs = np.unique(g["gtid_seq"].to_numpy(dtype="int64"))
-            breaks = np.nonzero(np.diff(seqs) > 1)[0]
-            starts = seqs[np.concatenate(([0], breaks + 1))]
-            ends = seqs[np.concatenate((breaks, [len(seqs) - 1]))]
-        out["starts"].append(starts.tolist())
-        out["ends"].append(ends.tolist())
-    frame = pd.DataFrame(out)
-    frame["starts"] = frame["starts"].astype(object)
-    frame["ends"] = frame["ends"].astype(object)
-    return frame
 
 
 @dataclass
@@ -344,6 +282,8 @@ class Replayer:
                 )
         self.column_transforms = dict(column_transforms or {})
         self.ledger = Ledger(store_dir)
+        self._stats_acc = SegmentStats.accumulator(spark)  # one per Replayer
+        self._planned_sizes: dict[str, int] = {}  # last commit's file sizes
         # Default sink is the bucket-pruned copy-on-write target: per-batch
         # IO is O(touched-bucket data), not O(table), which is the only
         # shape that survives steady-state incremental ingest at 10^10 rows
@@ -797,39 +737,22 @@ class Replayer:
         spec = self.spec
         t0 = time.time()
         batch_id = self.ledger.next_batch_id()
+        # planning-time sizes, taken before decode: replay() skips the last
+        # committed file only while its size still matches, so a segment
+        # that grows while it is read is read again. They replace
+        # self._planned_sizes only once the batch commits: a batch that
+        # raises must leave replay() comparing against the last COMMITTED
+        # read, or a retry would skip a grown file it never applied
+        planned = {n: self._file_size(n) for n in files}
 
         glob = "{" + ",".join(files) + "}" if len(files) > 1 else files[0]
         # XA pre-scan (xa="batch"): cross-file verdict map broadcast into
-        # both decode passes + the pending floor for the ledger. Runs as
-        # one header-walk task per segment; non-XA segments reject on a
+        # the decode + the pending floor for the ledger. Runs as one
+        # header-walk task per segment; non-XA segments reject on a
         # C-level substring scan.
         xa_info = self._xa_scan_job(files) if self.xa == "batch" else None
         xa_verdicts = (xa_info or {}).get("verdicts") or None
-        # before_values="keys": the merge pipeline reads only keys + after
-        # images (before_* are dropped right after with_change_key), so
-        # the decoder skips the non-key before-image value builds —
-        # column pruning pushed into the byte decoder
-        changes = decode_binlog_dir(
-            spark, self.binlog_dir, spec, path_filter=glob,
-            before_values="keys", xa_outcomes=xa_verdicts,
-            on_error=self.on_decode_error,
-            quarantine_dir=self.quarantine_dir,
-        )
-        changes = gate_complete_transactions(changes)
-        if self.ignore_server_ids:
-            # circular-replication guard (see __init__): drop foreign-
-            # origin rows after the gate; the stats pass still walks every
-            # event, so positions and GTID coverage advance over them
-            changes = changes.filter(
-                ~F.col("server_id").isin(list(self.ignore_server_ids))
-            )
-
         covered = self.ledger.covered_gtid_set()
-        if covered.uuid_sets:
-            intervals = spark.createDataFrame(
-                covered.to_intervals(), "uuid string, start long, end long"
-            )
-            changes = filter_covered_gtids(changes, intervals)
         # Position predicate, applied UNCONDITIONALLY in addition to the
         # GTID anti-join. It is monotone and always safe: anything at or
         # before the checkpointed (file, pos) is either committed (and the
@@ -844,6 +767,38 @@ class Replayer:
         # everything in it was committed+covered except the floor's own
         # pending transaction (binlog/xa.py module doc).
         max_file, max_pos = self.ledger.resume_position()
+        # the decode tasks report each segment's ledger facts (counts,
+        # GTID islands, positions, fences) under the same gate, anti-join
+        # and position filters as below — no second pass over the bytes
+        seg_stats = SegmentStats(
+            self._stats_acc,
+            covered.to_intervals() if covered.uuid_sets else [],
+            max_file, max_pos,
+        )
+        # before_values="keys": the merge pipeline reads only keys + after
+        # images (before_* are dropped right after with_change_key), so
+        # the decoder skips the non-key before-image value builds —
+        # column pruning pushed into the byte decoder
+        changes = decode_binlog_dir(
+            spark, self.binlog_dir, spec, path_filter=glob,
+            before_values="keys", xa_outcomes=xa_verdicts,
+            on_error=self.on_decode_error,
+            quarantine_dir=self.quarantine_dir,
+            stats=seg_stats,
+        )
+        changes = gate_complete_transactions(changes)
+        if self.ignore_server_ids:
+            # circular-replication guard (see __init__): drop foreign-
+            # origin rows after the gate; the decode stats still count
+            # them, so positions and GTID coverage advance over them
+            changes = changes.filter(
+                ~F.col("server_id").isin(list(self.ignore_server_ids))
+            )
+        if covered.uuid_sets:
+            intervals = spark.createDataFrame(
+                covered.to_intervals(), "uuid string, start long, end long"
+            )
+            changes = filter_covered_gtids(changes, intervals)
         if max_file:
             changes = changes.filter(
                 _after_position_predicate(max_file, max_pos)
@@ -875,234 +830,127 @@ class Replayer:
         changes = self._apply_column_defaults(changes)
 
         phase_t = {}
-
-        net = self._net_from_changes(changes)
         current_version = self.ledger.current_snapshot_version()
+        merge_fn = (
+            self.target.merge_partial
+            if self.row_image == "minimal"
+            else self.target.merge
+        )
 
-        # -- stats pass ∥ merge job. The stats-only decode (values skipped,
-        # only length prefixes read — rather than caching the event stream
-        # and re-scanning it; at 10^10 events the cache would be the whole
-        # corpus) runs concurrently with the merge job in separate FAIR
-        # scheduler pools (session.py sets spark.scheduler.mode=FAIR), so
-        # the short stats job gets task slots immediately regardless of
-        # submission order — a guarantee, not a FIFO race. If stats reports
-        # an empty batch (resume no-op), the in-flight merge is cancelled
-        # before it commits anything and the batch exits without advancing
-        # the snapshot version.
-        import threading
+        # -- one decode pass: materializing the cached net change runs
+        # every decode task, which fills seg_stats; only once the stats
+        # say the batch is non-empty, fence-free and stop-free does the
+        # merge read the cached net. Nothing is written before that, so a
+        # stop or an empty batch leaves the store untouched.
+        net = self._net_from_changes(changes).persist()
+        try:
+            t_phase = time.time()
+            net_rows = net.count()
+            phase_t["decode_lww_s"] = round(time.time() - t_phase, 2)
+            stats, markers = seg_stats.collect(files)
 
-        stats_out: dict = {}
-        merge_out: dict = {}
-        stats_done = threading.Event()
-        merge_group = f"cdc-merge-{batch_id}-{id(self)}"
-        t_phase = time.time()
-
-        def _run_stats():
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", "cdc-stats")
-            try:
-                stats_out["rows"] = self._stats_job(
-                    files, covered, max_file, max_pos, xa_verdicts
-                )
-            except BaseException as e:  # surfaced on the main thread
-                stats_out["err"] = e
-            finally:
-                stats_out["seconds"] = round(time.time() - t_phase, 2)
-                stats_done.set()
-
-        def _run_merge():
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", "cdc-merge")
-            spark.sparkContext.setJobGroup(
-                merge_group, "cdc merge", interruptOnCancel=True
-            )
-            try:
-                merge_fn = (
-                    self.target.merge_partial
-                    if self.row_image == "minimal"
-                    else self.target.merge
-                )
-                merge_out["version"] = merge_fn(spark, net, current_version)
-            except BaseException as e:
-                merge_out["err"] = e
-            finally:
-                merge_out["seconds"] = round(time.time() - t_phase, 2)
-
-        stats_thread = threading.Thread(target=_run_stats, daemon=True)
-        merge_thread = threading.Thread(target=_run_merge, daemon=True)
-        stats_thread.start()
-        # Snapshot targets can discard an uncommitted version, so their
-        # merge overlaps the stats pass and a cancelled/empty batch rolls
-        # back by deleting the unnamed snapshot. Targets that commit
-        # internally (Iceberg MERGE INTO has no version to unlink) start
-        # only after stats confirms a non-empty batch — correctness over
-        # overlap for sinks without a rollback handle.
-        can_rollback = hasattr(self.target, "snapshot_path")
-        merge_started = False
-        if can_rollback:
-            merge_thread.start()
-            merge_started = True
-
-        stats_done.wait()
-        if "err" in stats_out:
-            if merge_started:
-                spark.sparkContext.cancelJobGroup(merge_group)
-                merge_thread.join()
-            raise stats_out["err"]
-        stats = stats_out["rows"]
-        phase_t["stats_s"] = stats_out["seconds"]
-
-        # -- TRUNCATE/DROP TABLE fences (markers smuggled out of the stats
-        # job). A truncate clears ALL state logged before it; rows after
-        # it rebuild from empty — redelivered fences (gtid already
-        # covered) are dropped, so the clear applies exactly once. A DROP
-        # of the tracked table ends its history: raise (INCIDENT stop
-        # policy) — decoding past a re-CREATE against the old spec would
-        # silently mis-apply rows.
-        def _is_marker(r):
-            return str(r["gtid_source"] or "").startswith(
-                ("#truncate#", "#drop#", "#rename#")
-            )
-
-        fences: list[dict] = []
-        stops: list[dict] = []
-        if any(_is_marker(r) for r in stats):
+            # -- TRUNCATE/DROP/RENAME fences. A truncate clears ALL state
+            # logged before it; rows after it rebuild from empty —
+            # redelivered fences (gtid already covered) are dropped, so
+            # the clear applies exactly once. A DROP or RENAME of the
+            # tracked table ends its history: raise (INCIDENT stop
+            # policy) — decoding past a re-CREATE against the old spec
+            # would silently mis-apply rows.
             from ..binlog.decoder import _segment_sort_key as _seg_key
 
-            for r in [r for r in stats if _is_marker(r)]:
-                gs = str(r["gtid_source"])
-                kind = gs[1 : gs.index("#", 1)]
-                src = gs[len(kind) + 2 :] or None
-                seq = int(r["starts"][0]) if r["starts"] else None
+            fences: list[dict] = []
+            stops: list[dict] = []
+            for m in markers:
+                src, seq = m["gtid_source"], m["gtid_seq"]
                 if src is not None and seq is not None and covered.contains(src, seq):
                     continue
-                (fences if kind == "truncate" else stops).append(
-                    {
-                        "kind": kind,
-                        "src_file": r["src_file"],
-                        "pos": int(r["max_pos"]),
-                        "gtid_source": src,
-                        "gtid_seq": seq,
-                        "max_ts": int(r["max_ts"] or 0),
-                    }
-                )
-            stats = [r for r in stats if not _is_marker(r)]
-        if stops:
-            from ..binlog.ddl import TrackedTableDropped, TrackedTableRenamed
+                (fences if m["kind"] == "truncate" else stops).append(m)
+            if stops:
+                from ..binlog.ddl import TrackedTableDropped, TrackedTableRenamed
 
-            if merge_started:
-                spark.sparkContext.cancelJobGroup(merge_group)
-                merge_thread.join()
-            d = min(stops, key=lambda f: (_seg_key(f["src_file"]), f["pos"]))
-            err_cls = (
-                TrackedTableRenamed if d["kind"] == "rename"
-                else TrackedTableDropped
-            )
-            raise err_cls(
-                d["src_file"], d["pos"],
-                f"{d['kind'].upper()} involving {spec.database}.{spec.table}",
-            )
-        if fences:
-            # The overlapped merge computed state WITHOUT the fence —
-            # discard it and re-run sequentially. Truncate batches are
-            # rare (a retention job's clear, not steady state), so the
-            # lost stats∥merge overlap costs nothing at scale; the extra
-            # IO is only the re-run itself.
-            if merge_started:
-                spark.sparkContext.cancelJobGroup(merge_group)
-                merge_thread.join()
-                import shutil
-
-                shutil.rmtree(
-                    self.target.snapshot_path(current_version + 1),
-                    ignore_errors=True,
+                d = min(stops, key=lambda f: (_seg_key(f["src_file"]), f["pos"]))
+                err_cls = (
+                    TrackedTableRenamed if d["kind"] == "rename"
+                    else TrackedTableDropped
                 )
+                raise err_cls(
+                    d["src_file"], d["pos"],
+                    f"{d['kind'].upper()} involving {spec.database}.{spec.table}",
+                )
+
             t_phase = time.time()
-            fence = max(
-                fences, key=lambda f: (_seg_key(f["src_file"]), f["pos"])
-            )
-            # clear first (metadata-only on the bucketed target), then
-            # apply only events strictly after the LAST fence — anything
-            # before it (including between two fences) is dead state.
-            # At-least-once delivery can redeliver a PRE-fence transaction
-            # at a post-fence position (same batch, so the ledger's
-            # covered set can't see it yet): first-delivery-wins (ST5,
-            # uuid_set.rs:46-48) says the redelivery is a no-op — it
-            # committed before the truncate and was wiped — so post-fence
-            # events anti-join away any gtid that also appears pre-fence
-            # (null gtids never match a null key, so GTID-less streams
-            # pass through unchanged).
-            new_version = self.target.truncate(spark, current_version)
-            after_fence = _after_position_predicate(
-                fence["src_file"], fence["pos"]
-            )
-            pre_gtids = (
-                changes.filter(~after_fence)
-                .select("gtid_source", "gtid_seq")
-                .distinct()
-            )
-            net2 = self._net_from_changes(
-                changes.filter(after_fence).join(
-                    pre_gtids, on=["gtid_source", "gtid_seq"], how="left_anti"
+            base_version = current_version
+            if fences:
+                # net was computed WITHOUT the fence: clear first
+                # (metadata-only on the bucketed target), then apply only
+                # events strictly after the LAST fence — anything before
+                # it (including between two fences) is dead state.
+                # At-least-once delivery can redeliver a PRE-fence
+                # transaction at a post-fence position (same batch, so the
+                # ledger's covered set can't see it yet): first-delivery-
+                # wins (ST5, uuid_set.rs:46-48) says the redelivery is a
+                # no-op — it committed before the truncate and was wiped —
+                # so post-fence events anti-join away any gtid that also
+                # appears pre-fence (null gtids never match a null key, so
+                # GTID-less streams pass through unchanged). Truncate
+                # batches are rare (a retention job's clear), so the
+                # re-decode this costs does not matter at scale.
+                fence = max(
+                    fences, key=lambda f: (_seg_key(f["src_file"]), f["pos"])
                 )
-            ).persist()
-            try:
-                if net2.head(1):
-                    fence_merge_fn = (
-                        self.target.merge_partial
-                        if self.row_image == "minimal"
-                        else self.target.merge
+                base_version = self.target.truncate(spark, current_version)
+                after_fence = _after_position_predicate(
+                    fence["src_file"], fence["pos"]
+                )
+                pre_gtids = (
+                    changes.filter(~after_fence)
+                    .select("gtid_source", "gtid_seq")
+                    .distinct()
+                )
+                net.unpersist()
+                net = self._net_from_changes(
+                    changes.filter(after_fence).join(
+                        pre_gtids, on=["gtid_source", "gtid_seq"], how="left_anti"
                     )
-                    new_version = fence_merge_fn(spark, net2, new_version)
-            finally:
-                net2.unpersist()
-            phase_t["decode_lww_merge_s"] = round(time.time() - t_phase, 2)
-            phase_t["truncate_fences"] = len(fences)
-            # fence gtids join the batch's islands: the ledger covers the
-            # truncate's own transaction (redelivery idempotence) and the
-            # read high-water mark advances past the fence even when no
-            # rows survive it
-            stats = stats + [
-                {
-                    "src_file": f["src_file"],
-                    "gtid_source": f["gtid_source"],
-                    "events": 1,
-                    "min_pos": f["pos"],
-                    "max_pos": f["pos"],
-                    "starts": [f["gtid_seq"]] if f["gtid_seq"] is not None else [],
-                    "ends": [f["gtid_seq"]] if f["gtid_seq"] is not None else [],
-                    "max_ts": f["max_ts"],
-                }
-                for f in fences
-            ]
+                ).persist()
+                net_rows = net.count()
+                phase_t["truncate_fences"] = len(fences)
+                # fence gtids join the batch's islands: the ledger covers
+                # the truncate's own transaction (redelivery idempotence)
+                # and the read high-water mark advances past the fence
+                # even when no rows survive it
+                stats = stats + [
+                    {
+                        "src_file": f["src_file"],
+                        "gtid_source": f["gtid_source"],
+                        "events": 1,
+                        "min_pos": f["pos"],
+                        "max_pos": f["pos"],
+                        "starts": [f["gtid_seq"]] if f["gtid_seq"] is not None else [],
+                        "ends": [f["gtid_seq"]] if f["gtid_seq"] is not None else [],
+                        "max_ts": int(f["ts"] or 0),
+                    }
+                    for f in fences
+                ]
 
-        n_events = sum(r["events"] for r in stats)
-        if n_events == 0:
-            if merge_started:
-                spark.sparkContext.cancelJobGroup(merge_group)
-                merge_thread.join()
-                # drop the cancelled (or even completed) uncommitted
-                # snapshot; the ledger never names it, so state/version
-                # are unchanged
-                import shutil
-
-                shutil.rmtree(
-                    self.target.snapshot_path(current_version + 1),
-                    ignore_errors=True,
+            n_events = sum(r["events"] for r in stats)
+            if n_events == 0:
+                self._commit_empty_batch(
+                    batch_id, files, planned, covered, xa_info, t0
                 )
-            self._commit_empty_batch(batch_id, files, covered, xa_info, t0)
-            return BatchMetrics(
-                batch_id, files, 0, 0, time.time() - t0, 0.0,
-                str(covered), [],
+                self._planned_sizes = planned
+                return BatchMetrics(
+                    batch_id, files, 0, 0, time.time() - t0, 0.0,
+                    str(covered), [],
+                )
+            # rows of ignored server ids count as events but leave net
+            # empty: nothing to merge, the batch still advances the ledger
+            new_version = (
+                merge_fn(spark, net, base_version) if net_rows else base_version
             )
-
-        if not fences:
-            if not merge_started:
-                merge_thread.start()
-            merge_thread.join()
-            if "err" in merge_out:
-                raise merge_out["err"]
-            new_version = merge_out["version"]
-            phase_t["decode_lww_merge_s"] = merge_out["seconds"]
-        net_rows = -1  # avoid a second action; lineage covers observability
+            phase_t["merge_s"] = round(time.time() - t_phase, 2)
+        finally:
+            net.unpersist()
         t_phase = time.time()
 
         # -- write-audit-publish window (pipeline/audit.py): the staged
@@ -1172,6 +1020,7 @@ class Replayer:
         max_event_ts = max((r.get("max_ts", 0) for r in stats), default=0)
         metrics = {
             "events": n_events,
+            "net_rows": net_rows,
             "seconds": round(seconds, 3),
             "events_per_sec": round(n_events / seconds, 1) if seconds else 0.0,
             **phase_t,
@@ -1192,6 +1041,7 @@ class Replayer:
                 metrics=metrics,
             )
         )
+        self._planned_sizes = planned
         for view in self.views:
             view.refresh(self.spark, self.target, new_version)
         # retention AFTER ledger + views: gc never touches the newest
@@ -1205,7 +1055,8 @@ class Replayer:
         )
 
     def _commit_empty_batch(
-        self, batch_id: int, files: list[str], covered, xa_info, t0: float
+        self, batch_id: int, files: list[str], planned: dict[str, int],
+        covered, xa_info, t0: float,
     ) -> None:
         """Ledger entry for a batch whose rows were ALL filtered out
         (covered duplicates, pre-seed events, or still-pending XA
@@ -1214,24 +1065,16 @@ class Replayer:
         trailing segment holding only redelivered transactions), and an XA
         floor discovered here would be lost. The entry reuses the current
         snapshot version (no state change to commit) and the unchanged
-        covered set; its position is the end of the last batch file
-        (byte length — the tail event's end), so a later tail-append still
-        replays (pos > length only matches genuinely new bytes). Skipped
-        when it would not advance the mark and carries no floor: an idle
-        tail poll stays entry-free instead of growing the ledger."""
-        from ..binlog.decoder import _join_dir, _segment_sort_key
-
-        def _size(name: str) -> int:
-            path = _join_dir(self.binlog_dir, name)
-            if "://" not in path:
-                return os.path.getsize(path)
-            from pyarrow import fs as pafs
-
-            filesystem, p = pafs.FileSystem.from_uri(path)
-            return filesystem.get_file_info(p).size
+        covered set; its position is the end of the last batch file as
+        sized at planning time (the decode read at least that much), so
+        bytes appended since still replay (pos > length only matches
+        genuinely new bytes). Skipped when it would not advance the mark
+        and carries no floor: an idle tail poll stays entry-free instead
+        of growing the ledger."""
+        from ..binlog.decoder import _segment_sort_key
 
         last_name = max(files, key=_segment_sort_key)
-        cand = (_segment_sort_key(last_name), _size(last_name))
+        cand = (_segment_sort_key(last_name), planned[last_name])
         cur_file, cur_pos = self.ledger.max_position()
         cur = (_segment_sort_key(cur_file), cur_pos) if cur_file else None
         has_floor = bool(xa_info and xa_info["pending"])
@@ -1241,8 +1084,8 @@ class Replayer:
             cand_name, cand_pos = cur_file, cur_pos
         else:
             cand_name, cand_pos = last_name, cand[1]
-        metrics = {"events": 0, "seconds": round(time.time() - t0, 3),
-                   "events_per_sec": 0.0}
+        metrics = {"events": 0, "net_rows": 0,
+                   "seconds": round(time.time() - t0, 3), "events_per_sec": 0.0}
         metrics.update(self._xa_metrics(xa_info))
         self.ledger.append(
             LedgerEntry(
@@ -1256,6 +1099,17 @@ class Replayer:
                 metrics=metrics,
             )
         )
+
+    def _file_size(self, name: str) -> int:
+        from ..binlog.decoder import _join_dir
+
+        path = _join_dir(self.binlog_dir, name)
+        if "://" not in path:
+            return os.path.getsize(path)
+        from pyarrow import fs as pafs
+
+        filesystem, p = pafs.FileSystem.from_uri(path)
+        return filesystem.get_file_info(p).size
 
     def _xa_metrics(self, xa_info) -> dict:
         """Ledger-metric fields for unresolved two-phase prepares: the
@@ -1334,126 +1188,6 @@ class Replayer:
         )
         return merged
 
-    def _stats_job(
-        self, files: list[str], covered, max_file: str, max_pos: int,
-        xa_verdicts: dict | None = None,
-    ) -> list[dict]:
-        """Per-(file, source) lineage stats + collapsed GTID seq islands via
-        a dedicated stats-only decode pass: one task per segment, values
-        skipped (only length prefixes read), zero shuffle, collect is one
-        row per (file, source). Applies the same filters the merge pass
-        applies in Spark SQL (committed-only, covered-GtidSet anti-join,
-        position predicate) so the two passes always agree. Islands via
-        numpy unique+diff: the distributed formulation of GtidSet.add_gtid's
-        collapse (uuid_set.rs:29-98)."""
-        spark = self.spark
-        spec = self.spec
-        from ..binlog.decoder import _join_dir, _segment_sort_key
-
-        intervals = covered.to_intervals() if covered.uuid_sets else []
-        max_key = _segment_sort_key(max_file) if max_file else None
-        paths = [_join_dir(self.binlog_dir, n) for n in files]
-        pdf_paths = spark.createDataFrame(
-            spark.sparkContext.parallelize([(p,) for p in paths], len(paths)),
-            "path string",
-        )
-        scalar_mode = os.environ.get("SPARK_CDC_SCALAR_DECODE", "") == "1"
-        on_error = self.on_decode_error
-
-        def stats_fn(batches):
-            import os as _os
-
-            import pandas as _pd
-
-            from ..binlog.ddl import scan_truncates
-            from ..binlog.decoder import _read_bytes
-            from ..binlog.vector import segment_row_stats
-
-            for pdf in batches:
-                for path in pdf["path"]:
-                    name = _os.path.basename(path)
-                    min_pos_excl = None
-                    if max_key is not None:
-                        key = _segment_sort_key(name)
-                        if key < max_key:
-                            continue  # fully before the checkpoint
-                        if key == max_key:
-                            min_pos_excl = max_pos
-                    content = _read_bytes(path)
-                    frame = None
-                    if not scalar_mode:
-                        try:
-                            frame = segment_row_stats(
-                                content, name, spec, intervals, min_pos_excl,
-                                xa_outcomes=xa_verdicts,
-                            )
-                        except Exception:
-                            # a poisoned segment re-walks on the scalar
-                            # path, which applies the dead-letter policy
-                            # at event grain (the same fallback the merge
-                            # decode takes, so the two passes agree)
-                            if on_error != "quarantine":
-                                raise
-                            frame = None
-                    if frame is None:
-                        frame = _scalar_segment_stats(
-                            content, name, spec, intervals, min_pos_excl,
-                            xa_outcomes=xa_verdicts, on_error=on_error,
-                        )
-                    if len(frame):
-                        yield frame
-                    # TRUNCATE TABLE fences ride out of the same task
-                    # in-schema as marker rows (gtid_source "#truncate#…",
-                    # events 0) — the segment bytes are already in memory,
-                    # so detection costs one C-level substring reject;
-                    # the driver pops the markers, filters redelivered
-                    # fences against the covered set, and re-plans the
-                    # merge (run_batch). Position-filtered here with the
-                    # same resume predicate the row stats use.
-                    fences = [
-                        t
-                        for t in scan_truncates(
-                            content, name, spec.database, spec.table
-                        )
-                        if min_pos_excl is None or t["pos"] > min_pos_excl
-                    ]
-                    if fences:
-                        yield _pd.DataFrame(
-                            {
-                                "src_file": [name] * len(fences),
-                                "gtid_source": [
-                                    f"#{t['kind']}#" + (t["gtid_source"] or "")
-                                    for t in fences
-                                ],
-                                "events": [0] * len(fences),
-                                "min_pos": [t["pos"] for t in fences],
-                                "max_pos": [t["pos"] for t in fences],
-                                "starts": [
-                                    [t["gtid_seq"]]
-                                    if t["gtid_seq"] is not None
-                                    else []
-                                    for t in fences
-                                ],
-                                "ends": [
-                                    [t["gtid_seq"]]
-                                    if t["gtid_seq"] is not None
-                                    else []
-                                    for t in fences
-                                ],
-                                "max_ts": [int(t["ts"] or 0) for t in fences],
-                            }
-                        )
-
-        rows = pdf_paths.mapInPandas(
-            stats_fn,
-            schema=(
-                "src_file string, gtid_source string, events long, "
-                "min_pos long, max_pos long, "
-                "starts array<long>, ends array<long>, max_ts long"
-            ),
-        ).collect()
-        return [r.asDict() for r in rows]
-
     @staticmethod
     def _gtid_set_from_islands(stats: list[dict]) -> GtidSet:
         from ..gtid import UuidSet, _splice_interval
@@ -1483,11 +1217,16 @@ class Replayer:
         would be lost when the verdict arrives in a later file. Rewound
         files ride along for free (covered rows drop via the position
         predicate + GTID anti-join); only genuinely new segments count
-        toward ``files_per_batch``, and the loop ends when none remain."""
+        toward ``files_per_batch``, and the loop ends when none remain.
+
+        The last committed file is new work only while its size differs
+        from the size ``run_batch`` recorded before decoding it: an idle
+        call runs no batch, and a segment that grew (during or after its
+        read) is read again. A fresh Replayer has no sizes, so it re-reads
+        that file once."""
         from ..binlog.decoder import _segment_sort_key
 
         result = ReplayResult()
-        first = True
         while True:
             files = self.pending_files()
             if not files:
@@ -1499,7 +1238,10 @@ class Replayer:
                 for n in files
                 if max_key is None
                 or _segment_sort_key(n) > max_key
-                or (first and _segment_sort_key(n) == max_key)
+                or (
+                    n == max_file
+                    and self._planned_sizes.get(n) != self._file_size(n)
+                )
             ]
             if not new:
                 break  # only a stuck rewind remains — verdict not on disk
@@ -1520,7 +1262,6 @@ class Replayer:
                 )
                 if any(n >= self.auto_compact for n in stats.values()):
                     self.compact(min_deltas=self.auto_compact)
-            first = False
         return result
 
     def read_state(self, version: int | None = None) -> DataFrame:

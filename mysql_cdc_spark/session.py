@@ -42,10 +42,6 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", str(32 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
-        # FAIR scheduling so the replay driver's concurrent stats/merge jobs
-        # share task slots deterministically (pipeline/replay.py submits them
-        # in named pools) instead of relying on FIFO submission order
-        .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -7,6 +7,8 @@ capture double standing in for the SparkSession."""
 
 from __future__ import annotations
 
+import os
+
 from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS
 from mysql_cdc_spark.pipeline.target import IcebergMergeTarget
 
@@ -84,25 +86,32 @@ def test_merge_partial_statement_shape():
 
 
 def test_internal_commit_target_merge_deferred_until_stats(tmp_path, spark):
-    """A target without a rollback handle (no snapshot_path — the Iceberg
-    shape) must not have merge() invoked for an empty batch: the replay
-    driver defers its merge until the stats pass confirms events. A
-    snapshot target would instead overlap and roll back."""
+    """No target sees merge() for an empty batch: the replay driver reads
+    the decode stats before it merges, so a sink that commits inside the
+    engine (no snapshot_path — the Iceberg shape) has nothing to roll
+    back, and a snapshot sink stages no version."""
     from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS
     from mysql_cdc_spark.fixtures import generate_changelog, write_binlog_files
+    from mysql_cdc_spark.pipeline.mor import (
+        MergeOnReadBucketedTarget,
+        OrderedMergeOnReadTarget,
+    )
     from mysql_cdc_spark.pipeline.replay import Replayer
-    from mysql_cdc_spark.pipeline.target import ParquetMergeTarget
+    from mysql_cdc_spark.pipeline.target import (
+        BucketedParquetMergeTarget,
+        OrderedBucketedMergeTarget,
+        OrderedParquetMergeTarget,
+        ParquetMergeTarget,
+    )
 
     class InternalCommitTarget:
         """Delegates to a parquet target but hides snapshot_path, like a
         sink whose MERGE commits inside the engine."""
 
-        def __init__(self, store_dir):
-            self._inner = ParquetMergeTarget(store_dir, TRANSCRIPTS, buckets=2)
-            self.merge_calls = 0
+        def __init__(self, store_dir, spec, buckets):
+            self._inner = ParquetMergeTarget(store_dir, spec, buckets=buckets)
 
         def merge(self, spark, net, current_version):
-            self.merge_calls += 1
             return self._inner.merge(spark, net, current_version)
 
         def read(self, spark, version):
@@ -112,13 +121,22 @@ def test_internal_commit_target_merge_deferred_until_stats(tmp_path, spark):
     outdir = str(tmp_path / "binlog")
     write_binlog_files(txns, outdir, txns_per_file=len(txns))
 
-    tgt = InternalCommitTarget(str(tmp_path / "store"))
-    rep = Replayer(spark, outdir, str(tmp_path / "store"), target=tgt)
-    rep.replay()
-    assert tgt.merge_calls == 1
+    for cls in (
+        InternalCommitTarget, ParquetMergeTarget, BucketedParquetMergeTarget,
+        OrderedParquetMergeTarget, OrderedBucketedMergeTarget,
+        MergeOnReadBucketedTarget, OrderedMergeOnReadTarget,
+    ):
+        store = str(tmp_path / cls.__name__)
+        tgt = cls(store, TRANSCRIPTS, buckets=2)
+        calls = []
+        inner_merge = tgt.merge
+        tgt.merge = lambda *a, _m=inner_merge: calls.append(1) or _m(*a)
+        Replayer(spark, outdir, store, target=tgt).replay()
+        assert len(calls) == 1, cls.__name__
+        snaps = sorted(os.listdir(os.path.join(store, "snapshots")))
 
-    # fully replayed: the second pass sees an empty batch — merge() must
-    # not run at all (no Iceberg commit to roll back)
-    rep2 = Replayer(spark, outdir, str(tmp_path / "store"), target=tgt)
-    rep2.replay()
-    assert tgt.merge_calls == 1
+        # fully replayed: a fresh Replayer re-reads the last segment and
+        # finds an empty batch — merge() must not run at all
+        Replayer(spark, outdir, store, target=tgt).replay()
+        assert len(calls) == 1, cls.__name__
+        assert sorted(os.listdir(os.path.join(store, "snapshots"))) == snaps

@@ -140,11 +140,74 @@ class TestReplay:
         assert r2.ledger.current_snapshot_version() == v1
         _assert_state_equals_oracle(_final_state_pdf(r2), oracle)
 
+    def test_idle_replay_skips_unchanged_last_segment(self, spark, tmp_path):
+        """A caught-up Replayer runs no batch; once the last committed
+        segment grows, the next replay() applies what was appended."""
+        txns = generate_changelog(n_conversations=6, max_turns=3, n_extra_ops=10, seed=5)
+        [full] = write_binlog_files(txns, str(tmp_path / "full"), txns_per_file=len(txns))
+        outdir = str(tmp_path / "binlog")
+        [seg] = write_binlog_files(txns[:-1], outdir, txns_per_file=len(txns))
+        with open(full, "rb") as f:
+            grown = f.read()
+        with open(seg, "rb") as f:
+            head = f.read()
+        assert os.path.basename(full) == os.path.basename(seg)
+        assert grown.startswith(head)
+
+        r = Replayer(spark, outdir, str(tmp_path / "store"))
+        assert r.replay().events > 0
+        assert r.replay().batches == []
+        with open(seg, "ab") as f:
+            f.write(grown[len(head):])
+        res = r.replay()
+        assert res.events == len(txns[-1].ops)
+        _assert_state_equals_oracle(_final_state_pdf(r), apply_changelog_oracle(txns))
+
+    def test_failed_batch_retry_rereads_grown_segment(self, spark, tmp_path, monkeypatch):
+        """A batch over a grown last segment plus a new one fails in the
+        merge; replay() again on the same Replayer must re-read the grown
+        segment, not only the new one."""
+        txns = generate_changelog(n_conversations=6, max_turns=3, n_extra_ops=10, seed=5)
+        k = len(txns) // 2
+        full = write_binlog_files(txns, str(tmp_path / "full"), txns_per_file=k)
+        outdir = str(tmp_path / "binlog")
+        [seg] = write_binlog_files(txns[: k - 1], outdir, txns_per_file=k)
+        assert os.path.basename(full[0]) == os.path.basename(seg)
+        with open(full[0], "rb") as f:
+            grown = f.read()
+        with open(seg, "rb") as f:
+            head = f.read()
+        assert grown.startswith(head)
+
+        r = Replayer(spark, outdir, str(tmp_path / "store"))
+        assert r.replay().events > 0
+        with open(seg, "ab") as f:
+            f.write(grown[len(head):])
+        for p in full[1:]:
+            with open(p, "rb") as src, open(os.path.join(outdir, os.path.basename(p)), "wb") as dst:
+                dst.write(src.read())
+
+        merge = r.target.merge
+        calls = []
+
+        def merge_failing_once(*args, **kwargs):
+            calls.append(1)
+            if len(calls) == 1:
+                raise OSError("injected merge failure")
+            return merge(*args, **kwargs)
+
+        monkeypatch.setattr(r.target, "merge", merge_failing_once)
+        with pytest.raises(OSError, match="injected"):
+            r.replay()
+        r.replay()
+        assert len(calls) == 2
+        _assert_state_equals_oracle(_final_state_pdf(r), apply_changelog_oracle(txns))
+
     def test_ledger_contents(self, spark, changelog, tmp_path):
-        txns, outdir, _, _ = changelog
+        txns, outdir, paths, _ = changelog
         store = str(tmp_path / "store5")
         r = Replayer(spark, outdir, store)
-        r.replay(files_per_batch=2)
+        res = r.replay(files_per_batch=2)
         entries = r.ledger.entries()
         assert entries
         last = entries[-1]
@@ -156,6 +219,20 @@ class TestReplay:
         assert last.max_pos > 0
         assert last.partition_lineage
         assert last.metrics["events"] > 0
+
+        # net_rows = distinct keys the batch's first deliveries touch
+        # (write_binlog_files puts 40 transactions in each file)
+        names = sorted(os.path.basename(p) for p in paths)
+        by_file = {n: txns[40 * i : 40 * (i + 1)] for i, n in enumerate(names)}
+        applied: set = set()
+        for b, e in zip(res.batches, entries):
+            batch_txns = [t for n in b.files for t in by_file[n]]
+            touched = {
+                tuple((op.after or op.before)[:2])
+                for t in batch_txns if t.seq not in applied for op in t.ops
+            }
+            applied |= {t.seq for t in batch_txns}
+            assert b.net_rows == e.metrics["net_rows"] == len(touched)
 
     def test_schema_evolution_tool_column(self, spark, changelog, tmp_path):
         _, outdir, _, oracle = changelog

@@ -224,9 +224,10 @@ class TestSegmentOrdering:
 
 
 class TestStatsMergeFilterParity:
-    """The concurrent stats pass (numpy/pandas filters) and the merge pass
-    (Spark SQL filters) must agree event-for-event — the empty-batch
-    cancel in run_batch assumes empty stats ⇒ empty net (ADVICE r2 #3)."""
+    """The ledger facts the decode tasks report (numpy/pandas filters) and
+    the merge pipeline's Spark SQL filters must agree event-for-event —
+    run_batch commits an empty batch without merging on the strength of
+    empty stats, which is sound only if empty stats ⇒ empty net."""
 
     def _spark_side_counts(self, spark, rep, outdir):
         from pyspark.sql import functions as F
@@ -253,12 +254,10 @@ class TestStatsMergeFilterParity:
             for r in changes.groupBy("src_file").agg(F.count("*").alias("n")).collect()
         }
 
-    def _stats_counts(self, rep, files):
-        covered = rep.ledger.covered_gtid_set()
-        max_file, max_pos = rep.ledger.max_position()
-        stats = rep._stats_job(files, covered, max_file, max_pos)
+    @staticmethod
+    def _lineage_counts(entry):
         out: dict = {}
-        for r in stats:
+        for r in entry.partition_lineage:
             out[r["src_file"]] = out.get(r["src_file"], 0) + r["events"]
         return {k: v for k, v in out.items() if v}
 
@@ -274,15 +273,22 @@ class TestStatsMergeFilterParity:
         assert len(files) >= 3
         rep.run_batch(files[:2])
 
-        # mid-stream checkpoint: both stacks must count the same remainder
-        assert self._stats_counts(rep, files) == self._spark_side_counts(
-            spark, rep, outdir
-        )
+        # mid-stream checkpoint: the committed lineage of the remainder
+        # batch must count exactly what the Spark-side filters keep
+        want = self._spark_side_counts(spark, rep, outdir)
+        assert want
+        rep.run_batch(files)
+        assert self._lineage_counts(rep.ledger.last()) == want
 
-        # fully replayed: both stacks must see an empty batch
-        rep.replay(files_per_batch=1)
-        assert self._stats_counts(rep, files) == {}
+        # fully replayed: both sides must see an empty batch
         assert self._spark_side_counts(spark, rep, outdir) == {}
+        n_entries = len(rep.ledger.entries())
+        empty = rep.run_batch(files)
+        assert empty.events == 0 and empty.lineage == []
+        assert all(
+            e.metrics["events"] == 0 and not e.partition_lineage
+            for e in rep.ledger.entries()[n_entries:]
+        )
         _assert_texts_equal(_state_pdf(rep), apply_changelog_oracle(txns))
 
 

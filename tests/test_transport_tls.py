@@ -86,6 +86,25 @@ def test_ssl_if_available_falls_back_to_plaintext(source_binlog):
         client.close()
 
 
+def test_ssl_require_sends_sni(source_binlog, tmp_path):
+    """``require`` checks no certificate, yet still names the host in the
+    TLS hello (SNI), so a server holding several certificates can pick
+    the right one."""
+    outdir, _ = source_binlog
+    ctx, _ = make_ssl_material(str(tmp_path))
+    seen = []
+    ctx.sni_callback = lambda sock, name, context: seen.append(name)
+    opts = ReplicaOptions(username="repl", password="secret", blocking=False)
+    with FakeMySqlServer(outdir, ssl_context=ctx) as srv:
+        client = BinlogSocketClient(
+            "localhost", srv.port, opts, ssl_mode="require"
+        )
+        client.connect()
+        assert isinstance(client.channel._sock, ssl.SSLSocket)
+        client.close()
+    assert seen == ["localhost"]
+
+
 def test_ssl_verify_ca_and_full(source_binlog, ssl_material):
     outdir, names = source_binlog
     ctx, ca_pem = ssl_material

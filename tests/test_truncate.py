@@ -3,9 +3,9 @@ tracked table with an implicit-commit ``TRUNCATE TABLE`` statement — the
 engine must clear all state logged before the fence and rebuild from the
 events after it, exactly once, across batches, resume, and redelivery.
 
-Detection rides the stats pass (the segment bytes are already in memory
+Detection rides the decode task (the segment bytes are already in memory
 there; ``ddl.scan_truncates`` costs a substring reject per segment), the
-fence batch discards the overlapped merge and re-runs sequentially, and
+fence batch re-plans its net change after the last fence before merging, and
 the fence's own GTID joins the ledger so a redelivered truncate is a
 no-op (``run_batch`` fence path; ``target.truncate`` is a metadata-only
 empty-manifest commit on the bucketed layout).

@@ -336,6 +336,26 @@ class TestAuthCommands:
         assert not struct.unpack_from("<I", cmd2, 0)[0] & CONNECT_WITH_DB
         assert b"chat" not in cmd2
 
+    def test_handshake_response_repeats_ssl_capability(self):
+        """Over TLS the handshake response carries the SSLRequest's
+        capability word, CLIENT_SSL included; in plaintext it does not."""
+        from mysql_cdc_spark.binlog.wire import (
+            SSL,
+            encode_authenticate_command,
+            encode_ssl_request_command,
+        )
+
+        scramble = "abcdefghijklmnopqrst"
+        req_caps = struct.unpack_from("<I", encode_ssl_request_command(), 0)[0]
+        tls = encode_authenticate_command(
+            "repl", "secret", scramble, CACHING_SHA2_PASSWORD, use_ssl=True
+        )
+        assert struct.unpack_from("<I", tls, 0)[0] == req_caps
+        plain = encode_authenticate_command(
+            "repl", "secret", scramble, CACHING_SHA2_PASSWORD
+        )
+        assert struct.unpack_from("<I", plain, 0)[0] == req_caps & ~SSL
+
     def test_ssl_request_and_plugin_switch(self):
         from mysql_cdc_spark.binlog.wire import (
             SSL,
