@@ -717,21 +717,25 @@ class _LatestPerSegment(AccumulatorParam):
         return value1
 
 
-def _segment_row_stats(frames, name, covered, min_pos_excl) -> list[dict]:
-    """Per-gtid_source ledger facts of one decoded segment: committed-row
-    count, position bounds, collapsed GTID-seq islands and the newest
-    header timestamp. Applies the filters ``run_batch`` applies in Spark —
-    the ``xid`` gate, the covered-GtidSet anti-join (``covered`` =
-    ``GtidSet.to_intervals()`` tuples) and ``pos > min_pos_excl`` — so
-    the facts count exactly the rows those filters keep. Islands via numpy
-    unique+diff: the distributed form of GtidSet.add_gtid's collapse
-    (uuid_set.rs:29-98)."""
+def _segment_row_stats(frames, name, covered, min_pos_excl) -> tuple:
+    """Ledger facts of one decoded segment: ``(rows, open_pos)``. ``rows``
+    holds per-gtid_source committed-row count, position bounds, collapsed
+    GTID-seq islands and the newest header timestamp. Applies the filters
+    ``run_batch`` applies in Spark — the ``xid`` gate, the covered-GtidSet
+    anti-join (``covered`` = ``GtidSet.to_intervals()`` tuples) and
+    ``pos > min_pos_excl`` — so the facts count exactly the rows those
+    filters keep. ``open_pos`` is the first position after the checkpoint
+    of a row the ``xid`` gate drops (a transaction whose XID is not in the
+    segment yet), or None. Islands via numpy unique+diff: the distributed
+    form of GtidSet.add_gtid's collapse (uuid_set.rs:29-98)."""
     if not frames:
-        return []
+        return [], None
     pdf = pd.concat(frames, ignore_index=True)
-    pdf = pdf[pdf["xid"].notna()]
     if min_pos_excl is not None:
         pdf = pdf[pdf["pos"] > min_pos_excl]
+    gated = pdf["xid"].isna()
+    open_pos = int(pdf["pos"][gated].min()) if gated.any() else None
+    pdf = pdf[~gated]
     if covered and len(pdf):
         by_src: dict = {}
         for uuid, s, e in covered:
@@ -770,7 +774,7 @@ def _segment_row_stats(frames, name, covered, min_pos_excl) -> list[dict]:
             "ends": ends,
             "max_ts": 0 if pd.isna(ts_max) else int(pd.Timestamp(ts_max).value // 10**9),
         })
-    return out
+    return out, open_pos
 
 
 class SegmentStats:
@@ -806,23 +810,27 @@ class SegmentStats:
         predicate drops all their rows)."""
         rows: list = []
         fences: list = []
+        open_pos = None
         key = _segment_sort_key(name)
         if self.resume_key is None or key >= self.resume_key:
             from .ddl import scan_truncates
 
             min_pos_excl = self.resume_pos if key == self.resume_key else None
-            rows = _segment_row_stats(frames, name, self.covered, min_pos_excl)
+            rows, open_pos = _segment_row_stats(
+                frames, name, self.covered, min_pos_excl
+            )
             fences = [
                 {**t, "src_file": name}
                 for t in scan_truncates(content, name, spec.database, spec.table)
                 if min_pos_excl is None or t["pos"] > min_pos_excl
             ]
-        self.acc.add({name: (rows, fences)})
+        self.acc.add({name: (rows, fences, open_pos)})
 
-    def collect(self, files: list[str]) -> tuple[list[dict], list[dict]]:
-        """Driver side: (row stats, fences) of ``files``. A segment with no
-        report means its decode task never finished, so the facts would be
-        incomplete: raise rather than commit them."""
+    def collect(self, files: list[str]) -> tuple[list[dict], list[dict], dict]:
+        """Driver side: (row stats, fences, ``{segment: open_pos}`` for
+        segments that end in an open transaction) of ``files``. A segment
+        with no report means its decode task never finished, so the facts
+        would be incomplete: raise rather than commit them."""
         got = self.acc.value
         missing = [f for f in files if f not in got]
         if missing:
@@ -830,6 +838,7 @@ class SegmentStats:
         return (
             [r for f in files for r in got[f][0]],
             [t for f in files for t in got[f][1]],
+            {f: got[f][2] for f in files if got[f][2] is not None},
         )
 
 

@@ -62,6 +62,16 @@ class AuditContext:
     primary_key: tuple
 
 
+def require_snapshot_target(target) -> None:
+    """An audit needs a staged version to check and unlink: a target that
+    commits inside its engine (no ``snapshot_path``) has none."""
+    if not hasattr(target, "snapshot_path"):
+        raise TypeError(
+            "audit requires a snapshot target: an internally-committing "
+            "sink has no staged version to audit or roll back"
+        )
+
+
 def all_of(*auditors):
     """Run every auditor in order; the first rejection vetoes the batch."""
 

@@ -56,14 +56,17 @@ write amplification the binding constraint.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .target import BucketedParquetMergeTarget, empty_state_df
+from .target import (
+    BucketedParquetMergeTarget,
+    OrderedPolicy,
+    _read_manifest,
+    empty_state_df,
+)
 
 # Default per-bucket delta-chain length at which the batch Replayer /
 # streaming apply tier folds the chain back into base (auto-compact):
@@ -72,6 +75,25 @@ from .target import BucketedParquetMergeTarget, empty_state_df
 # default; callers pass auto_compact=0 to opt out or another threshold
 # to tune the write/read amplification trade.
 DEFAULT_AUTO_COMPACT = 16
+
+
+def auto_compact_policy(target, auto_compact: int | None) -> int | None:
+    """The chain-length threshold an apply loop compacts at, or None for
+    no auto-compaction. Merge-on-read targets default to
+    ``DEFAULT_AUTO_COMPACT``; ``0`` turns it off; any other value needs a
+    compacting target and must be >= 1."""
+    if auto_compact is None and hasattr(target, "delta_stats"):
+        auto_compact = DEFAULT_AUTO_COMPACT
+    if auto_compact == 0 or auto_compact is None:
+        return None
+    if not hasattr(target, "compact"):
+        raise TypeError(
+            "auto_compact needs a merge-on-read target "
+            "(MergeOnReadBucketedTarget family)"
+        )
+    if auto_compact < 1:
+        raise ValueError("auto_compact must be >= 1")
+    return auto_compact
 
 
 class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
@@ -85,36 +107,18 @@ class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
     FAMILY = "mor"
 
     def _load_manifest(self, version: int) -> dict:
-        if version <= 0:
-            return {}
-        with open(self._manifest_path(version)) as f:
-            raw = json.load(f)
         out = {}
-        for k, v in raw.items():
-            if isinstance(v, str):  # plain-bucketed manifest (pre-conversion
-                # snapshot, e.g. a store that started CoW): base-only entry
+        for b, v in _read_manifest(self.store_dir, version).items():
+            if isinstance(v, str):  # copy-on-write entry (a store that
+                # started CoW, adopted here): base-only entry
                 v = {"base": v, "deltas": []}
-            out[int(k)] = {"base": v.get("base"), "deltas": list(v["deltas"])}
+            out[b] = {"base": v.get("base"), "deltas": list(v["deltas"])}
         return out
 
     # -- read (resolve) ------------------------------------------------------
 
-    def _pad(self, df: DataFrame) -> DataFrame:
-        for name, ddl, _ in self.spec.columns:
-            if name not in df.columns:
-                df = df.withColumn(name, F.lit(None).cast(ddl))
-        return df
-
-    def _scan(self, spark: SparkSession, paths: list[str]) -> DataFrame:
-        full = sorted(os.path.join(self.store_dir, p) for p in set(paths))
-        return self._pad(
-            spark.read.option("mergeSchema", "true").parquet(*full)
-        )
-
     def read(self, spark: SparkSession, version: int, bucket_ids=None) -> DataFrame:
-        manifest = self._load_manifest(version)
-        if bucket_ids is not None:
-            manifest = {b: e for b, e in manifest.items() if b in bucket_ids}
+        manifest = self._pruned_manifest(version, bucket_ids)
         spec_cols = [n for n, _, _ in self.spec.columns]
         if not manifest:
             return empty_state_df(spark, self.spec)
@@ -199,9 +203,7 @@ class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
         snapshot version+1 and splice the manifest; the shared commit path
         for the _seq-ordered and order-tuple-ordered (subclass) sinks."""
         new_version = current_version + 1
-        snap = self.snapshot_path(new_version)
-        if os.path.exists(snap):
-            shutil.rmtree(snap)  # orphan from a crashed batch — retry overwrites
+        snap = self._fresh_snapshot(new_version)
         delta = delta.persist()  # consumed twice: touched pre-pass + write
         try:
             touched = sorted(
@@ -261,59 +263,15 @@ class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
     ) -> int:
         return self._append_delta(net, current_version, F.col("carried_mask"))
 
-    def _write_meta(self, version: int, manifest: dict) -> None:
-        """Layout first, manifest last (atomic rename) — the manifest write
-        stays the snapshot's internal commit point, same as the parent."""
-        self._record_family()
-        snap = self.snapshot_path(version)
-        os.makedirs(snap, exist_ok=True)
-        with open(self._layout_path(version), "w") as f:
-            json.dump(
-                {"buckets": self.buckets, "bucket_cols": list(self.bucket_cols)}, f
-            )
-        tmp = self._manifest_path(version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({str(b): e for b, e in sorted(manifest.items())}, f)
-        os.replace(tmp, self._manifest_path(version))
-
     # -- base rewrite (compact / rebucket) --------------------------------------
 
-    def _commit_buckets(
-        self, merged: DataFrame, touched: list, current_version: int,
-        carry_over: bool = True,
-    ) -> int:
-        """Write ``merged`` as fresh BASE data for ``touched`` buckets
-        (delta chains cleared) and splice the manifest. Used by ``compact``
-        and by the inherited ``rebucket`` (whose resolved full read comes
-        through the overridden ``read``)."""
-        new_version = current_version + 1
-        snap = self.snapshot_path(new_version)
-        if os.path.exists(snap):
-            shutil.rmtree(snap)
-        data_dir = os.path.join(snap, "data")
-        (
-            merged.withColumn("_seq", F.lit(new_version).cast("long"))
-            .withColumn("_bucket", self._bucket_expr())
-            .repartition(max(1, len(touched)), F.col("_bucket"))
-            .write.partitionBy("_bucket")
-            .parquet(data_dir)
-        )
-        manifest = {}
-        if carry_over:
-            manifest = {
-                b: e
-                for b, e in self._load_manifest(current_version).items()
-                if b not in set(touched)
-            }
-        for b in touched:
-            bucket_dir = os.path.join(data_dir, f"_bucket={b}")
-            if os.path.isdir(bucket_dir):  # a fully-deleted bucket writes no dir
-                manifest[b] = {
-                    "base": os.path.relpath(bucket_dir, self.store_dir),
-                    "deltas": [],
-                }
-        self._write_meta(new_version, manifest)
-        return new_version
+    def _base_rows(self, rows: DataFrame, version: int) -> DataFrame:
+        """Compacted or rebucketed rows become BASE data stamped with the
+        writing version (``_seq``); later deltas outrank them."""
+        return rows.withColumn("_seq", F.lit(version).cast("long"))
+
+    def _base_entry(self, rel: str) -> dict:
+        return {"base": rel, "deltas": []}
 
     def compact(
         self,
@@ -329,8 +287,10 @@ class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
         version, or ``current_version`` unchanged if no bucket qualifies
         (no empty commit). Run on a cadence (or delta-count trigger) that
         bounds read amplification; each compaction pays exactly the
-        touched-bucket rewrite the CoW path pays per batch."""
-        self.read_session = spark
+        touched-bucket rewrite the CoW path pays per batch. Ordered targets
+        keep their tombstones here (``_read_full``): a compacted-away
+        delete could be outranked into resurrection by a late redelivered
+        insert; ``prune_tombstones`` ages them out under a watermark."""
         self._adopt_layout(current_version)
         manifest = self._load_manifest(current_version)
         chosen = [
@@ -341,7 +301,7 @@ class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
         ]
         if not chosen:
             return current_version
-        resolved = self.read(spark, current_version, bucket_ids=set(chosen))
+        resolved = self._read_full(spark, current_version, set(chosen))
         return self._commit_buckets(resolved, sorted(chosen), current_version)
 
     def delta_stats(self, version: int) -> dict:
@@ -364,17 +324,12 @@ class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
         return out
 
 
-class OrderedMergeOnReadTarget(MergeOnReadBucketedTarget):
+class OrderedMergeOnReadTarget(OrderedPolicy, MergeOnReadBucketedTarget):
     """Order-aware merge-on-read — the streaming apply tier's
-    write-amplification fix.
-
-    ``OrderedBucketedMergeTarget`` (copy-on-write) gives the file-stream
-    source its cross-trigger guarantees — an incoming row only replaces
-    stored state when its ORDER TUPLE outranks it, deletes persist as
-    tombstones so an out-of-order old insert cannot resurrect a row — but
-    each trigger still rewrites every touched bucket. This class keeps the
-    exact outrank semantics while writing only the trigger's net change
-    rows as per-bucket delta files.
+    write-amplification fix: the outrank guard and tombstones of
+    ``OrderedPolicy`` while writing only the trigger's net change rows as
+    per-bucket delta files (the ordered copy-on-write sink rewrites every
+    touched bucket per trigger).
 
     The one representation: base and delta rows share a single schema —
     spec columns + ``_op`` (upsert/delete) + ``_ord_<col>`` longs — so a
@@ -390,31 +345,9 @@ class OrderedMergeOnReadTarget(MergeOnReadBucketedTarget):
     to the latest-written one — matching the ordered CoW sink's
     incoming-row-wins behavior on equal rank. Compacted base rows drop
     ``_gen`` (they rank as generation -1), so a later redelivered tie
-    again resolves to the newer write.
-
-    MINIMAL row images are refused like the ordered CoW sink (the outrank
-    guard replaces whole rows; per-column carried-bit folding under
-    reordering would need per-column order tuples). ``prune_tombstones``
-    ages tombstones below the caller's redelivery low-watermark out via a
-    full compacting rewrite, same contract as the CoW ordered sinks."""
+    again resolves to the newer write."""
 
     FAMILY = "ordered_mor"
-
-    def __init__(
-        self,
-        store_dir: str,
-        spec=None,
-        buckets: int = 64,
-        bucket_cols: tuple | None = None,
-        order_cols: tuple[str, ...] = ("gtid_seq", "pos", "row_in_event"),
-    ):
-        from ..binlog.decoder import TRANSCRIPTS
-
-        super().__init__(store_dir, spec or TRANSCRIPTS, buckets, bucket_cols)
-        self.order_cols = list(order_cols)
-
-    def _ord_names(self) -> list[str]:
-        return [f"_ord_{c}" for c in self.order_cols]
 
     # -- read (resolve by order tuple) ----------------------------------------
 
@@ -424,17 +357,12 @@ class OrderedMergeOnReadTarget(MergeOnReadBucketedTarget):
         """Winning stored form per key — spec columns + order tuple +
         tombstone flag — folded across base and deltas. Buckets without
         deltas skip the fold (their base is already one winner per key)."""
-        manifest = self._load_manifest(version)
-        if bucket_ids is not None:
-            manifest = {b: e for b, e in manifest.items() if b in bucket_ids}
+        manifest = self._pruned_manifest(version, bucket_ids)
         spec_cols = [n for n, _, _ in self.spec.columns]
         ords = self._ord_names()
         out_cols = [*spec_cols, *ords, "_deleted"]
         if not manifest:
-            df = empty_state_df(spark, self.spec)
-            for o in ords:
-                df = df.withColumn(o, F.lit(None).cast("long"))
-            return df.withColumn("_deleted", F.lit(False))
+            return self._empty_ordered(spark)
 
         plain = [e["base"] for e in manifest.values() if not e["deltas"] and e["base"]]
         folded = {b: e for b, e in manifest.items() if e["deltas"]}
@@ -479,10 +407,7 @@ class OrderedMergeOnReadTarget(MergeOnReadBucketedTarget):
         return out
 
     def _scan_ordered(self, spark: SparkSession, paths: list[str]) -> DataFrame:
-        df = self._scan(spark, paths)
-        for o in self._ord_names():
-            if o not in df.columns:
-                df = df.withColumn(o, F.lit(None).cast("long"))
+        df = self._with_ord_cols(self._scan(spark, paths))
         if "_gen" not in df.columns:  # compacted/adopted base: generation -1
             df = df.withColumn("_gen", F.lit(None).cast("long"))
         # adopted CoW base rows (str-entry manifest conversion) carry no
@@ -502,130 +427,24 @@ class OrderedMergeOnReadTarget(MergeOnReadBucketedTarget):
             df = df.withColumn("_op", from_flag)
         return df.drop("_deleted") if "_deleted" in df.columns else df
 
-    def read(self, spark: SparkSession, version: int, bucket_ids=None) -> DataFrame:
-        return (
-            self.read_with_order(spark, version, bucket_ids)
-            .filter(~F.col("_deleted"))
-            .select(*[n for n, _, _ in self.spec.columns])
-        )
-
-    def _read_full(self, spark: SparkSession, version: int) -> DataFrame:
-        return self.read_with_order(spark, version)
-
     # -- write ------------------------------------------------------------------
 
     def merge(self, spark: SparkSession, net: DataFrame, current_version: int) -> int:
-        """Same net contract as the ordered CoW sinks (key cols + ``op`` +
+        """Same net contract as the ordered CoW sink (key cols + ``op`` +
         ``after_<col>`` + order columns); writes only delta files."""
         self._adopt_layout(current_version)
-        spec = self.spec
-        keys = list(spec.primary_key)
-        delta = net.select(
-            *[F.col(k).cast(d).alias(k) for k, d, _ in spec.columns if k in keys],
-            *[
-                F.col(f"after_{c}").cast(d).alias(c)
-                for c, d, _ in spec.columns
-                if c not in keys
-            ],
-            F.col("op").alias("_op"),
-            *[
-                F.col(c).cast("long").alias(o)
-                for c, o in zip(self.order_cols, self._ord_names())
-            ],
-            F.lit(current_version + 1).cast("long").alias("_gen"),
+        delta = self._incoming(net, "_op").withColumn(
+            "_gen", F.lit(current_version + 1).cast("long")
         )
         return self._commit_delta(delta, current_version)
 
-    def merge_partial(self, spark, net, current_version):
-        raise ValueError(
-            "MINIMAL row images need whole-row state the outrank guard "
-            "cannot reconstruct per column; use the batch path "
-            "(Replayer(row_image='minimal')) for MINIMAL streams"
-        )
-
-    def _commit_buckets(
-        self, merged: DataFrame, touched: list, current_version: int,
-        carry_over: bool = True,
-    ) -> int:
-        """Write ``merged`` (winning rows INCLUDING tombstones, in the
-        shared spec+_op+_ord schema) as fresh base data; used by
-        ``compact``, the inherited ``rebucket`` (via ``_read_full``), and
-        ``prune_tombstones``. Accepts either the ``_deleted``-flag form
-        (from ``read_with_order``) or the ``_op`` form."""
-        new_version = current_version + 1
-        if "_deleted" in merged.columns:
-            merged = merged.withColumn(
-                "_op",
-                F.when(F.col("_deleted"), F.lit("delete")).otherwise(
-                    F.lit("upsert")
-                ),
-            ).drop("_deleted")
-        snap = self.snapshot_path(new_version)
-        if os.path.exists(snap):
-            shutil.rmtree(snap)
-        data_dir = os.path.join(snap, "data")
-        (
-            merged.withColumn("_bucket", self._bucket_expr())
-            .repartition(max(1, len(touched)), F.col("_bucket"))
-            .write.partitionBy("_bucket")
-            .parquet(data_dir)
-        )
-        manifest = {}
-        if carry_over:
-            manifest = {
-                b: e
-                for b, e in self._load_manifest(current_version).items()
-                if b not in set(touched)
-            }
-        for b in touched:
-            bucket_dir = os.path.join(data_dir, f"_bucket={b}")
-            if os.path.isdir(bucket_dir):
-                manifest[b] = {
-                    "base": os.path.relpath(bucket_dir, self.store_dir),
-                    "deltas": [],
-                }
-        self._write_meta(new_version, manifest)
-        return new_version
-
-    def compact(
-        self,
-        spark: SparkSession,
-        current_version: int,
-        min_deltas: int = 1,
-        bucket_ids=None,
-    ) -> int:
-        """Fold delta chains into base files — tombstones are KEPT (a
-        compacted-away delete could be outranked into resurrection by a
-        late redelivered insert otherwise); ``prune_tombstones`` is the op
-        that ages them out under a redelivery watermark."""
-        self._adopt_layout(current_version)
-        manifest = self._load_manifest(current_version)
-        chosen = [
-            b
-            for b, e in manifest.items()
-            if len(e["deltas"]) >= max(1, min_deltas)
-            and (bucket_ids is None or b in bucket_ids)
-        ]
-        if not chosen:
-            return current_version
-        resolved = self.read_with_order(spark, current_version, set(chosen))
-        return self._commit_buckets(resolved, sorted(chosen), current_version)
-
-    def prune_tombstones(
-        self, spark: SparkSession, current_version: int, min_live_order: int
-    ) -> int:
-        """Tombstone GC under the caller's redelivery low-watermark (see
-        ``OrderedParquetMergeTarget.prune_tombstones`` — NULL-ordered
-        tombstones always survive); a full compacting rewrite, every
-        bucket fresh."""
-        self._adopt_layout(current_version)
-        df = self.read_with_order(spark, current_version)
-        lead = self._ord_names()[0]
-        kept = df.filter(
-            (~F.col("_deleted"))
-            | F.col(lead).isNull()
-            | (F.col(lead) >= F.lit(min_live_order))
-        )
-        return self._commit_buckets(
-            kept, list(range(self.buckets)), current_version, carry_over=False
-        )
+    def _base_rows(self, rows: DataFrame, version: int) -> DataFrame:
+        """Base rows keep the delta schema: winning rows INCLUDING
+        tombstones, the ``_deleted`` flag of ``read_with_order`` turned
+        back into ``_op``; no ``_gen`` (compacted rows rank as -1)."""
+        if "_deleted" not in rows.columns:
+            return rows
+        return rows.withColumn(
+            "_op",
+            F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("upsert")),
+        ).drop("_deleted")

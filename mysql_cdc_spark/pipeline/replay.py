@@ -42,12 +42,7 @@ from .order import (
     last_writer_wins_partial,
     with_change_key,
 )
-from .target import (
-    BucketedParquetMergeTarget,
-    OrderedParquetMergeTarget,
-    ParquetMergeTarget,
-    snapshot_diff,
-)
+from .target import BucketedParquetMergeTarget, open_store, snapshot_diff
 
 
 def _after_position_predicate(max_file: str, max_pos: int):
@@ -284,16 +279,10 @@ class Replayer:
         self.ledger = Ledger(store_dir)
         self._stats_acc = SegmentStats.accumulator(spark)  # one per Replayer
         self._planned_sizes: dict[str, int] = {}  # last commit's file sizes
-        # Default sink is the bucket-pruned copy-on-write target: per-batch
-        # IO is O(touched-bucket data), not O(table), which is the only
-        # shape that survives steady-state incremental ingest at 10^10 rows
-        # (measured 5.0x at 4M rows and flat vs table size —
-        # tools/bench_bucketed_merge.py). Pass ``target=ParquetMergeTarget``
-        # explicitly for the plain whole-snapshot rewrite. Bucket count
-        # tracks cluster parallelism (the output committer's driver-side
-        # file moves are a serial cost per bucket, so a 2-core session
-        # shouldn't pay for 32 output dirs) with a floor that keeps
-        # pruning meaningful.
+        # Default sink (see _detect_target): an existing store reopens
+        # through the target that wrote it; a fresh one gets the
+        # bucket-pruned copy-on-write target, whose per-batch IO is
+        # O(touched-bucket data), not O(table).
         self.target = target or self._detect_target(store_dir, spec, spark)
         self.views = list(views) if views else []
         self.order_cols = list(order_cols) if order_cols else list(ORDER_COLS)
@@ -325,12 +314,10 @@ class Replayer:
         # readable state. Requires a snapshot target (something with an
         # unpublished version to unlink) — a sink that commits internally
         # has no WAP window here; use its own branch/WAP mechanism.
-        if audit is not None and not hasattr(self.target, "snapshot_path"):
-            raise TypeError(
-                "audit requires a snapshot target (ParquetMergeTarget "
-                "family): an internally-committing sink has no staged "
-                "version to audit or roll back"
-            )
+        if audit is not None:
+            from .audit import require_snapshot_target
+
+            require_snapshot_target(self.target)
         self.audit = audit
         # auto_compact: for merge-on-read targets, fold any bucket whose
         # delta chain reached this length after each batch — bounds read
@@ -340,21 +327,9 @@ class Replayer:
         # unmaintained store's fold cost grows linearly with chain length
         # (tools/bench_mor_chain.py), so bounding it is opt-OUT
         # (auto_compact=0), not opt-in.
-        if auto_compact is None and hasattr(self.target, "delta_stats"):
-            from .mor import DEFAULT_AUTO_COMPACT
+        from .mor import auto_compact_policy
 
-            auto_compact = DEFAULT_AUTO_COMPACT
-        if auto_compact == 0:
-            auto_compact = None
-        if auto_compact is not None:
-            if not hasattr(self.target, "compact"):
-                raise TypeError(
-                    "auto_compact needs a merge-on-read target "
-                    "(MergeOnReadBucketedTarget family)"
-                )
-            if auto_compact < 1:
-                raise ValueError("auto_compact must be >= 1")
-        self.auto_compact = auto_compact
+        self.auto_compact = auto_compact_policy(self.target, auto_compact)
         if start is not None:
             from .start import seed_ledger
 
@@ -362,75 +337,21 @@ class Replayer:
 
     @staticmethod
     def _detect_target(store_dir: str, spec, spark):
-        """Default sink, layout-aware: a fresh store gets the bucket-pruned
-        copy-on-write target; an EXISTING store is opened with the target
-        class matching its stamped family (``target_family.json``, written
-        at first commit) — a resume must never read a store through the
-        wrong loader (the CoW reader would treat a MoR manifest's entry
-        dicts as paths, and a truncated MoR store's empty {} manifest is
-        indistinguishable from CoW by sniffing). Stores from before family
-        stamping fall back to the manifest-shape + file-schema sniff.
-        Explicit ``target=`` always wins."""
-        import json as _json
-        import re as _re
-
-        from .target import load_target_family, target_class_for_family
-
-        family = load_target_family(store_dir)
-        if family is not None:
-            return target_class_for_family(family)(store_dir, spec)
-
-        snapdir = os.path.join(store_dir, "snapshots")
-        latest = None
-        if os.path.isdir(snapdir):
-            versions = [
-                int(m.group(1))
-                for n in os.listdir(snapdir)
-                if (m := _re.match(r"v(\d+)$", n))
-            ]
-            for v in sorted(versions, reverse=True):
-                mp = os.path.join(snapdir, f"v{v:08d}", "manifest.json")
-                if os.path.exists(mp):
-                    latest = mp
-                    break
-        if latest is not None:
-            with open(latest) as f:
-                entries = _json.load(f)
-            if any(isinstance(e, dict) for e in entries.values()):
-                # ordered vs plain merge-on-read is a property of the
-                # files — sniff a referenced parquet for _ord_* columns
-                import glob as _glob
-
-                import pyarrow.parquet as _pq
-
-                ordered = False
-                for e in entries.values():
-                    rels = (
-                        ([e["base"]] if isinstance(e, dict) and e.get("base") else [])
-                        + (e.get("deltas", []) if isinstance(e, dict) else [])
-                    )
-                    files = [
-                        f
-                        for rel in rels
-                        for f in _glob.glob(
-                            os.path.join(store_dir, rel, "*.parquet")
-                        )
-                    ]
-                    if files:
-                        names = _pq.read_schema(files[0]).names
-                        ordered = any(n.startswith("_ord_") for n in names)
-                        break
-                if ordered:
-                    from .mor import OrderedMergeOnReadTarget
-
-                    return OrderedMergeOnReadTarget(store_dir, spec)
-                from .mor import MergeOnReadBucketedTarget
-
-                return MergeOnReadBucketedTarget(store_dir, spec)
-        return BucketedParquetMergeTarget(
-            store_dir, spec,
-            buckets=max(16, spark.sparkContext.defaultParallelism),
-        )
+        """Default sink when no ``target=`` is given. An EXISTING store
+        reopens through the target family that wrote it
+        (``target.open_store``): a resume must never read a store through
+        the wrong loader. A fresh store gets the bucket-pruned
+        copy-on-write target. Its bucket count tracks cluster parallelism
+        (the output committer's driver-side file moves are a serial cost
+        per bucket, so a 2-core session shouldn't pay for 32 output dirs)
+        with a floor that keeps pruning meaningful."""
+        target = open_store(store_dir, spec)
+        if target is None:
+            target = BucketedParquetMergeTarget(
+                store_dir, spec,
+                buckets=max(16, spark.sparkContext.defaultParallelism),
+            )
+        return target
 
     # -- planning ----------------------------------------------------------
 
@@ -466,8 +387,8 @@ class Replayer:
         A subsequent ``replay()`` applies only changes after ``at``: the
         position predicate and GTID anti-join skip covered events, and any
         overlap delivered anyway re-applies idempotently (by value for
-        snapshot targets; for ``OrderedParquetMergeTarget`` the bootstrap
-        rows carry order tuple 0 so any real event outranks them).
+        snapshot targets; for ordered targets the bootstrap rows carry
+        order tuple 0 so any real event outranks them).
 
         Scale: the snapshot write is one key-partitioned shuffle of the
         base table — the same plan as a MERGE whose net side is the whole
@@ -847,7 +768,7 @@ class Replayer:
             t_phase = time.time()
             net_rows = net.count()
             phase_t["decode_lww_s"] = round(time.time() - t_phase, 2)
-            stats, markers = seg_stats.collect(files)
+            stats, markers, open_pos = seg_stats.collect(files)
 
             # -- TRUNCATE/DROP/RENAME fences. A truncate clears ALL state
             # logged before it; rows after it rebuild from empty —
@@ -936,7 +857,7 @@ class Replayer:
             n_events = sum(r["events"] for r in stats)
             if n_events == 0:
                 self._commit_empty_batch(
-                    batch_id, files, planned, covered, xa_info, t0
+                    batch_id, files, planned, open_pos, covered, xa_info, t0
                 )
                 self._planned_sizes = planned
                 return BatchMetrics(
@@ -1056,7 +977,7 @@ class Replayer:
 
     def _commit_empty_batch(
         self, batch_id: int, files: list[str], planned: dict[str, int],
-        covered, xa_info, t0: float,
+        open_pos: dict[str, int], covered, xa_info, t0: float,
     ) -> None:
         """Ledger entry for a batch whose rows were ALL filtered out
         (covered duplicates, pre-seed events, or still-pending XA
@@ -1068,13 +989,20 @@ class Replayer:
         covered set; its position is the end of the last batch file as
         sized at planning time (the decode read at least that much), so
         bytes appended since still replay (pos > length only matches
-        genuinely new bytes). Skipped when it would not advance the mark
-        and carries no floor: an idle tail poll stays entry-free instead
-        of growing the ledger."""
+        genuinely new bytes). When that segment ends in an open
+        transaction (rows decoded, XID not written yet; ``open_pos`` maps
+        the segment to its first such row), the position stops just
+        before that row instead: the transaction applies once its XID
+        arrives rather than falling behind the position. Skipped when it
+        would not advance the mark and carries no floor: an idle tail poll
+        stays entry-free instead of growing the ledger."""
         from ..binlog.decoder import _segment_sort_key
 
         last_name = max(files, key=_segment_sort_key)
-        cand = (_segment_sort_key(last_name), planned[last_name])
+        end = planned[last_name]
+        if last_name in open_pos:
+            end = min(end, open_pos[last_name] - 1)
+        cand = (_segment_sort_key(last_name), end)
         cur_file, cur_pos = self.ledger.max_position()
         cur = (_segment_sort_key(cur_file), cur_pos) if cur_file else None
         has_floor = bool(xa_info and xa_info["pending"])
@@ -1303,8 +1231,8 @@ class Replayer:
         corpus), and only rows at the recorded (src_file, pos) positions
         are applied. Re-driving is out-of-order application — later
         events for the same keys may already be in the table — so it
-        requires an order-carrying target (``OrderedParquetMergeTarget``
-        / ``OrderedBucketedMergeTarget``): the outrank guard applies a
+        requires an order-carrying target (``OrderedBucketedMergeTarget``
+        / ``OrderedMergeOnReadTarget``): the outrank guard applies a
         re-driven row only where it still wins. Choose one when deploying
         with ``on_decode_error='quarantine'`` if re-drive matters.
 
@@ -1321,7 +1249,7 @@ class Replayer:
         if not hasattr(self.target, "read_with_order"):
             raise TypeError(
                 "redrive_quarantine needs an order-carrying target "
-                "(OrderedParquetMergeTarget / OrderedBucketedMergeTarget): "
+                "(OrderedBucketedMergeTarget / OrderedMergeOnReadTarget): "
                 "re-driving applies events out of order, and only the "
                 "outrank guard can do that without regressing newer state"
             )
@@ -1713,14 +1641,12 @@ class Replayer:
         outrank-guard stale images by design, so they refuse a rewind.
         Returns the new snapshot version (current version unchanged if
         the states are already identical)."""
-        if isinstance(self.target, OrderedParquetMergeTarget) or hasattr(
-            self.target, "order_cols"
-        ):
+        if hasattr(self.target, "order_cols"):
             raise TypeError(
                 f"{type(self.target).__name__} outrank-guards stale "
                 "images (streaming sink); flashback needs a snapshot-"
-                "semantics target (ParquetMergeTarget / "
-                "BucketedParquetMergeTarget)"
+                "semantics target (BucketedParquetMergeTarget / "
+                "MergeOnReadBucketedTarget)"
             )
         entry = None
         for e in self.ledger.entries():
@@ -1829,9 +1755,7 @@ class Replayer:
 
         Like ``flashback``, the ledger's read position is untouched:
         repair fixes the *table*, not the *stream*."""
-        if isinstance(self.target, OrderedParquetMergeTarget) or hasattr(
-            self.target, "order_cols"
-        ):
+        if hasattr(self.target, "order_cols"):
             raise TypeError(
                 f"{type(self.target).__name__} outrank-guards stale "
                 "images (streaming sink); repair needs a snapshot-"

@@ -34,14 +34,12 @@ read amplification.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..binlog.decoder import TableSpec
 from .order import ORDER_COLS, scd2_history
-from .target import BucketedParquetMergeTarget
+from .target import BucketedParquetMergeTarget, latest_committed_version
 
 # Spark DDL of the decode tier's meta columns (change_event_schema) that
 # can serve as order columns
@@ -141,15 +139,7 @@ class Scd2HistoryStore(BucketedParquetMergeTarget):
         """Latest committed history version: max snapshot dir that has a
         manifest (a torn write leaves data without a manifest and is
         invisible — the next commit overwrites it)."""
-        root = os.path.join(self.store_dir, "snapshots")
-        best = 0
-        for name in os.listdir(root) if os.path.isdir(root) else []:
-            if not name.startswith("v"):
-                continue
-            v = int(name[1:])
-            if v > best and os.path.exists(self._manifest_path(v)):
-                best = v
-        return best
+        return latest_committed_version(self.store_dir)
 
     def apply_batch(
         self, spark: SparkSession, changes: DataFrame, current_version: int
@@ -353,16 +343,13 @@ class Scd2HistoryMorStore(Scd2HistoryStore):
 
     _load_manifest = _MOR._load_manifest
     _manifest_refs = _MOR._manifest_refs
-    _pad = _MOR._pad
-    _scan = _MOR._scan
     read = _MOR.read
     _resolve = _MOR._resolve
     _commit_delta = _MOR._commit_delta
-    _write_meta = _MOR._write_meta
-    _commit_buckets = _MOR._commit_buckets
+    _base_rows = _MOR._base_rows
+    _base_entry = _MOR._base_entry
     compact = _MOR.compact
     delta_stats = _MOR.delta_stats
-    gc = _MOR.gc
     del _MOR
 
     def _apply_batch_cached(

@@ -1,31 +1,37 @@
 """MERGE targets (S7 in SURVEY.md §2.1) — Iceberg first, parquet fallback.
 
 The reference hands decoded rows to user code (README.md:61); the whole
-point of this engine is the missing half: applying them. Two interchangeable
-sinks behind one interface:
+point of this engine is the missing half: applying them. One sink
+interface (``merge`` / ``merge_partial`` / ``truncate`` / ``read``):
 
 - ``IcebergMergeTarget`` — real ``MERGE INTO`` + ``ALTER TABLE ADD COLUMN``
   (additive schema evolution from TABLE_MAP metadata). Used when an Iceberg
   catalog is configured on the session; this sandbox's pyspark has no
   Iceberg runtime jar, so tests exercise the fallback.
-- ``ParquetMergeTarget`` — versioned-snapshot MERGE-equivalent: the new
-  snapshot = (current rows whose key is untouched) ∪ (net upserts). Written
-  as a key-hash-repartitioned parquet dir; the commit point is the *ledger
-  append*, not the snapshot write, so a torn write is invisible.
+- ``BucketedParquetMergeTarget`` — versioned-snapshot, bucket-pruned
+  copy-on-write MERGE: a batch rewrites only the hash buckets its net
+  change touches and splices the rest by manifest reference. The commit
+  point is the *ledger append*, not the snapshot write, so a torn write
+  is invisible. ``pipeline/mor.py`` holds its merge-on-read twin.
+
+``OrderedPolicy`` adds the streaming tier's outrank guard (order tuples +
+tombstones) to either layout. ``open_store`` reopens an existing store
+through the target family that wrote it.
 
 Scale notes (100 TB target, 10^8-row net changes per batch):
 - the anti-join of current-state × touched-keys shuffles on the key; the
   touched-key side is the *net* (post-LWW) change set, which is bounded by
   keys-touched-per-batch, not by event count;
 - at cluster scale the Iceberg path is strictly better (metadata-pruned
-  MERGE touches only affected data files); the parquet fallback rewrites
-  the snapshot and exists for environments without a catalog — interface
-  and tests are identical.
+  MERGE touches only affected data files); the parquet fallback exists
+  for environments without a catalog — interface and tests are identical.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -102,21 +108,115 @@ def snapshot_diff(
     )
 
 
-class ParquetMergeTarget:
-    """Versioned-snapshot parquet table with MERGE-equivalent upsert."""
+def snapshot_committed(snap_dir: str) -> bool:
+    """True when a snapshot directory finished its write. The bucketed
+    and merge-on-read layouts write ``manifest.json`` last, so it is their
+    commit point. A legacy unbucketed snapshot (the retired full-rewrite
+    layout) has no manifest, but the Spark committer wrote ``_SUCCESS``
+    directly inside it. A torn bucketed snapshot holds only ``data/`` or
+    ``delta/`` (the committer's ``_SUCCESS`` lands in there), so it never
+    reads as legacy."""
+    return os.path.exists(os.path.join(snap_dir, "manifest.json")) or (
+        os.path.exists(os.path.join(snap_dir, "_SUCCESS"))
+    )
+
+
+def _is_legacy(snap_dir: str) -> bool:
+    """A committed snapshot of the retired unbucketed layout."""
+    return snapshot_committed(snap_dir) and not os.path.exists(
+        os.path.join(snap_dir, "manifest.json")
+    )
+
+
+def latest_committed_version(store_dir: str) -> int:
+    """Newest committed snapshot version of a store (0 when none). A
+    torn snapshot above it is an orphan the next commit overwrites."""
+    snapdir = os.path.join(store_dir, "snapshots")
+    if not os.path.isdir(snapdir):
+        return 0
+    return max(
+        (
+            int(m.group(1))
+            for n in os.listdir(snapdir)
+            if (m := re.match(r"v(\d+)$", n))
+            and snapshot_committed(os.path.join(snapdir, n))
+        ),
+        default=0,
+    )
+
+
+def _read_manifest(store_dir: str, version: int) -> dict:
+    """Raw manifest of a committed snapshot: bucket id -> entry (a
+    store-relative path, or a merge-on-read ``{"base", "deltas"}`` dict).
+    A legacy unbucketed snapshot reads as one bucket 0 holding the whole
+    snapshot directory."""
+    if version <= 0:
+        return {}
+    snap = os.path.join(store_dir, "snapshots", f"v{version:08d}")
+    if _is_legacy(snap):
+        return {0: os.path.relpath(snap, store_dir)}
+    with open(os.path.join(snap, "manifest.json")) as f:
+        return {int(k): v for k, v in json.load(f).items()}
+
+
+class BucketedParquetMergeTarget:
+    """Bucket-pruned copy-on-write MERGE, the scale path for catalog-less
+    environments: per-batch IO is O(touched-bucket data), not O(table).
+
+    Layout mirrors Iceberg's copy-on-write over bucket partitioning:
+
+    - state is hash-bucketed by ``pmod(xxhash64(key cols), buckets)``;
+    - each snapshot version is a directory holding (a) the parquet data of
+      the buckets **this** batch rewrote (``data/_bucket=N/``) and (b) a
+      ``manifest.json`` mapping every live bucket to the snapshot-relative
+      path of its current data — untouched buckets keep pointing at the
+      version that last wrote them (no copy, no rewrite);
+    - ``merge`` reads ONLY the touched buckets' data (all rows that could
+      match a net key hash into those buckets), anti-joins ∪ upserts, and
+      writes only those buckets back. At 10^10 rows with 2^12+ buckets a
+      batch that touches 1% of keys reads and writes ~1% of the table.
+    - the manifest write is the snapshot's internal commit point (data is
+      written first); the *pipeline* commit point stays the ledger append,
+      so a torn snapshot is invisible and the next commit overwrites it.
+
+    Stores written by the retired unbucketed layout (families ``cow`` and
+    ``ordered_cow``: bare parquet snapshot directories) open through this
+    class and its ordered form: such a snapshot reads as bucket 0 of a
+    one-bucket layout, and the next merge continues the store from there.
+
+    ``bucket_cols`` picks the hash input (default: the full primary key).
+    Bucketing on a prefix — e.g. ``("conv_id",)``, mirroring
+    ``IcebergMergeTarget.ensure_table``'s ``bucket(64, conv_id)`` — keeps a
+    conversation's turns in one bucket, so a batch touching K conversations
+    rewrites at most K buckets however many turns it edits; the trade is
+    intra-bucket skew if one conversation dwarfs the rest. Correctness only
+    needs determinism: every net key hashes to the bucket holding its
+    stored row, which any PK-subset satisfies.
+    """
 
     # persisted store-level family tag (``<store>/target_family.json``),
-    # written at first commit: resuming a store MUST reopen it with the
-    # same target family, and sniffing the manifest/file shapes cannot
+    # written at commit: resuming a store MUST reopen it with the same
+    # target family, and sniffing the manifest/file shapes cannot
     # distinguish e.g. a truncated merge-on-read store (empty {} manifest)
     # from copy-on-write. Subclasses override.
-    FAMILY = "cow"
+    FAMILY = "bucketed_cow"
 
-    def __init__(self, store_dir: str, spec: TableSpec = TRANSCRIPTS, buckets: int = 32):
+    def __init__(
+        self,
+        store_dir: str,
+        spec: TableSpec = TRANSCRIPTS,
+        buckets: int = 64,
+        bucket_cols: tuple | None = None,
+    ):
         self.store_dir = store_dir
         self.spec = spec
         self.buckets = buckets
         os.makedirs(os.path.join(store_dir, "snapshots"), exist_ok=True)
+        cols = tuple(bucket_cols) if bucket_cols else tuple(spec.primary_key)
+        unknown = set(cols) - set(spec.primary_key)
+        if unknown:
+            raise ValueError(f"bucket_cols must be primary-key columns: {unknown}")
+        self.bucket_cols = cols
 
     def snapshot_path(self, version: int) -> str:
         return os.path.join(self.store_dir, "snapshots", f"v{version:08d}")
@@ -128,8 +228,6 @@ class ParquetMergeTarget:
         ADOPTING a copy-on-write store's manifest) re-stamps on its
         first commit and later auto-detection reopens through the new
         family. Readers never write the stamp."""
-        import json
-
         p = os.path.join(self.store_dir, "target_family.json")
         if os.path.exists(p):
             with open(p) as f:
@@ -142,206 +240,6 @@ class ParquetMergeTarget:
         with open(tmp, "w") as f:
             json.dump({"family": self.FAMILY}, f)
         os.replace(tmp, p)
-
-    def read(self, spark: SparkSession, version: int) -> DataFrame:
-        if version <= 0:
-            return empty_state_df(spark, self.spec)
-        df = spark.read.parquet(self.snapshot_path(version))
-        # additive evolution: older snapshots may predate new columns
-        for name, ddl, _ in self.spec.columns:
-            if name not in df.columns:
-                df = df.withColumn(name, F.lit(None).cast(ddl))
-        return df.select(*[n for n, _, _ in self.spec.columns])
-
-    def merge(
-        self,
-        spark: SparkSession,
-        net: DataFrame,
-        current_version: int,
-    ) -> int:
-        """Apply net changes (one row per key: final op + after image) and
-        write snapshot ``current_version + 1``. Returns the new version.
-
-        ``net`` columns: key cols + ``op`` + ``after_<col>`` for every spec
-        column.
-        """
-        self._record_family()
-        spec = self.spec
-        keys = list(spec.primary_key)
-        state = self.read(spark, current_version)
-
-        upserts = (
-            net.filter(F.col("op") != "delete")
-            .select(
-                *[
-                    F.col(f"after_{n}").cast(d).alias(n) if n not in keys else F.col(n).cast(d).alias(n)
-                    for n, d, _ in spec.columns
-                ]
-            )
-        )
-        touched = net.select(*keys)
-
-        # MERGE-equivalent: untouched current rows ∪ upserts. The anti-join
-        # shuffles both sides by key; AQE handles skewed hot conversations
-        # (session conf), and the net side is already key-unique post-LWW.
-        survivors = state.join(touched, on=keys, how="left_anti")
-        merged = survivors.unionByName(upserts, allowMissingColumns=False)
-
-        new_version = current_version + 1
-        out_path = self.snapshot_path(new_version)
-        if os.path.exists(out_path):
-            shutil.rmtree(out_path)  # orphan from a crashed batch — retry overwrites
-        (
-            merged.repartition(self.buckets, *[F.col(k) for k in keys])
-            .write.mode("overwrite")
-            .parquet(out_path)
-        )
-        return new_version
-
-    def truncate(self, spark: SparkSession, current_version: int) -> int:
-        """TRUNCATE TABLE: commit an empty state as version+1. Earlier
-        snapshots stay readable for time travel until ``gc``; the change
-        feed across the truncate version reads as one delete per stored
-        row (``snapshot_diff`` against empty), so downstream consumers
-        and IVM views fold the clear like ordinary changes."""
-        new_version = current_version + 1
-        out_path = self.snapshot_path(new_version)
-        if os.path.exists(out_path):
-            shutil.rmtree(out_path)  # orphan from a crashed batch
-        empty_state_df(spark, self.spec).write.mode("overwrite").parquet(out_path)
-        return new_version
-
-    def merge_partial(
-        self,
-        spark: SparkSession,
-        net: DataFrame,
-        current_version: int,
-    ) -> int:
-        """MERGE for partial-image (MINIMAL) net changes: ``net`` carries
-        key cols + ``op`` + ``after_<col>`` + ``carried_mask`` (from
-        ``last_writer_wins_partial``); a matched row takes ``after_<c>``
-        only for carried columns and keeps its stored value otherwise —
-        the per-column form of Iceberg's ``UPDATE SET c = s.c`` clause
-        list. Plan shape: one full-outer key join (same class as the
-        anti-join ∪ union of the full-image path)."""
-        self._record_family()
-        spec = self.spec
-        keys = list(spec.primary_key)
-        state = self.read(spark, current_version)
-
-        n = net.select(
-            *[F.col(k).cast(d).alias(k) for k, d, _ in spec.columns if k in keys],
-            F.col("op").alias("_op"),
-            F.col("carried_mask").alias("_cm"),
-            *[
-                F.col(f"after_{c}").cast(d).alias(f"_s_{c}")
-                for c, d, _ in spec.columns
-                if c not in keys
-            ],
-        )
-        joined = state.join(n, on=keys, how="full_outer")
-        survives = F.col("_op").isNull() | (F.col("_op") != "delete")
-        out_cols = [F.col(k) for k in keys]
-        for ci, (c, _d, _k) in enumerate(spec.columns):
-            if c in keys:
-                continue
-            bit = F.shiftright(F.col("_cm"), ci).bitwiseAND(F.lit(1)) == 1
-            out_cols.append(
-                F.when(F.col("_op").isNotNull() & bit, F.col(f"_s_{c}"))
-                .otherwise(F.col(c))
-                .alias(c)
-            )
-        merged = joined.filter(survives).select(*out_cols).select(
-            *[n_ for n_, _, _ in spec.columns]
-        )
-
-        new_version = current_version + 1
-        out_path = self.snapshot_path(new_version)
-        if os.path.exists(out_path):
-            shutil.rmtree(out_path)
-        (
-            merged.repartition(self.buckets, *[F.col(k) for k in keys])
-            .write.mode("overwrite")
-            .parquet(out_path)
-        )
-        return new_version
-
-    def read_changes(
-        self,
-        spark: SparkSession,
-        from_version: int,
-        to_version: int,
-        images: str = "applied",
-    ) -> DataFrame:
-        """Change-data-feed between two retained snapshot versions (see
-        ``snapshot_diff``). ``from_version=0`` diffs against the empty
-        table, i.e. every live row comes back as an ``insert``."""
-        return snapshot_diff(
-            self.read(spark, from_version),
-            self.read(spark, to_version),
-            self.spec,
-            images=images,
-        )
-
-    def gc(self, keep_latest: int) -> None:
-        """Drop snapshots older than the newest ``keep_latest`` (bench/io)."""
-        snaps = sorted(os.listdir(os.path.join(self.store_dir, "snapshots")))
-        for name in snaps[:-keep_latest] if keep_latest else []:
-            shutil.rmtree(os.path.join(self.store_dir, "snapshots", name))
-
-
-class BucketedParquetMergeTarget(ParquetMergeTarget):
-    """Bucket-pruned copy-on-write MERGE — the scale path for catalogs-less
-    environments (the plain ``ParquetMergeTarget`` rewrites the whole
-    snapshot every batch, which is O(table) and the one remaining
-    scale-killer in the merge tier).
-
-    Layout mirrors Iceberg's copy-on-write over bucket partitioning:
-
-    - state is hash-bucketed by ``pmod(xxhash64(key cols), buckets)``;
-    - each snapshot version is a directory holding (a) the parquet data of
-      the buckets **this** batch rewrote (``data/_bucket=N/``) and (b) a
-      ``manifest.json`` mapping every live bucket to the snapshot-relative
-      path of its current data — untouched buckets keep pointing at the
-      version that last wrote them (no copy, no rewrite);
-    - ``merge`` reads ONLY the touched buckets' data (all rows that could
-      match a net key hash into those buckets), anti-joins ∪ upserts, and
-      writes only those buckets back. Per-batch IO is O(touched-bucket
-      data), not O(table): at 10^10 rows with 2^12+ buckets a batch that
-      touches 1% of keys reads and writes ~1% of the table.
-    - the manifest write is the snapshot's internal commit point (data is
-      written first); the *pipeline* commit point stays the ledger append,
-      so a torn snapshot is invisible and ``Replayer``'s rollback
-      (``rmtree(snapshot_path(v+1))``) removes data and manifest together.
-
-    Same interface and semantics as ``ParquetMergeTarget`` (state equality
-    is pinned by tests); drop-in via ``Replayer(target=...)``.
-
-    ``bucket_cols`` picks the hash input (default: the full primary key).
-    Bucketing on a prefix — e.g. ``("conv_id",)``, mirroring
-    ``IcebergMergeTarget.ensure_table``'s ``bucket(64, conv_id)`` — keeps a
-    conversation's turns in one bucket, so a batch touching K conversations
-    rewrites at most K buckets however many turns it edits; the trade is
-    intra-bucket skew if one conversation dwarfs the rest. Correctness only
-    needs determinism: every net key hashes to the bucket holding its
-    stored row, which any PK-subset satisfies.
-    """
-
-    FAMILY = "bucketed_cow"
-
-    def __init__(
-        self,
-        store_dir: str,
-        spec: TableSpec = TRANSCRIPTS,
-        buckets: int = 64,
-        bucket_cols: tuple | None = None,
-    ):
-        super().__init__(store_dir, spec, buckets)
-        cols = tuple(bucket_cols) if bucket_cols else tuple(spec.primary_key)
-        unknown = set(cols) - set(spec.primary_key)
-        if unknown:
-            raise ValueError(f"bucket_cols must be primary-key columns: {unknown}")
-        self.bucket_cols = cols
 
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.snapshot_path(version), "manifest.json")
@@ -358,16 +256,17 @@ class BucketedParquetMergeTarget(ParquetMergeTarget):
         from — a resume on a different cluster size (the constructor
         default tracks ``defaultParallelism``) would otherwise hash net
         keys into different buckets than the stored rows, skip the stored
-        row in the anti-join, and leave duplicates behind. Falls back to
-        the constructor values for snapshots written before layout
-        persistence existed (same behavior as before)."""
-        import json
-
+        row in the anti-join, and leave duplicates behind. A legacy
+        unbucketed snapshot is one bucket over the primary key; snapshots
+        written before layout persistence existed fall back to the
+        constructor values."""
         p = self._layout_path(version)
         if version > 0 and os.path.exists(p):
             with open(p) as f:
                 d = json.load(f)
             return int(d["buckets"]), tuple(d["bucket_cols"])
+        if _is_legacy(self.snapshot_path(version)):
+            return 1, tuple(self.spec.primary_key)
         return self.buckets, self.bucket_cols
 
     def _adopt_layout(self, version: int) -> None:
@@ -375,47 +274,88 @@ class BucketedParquetMergeTarget(ParquetMergeTarget):
 
     def _load_manifest(self, version: int) -> dict:
         """bucket id -> store-relative path of that bucket's parquet dir."""
-        import json
+        return _read_manifest(self.store_dir, version)
 
-        if version <= 0:
-            return {}
-        with open(self._manifest_path(version)) as f:
-            return {int(k): v for k, v in json.load(f).items()}
+    def _pruned_manifest(self, version: int, bucket_ids) -> dict:
+        manifest = self._load_manifest(version)
+        if bucket_ids is None:
+            return manifest
+        return {b: e for b, e in manifest.items() if b in bucket_ids}
+
+    def _write_meta(self, version: int, manifest: dict) -> None:
+        """Stamp the family, then write layout and manifest. Layout
+        first, manifest last (atomic rename): the manifest write is the
+        snapshot's internal commit point, and a snapshot is never
+        readable without its layout metadata."""
+        self._record_family()
+        os.makedirs(self.snapshot_path(version), exist_ok=True)
+        with open(self._layout_path(version), "w") as f:
+            json.dump(
+                {"buckets": self.buckets, "bucket_cols": list(self.bucket_cols)}, f
+            )
+        tmp = self._manifest_path(version) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump({str(b): e for b, e in sorted(manifest.items())}, f)
+        os.replace(tmp, self._manifest_path(version))
+
+    def _fresh_snapshot(self, version: int) -> str:
+        """Directory for snapshot ``version``, emptied of any orphan a
+        crashed batch left there (a retry overwrites it)."""
+        snap = self.snapshot_path(version)
+        if os.path.exists(snap):
+            shutil.rmtree(snap)
+        return snap
 
     def _bucket_expr(self):
         ddl = {n: d for n, d, _ in self.spec.columns}
         cols = [F.col(k).cast(ddl[k]) for k in self.bucket_cols]
         return F.pmod(F.xxhash64(*cols), F.lit(self.buckets)).cast("int")
 
-    def _read_full(self, spark: SparkSession, version: int) -> DataFrame:
-        """Complete stored form of a snapshot — what a rebucket must carry
-        forward verbatim. Subclasses storing extra per-row state (order
-        tuples, tombstones) override this."""
-        return self.read(spark, version)
+    def _scan(self, spark: SparkSession, paths) -> DataFrame:
+        """One scan over store-relative data dirs. Buckets written before
+        a schema evolution lack the new columns: mergeSchema unions the
+        parquet footers (cheap: one per bucket dir) and the missing spec
+        columns read as NULL."""
+        full = sorted({os.path.join(self.store_dir, p) for p in paths})
+        df = spark.read.option("mergeSchema", "true").parquet(*full)
+        for name, ddl, _ in self.spec.columns:
+            if name not in df.columns:
+                df = df.withColumn(name, F.lit(None).cast(ddl))
+        return df
 
     def read(self, spark: SparkSession, version: int, bucket_ids=None) -> DataFrame:
         """Read the table at ``version``; ``bucket_ids`` (a set) prunes the
         scan to those buckets' data dirs — the manifest is the metadata
         index, so pruning never touches unrelated files."""
-        manifest = self._load_manifest(version)
-        if bucket_ids is not None:
-            manifest = {b: p for b, p in manifest.items() if b in bucket_ids}
+        manifest = self._pruned_manifest(version, bucket_ids)
         if not manifest:
             return empty_state_df(spark, self.spec)
-        paths = sorted({os.path.join(self.store_dir, p) for p in manifest.values()})
-        # buckets written before a schema evolution lack the new columns;
-        # mergeSchema unions the parquet footers (cheap: one per bucket dir)
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
-        for name, ddl, _ in self.spec.columns:
-            if name not in df.columns:
-                df = df.withColumn(name, F.lit(None).cast(ddl))
-        return df.select(*[n for n, _, _ in self.spec.columns])
+        return self._scan(spark, manifest.values()).select(
+            *[n for n, _, _ in self.spec.columns]
+        )
+
+    def _read_full(
+        self, spark: SparkSession, version: int, bucket_ids=None
+    ) -> DataFrame:
+        """Complete stored form of a snapshot — what a rebucket or a
+        compaction must carry forward verbatim. Targets storing extra
+        per-row state (order tuples, tombstones) override this."""
+        return self.read(spark, version, bucket_ids)
 
     def _touched_buckets(self, net: DataFrame) -> list:
         # tiny driver-side action: ≤ ``buckets`` rows (bounded domain),
         # and the result drives both the pruned scan and the manifest
         rows = net.select(self._bucket_expr().alias("_b")).distinct().collect()
         return sorted(r["_b"] for r in rows)
+
+    def _base_rows(self, rows: DataFrame, version: int) -> DataFrame:
+        """Rows as written into a bucket's data file (layouts that store
+        extra per-row columns override)."""
+        return rows
+
+    def _base_entry(self, rel: str):
+        """Manifest entry for a freshly written bucket data dir."""
+        return rel
 
     def _commit_buckets(
         self, merged: DataFrame, touched: list, current_version: int,
@@ -425,16 +365,11 @@ class BucketedParquetMergeTarget(ParquetMergeTarget):
         manifest (untouched entries carried over by reference), commit.
         ``carry_over=False`` (rebucket) starts the manifest empty — every
         live bucket of the new layout is written fresh."""
-        import json
-
-        self._record_family()
         new_version = current_version + 1
-        snap = self.snapshot_path(new_version)
-        if os.path.exists(snap):
-            shutil.rmtree(snap)  # orphan from a crashed batch — retry overwrites
-        data_dir = os.path.join(snap, "data")
+        data_dir = os.path.join(self._fresh_snapshot(new_version), "data")
         (
-            merged.withColumn("_bucket", self._bucket_expr())
+            self._base_rows(merged, new_version)
+            .withColumn("_bucket", self._bucket_expr())
             .repartition(max(1, len(touched)), F.col("_bucket"))
             .write.partitionBy("_bucket")
             .parquet(data_dir)
@@ -442,25 +377,17 @@ class BucketedParquetMergeTarget(ParquetMergeTarget):
         manifest = {}
         if carry_over:
             manifest = {
-                b: p
-                for b, p in self._load_manifest(current_version).items()
+                b: e
+                for b, e in self._load_manifest(current_version).items()
                 if b not in set(touched)
             }
         for b in touched:
             bucket_dir = os.path.join(data_dir, f"_bucket={b}")
             if os.path.isdir(bucket_dir):  # a fully-deleted bucket writes no dir
-                manifest[b] = os.path.relpath(bucket_dir, self.store_dir)
-        # layout first, manifest last: the manifest write stays the
-        # snapshot's internal commit point, and a snapshot is never
-        # readable without its layout metadata
-        with open(self._layout_path(new_version), "w") as f:
-            json.dump(
-                {"buckets": self.buckets, "bucket_cols": list(self.bucket_cols)}, f
-            )
-        tmp = self._manifest_path(new_version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({str(b): p for b, p in sorted(manifest.items())}, f)
-        os.replace(tmp, self._manifest_path(new_version))
+                manifest[b] = self._base_entry(
+                    os.path.relpath(bucket_dir, self.store_dir)
+                )
+        self._write_meta(new_version, manifest)
         return new_version
 
     def truncate(self, spark: SparkSession, current_version: int) -> int:
@@ -470,28 +397,20 @@ class BucketedParquetMergeTarget(ParquetMergeTarget):
         snapshots stay readable for time travel until ``gc``; the change
         feed across the truncate version reads as one delete per stored
         row (manifest diff: every live bucket repointed to nothing)."""
-        import json
-
         self._adopt_layout(current_version)
         new_version = current_version + 1
-        snap = self.snapshot_path(new_version)
-        if os.path.exists(snap):
-            shutil.rmtree(snap)  # orphan from a crashed batch
-        os.makedirs(snap, exist_ok=True)
-        with open(self._layout_path(new_version), "w") as f:
-            json.dump(
-                {"buckets": self.buckets, "bucket_cols": list(self.bucket_cols)}, f
-            )
-        tmp = self._manifest_path(new_version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({}, f)
-        os.replace(tmp, self._manifest_path(new_version))
+        self._fresh_snapshot(new_version)
+        self._write_meta(new_version, {})
         return new_version
 
     def merge(self, spark: SparkSession, net: DataFrame, current_version: int) -> int:
+        """Apply net changes (one row per key: final op + after image) and
+        write snapshot ``current_version + 1``. Returns the new version.
+
+        ``net`` columns: key cols + ``op`` + ``after_<col>`` for every spec
+        column."""
         self._adopt_layout(current_version)
-        spec = self.spec
-        keys = list(spec.primary_key)
+        keys = list(self.spec.primary_key)
         # net is the whole decode→gate→LWW pipeline, lazily. The touched-
         # bucket pre-pass AND the merge write both consume it — without a
         # persist the full pipeline would execute twice (measured ~2× on
@@ -501,13 +420,15 @@ class BucketedParquetMergeTarget(ParquetMergeTarget):
         try:
             touched = self._touched_buckets(net)
             state = self.read(spark, current_version, bucket_ids=set(touched))
-
+            # MERGE-equivalent: untouched current rows ∪ upserts. The
+            # anti-join shuffles both sides by key; AQE handles skewed hot
+            # conversations (session conf).
             upserts = net.filter(F.col("op") != "delete").select(
                 *[
                     F.col(f"after_{n}").cast(d).alias(n)
                     if n not in keys
                     else F.col(n).cast(d).alias(n)
-                    for n, d, _ in spec.columns
+                    for n, d, _ in self.spec.columns
                 ]
             )
             survivors = state.join(net.select(*keys), on=keys, how="left_anti")
@@ -519,51 +440,48 @@ class BucketedParquetMergeTarget(ParquetMergeTarget):
     def merge_partial(
         self, spark: SparkSession, net: DataFrame, current_version: int
     ) -> int:
-        """Per-column carried-mask apply (MINIMAL row image), bucket-pruned:
-        the full-outer join runs only over the touched buckets' state."""
+        """MERGE for partial-image (MINIMAL) net changes: ``net`` carries
+        key cols + ``op`` + ``after_<col>`` + ``carried_mask`` (from
+        ``last_writer_wins_partial``); a matched row takes ``after_<c>``
+        only for carried columns and keeps its stored value otherwise —
+        the per-column form of Iceberg's ``UPDATE SET c = s.c`` clause
+        list. Plan shape: one full-outer key join over the touched
+        buckets' state only."""
         self._adopt_layout(current_version)
         spec = self.spec
         keys = list(spec.primary_key)
         net = net.persist()  # same double-consumption as merge()
         try:
-            return self._merge_partial_cached(spark, net, current_version)
+            touched = self._touched_buckets(net)
+            state = self.read(spark, current_version, bucket_ids=set(touched))
+            n = net.select(
+                *[F.col(k).cast(d).alias(k) for k, d, _ in spec.columns if k in keys],
+                F.col("op").alias("_op"),
+                F.col("carried_mask").alias("_cm"),
+                *[
+                    F.col(f"after_{c}").cast(d).alias(f"_s_{c}")
+                    for c, d, _ in spec.columns
+                    if c not in keys
+                ],
+            )
+            joined = state.join(n, on=keys, how="full_outer")
+            survives = F.col("_op").isNull() | (F.col("_op") != "delete")
+            out_cols = [F.col(k) for k in keys]
+            for ci, (c, _d, _k) in enumerate(spec.columns):
+                if c in keys:
+                    continue
+                bit = F.shiftright(F.col("_cm"), ci).bitwiseAND(F.lit(1)) == 1
+                out_cols.append(
+                    F.when(F.col("_op").isNotNull() & bit, F.col(f"_s_{c}"))
+                    .otherwise(F.col(c))
+                    .alias(c)
+                )
+            merged = joined.filter(survives).select(*out_cols).select(
+                *[n_ for n_, _, _ in spec.columns]
+            )
+            return self._commit_buckets(merged, touched, current_version)
         finally:
             net.unpersist()
-
-    def _merge_partial_cached(
-        self, spark: SparkSession, net: DataFrame, current_version: int
-    ) -> int:
-        spec = self.spec
-        keys = list(spec.primary_key)
-        touched = self._touched_buckets(net)
-        state = self.read(spark, current_version, bucket_ids=set(touched))
-
-        n = net.select(
-            *[F.col(k).cast(d).alias(k) for k, d, _ in spec.columns if k in keys],
-            F.col("op").alias("_op"),
-            F.col("carried_mask").alias("_cm"),
-            *[
-                F.col(f"after_{c}").cast(d).alias(f"_s_{c}")
-                for c, d, _ in spec.columns
-                if c not in keys
-            ],
-        )
-        joined = state.join(n, on=keys, how="full_outer")
-        survives = F.col("_op").isNull() | (F.col("_op") != "delete")
-        out_cols = [F.col(k) for k in keys]
-        for ci, (c, _d, _k) in enumerate(spec.columns):
-            if c in keys:
-                continue
-            bit = F.shiftright(F.col("_cm"), ci).bitwiseAND(F.lit(1)) == 1
-            out_cols.append(
-                F.when(F.col("_op").isNotNull() & bit, F.col(f"_s_{c}"))
-                .otherwise(F.col(c))
-                .alias(c)
-            )
-        merged = joined.filter(survives).select(*out_cols).select(
-            *[n_ for n_, _, _ in spec.columns]
-        )
-        return self._commit_buckets(merged, touched, current_version)
 
     def lookup(
         self, spark: SparkSession, version: int, key_values: list[dict]
@@ -599,13 +517,14 @@ class BucketedParquetMergeTarget(ParquetMergeTarget):
         to_version: int,
         images: str = "applied",
     ) -> DataFrame:
-        """Manifest-pruned change feed: a bucket whose manifest entry is
-        identical at both versions points at the *same* data files, so it
-        cannot contain a changed row — only buckets whose entry was added,
-        removed, or repointed are scanned and row-diffed. A batch that
-        touched 1% of buckets diffs ~1% of the table, not all of it (the
-        same metadata-pruning Iceberg's incremental read does with data-
-        file diffs)."""
+        """Manifest-pruned change feed (see ``snapshot_diff``;
+        ``from_version=0`` diffs against the empty table). A bucket whose
+        manifest entry is identical at both versions points at the *same*
+        data files, so it cannot contain a changed row — only buckets whose
+        entry was added, removed, or repointed are scanned and row-diffed.
+        A batch that touched 1% of buckets diffs ~1% of the table, not all
+        of it (the same metadata-pruning Iceberg's incremental read does
+        with data-file diffs)."""
         m_old = self._load_manifest(from_version)
         m_new = self._load_manifest(to_version)
         changed = {
@@ -687,7 +606,7 @@ class BucketedParquetMergeTarget(ParquetMergeTarget):
         keep = set(snaps[-keep_latest:])
         live = set()
         for name in keep:
-            if os.path.exists(os.path.join(root, name, "manifest.json")):
+            if snapshot_committed(os.path.join(root, name)):
                 live |= {
                     os.path.normpath(r)
                     for r in self._manifest_refs(int(name.lstrip("v")))
@@ -717,168 +636,25 @@ class BucketedParquetMergeTarget(ParquetMergeTarget):
                     shutil.rmtree(d)
 
 
-class OrderedParquetMergeTarget(ParquetMergeTarget):
-    """Order-aware MERGE: snapshots persist each key's winning order tuple
-    (``_ord_<col>`` columns) and an incoming row only replaces the stored
-    row when its order tuple outranks it.
+class OrderedPolicy:
+    """The outrank guard, shared by the ordered sinks on both layouts
+    (``OrderedBucketedMergeTarget`` here, ``mor.OrderedMergeOnReadTarget``).
 
-    This is the cross-trigger guard the streaming apply tier needs: Spark's
-    file-stream source does not promise changelog files arrive in commit
-    order across triggers, and an at-least-once redelivery of an old decode
-    output must not regress state to older images. Ties (exact redelivery)
-    prefer the incoming row — idempotent, since equal rank implies the
-    identical event. Deletes persist as **tombstones** (``_deleted`` flag):
-    without them, a delete applied before its out-of-order insert arrives
-    would leave nothing to outrank the insert and the row would resurrect.
-    (At deploy scale, age tombstones out once older than the maximum
-    reordering window.) Plan shape: one union + one ``max_by`` aggregate
-    per merge — same shuffle class as the plain anti-join MERGE."""
+    Every stored row carries its winning order tuple (``_ord_<col>``
+    longs) and an incoming row replaces it only when its tuple outranks
+    it. This is the cross-trigger guard the streaming apply tier needs:
+    Spark's file-stream source does not promise changelog files arrive in
+    commit order across triggers, and an at-least-once redelivery of an
+    old decode output must not regress state to older images. Exact ties
+    resolve to the latest write — idempotent, since equal rank implies the
+    identical event. Deletes persist as **tombstones**: without them, a
+    delete applied before its out-of-order insert arrives would leave
+    nothing to outrank the insert and the row would resurrect.
 
-    FAMILY = "ordered_cow"
-
-    def __init__(
-        self,
-        store_dir: str,
-        spec: TableSpec = TRANSCRIPTS,
-        buckets: int = 32,
-        order_cols: tuple[str, ...] = ("gtid_seq", "pos", "row_in_event"),
-    ):
-        super().__init__(store_dir, spec, buckets)
-        self.order_cols = list(order_cols)
-
-    def _ord_names(self) -> list[str]:
-        return [f"_ord_{c}" for c in self.order_cols]
-
-    def read_with_order(self, spark: SparkSession, version: int) -> DataFrame:
-        """Full stored form: spec columns + order tuple + tombstone flag."""
-        if version <= 0:
-            df = empty_state_df(spark, self.spec)
-            for o in self._ord_names():
-                df = df.withColumn(o, F.lit(None).cast("long"))
-            return df.withColumn("_deleted", F.lit(False))
-        df = spark.read.parquet(self.snapshot_path(version))
-        for name, ddl, _ in self.spec.columns:
-            if name not in df.columns:
-                df = df.withColumn(name, F.lit(None).cast(ddl))
-        for o in self._ord_names():
-            if o not in df.columns:
-                df = df.withColumn(o, F.lit(None).cast("long"))
-        if "_deleted" not in df.columns:
-            df = df.withColumn("_deleted", F.lit(False))
-        return df.select(
-            *[n for n, _, _ in self.spec.columns], *self._ord_names(), "_deleted"
-        )
-
-    def read(self, spark: SparkSession, version: int) -> DataFrame:
-        return (
-            self.read_with_order(spark, version)
-            .filter(~F.col("_deleted"))
-            .select(*[n for n, _, _ in self.spec.columns])
-        )
-
-    def merge(self, spark: SparkSession, net: DataFrame, current_version: int) -> int:
-        """``net`` must carry key cols + ``op`` + ``after_<col>`` + the
-        order columns. Winner per key = max over (order tuple, incoming
-        priority); a winning delete removes the key."""
-        self._record_family()
-        spec = self.spec
-        keys = list(spec.primary_key)
-        value_cols = [n for n, _, _ in spec.columns if n not in keys]
-        ords = self._ord_names()
-
-        incoming = net.select(
-            *[F.col(k).cast(d).alias(k) for k, d, _ in spec.columns if k in keys],
-            *[F.col(f"after_{n}").cast(d).alias(n) for n, d, _ in spec.columns if n not in keys],
-            F.col("op"),
-            *[F.col(c).cast("long").alias(o) for c, o in zip(self.order_cols, ords)],
-            F.lit(1).alias("_prio"),
-        )
-        stored = self.read_with_order(spark, current_version).select(
-            *keys, *value_cols,
-            F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("keep")).alias("op"),
-            *ords,
-            F.lit(0).alias("_prio"),
-        )
-
-        rank = F.struct(*[F.col(o) for o in ords], F.col("_prio"))
-        payload = F.struct(F.col("op"), *[F.col(c) for c in value_cols], *[F.col(c) for c in ords])
-        winners = (
-            stored.unionByName(incoming)
-            .groupBy(*keys)
-            .agg(F.max_by(payload, rank).alias("_win"))
-            .select(
-                *keys,
-                *[F.col(f"_win.{c}").alias(c) for c in value_cols],
-                *[F.col(f"_win.{o}").alias(o) for o in ords],
-                (F.col("_win.op") == "delete").alias("_deleted"),
-            )
-        )
-
-        new_version = current_version + 1
-        out_path = self.snapshot_path(new_version)
-        if os.path.exists(out_path):
-            shutil.rmtree(out_path)
-        (
-            winners.repartition(self.buckets, *[F.col(k) for k in keys])
-            .write.mode("overwrite")
-            .parquet(out_path)
-        )
-        return new_version
-
-    def prune_tombstones(
-        self, spark: SparkSession, current_version: int, min_live_order: int
-    ) -> int:
-        """GC: drop tombstones whose leading order value (gtid_seq) is
-        below ``min_live_order`` — the caller's low-watermark of possible
-        redelivery (e.g. the decode tier's checkpointed GTID floor: no
-        event ordered below it can ever arrive again, so its tombstone
-        can never be outranked into relevance). Writes a new snapshot and
-        returns its version.
-
-        Tombstones with a NULL leading order value (gtid-less streams)
-        carry no watermark to compare against, so they are always kept —
-        dropping them would let a redelivered old insert resurrect the
-        row. GC for such streams needs an order column that is never
-        NULL (e.g. pos)."""
-        keys = list(self.spec.primary_key)
-        df = self.read_with_order(spark, current_version)
-        lead = self._ord_names()[0]
-        kept = df.filter(
-            (~F.col("_deleted"))
-            | F.col(lead).isNull()
-            | (F.col(lead) >= F.lit(min_live_order))
-        )
-        new_version = current_version + 1
-        out_path = self.snapshot_path(new_version)
-        if os.path.exists(out_path):
-            shutil.rmtree(out_path)
-        (
-            kept.repartition(self.buckets, *[F.col(k) for k in keys])
-            .write.mode("overwrite")
-            .parquet(out_path)
-        )
-        return new_version
-
-
-class OrderedBucketedMergeTarget(BucketedParquetMergeTarget):
-    """Order-aware MERGE on the bucket-pruned copy-on-write layout — the
-    streaming apply tier's scale path.
-
-    ``OrderedParquetMergeTarget`` gives the cross-trigger guarantees the
-    file-stream source needs (outrank guard over persisted order tuples,
-    delete tombstones against out-of-order resurrection) but rewrites the
-    WHOLE snapshot per trigger — O(table) per micro-batch is the same
-    scale killer the bucketed CoW target fixed for the batch path. This
-    class combines both: every stored row carries its winning order tuple
-    (``_ord_<col>``) and tombstone flag, buckets splice through manifests,
-    and a trigger's merge unions ONLY the touched buckets' stored rows
-    with the incoming net change — per-trigger IO is O(touched-bucket
-    data). Plan shape per merge: one union + one ``max_by`` aggregate
-    over touched buckets. Same layout persistence / ``rebucket`` /
-    ``gc`` / change-feed machinery as the parent (a rebucket carries
-    order tuples and tombstones forward verbatim via ``_read_full``)."""
-
-    FAMILY = "ordered_bucketed_cow"
+    Mixed in before a bucketed layout class, which supplies
+    ``read_with_order`` (spec columns + order tuple + ``_deleted``) and
+    the tie-break: copy-on-write ranks the incoming row above the stored
+    one (``_prio``), merge-on-read ranks by write generation (``_gen``)."""
 
     def __init__(
         self,
@@ -894,31 +670,35 @@ class OrderedBucketedMergeTarget(BucketedParquetMergeTarget):
     def _ord_names(self) -> list[str]:
         return [f"_ord_{c}" for c in self.order_cols]
 
-    def read_with_order(
-        self, spark: SparkSession, version: int, bucket_ids=None
-    ) -> DataFrame:
-        """Full stored form (spec columns + order tuple + tombstone flag),
-        manifest-pruned to ``bucket_ids`` like the parent's ``read``."""
-        manifest = self._load_manifest(version)
-        if bucket_ids is not None:
-            manifest = {b: p for b, p in manifest.items() if b in bucket_ids}
-        if not manifest:
-            df = empty_state_df(spark, self.spec)
-            for o in self._ord_names():
-                df = df.withColumn(o, F.lit(None).cast("long"))
-            return df.withColumn("_deleted", F.lit(False))
-        paths = sorted({os.path.join(self.store_dir, p) for p in manifest.values()})
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
-        for name, ddl, _ in self.spec.columns:
-            if name not in df.columns:
-                df = df.withColumn(name, F.lit(None).cast(ddl))
+    def _with_ord_cols(self, df: DataFrame) -> DataFrame:
+        """Pad order columns a file predates (they read as NULL)."""
         for o in self._ord_names():
             if o not in df.columns:
                 df = df.withColumn(o, F.lit(None).cast("long"))
-        if "_deleted" not in df.columns:
-            df = df.withColumn("_deleted", F.lit(False))
-        return df.select(
-            *[n for n, _, _ in self.spec.columns], *self._ord_names(), "_deleted"
+        return df
+
+    def _empty_ordered(self, spark: SparkSession) -> DataFrame:
+        return self._with_ord_cols(empty_state_df(spark, self.spec)).withColumn(
+            "_deleted", F.lit(False)
+        )
+
+    def _incoming(self, net: DataFrame, op_col: str) -> DataFrame:
+        """Net change rows in stored form: key and value columns cast to
+        the spec, the op as ``op_col``, the order tuple as longs."""
+        spec = self.spec
+        keys = list(spec.primary_key)
+        return net.select(
+            *[F.col(k).cast(d).alias(k) for k, d, _ in spec.columns if k in keys],
+            *[
+                F.col(f"after_{c}").cast(d).alias(c)
+                for c, d, _ in spec.columns
+                if c not in keys
+            ],
+            F.col("op").alias(op_col),
+            *[
+                F.col(c).cast("long").alias(o)
+                for c, o in zip(self.order_cols, self._ord_names())
+            ],
         )
 
     def read(self, spark: SparkSession, version: int, bucket_ids=None) -> DataFrame:
@@ -928,36 +708,90 @@ class OrderedBucketedMergeTarget(BucketedParquetMergeTarget):
             .select(*[n for n, _, _ in self.spec.columns])
         )
 
-    def _read_full(self, spark: SparkSession, version: int) -> DataFrame:
-        return self.read_with_order(spark, version)
+    def _read_full(
+        self, spark: SparkSession, version: int, bucket_ids=None
+    ) -> DataFrame:
+        return self.read_with_order(spark, version, bucket_ids)
+
+    def merge_partial(self, spark, net, current_version):
+        raise ValueError(
+            "MINIMAL row images need whole-row state the outrank guard "
+            "cannot reconstruct per column; use the batch path "
+            "(Replayer(row_image='minimal')) for MINIMAL streams"
+        )
+
+    def prune_tombstones(
+        self, spark: SparkSession, current_version: int, min_live_order: int
+    ) -> int:
+        """GC: drop tombstones whose leading order value (gtid_seq) is
+        below ``min_live_order`` — the caller's low-watermark of possible
+        redelivery (e.g. the decode tier's checkpointed GTID floor: no
+        event ordered below it can ever arrive again, so its tombstone
+        can never be outranked into relevance). Commits a full rewrite
+        (every bucket fresh, old entries dropped) — a maintenance op,
+        amortized like ``rebucket`` — and returns its version.
+
+        Tombstones with a NULL leading order value (gtid-less streams)
+        carry no watermark to compare against, so they are always kept —
+        dropping them would let a redelivered old insert resurrect the
+        row. GC for such streams needs an order column that is never
+        NULL (e.g. pos)."""
+        self._adopt_layout(current_version)
+        df = self.read_with_order(spark, current_version)
+        lead = self._ord_names()[0]
+        kept = df.filter(
+            (~F.col("_deleted"))
+            | F.col(lead).isNull()
+            | (F.col(lead) >= F.lit(min_live_order))
+        )
+        return self._commit_buckets(
+            kept, list(range(self.buckets)), current_version, carry_over=False
+        )
+
+
+class OrderedBucketedMergeTarget(OrderedPolicy, BucketedParquetMergeTarget):
+    """Order-aware MERGE on the bucket-pruned copy-on-write layout — the
+    streaming apply tier's default sink (see ``OrderedPolicy``).
+
+    Every stored row carries its winning order tuple (``_ord_<col>``) and
+    tombstone flag (``_deleted``), buckets splice through manifests, and a
+    trigger's merge unions ONLY the touched buckets' stored rows with the
+    incoming net change — per-trigger IO is O(touched-bucket data). Plan
+    shape per merge: one union + one ``max_by`` aggregate over touched
+    buckets. Same layout persistence / ``rebucket`` / ``gc`` / change-feed
+    machinery as the plain layout (a rebucket carries order tuples and
+    tombstones forward verbatim via ``_read_full``)."""
+
+    FAMILY = "ordered_bucketed_cow"
+
+    def read_with_order(
+        self, spark: SparkSession, version: int, bucket_ids=None
+    ) -> DataFrame:
+        """Full stored form (spec columns + order tuple + tombstone flag),
+        manifest-pruned to ``bucket_ids`` like ``read``."""
+        manifest = self._pruned_manifest(version, bucket_ids)
+        if not manifest:
+            return self._empty_ordered(spark)
+        df = self._with_ord_cols(self._scan(spark, manifest.values()))
+        if "_deleted" not in df.columns:
+            df = df.withColumn("_deleted", F.lit(False))
+        return df.select(
+            *[n for n, _, _ in self.spec.columns], *self._ord_names(), "_deleted"
+        )
 
     def merge(self, spark: SparkSession, net: DataFrame, current_version: int) -> int:
-        """Same contract as ``OrderedParquetMergeTarget.merge`` (net rows
-        carry key cols + ``op`` + ``after_<col>`` + order columns), but
-        stored rows are read from the touched buckets only."""
+        """``net`` must carry key cols + ``op`` + ``after_<col>`` + the
+        order columns. Winner per key = max over (order tuple, incoming
+        priority); a winning delete leaves a tombstone."""
         self._adopt_layout(current_version)
-        spec = self.spec
-        keys = list(spec.primary_key)
-        value_cols = [n for n, _, _ in spec.columns if n not in keys]
+        keys = list(self.spec.primary_key)
+        value_cols = [n for n, _, _ in self.spec.columns if n not in keys]
         ords = self._ord_names()
 
         net = net.persist()  # touched-bucket pre-pass + merge both consume it
         try:
             touched = self._touched_buckets(net)
-            incoming = net.select(
-                *[F.col(k).cast(d).alias(k) for k, d, _ in spec.columns if k in keys],
-                *[
-                    F.col(f"after_{n}").cast(d).alias(n)
-                    for n, d, _ in spec.columns
-                    if n not in keys
-                ],
-                F.col("op"),
-                *[
-                    F.col(c).cast("long").alias(o)
-                    for c, o in zip(self.order_cols, ords)
-                ],
-                F.lit(1).alias("_prio"),
-            )
+            incoming = self._incoming(net, "op").withColumn("_prio", F.lit(1))
             stored = self.read_with_order(
                 spark, current_version, set(touched)
             ).select(
@@ -988,33 +822,6 @@ class OrderedBucketedMergeTarget(BucketedParquetMergeTarget):
             return self._commit_buckets(winners, touched, current_version)
         finally:
             net.unpersist()
-
-    def merge_partial(self, spark, net, current_version):
-        raise ValueError(
-            "MINIMAL row images need whole-row state the outrank guard "
-            "cannot reconstruct per column; use the batch path "
-            "(Replayer(row_image='minimal')) for MINIMAL streams"
-        )
-
-    def prune_tombstones(
-        self, spark: SparkSession, current_version: int, min_live_order: int
-    ) -> int:
-        """Tombstone GC (see ``OrderedParquetMergeTarget``): keep live
-        rows, NULL-ordered tombstones, and tombstones at or above the
-        redelivery low-watermark; commits as a full rewrite (every bucket
-        fresh, old entries dropped) — a maintenance op, amortized like
-        ``rebucket``."""
-        self._adopt_layout(current_version)
-        df = self.read_with_order(spark, current_version)
-        lead = self._ord_names()[0]
-        kept = df.filter(
-            (~F.col("_deleted"))
-            | F.col(lead).isNull()
-            | (F.col(lead) >= F.lit(min_live_order))
-        )
-        return self._commit_buckets(
-            kept, list(range(self.buckets)), current_version, carry_over=False
-        )
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -1095,7 +902,7 @@ class IcebergMergeTarget:
         """MERGE for partial-image (MINIMAL) net changes: each UPDATE SET
         clause takes ``s.after_<c>`` only when the column's
         ``carried_mask`` bit is set, keeping ``t.<c>`` otherwise — the SQL
-        form of ``ParquetMergeTarget.merge_partial``'s per-column apply.
+        form of ``BucketedParquetMergeTarget.merge_partial``'s per-column apply.
         ``net`` comes from ``order.last_writer_wins_partial``."""
         spec = self.spec
         keys = list(spec.primary_key)
@@ -1125,11 +932,9 @@ class IcebergMergeTarget:
 
 
 def load_target_family(store_dir: str) -> str | None:
-    """The target family stamped at the store's first commit
+    """The target family stamped at the store's last commit
     (``target_family.json``), or None for stores written before family
-    stamping existed (callers fall back to layout sniffing for those)."""
-    import json
-
+    stamping existed."""
     p = os.path.join(store_dir, "target_family.json")
     if not os.path.exists(p):
         return None
@@ -1138,16 +943,60 @@ def load_target_family(store_dir: str) -> str | None:
 
 
 def target_class_for_family(family: str):
-    """Dispatch a stamped family back to its target class. Raises
+    """Dispatch a stamped family back to its target class. The retired
+    unbucketed families (``cow``, ``ordered_cow``) open through the
+    bucketed classes, which read their snapshots as one bucket. Raises
     KeyError for an unknown stamp — opening a store through a guessed
     loader is exactly the failure the stamp exists to prevent."""
     from . import mor  # lazy: mor imports this module
 
     return {
-        "cow": ParquetMergeTarget,
+        "cow": BucketedParquetMergeTarget,
         "bucketed_cow": BucketedParquetMergeTarget,
-        "ordered_cow": OrderedParquetMergeTarget,
+        "ordered_cow": OrderedBucketedMergeTarget,
         "ordered_bucketed_cow": OrderedBucketedMergeTarget,
         "mor": mor.MergeOnReadBucketedTarget,
         "ordered_mor": mor.OrderedMergeOnReadTarget,
     }[family]
+
+
+def _sniff_family(store_dir: str, version: int) -> str:
+    """Family of an unstamped store, from its snapshot at ``version``:
+    dict-valued manifest entries mean merge-on-read, path entries (or a
+    legacy bare parquet directory) copy-on-write, and ``_ord_*`` columns
+    in a referenced parquet file the ordered form."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    entries = list(_read_manifest(store_dir, version).values())
+    rels = [
+        r
+        for e in entries
+        for r in ([e] if isinstance(e, str) else [e.get("base"), *e["deltas"]])
+        if r
+    ]
+    ordered = False
+    for rel in rels:
+        files = glob.glob(os.path.join(store_dir, rel, "*.parquet"))
+        if files:
+            names = pq.read_schema(files[0]).names
+            ordered = any(n.startswith("_ord_") for n in names)
+            break
+    mor = any(isinstance(e, dict) for e in entries)
+    return ("ordered_" if ordered else "") + ("mor" if mor else "bucketed_cow")
+
+
+def open_store(store_dir: str, spec: TableSpec = TRANSCRIPTS):
+    """Open an existing store as the target that wrote it: a stamped store
+    dispatches on its ``target_family.json``; an unstamped one (written
+    before stamping) on one sniff of its newest committed snapshot.
+    Returns None for a fresh store — no stamp and no committed snapshot —
+    so each caller keeps its own fresh-store default."""
+    family = load_target_family(store_dir)
+    if family is None:
+        version = latest_committed_version(store_dir)
+        if version == 0:
+            return None
+        family = _sniff_family(store_dir, version)
+    return target_class_for_family(family)(store_dir, spec)

@@ -86,7 +86,7 @@ def transitions_stream(
     ``applyInPandasWithState`` over groupBy(primary key): state is the
     winning order tuple; within a trigger the group's max-by-order row is
     compared against it and emitted iff it outranks (ties emit —
-    redelivery idempotence, same rule as OrderedParquetMergeTarget)."""
+    redelivery idempotence, same rule as OrderedBucketedMergeTarget)."""
     keys = list(spec.primary_key)
     out_schema = _transition_schema(spec)
     value_cols = [f"after_{n}" for n, _, _ in spec.columns if n not in keys]

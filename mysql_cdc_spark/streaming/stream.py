@@ -28,10 +28,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..binlog.decoder import TRANSCRIPTS, TableSpec, change_event_schema
+from ..pipeline.audit import AuditContext, require_snapshot_target
+from ..pipeline.mor import auto_compact_policy
 from ..pipeline.order import ORDER_COLS, last_writer_wins, with_change_key
 from ..pipeline.target import (
     OrderedBucketedMergeTarget,
-    OrderedParquetMergeTarget,
+    empty_state_df,
+    latest_committed_version,
+    open_store,
 )
 
 
@@ -80,18 +84,18 @@ def stream_apply(
     Default sink: ``OrderedBucketedMergeTarget`` — the outrank guard and
     tombstones on the bucket-pruned CoW layout, so a steady-state trigger
     touching K conversations rewrites K buckets, not the table. Pass
-    ``target=OrderedParquetMergeTarget(...)`` for the plain full-rewrite
-    form, or ``target=OrderedMergeOnReadTarget(...)`` for the
-    delta-append form (measured ~4× cheaper per trigger,
-    tools/bench_ordered_mor.py). For MoR targets ``auto_compact``
-    DEFAULTS to ``mor.DEFAULT_AUTO_COMPACT``: any bucket whose delta
-    chain reaches the threshold folds back into base right after the
-    trigger (read fold cost grows with chain length —
-    tools/bench_mor_chain.py); pass ``auto_compact=0`` to opt out or
-    another N to tune it. No ledger here: the compacted version simply
-    becomes the store's latest, which the next trigger's
-    ``_current_version`` picks up; a crash between merge and compact
-    just leaves the chain one trigger longer."""
+    ``target=OrderedMergeOnReadTarget(...)`` for the delta-append form
+    (measured ~4× cheaper per trigger, tools/bench_ordered_mor.py). For
+    MoR targets ``auto_compact`` DEFAULTS to ``mor.DEFAULT_AUTO_COMPACT``
+    (``mor.auto_compact_policy``): any bucket whose delta chain reaches
+    the threshold folds back into base right after the trigger (read fold
+    cost grows with chain length — tools/bench_mor_chain.py); pass
+    ``auto_compact=0`` to opt out or another N to tune it. No ledger
+    here: each trigger merges onto the store's newest COMMITTED snapshot
+    (``target.latest_committed_version``), so a compacted version simply
+    becomes the next base, a crash between merge and compact just leaves
+    the chain one trigger longer, and a trigger that crashed mid-write
+    leaves an orphan the next trigger overwrites."""
     keys = list(spec.primary_key)
     if column_transforms:
         key_hits = set(column_transforms) & set(keys)
@@ -108,27 +112,9 @@ def stream_apply(
     target = target or OrderedBucketedMergeTarget(
         store_dir, spec, order_cols=tuple(ORDER_COLS)
     )
-    if audit is not None and not hasattr(target, "snapshot_path"):
-        raise TypeError(
-            "audit requires a snapshot target: an internally-committing "
-            "sink has no staged version to audit or roll back"
-        )
-    # MoR targets default to the bounded-chain policy (see mor.py
-    # DEFAULT_AUTO_COMPACT); auto_compact=0 opts out
-    if auto_compact is None and hasattr(target, "delta_stats"):
-        from ..pipeline.mor import DEFAULT_AUTO_COMPACT
-
-        auto_compact = DEFAULT_AUTO_COMPACT
-    if auto_compact == 0:
-        auto_compact = None
-    if auto_compact is not None:
-        if not hasattr(target, "compact"):
-            raise TypeError(
-                "auto_compact needs a merge-on-read target "
-                "(OrderedMergeOnReadTarget)"
-            )
-        if auto_compact < 1:
-            raise ValueError("auto_compact must be >= 1")
+    if audit is not None:
+        require_snapshot_target(target)
+    auto_compact = auto_compact_policy(target, auto_compact)
     payload_cols = list(
         dict.fromkeys(
             ["op"]
@@ -171,11 +157,9 @@ def stream_apply(
         # versions advance per trigger; a replayed trigger re-merges the
         # same net-change idempotently (equal rank → incoming wins → same
         # row), and an out-of-order older file cannot outrank stored state
-        current = _current_version(store_dir)
+        current = latest_committed_version(store_dir)
         new_version = target.merge(batch_df.sparkSession, net, current)
         if audit is not None:
-            from ..pipeline.audit import AuditContext
-
             ctx = AuditContext(
                 spark=batch_df.sparkSession,
                 batch_id=batch_id,
@@ -267,7 +251,9 @@ def stream_apply_frames(
             changes, key_cols=keys, order_cols=ORDER_COLS,
             payload_cols=payload_cols,
         )
-        target.merge(batch_df.sparkSession, net, _current_version(store_dir))
+        target.merge(
+            batch_df.sparkSession, net, latest_committed_version(store_dir)
+        )
 
     writer = (
         stream.writeStream.foreachBatch(apply_batch)
@@ -282,80 +268,10 @@ def stream_apply_frames(
     return writer.start()
 
 
-def _current_version(store_dir: str) -> int:
-    import os
-    import re
-
-    snapdir = os.path.join(store_dir, "snapshots")
-    if not os.path.isdir(snapdir):
-        return 0
-    versions = [
-        int(m.group(1))
-        for n in os.listdir(snapdir)
-        if (m := re.match(r"v(\d+)$", n))
-    ]
-    return max(versions, default=0)
-
-
 def read_stream_state(spark: SparkSession, store_dir: str, spec: TableSpec = TRANSCRIPTS) -> DataFrame:
-    """Current streamed state. The store's target family is read from the
-    ``target_family.json`` stamp its first commit wrote; stores from
-    before family stamping fall back to layout sniffing (a bucketed
-    store's snapshots carry a manifest.json — dict-valued entries mean
-    the merge-on-read layout — a plain ordered store's are bare parquet
-    directories)."""
-    import json
-    import os
-
-    from ..pipeline.target import load_target_family, target_class_for_family
-
-    version = _current_version(store_dir)
-    family = load_target_family(store_dir)
-    if family is not None:
-        return target_class_for_family(family)(store_dir, spec).read(
-            spark, version
-        )
-    manifest = os.path.join(
-        store_dir, "snapshots", f"v{version:08d}", "manifest.json"
-    )
-    if os.path.exists(manifest):
-        with open(manifest) as f:
-            entries = json.load(f)
-        if any(isinstance(v, dict) for v in entries.values()):
-            # merge-on-read layout; ordered vs plain (_seq) resolution is
-            # a property of the FILES — sniff one referenced parquet's
-            # schema for the _ord_* columns the ordered sink writes
-            import glob as _glob
-
-            import pyarrow.parquet as _pq
-
-            ordered = True
-            for e in entries.values():
-                rels = (
-                    ([e["base"]] if isinstance(e, dict) and e.get("base") else [])
-                    + (e.get("deltas", []) if isinstance(e, dict) else [])
-                )
-                files = [
-                    f
-                    for rel in rels
-                    for f in _glob.glob(
-                        os.path.join(store_dir, rel, "*.parquet")
-                    )
-                ]
-                if files:
-                    names = _pq.read_schema(files[0]).names
-                    ordered = any(n.startswith("_ord_") for n in names)
-                    break
-            if ordered:
-                from ..pipeline.mor import OrderedMergeOnReadTarget
-
-                cls = OrderedMergeOnReadTarget
-            else:
-                from ..pipeline.mor import MergeOnReadBucketedTarget
-
-                cls = MergeOnReadBucketedTarget
-        else:
-            cls = OrderedBucketedMergeTarget
-    else:
-        cls = OrderedParquetMergeTarget
-    return cls(store_dir, spec).read(spark, version)
+    """Current streamed state: the newest committed snapshot, read through
+    the target family that wrote the store (``target.open_store``)."""
+    target = open_store(store_dir, spec)
+    if target is None:
+        return empty_state_df(spark, spec)
+    return target.read(spark, latest_committed_version(store_dir))

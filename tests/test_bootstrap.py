@@ -11,7 +11,7 @@ import pytest
 from mysql_cdc_spark.fixtures import generate_changelog, write_binlog_files
 from mysql_cdc_spark.pipeline.replay import Replayer
 from mysql_cdc_spark.pipeline.start import FromGtid, FromPosition
-from mysql_cdc_spark.pipeline.target import OrderedParquetMergeTarget
+from mysql_cdc_spark.pipeline.target import OrderedBucketedMergeTarget
 
 
 @pytest.fixture(scope="module")
@@ -99,7 +99,7 @@ def test_bootstrap_ordered_target(spark, stream, half, full_state, tmp_path):
     base_pd, entry = half
     store = str(tmp_path / "s")
     rep = Replayer(
-        spark, outdir, store, target=OrderedParquetMergeTarget(store, buckets=8)
+        spark, outdir, store, target=OrderedBucketedMergeTarget(store, buckets=2)
     )
     rep.bootstrap(
         spark.createDataFrame(base_pd),

@@ -1,8 +1,8 @@
 """BucketedParquetMergeTarget: bucket-pruned copy-on-write MERGE.
 
-Pins (a) state equality with the full-rewrite ParquetMergeTarget across a
-complete replay (full + MINIMAL row images, deletes, schema evolution,
-resume), (b) the pruning property itself — a batch's snapshot directory
+Pins (a) state equality with the default Replayer target and the
+sequential oracle across a complete replay (full + MINIMAL row images,
+deletes, schema evolution, resume), (b) the pruning property itself — a batch's snapshot directory
 contains ONLY the buckets its net change touched, untouched buckets are
 carried by manifest reference — and (c) manifest-aware GC.
 """
@@ -24,7 +24,7 @@ from mysql_cdc_spark.fixtures import (
 from mysql_cdc_spark.pipeline.replay import Replayer
 from mysql_cdc_spark.pipeline.target import (
     BucketedParquetMergeTarget,
-    ParquetMergeTarget,
+    IcebergMergeTarget,
 )
 
 
@@ -344,7 +344,8 @@ class TestLayoutPersistence:
         _, outdir, _ = changelog
         store = str(tmp_path / "plainreb")
         rep = Replayer(
-            spark, outdir, store, target=ParquetMergeTarget(store, TRANSCRIPTS)
+            spark, outdir, store,
+            target=IcebergMergeTarget("cdc.db.transcripts", TRANSCRIPTS),
         )
         with pytest.raises(TypeError, match="rebucket"):
             rep.rebucket(8)

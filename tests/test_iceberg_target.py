@@ -100,8 +100,6 @@ def test_internal_commit_target_merge_deferred_until_stats(tmp_path, spark):
     from mysql_cdc_spark.pipeline.target import (
         BucketedParquetMergeTarget,
         OrderedBucketedMergeTarget,
-        OrderedParquetMergeTarget,
-        ParquetMergeTarget,
     )
 
     class InternalCommitTarget:
@@ -109,7 +107,7 @@ def test_internal_commit_target_merge_deferred_until_stats(tmp_path, spark):
         sink whose MERGE commits inside the engine."""
 
         def __init__(self, store_dir, spec, buckets):
-            self._inner = ParquetMergeTarget(store_dir, spec, buckets=buckets)
+            self._inner = BucketedParquetMergeTarget(store_dir, spec, buckets=buckets)
 
         def merge(self, spark, net, current_version):
             return self._inner.merge(spark, net, current_version)
@@ -122,8 +120,8 @@ def test_internal_commit_target_merge_deferred_until_stats(tmp_path, spark):
     write_binlog_files(txns, outdir, txns_per_file=len(txns))
 
     for cls in (
-        InternalCommitTarget, ParquetMergeTarget, BucketedParquetMergeTarget,
-        OrderedParquetMergeTarget, OrderedBucketedMergeTarget,
+        InternalCommitTarget, BucketedParquetMergeTarget,
+        OrderedBucketedMergeTarget,
         MergeOnReadBucketedTarget, OrderedMergeOnReadTarget,
     ):
         store = str(tmp_path / cls.__name__)

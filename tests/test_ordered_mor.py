@@ -349,9 +349,9 @@ class TestStreamingAutoCompact:
             max_files_per_trigger=1, target=tgt, auto_compact=2,
         )
         q.awaitTermination(180)
-        from mysql_cdc_spark.streaming.stream import _current_version
+        from mysql_cdc_spark.pipeline.target import latest_committed_version
 
-        stats = tgt.delta_stats(_current_version(store))
+        stats = tgt.delta_stats(latest_committed_version(store))
         assert max(stats.values(), default=0) < 2
         oracle = apply_changelog_oracle(txns)
         state = (

@@ -28,7 +28,7 @@ from mysql_cdc_spark.fixtures import (
 from mysql_cdc_spark.pipeline.mor import MergeOnReadBucketedTarget
 from mysql_cdc_spark.pipeline.replay import Replayer
 from mysql_cdc_spark.pipeline.scd2 import Scd2HistoryStore
-from mysql_cdc_spark.pipeline.target import OrderedParquetMergeTarget
+from mysql_cdc_spark.pipeline.target import OrderedBucketedMergeTarget
 
 PURGED = ["conv-00003", "conv-00007"]
 PREDICATE = "conv_id IN ('conv-00003', 'conv-00007')"
@@ -145,7 +145,7 @@ class TestCopyOnWrite:
         store = str(tmp_path / "ord")
         rep = Replayer(
             spark, outdir, store,
-            target=OrderedParquetMergeTarget(store, TRANSCRIPTS),
+            target=OrderedBucketedMergeTarget(store, TRANSCRIPTS, buckets=2),
         )
         with pytest.raises(TypeError, match="tombstones"):
             rep.purge_keys(PREDICATE)

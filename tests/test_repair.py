@@ -103,13 +103,13 @@ def test_repair_noop_when_consistent(spark, rig):
 
 
 def test_repair_refuses_streaming_targets(spark, tmp_path):
-    from mysql_cdc_spark.pipeline.target import OrderedParquetMergeTarget
+    from mysql_cdc_spark.pipeline.target import OrderedBucketedMergeTarget
 
     rep = Replayer(
         spark,
         str(tmp_path / "nobinlog"),
         str(tmp_path / "store"),
-        target=OrderedParquetMergeTarget(str(tmp_path / "store")),
+        target=OrderedBucketedMergeTarget(str(tmp_path / "store"), buckets=2),
     )
     with pytest.raises(TypeError, match="snapshot-semantics"):
         rep.repair(rep.spark.range(1).selectExpr("'x' conv_id"))

@@ -203,6 +203,39 @@ class TestReplay:
         assert len(calls) == 2
         _assert_state_equals_oracle(_final_state_pdf(r), apply_changelog_oracle(txns))
 
+    def test_cut_transaction_at_segment_end_applies_after_xid(self, spark, tmp_path):
+        """A last segment whose only transaction is still open (its rows
+        are on disk, its XID is not) commits an empty batch; once the XID
+        arrives, the next replay() must apply that transaction, not skip
+        it as already read."""
+        from mysql_cdc_spark.binlog.constants import EventType
+        from mysql_cdc_spark.binlog.reader import parse_event_header
+
+        txns = generate_changelog(n_conversations=6, max_turns=3, n_extra_ops=10, seed=5)
+        outdir = str(tmp_path / "binlog")
+        paths = write_binlog_files(txns, outdir, txns_per_file=len(txns) - 1)
+        assert len(paths) == 2
+        with open(paths[-1], "rb") as f:
+            full = f.read()
+        off, last_xid = 4, None
+        while off < len(full):
+            _ts, etype, _sid, length, _next, _flags = parse_event_header(full, off)
+            if etype == EventType.XID:
+                last_xid = off
+            off += length
+        assert last_xid is not None
+        with open(paths[-1], "wb") as f:
+            f.write(full[:last_xid])
+
+        r = Replayer(spark, outdir, str(tmp_path / "store"))
+        r.replay(files_per_batch=1)
+        _assert_state_equals_oracle(_final_state_pdf(r), apply_changelog_oracle(txns[:-1]))
+        with open(paths[-1], "wb") as f:
+            f.write(full)
+        res = r.replay()
+        assert res.events == len(txns[-1].ops)
+        _assert_state_equals_oracle(_final_state_pdf(r), apply_changelog_oracle(txns))
+
     def test_ledger_contents(self, spark, changelog, tmp_path):
         txns, outdir, paths, _ = changelog
         store = str(tmp_path / "store5")

@@ -35,7 +35,7 @@ from mysql_cdc_spark.fixtures import (
 )
 from mysql_cdc_spark.pipeline.replay import Replayer
 from mysql_cdc_spark.pipeline.start import FromEnd, FromPosition
-from mysql_cdc_spark.pipeline.target import OrderedParquetMergeTarget
+from mysql_cdc_spark.pipeline.target import OrderedBucketedMergeTarget
 
 
 def _state_pdf(rep: Replayer) -> pd.DataFrame:
@@ -164,7 +164,7 @@ class TestOrderedTarget:
         """ADVICE #4: an older changelog file arriving in a later trigger
         must not regress state; an older delete must not remove a newer
         row; a newer delete must."""
-        tgt = OrderedParquetMergeTarget(str(tmp_path / "st"), TRANSCRIPTS, buckets=2)
+        tgt = OrderedBucketedMergeTarget(str(tmp_path / "st"), TRANSCRIPTS, buckets=2)
         ts = datetime(2024, 1, 1)
         v1 = tgt.merge(
             spark, self._net(spark, [("c", 0, "update", "user", "NEW", None, ts, 10, 100, 0)]), 0
@@ -187,7 +187,7 @@ class TestOrderedTarget:
         assert tgt.read(spark, v4).count() == 0
 
     def test_equal_rank_redelivery_is_idempotent(self, spark, tmp_path):
-        tgt = OrderedParquetMergeTarget(str(tmp_path / "st"), TRANSCRIPTS, buckets=2)
+        tgt = OrderedBucketedMergeTarget(str(tmp_path / "st"), TRANSCRIPTS, buckets=2)
         ts = datetime(2024, 1, 1)
         row = ("c", 1, "update", "user", "SAME", None, ts, 10, 100, 0)
         v1 = tgt.merge(spark, self._net(spark, [row]), 0)
@@ -319,7 +319,7 @@ class TestRemoteFsListing:
     def test_tombstone_gc(self, spark, tmp_path):
         """prune_tombstones drops only tombstones below the redelivery
         low-watermark; live rows and newer tombstones survive."""
-        tgt = OrderedParquetMergeTarget(str(tmp_path / "st"), TRANSCRIPTS, buckets=2)
+        tgt = OrderedBucketedMergeTarget(str(tmp_path / "st"), TRANSCRIPTS, buckets=2)
         ts = datetime(2024, 1, 1)
         net = spark.createDataFrame(
             [

@@ -151,6 +151,38 @@ class TestStructuredStreamingApply:
         assert got["text"].tolist() == want["text"].tolist()
 
 
+    def test_torn_snapshot_is_skipped_and_overwritten(self, spark, txns, tmp_path):
+        """A trigger that crashed after writing bucket data but before the
+        manifest leaves a torn snapshot above the newest committed one.
+        Reads and the next trigger use the committed snapshot, and the next
+        trigger's merge overwrites the orphan."""
+        import os
+
+        binlog = str(tmp_path / "sbinlog4")
+        write_binlog_files(txns, binlog, txns_per_file=30)
+        changes = decode_binlog_dir(spark, binlog, TRANSCRIPTS).persist()
+        half_seq = max(t.seq for t in txns) // 2
+        changelog = str(tmp_path / "changelog4")
+        store = str(tmp_path / "sstore4")
+        write_changelog(changes.filter(f"gtid_seq <= {half_seq}"), changelog)
+        stream_apply(spark, changelog, store, available_now=True).awaitTermination(120)
+        before = _final_pdf(read_stream_state(spark, store))
+
+        snaps = os.path.join(store, "snapshots")
+        newest = max(os.listdir(snaps))
+        torn = os.path.join(snaps, f"v{int(newest[1:]) + 1:08d}")
+        os.makedirs(os.path.join(torn, "data", "_bucket=1"))
+        pd.testing.assert_frame_equal(_final_pdf(read_stream_state(spark, store)), before)
+
+        write_changelog(changes.filter(f"gtid_seq > {half_seq}"), changelog, mode="append")
+        stream_apply(spark, changelog, store, available_now=True).awaitTermination(120)
+        changes.unpersist()
+        assert os.path.exists(os.path.join(torn, "manifest.json"))
+        got = _final_pdf(read_stream_state(spark, store))
+        want = apply_changelog_oracle(txns)
+        assert got["text"].tolist() == want["text"].tolist()
+
+
 class TestStatefulApply:
     """applyInPandasWithState tier: per-key winning order tuple lives in
     the streaming state store; the output is an append-only transition

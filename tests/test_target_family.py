@@ -4,13 +4,15 @@ A store must be REOPENED with the target family that wrote it; sniffing
 manifest value shapes / parquet schemas cannot distinguish every case
 (the canonical hole: a truncated merge-on-read store's empty ``{}``
 manifest looks exactly like copy-on-write). Each family stamps the store
-at commit time (last committing family wins — adoption re-stamps) and ``Replayer._detect_target`` /
-``read_stream_state`` dispatch on the stamp, falling back to the legacy
-sniff only for pre-stamp stores.
+at commit time (last committing family wins — adoption re-stamps) and
+``target.open_store`` — behind ``Replayer._detect_target`` and
+``read_stream_state`` — dispatches on the stamp, falling back to the
+layout sniff only for pre-stamp stores.
 """
 
 import json
 import os
+import shutil
 from datetime import datetime
 
 from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS
@@ -23,6 +25,7 @@ from mysql_cdc_spark.pipeline.target import (
     BucketedParquetMergeTarget,
     OrderedBucketedMergeTarget,
     load_target_family,
+    open_store,
     target_class_for_family,
 )
 
@@ -133,3 +136,70 @@ def test_read_stream_state_dispatches_on_stamp(spark, tmp_path):
     # truncate to an empty manifest: stamp keeps the MoR loader
     tgt._write_meta(v + 1, {})
     assert read_stream_state(spark, store).count() == 0
+
+
+STATE_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, tool string, "
+    "ts timestamp"
+)
+
+
+def test_legacy_unbucketed_stores_open_and_continue(spark, tmp_path):
+    """Stores of the retired unbucketed layouts (families ``cow`` and
+    ``ordered_cow``): each snapshot is a bare keyed parquet directory the
+    Spark committer marked with ``_SUCCESS``, no manifest. The opener reads
+    them through the bucketed classes (one bucket), and a further merge
+    continues the store from that state."""
+    live = [("a", 0, "user", "A0", None, TS), ("b", 0, "user", "B0", None, TS)]
+
+    cow = str(tmp_path / "cow")
+    snap = os.path.join(cow, "snapshots", "v00000001")
+    spark.createDataFrame(live, STATE_SCHEMA).write.parquet(snap)
+    with open(os.path.join(cow, "target_family.json"), "w") as f:
+        json.dump({"family": "cow"}, f)
+    tgt = open_store(cow, TRANSCRIPTS)
+    assert type(tgt) is BucketedParquetMergeTarget
+    assert sorted(r["text"] for r in tgt.read(spark, 1).collect()) == ["A0", "B0"]
+    v = tgt.merge(spark, _net(spark, [("a", 0, "update", "user", "A1", None, TS, 2, 20, 0)]), 1)
+    got = sorted((r["conv_id"], r["text"]) for r in tgt.read(spark, v).collect())
+    assert got == [("a", "A1"), ("b", "B0")]
+    assert type(Replayer._detect_target(cow, TRANSCRIPTS, spark)) is BucketedParquetMergeTarget
+
+    # ordered form: order tuples plus a tombstone for key c
+    ordered = str(tmp_path / "ordered_cow")
+    snap = os.path.join(ordered, "snapshots", "v00000001")
+    rows = [r + (5, 50, 0, False) for r in live] + [
+        ("c", 0, None, None, None, None, 9, 90, 0, True)
+    ]
+    spark.createDataFrame(
+        rows,
+        STATE_SCHEMA + ", _ord_gtid_seq long, _ord_pos long, "
+        "_ord_row_in_event long, _deleted boolean",
+    ).write.parquet(snap)
+    with open(os.path.join(ordered, "target_family.json"), "w") as f:
+        json.dump({"family": "ordered_cow"}, f)
+    tgt = open_store(ordered, TRANSCRIPTS)
+    assert type(tgt) is OrderedBucketedMergeTarget
+    assert sorted(r["text"] for r in tgt.read(spark, 1).collect()) == ["A0", "B0"]
+    v = tgt.merge(
+        spark,
+        _net(spark, [
+            ("a", 0, "update", "user", "A1", None, TS, 7, 70, 0),  # outranks
+            ("b", 0, "update", "user", "OLD", None, TS, 3, 30, 0),  # loses
+            ("c", 0, "insert", "user", "ZOMBIE", None, TS, 8, 80, 0),  # below tombstone
+        ]),
+        1,
+    )
+    got = sorted((r["conv_id"], r["text"]) for r in tgt.read(spark, v).collect())
+    assert got == [("a", "A1"), ("b", "B0")]
+    # unstamped, the one sniff finds the order columns in the bare directory
+    os.remove(os.path.join(ordered, "target_family.json"))
+    shutil.rmtree(tgt.snapshot_path(v))
+    assert type(open_store(ordered, TRANSCRIPTS)) is OrderedBucketedMergeTarget
+
+
+def test_open_store_is_none_for_fresh_or_torn_only_store(tmp_path):
+    store = str(tmp_path / "st")
+    assert open_store(store, TRANSCRIPTS) is None
+    os.makedirs(os.path.join(store, "snapshots", "v00000001", "data", "_bucket=0"))
+    assert open_store(store, TRANSCRIPTS) is None

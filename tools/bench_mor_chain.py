@@ -25,7 +25,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench_bucketed_merge import as_net, batch_ids, rows_for_ids
+from bench_mor_merge import as_net, batch_ids, rows_for_ids
 from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS
 from mysql_cdc_spark.pipeline.mor import (
     DEFAULT_AUTO_COMPACT,

@@ -29,11 +29,43 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from bench_bucketed_merge import as_net, batch_ids, rows_for_ids
 from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS
 from mysql_cdc_spark.pipeline.mor import MergeOnReadBucketedTarget
 from mysql_cdc_spark.pipeline.target import BucketedParquetMergeTarget
 from mysql_cdc_spark.session import get_spark
+
+
+def rows_for_ids(ids_df, text_prefix=""):
+    """Deterministic transcript row per id (same formula for base and nets,
+    so an update's after-image is reproducible without a join)."""
+    return ids_df.select(
+        F.concat(F.lit("conv-"), (F.col("id") / 16).cast("long").cast("string")).alias("conv_id"),
+        (F.col("id") % 16).cast("int").alias("turn_idx"),
+        F.lit("user").alias("role"),
+        F.concat(
+            F.lit(text_prefix), F.lit("text-"), F.col("id").cast("string"),
+            F.lit(" "), F.repeat(F.lit("x"), 180),
+        ).alias("text"),
+        F.lit(None).cast("string").alias("tool"),
+        F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
+    )
+
+
+def as_net(df, op):
+    return df.select(
+        "conv_id", "turn_idx", F.lit(op).alias("op"),
+        *[F.col(c).alias(f"after_{c}") for c, _, _ in TRANSCRIPTS.columns],
+    )
+
+
+def batch_ids(spark, n_rows, batch_keys, rnd):
+    """Clustered key pick: each batch edits a contiguous window of ids —
+    the realistic CDC shape (a batch touches a bounded set of active
+    conversations), and the shape bucket pruning is designed for."""
+    start = (rnd * 7919 * batch_keys) % n_rows
+    return spark.range(batch_keys).select(
+        ((F.col("id") + start) % n_rows).alias("id")
+    )
 
 
 def run(target, spark, n_rows, rounds, nets):

@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from bench_bucketed_merge import batch_ids, rows_for_ids
+from bench_mor_merge import batch_ids, rows_for_ids
 from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS
 from mysql_cdc_spark.pipeline.mor import OrderedMergeOnReadTarget
 from mysql_cdc_spark.pipeline.target import OrderedBucketedMergeTarget
