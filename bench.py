@@ -147,10 +147,9 @@ def _warm_workers(spark, cpus: int) -> None:
 
     def _warm(_):
         from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS as _T
-        from mysql_cdc_spark.binlog.vector import decode_segment_fast, segment_row_stats
+        from mysql_cdc_spark.binlog.vector import decode_segment_fast
 
         decode_segment_fast(blob, "warm.000001", _T)
-        segment_row_stats(blob, "warm.000001", _T)
         import time as _t
 
         _t.sleep(0.2)  # hold the slot so the next task forks a NEW worker

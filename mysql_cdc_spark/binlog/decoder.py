@@ -717,43 +717,34 @@ class _LatestPerSegment(AccumulatorParam):
         return value1
 
 
-def _segment_row_stats(frames, name, covered, min_pos_excl) -> tuple:
-    """Ledger facts of one decoded segment: ``(rows, open_pos)``. ``rows``
-    holds per-gtid_source committed-row count, position bounds, collapsed
-    GTID-seq islands and the newest header timestamp. Applies the filters
-    ``run_batch`` applies in Spark — the ``xid`` gate, the covered-GtidSet
-    anti-join (``covered`` = ``GtidSet.to_intervals()`` tuples) and
-    ``pos > min_pos_excl`` — so the facts count exactly the rows those
-    filters keep. ``open_pos`` is the first position after the checkpoint
-    of a row the ``xid`` gate drops (a transaction whose XID is not in the
-    segment yet), or None. Islands via numpy unique+diff: the distributed
-    form of GtidSet.add_gtid's collapse (uuid_set.rs:29-98)."""
+def covered_rows(sources, seqs, covered) -> np.ndarray:
+    """Mask of the rows whose GTID ``(sources[i], seqs[i])`` lies in a
+    ``covered`` interval (``GtidSet.to_intervals()`` tuples): the ledger's
+    first-delivery-wins set (ST5, uuid_set.rs:46-48). Per source, its
+    sorted interval starts are searched for the last start at or below
+    each sequence number, whose interval end bounds the match."""
+    hit = np.zeros(len(seqs), dtype=bool)
+    by_src: dict = {}
+    for uuid, s, e in covered:
+        by_src.setdefault(uuid, []).append((int(s), int(e)))
+    for source, ivs in by_src.items():
+        sel = np.nonzero(sources == source)[0]
+        if len(sel):
+            starts, ends = np.array(sorted(ivs), dtype=np.int64).T
+            sq = np.asarray(seqs[sel], dtype=np.int64)
+            k = np.searchsorted(starts, sq, side="right") - 1
+            hit[sel[(k >= 0) & (sq <= ends[np.maximum(k, 0)])]] = True
+    return hit
+
+
+def _segment_row_stats(frames, name) -> list:
+    """Ledger facts of the rows one segment yielded: per gtid_source the
+    row count, position bounds, collapsed GTID-seq islands and the newest
+    header timestamp. Islands via numpy unique+diff: the distributed form
+    of GtidSet.add_gtid's collapse (uuid_set.rs:29-98)."""
     if not frames:
-        return [], None
+        return []
     pdf = pd.concat(frames, ignore_index=True)
-    if min_pos_excl is not None:
-        pdf = pdf[pdf["pos"] > min_pos_excl]
-    gated = pdf["xid"].isna()
-    open_pos = int(pdf["pos"][gated].min()) if gated.any() else None
-    pdf = pdf[~gated]
-    if covered and len(pdf):
-        by_src: dict = {}
-        for uuid, s, e in covered:
-            by_src.setdefault(uuid, []).append((int(s), int(e)))
-        drop = np.zeros(len(pdf), dtype=bool)
-        src_arr = pdf["gtid_source"].to_numpy(dtype=object)
-        seq_arr = pdf["gtid_seq"].to_numpy()
-        for source, ivs in by_src.items():
-            ivs.sort()
-            starts = np.array([i[0] for i in ivs], dtype="int64")
-            ends = np.array([i[1] for i in ivs], dtype="int64")
-            sel = np.nonzero(src_arr == source)[0]
-            if len(sel):
-                sq = seq_arr[sel].astype("int64")
-                k = np.searchsorted(starts, sq, side="right") - 1
-                cov = (k >= 0) & (sq <= ends[np.maximum(k, 0)])
-                drop[sel[cov]] = True
-        pdf = pdf[~drop]
     out = []
     for s, g in pdf.groupby("gtid_source", dropna=False, sort=False):
         if pd.isna(s):
@@ -774,17 +765,18 @@ def _segment_row_stats(frames, name, covered, min_pos_excl) -> tuple:
             "ends": ends,
             "max_ts": 0 if pd.isna(ts_max) else int(pd.Timestamp(ts_max).value // 10**9),
         })
-    return out, open_pos
+    return out
 
 
 class SegmentStats:
-    """Ledger facts per segment, reported by the decode task that yields
-    the segment's rows — one decode pass serves both the merge and the
-    ledger. Each task computes its segment's row stats
-    (``_segment_row_stats``) and its TRUNCATE/DROP/RENAME fences
-    (``ddl.scan_truncates`` on the bytes it already holds), both
-    restricted to positions after the resume checkpoint, and adds them to
-    a ``_LatestPerSegment`` accumulator under the segment's name. The
+    """The applied-row rule of one batch, evaluated where the rows are
+    decoded, and the ledger facts of the rows it keeps. A decode task
+    given an instance (``decode_binlog_dir(stats=...)``) yields only the
+    rows the batch applies (``applied``), computes the segment's row stats
+    (``_segment_row_stats``) from exactly those rows and its
+    TRUNCATE/DROP/RENAME fences (``ddl.scan_truncates`` on the bytes it
+    already holds) after the resume position, and adds them to a
+    ``_LatestPerSegment`` accumulator under the segment's name. The
     driver reads them with ``collect`` after an action has run every
     decode task. One instance per batch; it empties the accumulator."""
 
@@ -804,26 +796,60 @@ class SegmentStats:
         self.resume_key = _segment_sort_key(resume_file) if resume_file else None
         self.resume_pos = resume_pos
 
-    def report(self, name: str, content: bytes, frames: list, spec) -> None:
-        """Executor side: ``frames`` hold ``COLS`` of every yielded frame.
-        Segments before the resume file contribute nothing (the position
-        predicate drops all their rows)."""
-        rows: list = []
-        fences: list = []
-        open_pos = None
-        key = _segment_sort_key(name)
-        if self.resume_key is None or key >= self.resume_key:
-            from .ddl import scan_truncates
+    def applied(
+        self, name: str, content: bytes, frames, spec
+    ) -> Iterator[pd.DataFrame]:
+        """Executor side: the rows of segment ``name``'s decoded ``frames``
+        the batch applies, then its report. A row applies when it is
+        strictly after the resume ``(file, pos)`` (earlier segments yield
+        nothing), its transaction committed (``xid`` not NULL, ST2) and the
+        ledger's ``covered`` GtidSet does not hold its GTID (ST5).
 
-            min_pos_excl = self.resume_pos if key == self.resume_key else None
-            rows, open_pos = _segment_row_stats(
-                frames, name, self.covered, min_pos_excl
-            )
-            fences = [
-                {**t, "src_file": name}
-                for t in scan_truncates(content, name, spec.database, spec.table)
-                if min_pos_excl is None or t["pos"] > min_pos_excl
-            ]
+        The position bound holds in addition to the GTID check. It is
+        monotone and always safe: anything at or before the checkpoint is
+        either committed (and covered) or predates a FromPosition/FromEnd
+        seed whose transactions carry GTIDs the ledger never covered; a
+        re-read of the seed segment would otherwise replay those and
+        regress merged state. Redelivered duplicates at later positions
+        are caught by the GTID check. With an active XA floor the resume
+        position rewinds (``Ledger.resume_position``) and the rewound range
+        relies on the GTID check alone: everything in it is covered except
+        the floor's own pending transaction (binlog/xa.py module doc).
+
+        The report's ``open_pos`` is the first position after the bound
+        of a row the ``xid`` check drops (a transaction whose XID is not
+        in the segment yet), or None."""
+        key = _segment_sort_key(name)
+        after = -1  # no bound past the resume file
+        if self.resume_key is not None and key <= self.resume_key:
+            after = self.resume_pos if key == self.resume_key else np.inf
+        seen: list = []
+        open_pos = None
+        for frame in frames:
+            pos = frame["pos"].to_numpy()
+            keep = pos > after
+            gated = keep & frame["xid"].isna().to_numpy()
+            if gated.any():
+                first = int(pos[gated].min())
+                open_pos = first if open_pos is None else min(open_pos, first)
+            keep &= ~gated
+            if self.covered:
+                keep &= ~covered_rows(
+                    frame["gtid_source"].to_numpy(dtype=object),
+                    frame["gtid_seq"].to_numpy(), self.covered,
+                )
+            if not keep.all():
+                frame = frame[keep]
+            seen.append(frame[self.COLS])
+            yield frame
+        from .ddl import scan_truncates
+
+        fences = [
+            {**t, "src_file": name}
+            for t in scan_truncates(content, name, spec.database, spec.table)
+            if t["pos"] > after
+        ]
+        rows = _segment_row_stats(seen, name)
         self.acc.add({name: (rows, fences, open_pos)})
 
     def collect(self, files: list[str]) -> tuple[list[dict], list[dict], dict]:
@@ -869,8 +895,10 @@ def decode_binlog_dir(
     pipeline). The scalar fallback always decodes full values (rare, and
     correctness-identical for such consumers).
 
-    ``stats``: each task also reports its segment's ledger facts through
-    this ``SegmentStats`` once it has yielded the segment's last frame.
+    ``stats``: each task yields only the rows this ``SegmentStats``
+    applies (``SegmentStats.applied``) and reports its segment's ledger
+    facts once it has yielded the segment's last frame. Without it every
+    decoded row is kept, uncommitted tails included (``xid`` NULL).
     """
     # One file = one sequential decode unit, so decode parallelism must be
     # one task per segment. ``binaryFile`` packs small segments into shared
@@ -937,13 +965,9 @@ def decode_binlog_dir(
                         on_error=on_error,
                         quarantine_dir=quarantine_dir,
                     ).decode_file(path, content)
-                seen = []
-                for frame in frames:
-                    if stats is not None:
-                        seen.append(frame[SegmentStats.COLS])
-                    yield frame
                 if stats is not None:
-                    stats.report(name, content, seen, spec)
+                    frames = stats.applied(name, content, frames, spec)
+                yield from frames
 
     return pdf_paths.mapInPandas(decode, schema=schema)
 

@@ -2167,11 +2167,12 @@ def segment_row_stats(
     inputs — WITHOUT materializing any column values (the wavefront runs
     with ``values=False``, so only length prefixes are read).
 
-    Mirrors the Spark-side filters the merge pass applies so the two
-    passes always agree: committed transactions only (xid gate), the
-    covered-GtidSet anti-join (``covered`` = GtidSet.to_intervals()
-    tuples), and the resume position predicate (``min_pos_exclusive``).
-    Returns None when the segment needs the scalar fallback.
+    Counts the rows the decode task's applied-row rule keeps
+    (``decoder.SegmentStats.applied``): committed transactions only (xid
+    gate), GTIDs outside ``covered`` (GtidSet.to_intervals() tuples,
+    through the same ``decoder.covered_rows``) and positions after
+    ``min_pos_exclusive``. Returns None when the segment needs the scalar
+    fallback.
     """
     prep = _prepare_segment(content, spec, xa_outcomes, src_file)
     empty = pd.DataFrame(
@@ -2223,22 +2224,10 @@ def segment_row_stats(
     src = prep.src_k[l_all]
     seq = prep.seq_k[l_all]
     if covered:
-        by_src: dict[str, list] = {}
-        for uuid, s, e in covered:
-            by_src.setdefault(uuid, []).append((int(s), int(e)))
-        for si, source in enumerate(prep.sources):
-            ivs = by_src.get(source)
-            if not ivs:
-                continue
-            ivs.sort()
-            starts = np.array([iv[0] for iv in ivs], dtype=np.int64)
-            ends = np.array([iv[1] for iv in ivs], dtype=np.int64)
-            sel = np.nonzero((src == si) & mask)[0]
-            if len(sel):
-                s = seq[sel]
-                k = np.searchsorted(starts, s, side="right") - 1
-                cov = (k >= 0) & (s <= ends[np.maximum(k, 0)])
-                mask[sel[cov]] = False
+        from .decoder import covered_rows
+
+        names = np.array(prep.sources + [None], dtype=object)
+        mask &= ~covered_rows(names[src], seq, covered)
 
     if not mask.any():
         return empty

@@ -16,9 +16,9 @@ last-wins replace).
 This state is driver-side ledger metadata: a GtidSet for a 10^10-event
 replay is a handful of (uuid, interval-list) entries — kilobytes — so a
 pure-Python implementation is the right tool; the *per-event* covered-check
-used during replay is done distributed, as an anti-join against the exploded
-interval table (see ``pipeline/replay.py``), never by calling into this
-module per row.
+used during replay runs in the decode tasks, as a numpy interval lookup over
+``to_intervals()`` (``binlog/decoder.py`` ``covered_rows``), never by calling
+into this module per row.
 """
 
 from __future__ import annotations
@@ -318,8 +318,8 @@ class GtidSet:
         return merged
 
     def to_intervals(self) -> list[tuple[str, int, int]]:
-        """Flatten to (source_key, start, end) rows for the distributed
-        anti-join; tagged sets key as ``uuid:tag``, matching the decode's
+        """Flatten to (source_key, start, end) rows for the per-row
+        covered check; tagged sets key as ``uuid:tag``, matching the decode's
         gtid_source text for a tagged stream."""
         out = []
         for key in sorted(self.uuid_sets):

@@ -301,14 +301,18 @@ def gate_complete_transactions(changes: DataFrame) -> DataFrame:
     """ST2: only events whose transaction committed inside the replayed
     range may advance state (binlog_client.rs:69-99 — gtid cached at
     GtidEvent, flushed only at Xid/COMMIT). Decode marks uncommitted tails
-    with NULL xid."""
+    with NULL xid. ``Replayer.run_batch`` gates in the decode task
+    (``decoder.SegmentStats.applied``); this Spark form serves callers
+    decoding without ``stats`` and is the reference tests compare it to."""
     return changes.filter(F.col("xid").isNotNull())
 
 
 def filter_covered_gtids(changes: DataFrame, intervals_df: DataFrame) -> DataFrame:
     """ST3/ST5 resume filter: drop events already covered by the ledger's
-    GtidSet. The interval set is tiny (ledger metadata), so this is a
-    broadcast range anti-join — no per-row Python, no driver loop."""
+    GtidSet, as a broadcast range anti-join. The Spark reference form of
+    the decode task's covered-GTID filter (``decoder.covered_rows``, which
+    ``Replayer`` batches use); tests and the benchmark's traced plan
+    prefixes compare against it."""
     if intervals_df.isEmpty():
         return changes
     cond = (

@@ -5,8 +5,9 @@ One micro-batch::
 
     list segment files (bounded by ledger position)          ST3
       → decode_binlog_dir (mapInPandas, parallel per file)   E1 semantics
-      → gate complete transactions (xid NOT NULL)            ST2
-      → anti-join ledger GtidSet intervals                   ST5 idempotence
+        keeps committed rows (xid NOT NULL)                  ST2
+        of GTIDs the ledger does not cover                   ST5 idempotence
+        after the resume (file, pos): SegmentStats.applied   ST3
       → net change per key: salted last-writer-wins          W1 + skew
       → target MERGE (Iceberg or parquet snapshot)           S7
       → ledger append (gtid set ∪, offsets, lineage, rates)  S6/ST1
@@ -36,7 +37,6 @@ from ..gtid import GtidSet, Gtid, Uuid
 from .ledger import Ledger, LedgerEntry
 from .order import (
     ORDER_COLS,
-    filter_covered_gtids,
     gate_complete_transactions,
     last_writer_wins,
     last_writer_wins_partial,
@@ -471,10 +471,11 @@ class Replayer:
         binlog bytes (keys-only decode over the window's segment files)
         rather than the state diff, because a delete of a key the store
         never held leaves no trace in the change feed yet MUST void that
-        key's backfill row (resurrection guard). Filtering mirrors
-        ``run_batch`` exactly: transaction gate, covered-GtidSet anti-join
-        *as of the low watermark*, position in (low, high], foreign
-        server ids dropped — so "touched" is precisely "applied"."""
+        key's backfill row (resurrection guard). The decode tasks apply
+        ``run_batch``'s rule *as of the low watermark* (``SegmentStats``
+        over the covered GtidSet and position of batch ``since_batch_id``);
+        foreign server ids and positions after the high watermark are
+        dropped here — so "touched" is precisely "applied"."""
         from ..binlog.decoder import _segment_sort_key, list_dir_entries
 
         spec = self.spec
@@ -515,20 +516,14 @@ class Replayer:
             before_values="keys", xa_outcomes=xa_verdicts,
             on_error=self.on_decode_error,
             quarantine_dir=self.quarantine_dir,
+            stats=SegmentStats(
+                self._stats_acc, covered_low.to_intervals(),
+                low.max_file, int(low.max_pos),
+            ),
         )
-        ev = gate_complete_transactions(ev)
         if self.ignore_server_ids:
             ev = ev.filter(
                 ~F.col("server_id").isin(list(self.ignore_server_ids))
-            )
-        if covered_low.uuid_sets:
-            intervals = self.spark.createDataFrame(
-                covered_low.to_intervals(), "uuid string, start long, end long"
-            )
-            ev = filter_covered_gtids(ev, intervals)
-        if low.max_file:
-            ev = ev.filter(
-                _after_position_predicate(low.max_file, int(low.max_pos))
             )
         ev = ev.filter(
             ~_after_position_predicate(high_file, int(high_pos))
@@ -674,27 +669,13 @@ class Replayer:
         xa_info = self._xa_scan_job(files) if self.xa == "batch" else None
         xa_verdicts = (xa_info or {}).get("verdicts") or None
         covered = self.ledger.covered_gtid_set()
-        # Position predicate, applied UNCONDITIONALLY in addition to the
-        # GTID anti-join. It is monotone and always safe: anything at or
-        # before the checkpointed (file, pos) is either committed (and the
-        # anti-join would drop it too) or predates a FromPosition/FromEnd
-        # seed whose transactions carry GTIDs the ledger never covered —
-        # without this predicate a re-read of the seed segment would replay
-        # those pre-seed transactions and regress merged state (the
-        # GTID-only filter cannot see them). Redelivered duplicates at
-        # *later* positions are still caught by the anti-join. With an
-        # active XA floor the anchor rewinds (ledger.resume_position) and
-        # the rewound range relies on the anti-join alone — safe, because
-        # everything in it was committed+covered except the floor's own
-        # pending transaction (binlog/xa.py module doc).
         max_file, max_pos = self.ledger.resume_position()
-        # the decode tasks report each segment's ledger facts (counts,
-        # GTID islands, positions, fences) under the same gate, anti-join
-        # and position filters as below — no second pass over the bytes
+        # the decode tasks yield only the rows this batch applies (the xid
+        # gate, the covered GTIDs and the resume position, see
+        # SegmentStats.applied) and report their ledger facts (counts,
+        # GTID islands, positions, fences): no second pass over the bytes
         seg_stats = SegmentStats(
-            self._stats_acc,
-            covered.to_intervals() if covered.uuid_sets else [],
-            max_file, max_pos,
+            self._stats_acc, covered.to_intervals(), max_file, max_pos
         )
         # before_values="keys": the merge pipeline reads only keys + after
         # images (before_* are dropped right after with_change_key), so
@@ -707,22 +688,12 @@ class Replayer:
             quarantine_dir=self.quarantine_dir,
             stats=seg_stats,
         )
-        changes = gate_complete_transactions(changes)
         if self.ignore_server_ids:
             # circular-replication guard (see __init__): drop foreign-
-            # origin rows after the gate; the decode stats still count
+            # origin rows after decode; the decode stats still count
             # them, so positions and GTID coverage advance over them
             changes = changes.filter(
                 ~F.col("server_id").isin(list(self.ignore_server_ids))
-            )
-        if covered.uuid_sets:
-            intervals = spark.createDataFrame(
-                covered.to_intervals(), "uuid string, start long, end long"
-            )
-            changes = filter_covered_gtids(changes, intervals)
-        if max_file:
-            changes = changes.filter(
-                _after_position_predicate(max_file, max_pos)
             )
 
         keys = list(spec.primary_key)
@@ -758,6 +729,11 @@ class Replayer:
             else self.target.merge
         )
 
+        # audit and history read the changes again after the merge: cache
+        # them for those two, so the one decode pass below fills the cache
+        # (the default path never caches the event stream)
+        if self.audit is not None or self.history is not None:
+            changes = changes.persist()
         # -- one decode pass: materializing the cached net change runs
         # every decode task, which fills seg_stats; only once the stats
         # say the batch is non-empty, fence-free and stop-free does the
@@ -870,50 +846,51 @@ class Replayer:
                 merge_fn(spark, net, base_version) if net_rows else base_version
             )
             phase_t["merge_s"] = round(time.time() - t_phase, 2)
+            t_phase = time.time()
+
+            # -- write-audit-publish window (pipeline/audit.py): the staged
+            # snapshot exists on disk but the ledger does not name it yet.
+            # Audit it now; a rejection unlinks every version this batch
+            # staged (merge, or truncate+merge on a fence batch) and raises
+            # with the store untouched — no ledger entry, no history rows, no
+            # view refresh, so a retry after the upstream fix starts clean.
+            if self.audit is not None:
+                from .audit import AuditContext
+
+                ctx = AuditContext(
+                    spark=spark,
+                    batch_id=batch_id,
+                    staged=self.target.read(spark, new_version),
+                    previous=self.target.read(spark, current_version),
+                    changes=changes,
+                    primary_key=tuple(spec.primary_key),
+                )
+                try:
+                    self.audit(ctx)
+                except BaseException:
+                    import shutil
+
+                    for v in range(current_version + 1, new_version + 1):
+                        shutil.rmtree(
+                            self.target.snapshot_path(v), ignore_errors=True
+                        )
+                    raise
+                phase_t["audit_s"] = round(time.time() - t_phase, 2)
+                t_phase = time.time()
+
+            # -- optional SCD2 history sink, BEFORE the ledger append: a crash
+            # between history commit and ledger leaves the batch un-acked, and
+            # the replay re-applies idempotently (scd2.apply_batch's outrank
+            # guard + (key, valid_from) anti-join)
+            if self.history is not None:
+                self.history.apply_batch(
+                    spark, changes, self.history.current_version()
+                )
+                phase_t["history_s"] = round(time.time() - t_phase, 2)
+                t_phase = time.time()
         finally:
             net.unpersist()
-        t_phase = time.time()
-
-        # -- write-audit-publish window (pipeline/audit.py): the staged
-        # snapshot exists on disk but the ledger does not name it yet.
-        # Audit it now; a rejection unlinks every version this batch
-        # staged (merge, or truncate+merge on a fence batch) and raises
-        # with the store untouched — no ledger entry, no history rows, no
-        # view refresh, so a retry after the upstream fix starts clean.
-        if self.audit is not None:
-            from .audit import AuditContext
-
-            ctx = AuditContext(
-                spark=spark,
-                batch_id=batch_id,
-                staged=self.target.read(spark, new_version),
-                previous=self.target.read(spark, current_version),
-                changes=changes,
-                primary_key=tuple(spec.primary_key),
-            )
-            try:
-                self.audit(ctx)
-            except BaseException:
-                import shutil
-
-                for v in range(current_version + 1, new_version + 1):
-                    shutil.rmtree(
-                        self.target.snapshot_path(v), ignore_errors=True
-                    )
-                raise
-            phase_t["audit_s"] = round(time.time() - t_phase, 2)
-            t_phase = time.time()
-
-        # -- optional SCD2 history sink, BEFORE the ledger append: a crash
-        # between history commit and ledger leaves the batch un-acked, and
-        # the replay re-applies idempotently (scd2.apply_batch's outrank
-        # guard + (key, valid_from) anti-join)
-        if self.history is not None:
-            self.history.apply_batch(
-                spark, changes, self.history.current_version()
-            )
-            phase_t["history_s"] = round(time.time() - t_phase, 2)
-            t_phase = time.time()
+            changes.unpersist()
 
         # -- ledger gtid-set update (driver-side splice of the per-file
         # islands already collected with the stats — no extra job)

@@ -181,8 +181,9 @@ class BucketedParquetMergeTarget:
 
     Stores written by the retired unbucketed layout (families ``cow`` and
     ``ordered_cow``: bare parquet snapshot directories) open through this
-    class and its ordered form: such a snapshot reads as bucket 0 of a
-    one-bucket layout, and the next merge continues the store from there.
+    class and its ordered form: such a snapshot reads as one bucket 0 that
+    no bucket pruning drops, and the next merge rewrites it whole into
+    this target's layout, from which the store continues bucketed.
 
     ``bucket_cols`` picks the hash input (default: the full primary key).
     Bucketing on a prefix — e.g. ``("conv_id",)``, mirroring
@@ -256,17 +257,14 @@ class BucketedParquetMergeTarget:
         from — a resume on a different cluster size (the constructor
         default tracks ``defaultParallelism``) would otherwise hash net
         keys into different buckets than the stored rows, skip the stored
-        row in the anti-join, and leave duplicates behind. A legacy
-        unbucketed snapshot is one bucket over the primary key; snapshots
-        written before layout persistence existed fall back to the
-        constructor values."""
+        row in the anti-join, and leave duplicates behind. Legacy
+        unbucketed snapshots and snapshots written before layout
+        persistence existed fall back to the constructor values."""
         p = self._layout_path(version)
         if version > 0 and os.path.exists(p):
             with open(p) as f:
                 d = json.load(f)
             return int(d["buckets"]), tuple(d["bucket_cols"])
-        if _is_legacy(self.snapshot_path(version)):
-            return 1, tuple(self.spec.primary_key)
         return self.buckets, self.bucket_cols
 
     def _adopt_layout(self, version: int) -> None:
@@ -277,8 +275,10 @@ class BucketedParquetMergeTarget:
         return _read_manifest(self.store_dir, version)
 
     def _pruned_manifest(self, version: int, bucket_ids) -> dict:
+        """Manifest entries of ``bucket_ids``; a legacy snapshot's one
+        entry holds rows of every bucket, so pruning keeps it."""
         manifest = self._load_manifest(version)
-        if bucket_ids is None:
+        if bucket_ids is None or _is_legacy(self.snapshot_path(version)):
             return manifest
         return {b: e for b, e in manifest.items() if b in bucket_ids}
 
@@ -364,7 +364,11 @@ class BucketedParquetMergeTarget:
         """Write touched buckets under the new snapshot, splice the
         manifest (untouched entries carried over by reference), commit.
         ``carry_over=False`` (rebucket) starts the manifest empty — every
-        live bucket of the new layout is written fresh."""
+        live bucket of the new layout is written fresh. From a legacy
+        snapshot ``merged`` holds the whole table (its one entry is never
+        pruned), so every bucket of this layout is written."""
+        if _is_legacy(self.snapshot_path(current_version)):
+            touched = list(range(self.buckets))
         new_version = current_version + 1
         data_dir = os.path.join(self._fresh_snapshot(new_version), "data")
         (

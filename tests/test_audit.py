@@ -145,3 +145,33 @@ def test_max_shrink(spark):
     A.max_shrink(0.7)(ctx)  # within budget
     # empty previous state (bootstrap) never rejects
     A.max_shrink(0.0)(_ctx(spark, prev, ()))
+
+
+def test_audit_and_history_read_the_one_decode_pass(spark, corpus, tmp_path):
+    """With ``audit=`` and ``history=`` set, both read the batch's changes
+    after the merge from the cache the batch's one decode pass filled: the
+    audit moves the segments out of the binlog directory first, so a
+    second decode would fail to open them."""
+    import shutil
+
+    from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS
+    from mysql_cdc_spark.pipeline.scd2 import Scd2HistoryStore
+
+    binlog, moved = str(tmp_path / "binlog"), str(tmp_path / "moved")
+    shutil.copytree(corpus["dir"], binlog)
+    counted = []
+
+    def audit(ctx):
+        shutil.move(binlog, moved)
+        counted.append(ctx.changes.count())
+
+    history = Scd2HistoryStore(str(tmp_path / "h"), TRANSCRIPTS, buckets=4)
+    rep = Replayer(
+        spark, binlog, str(tmp_path / "s"), audit=audit, history=history
+    )
+    res = rep.run_batch(rep.pending_files())
+    assert res.events > 0 and counted == [res.events]
+    assert history.current_version() == 1
+    assert history.read_history(spark).count() > 0
+    got = _state_pdf(rep)
+    assert got["text"].tolist() == corpus["oracle"]["text"].tolist()

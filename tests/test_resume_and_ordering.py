@@ -224,10 +224,14 @@ class TestSegmentOrdering:
 
 
 class TestStatsMergeFilterParity:
-    """The ledger facts the decode tasks report (numpy/pandas filters) and
-    the merge pipeline's Spark SQL filters must agree event-for-event —
-    run_batch commits an empty batch without merging on the strength of
-    empty stats, which is sound only if empty stats ⇒ empty net."""
+    """The decode task's applied-row rule (``SegmentStats.applied``: xid
+    gate, covered-GTID filter, resume position, in numpy), seen through
+    the lineage ``run_batch`` commits, must agree event-for-event with the
+    Spark reference filters (``gate_complete_transactions``,
+    ``filter_covered_gtids``, ``_after_position_predicate``) — the rule
+    decides both the merged rows and the ledger counts, and run_batch
+    commits an empty batch without merging on the strength of empty
+    stats."""
 
     def _spark_side_counts(self, spark, rep, outdir):
         from pyspark.sql import functions as F
@@ -290,6 +294,36 @@ class TestStatsMergeFilterParity:
             for e in rep.ledger.entries()[n_entries:]
         )
         _assert_texts_equal(_state_pdf(rep), apply_changelog_oracle(txns))
+
+
+def test_resumed_batch_job_count(spark, tmp_path):
+    """Spark jobs a resumed one-segment batch and an empty batch run: the
+    decode tasks apply the gate, covered-GTID and position rules, so no
+    job checks the interval set and no broadcast anti-join runs."""
+    txns = generate_changelog(
+        n_conversations=40, max_turns=6, n_extra_ops=200, seed=5,
+        duplicate_txns=3,
+    )
+    outdir = str(tmp_path / "binlog")
+    write_binlog_files(txns, outdir, txns_per_file=40)
+    rep = Replayer(spark, outdir, str(tmp_path / "store"))
+    files = rep.pending_files()
+    rep.run_batch(files[:-2])
+    sc = spark.sparkContext
+    jobs = {}
+    for tag, seg in (("batch", files[-2]), ("empty", files[-1])):
+        sc.setJobGroup(tag, tag)
+        try:
+            jobs[tag] = (rep.run_batch([seg]).events, len(
+                sc.statusTracker().getJobIdsForGroup(tag)))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs["batch"][0] > 0 and jobs["empty"][0] == 0
+    # decode+LWW count, touched buckets, merge write and the Spark
+    # internals they trigger; 12 and 6 with the Spark-side filters
+    assert jobs["batch"][1] <= 10
+    assert jobs["empty"][1] <= 4
+    _assert_texts_equal(_state_pdf(rep), apply_changelog_oracle(txns))
 
 
 class TestRemoteFsListing:

@@ -144,12 +144,17 @@ STATE_SCHEMA = (
 )
 
 
+def _layout_buckets(tgt, version: int) -> int:
+    with open(os.path.join(tgt.snapshot_path(version), "bucketing.json")) as f:
+        return json.load(f)["buckets"]
+
+
 def test_legacy_unbucketed_stores_open_and_continue(spark, tmp_path):
     """Stores of the retired unbucketed layouts (families ``cow`` and
     ``ordered_cow``): each snapshot is a bare keyed parquet directory the
     Spark committer marked with ``_SUCCESS``, no manifest. The opener reads
-    them through the bucketed classes (one bucket), and a further merge
-    continues the store from that state."""
+    them through the bucketed classes (one unpruned bucket), and a further
+    merge rewrites that state into the constructor's bucket layout."""
     live = [("a", 0, "user", "A0", None, TS), ("b", 0, "user", "B0", None, TS)]
 
     cow = str(tmp_path / "cow")
@@ -163,6 +168,7 @@ def test_legacy_unbucketed_stores_open_and_continue(spark, tmp_path):
     v = tgt.merge(spark, _net(spark, [("a", 0, "update", "user", "A1", None, TS, 2, 20, 0)]), 1)
     got = sorted((r["conv_id"], r["text"]) for r in tgt.read(spark, v).collect())
     assert got == [("a", "A1"), ("b", "B0")]
+    assert _layout_buckets(tgt, v) == 64  # the constructor default
     assert type(Replayer._detect_target(cow, TRANSCRIPTS, spark)) is BucketedParquetMergeTarget
 
     # ordered form: order tuples plus a tombstone for key c
@@ -192,6 +198,7 @@ def test_legacy_unbucketed_stores_open_and_continue(spark, tmp_path):
     )
     got = sorted((r["conv_id"], r["text"]) for r in tgt.read(spark, v).collect())
     assert got == [("a", "A1"), ("b", "B0")]
+    assert _layout_buckets(tgt, v) == 64
     # unstamped, the one sniff finds the order columns in the bare directory
     os.remove(os.path.join(ordered, "target_family.json"))
     shutil.rmtree(tgt.snapshot_path(v))
