@@ -56,22 +56,21 @@ write amplification the binding constraint.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .target import (
     BucketedParquetMergeTarget,
     OrderedPolicy,
     _read_manifest,
-    empty_state_df,
+    state_schema,
 )
 
 # Default per-bucket delta-chain length at which the batch Replayer /
 # streaming apply tier folds the chain back into base (auto-compact):
 # fold cost at read time grows linearly with chain length
-# (tools/bench_mor_chain.py), so an unmaintained store must bound it by
+# (BENCH.md), so an unmaintained store must bound it by
 # default; callers pass auto_compact=0 to opt out or another threshold
 # to tune the write/read amplification trade.
 DEFAULT_AUTO_COMPACT = 16
@@ -115,74 +114,50 @@ class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
             out[b] = {"base": v.get("base"), "deltas": list(v["deltas"])}
         return out
 
+    def _stored_schema(self) -> T.StructType:
+        """A delta row adds its write version ``_seq``, its op and its
+        carried-column mask ``_cm``; a compacted base row only ``_seq``; a
+        base adopted from a copy-on-write store none of them."""
+        return (
+            state_schema(self.spec)
+            .add("_seq", T.LongType())
+            .add("_op", T.StringType())
+            .add("_cm", T.LongType())
+        )
+
     # -- read (resolve) ------------------------------------------------------
 
     def read(self, spark: SparkSession, version: int, bucket_ids=None) -> DataFrame:
+        """Buckets without deltas read their base as stored (no fold, no
+        shuffle). The others fold base ∪ deltas per key in one exchange:
+        the delete-fence window and the per-column aggregate both hash-
+        partition on the key. Per column, the winner is the highest-_seq
+        surviving contribution that CARRIED the column (its mask bit set)
+        — ``max_by`` skips rows whose ordering expression is null, which
+        encodes the carried-bit filter without a second pass. A key whose
+        last contribution is a delete folds to nothing."""
         manifest = self._pruned_manifest(version, bucket_ids)
         spec_cols = [n for n, _, _ in self.spec.columns]
-        if not manifest:
-            return empty_state_df(spark, self.spec)
-
-        plain_bases = [
-            e["base"] for e in manifest.values() if not e["deltas"] and e["base"]
-        ]
-        folded = {b: e for b, e in manifest.items() if e["deltas"]}
-
-        parts = []
-        if plain_bases:  # fast path: no deltas → no fold, no shuffle
-            parts.append(self._scan(spark, plain_bases).select(*spec_cols))
-        if folded:
-            base_paths = [e["base"] for e in folded.values() if e["base"]]
-            delta_paths = [p for e in folded.values() for p in e["deltas"]]
-            sides = []
-            if base_paths:
-                base = self._scan(spark, base_paths)
-                # adopted copy-on-write base files (str-entry manifest
-                # conversion) carry no _seq; every delta outranks them —
-                # seq 0. Row-level coalesce, NOT a column-presence check:
-                # mergeSchema may surface the column as NULL when adopted
-                # and native base files mix in one scan.
-                if "_seq" in base.columns:
-                    base = base.withColumn(
-                        "_seq", F.coalesce(F.col("_seq"), F.lit(0).cast("long"))
-                    )
-                else:
-                    base = base.withColumn("_seq", F.lit(0).cast("long"))
-                sides.append(
-                    base.select(
-                        *spec_cols, "_seq",
-                        F.lit("upsert").alias("_op"),
-                        F.lit(-1).cast("long").alias("_cm"),
-                    )
-                )
-            sides.append(
-                self._scan(spark, delta_paths).select(
-                    *spec_cols, "_seq", "_op", "_cm"
-                )
-            )
-            u = sides[0]
-            for s in sides[1:]:
-                u = u.unionByName(s)
-            parts.append(self._resolve(u).select(*spec_cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _resolve(self, u: DataFrame) -> DataFrame:
-        """Fold (base ∪ deltas) rows to final per-key images. One exchange:
-        the delete-fence window and the per-column aggregate both hash-
-        partition on the key, so Spark plans a single shuffle. Per column,
-        the winner is the highest-_seq surviving contribution that CARRIED
-        the column (its mask bit set) — ``max_by`` skips rows whose
-        ordering expression is null, which encodes the carried-bit filter
-        without a second pass. A key whose last contribution is a delete
-        folds to nothing."""
+        plain = [e["base"] for e in manifest.values() if not e["deltas"] and e["base"]]
+        out = self._scan(spark, plain).select(*spec_cols)
+        folded = [e for e in manifest.values() if e["deltas"]]
+        if not folded:
+            return out
+        paths = [e["base"] for e in folded if e["base"]]
+        paths += [p for e in folded for p in e["deltas"]]
+        # base rows hold no _op or _cm: each is an upsert of every column.
+        # An adopted copy-on-write base also holds no _seq, so every delta
+        # outranks it.
+        u = self._scan(spark, paths).select(
+            *spec_cols,
+            F.coalesce(F.col("_seq"), F.lit(0).cast("long")).alias("_seq"),
+            F.coalesce(F.col("_op"), F.lit("upsert")).alias("_op"),
+            F.coalesce(F.col("_cm"), F.lit(-1).cast("long")).alias("_cm"),
+        )
         keys = list(self.spec.primary_key)
-        w = Window.partitionBy(*keys)
         fence = F.max(
             F.when(F.col("_op") == "delete", F.col("_seq")).otherwise(F.lit(-1))
-        ).over(w)
+        ).over(Window.partitionBy(*keys))
         live = u.withColumn("_fence", fence).filter(
             (F.col("_op") != "delete") & (F.col("_seq") > F.col("_fence"))
         )
@@ -194,46 +169,9 @@ class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
             aggs.append(
                 F.max_by(F.col(c), F.when(carried, F.col("_seq"))).alias(c)
             )
-        return live.groupBy(*keys).agg(*aggs)
+        return out.unionByName(live.groupBy(*keys).agg(*aggs).select(*spec_cols))
 
     # -- write (append deltas) -------------------------------------------------
-
-    def _commit_delta(self, delta: DataFrame, current_version: int) -> int:
-        """Write a ready (schema'd) delta frame partitioned by bucket under
-        snapshot version+1 and splice the manifest; the shared commit path
-        for the _seq-ordered and order-tuple-ordered (subclass) sinks."""
-        new_version = current_version + 1
-        snap = self._fresh_snapshot(new_version)
-        delta = delta.persist()  # consumed twice: touched pre-pass + write
-        try:
-            touched = sorted(
-                r["_b"]
-                for r in delta.select(self._bucket_expr().alias("_b"))
-                .distinct()
-                .collect()
-            )
-            delta_dir = os.path.join(snap, "delta")
-            if touched:
-                (
-                    delta.withColumn("_bucket", self._bucket_expr())
-                    .repartition(max(1, len(touched)), F.col("_bucket"))
-                    .write.partitionBy("_bucket")
-                    .parquet(delta_dir)
-                )
-            manifest = self._load_manifest(current_version)
-            for b in touched:
-                d = os.path.join(delta_dir, f"_bucket={b}")
-                if not os.path.isdir(d):
-                    continue  # empty partition writes no dir
-                entry = manifest.get(b, {"base": None, "deltas": []})
-                entry["deltas"] = entry["deltas"] + [
-                    os.path.relpath(d, self.store_dir)
-                ]
-                manifest[b] = entry
-            self._write_meta(new_version, manifest)
-            return new_version
-        finally:
-            delta.unpersist()
 
     def _append_delta(
         self, net: DataFrame, current_version: int, mask_col
@@ -241,19 +179,23 @@ class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
         self._adopt_layout(current_version)
         spec = self.spec
         keys = list(spec.primary_key)
-        new_version = current_version + 1
-        delta = net.select(
-            *[F.col(k).cast(d).alias(k) for k, d, _ in spec.columns if k in keys],
-            *[
-                F.col(f"after_{c}").cast(d).alias(c)
-                for c, d, _ in spec.columns
-                if c not in keys
-            ],
-            F.col("op").alias("_op"),
-            mask_col.cast("long").alias("_cm"),
-            F.lit(new_version).cast("long").alias("_seq"),
-        )
-        return self._commit_delta(delta, current_version)
+        net = net.persist()  # touched-bucket pre-pass + delta write both consume it
+        try:
+            touched = self._touched_buckets(net)
+            delta = net.select(
+                *[F.col(k).cast(d).alias(k) for k, d, _ in spec.columns if k in keys],
+                *[
+                    F.col(f"after_{c}").cast(d).alias(c)
+                    for c, d, _ in spec.columns
+                    if c not in keys
+                ],
+                F.col("op").alias("_op"),
+                mask_col.cast("long").alias("_cm"),
+                F.lit(current_version + 1).cast("long").alias("_seq"),
+            )
+            return self._commit_buckets(delta, touched, current_version, delta=True)
+        finally:
+            net.unpersist()
 
     def merge(self, spark: SparkSession, net: DataFrame, current_version: int) -> int:
         return self._append_delta(net, current_version, F.lit(-1))
@@ -270,8 +212,11 @@ class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
         writing version (``_seq``); later deltas outrank them."""
         return rows.withColumn("_seq", F.lit(version).cast("long"))
 
-    def _base_entry(self, rel: str) -> dict:
-        return {"base": rel, "deltas": []}
+    def _bucket_entry(self, carried, rel: str, delta: bool) -> dict:
+        if not delta:
+            return {"base": rel, "deltas": []}
+        carried = carried or {"base": None, "deltas": []}
+        return {"base": carried["base"], "deltas": carried["deltas"] + [rel]}
 
     def compact(
         self,
@@ -349,6 +294,10 @@ class OrderedMergeOnReadTarget(OrderedPolicy, MergeOnReadBucketedTarget):
 
     FAMILY = "ordered_mor"
 
+    def _stored_schema(self) -> T.StructType:
+        """A delta row adds its write generation ``_gen``."""
+        return super()._stored_schema().add("_gen", T.LongType())
+
     # -- read (resolve by order tuple) ----------------------------------------
 
     def read_with_order(
@@ -360,72 +309,45 @@ class OrderedMergeOnReadTarget(OrderedPolicy, MergeOnReadBucketedTarget):
         manifest = self._pruned_manifest(version, bucket_ids)
         spec_cols = [n for n, _, _ in self.spec.columns]
         ords = self._ord_names()
-        out_cols = [*spec_cols, *ords, "_deleted"]
-        if not manifest:
-            return self._empty_ordered(spark)
-
-        plain = [e["base"] for e in manifest.values() if not e["deltas"] and e["base"]]
-        folded = {b: e for b, e in manifest.items() if e["deltas"]}
-        parts = []
-        if plain:
-            parts.append(
-                self._scan_ordered(spark, plain).select(
-                    *spec_cols, *ords,
-                    (F.col("_op") == "delete").alias("_deleted"),
-                )
-            )
-        if folded:
-            paths = [e["base"] for e in folded.values() if e["base"]]
-            paths += [p for e in folded.values() for p in e["deltas"]]
-            u = self._scan_ordered(spark, paths)
-            # order tuple first; write generation LAST so only exact ties
-            # fall through to latest-written-wins (CoW incoming-wins twin)
-            rank = F.struct(
-                *[F.col(o) for o in ords],
-                F.coalesce(F.col("_gen"), F.lit(-1)).alias("_gen"),
-            )
-            payload = F.struct(
-                F.col("_op"),
-                *[F.col(c) for c in spec_cols],
-                *[F.col(o) for o in ords],
-            )
-            keys = list(self.spec.primary_key)
-            parts.append(
-                u.groupBy(*keys)
-                .agg(F.max_by(payload, rank).alias("_win"))
-                .select(
-                    *[F.col(f"_win.{c}").alias(c) for c in spec_cols if c not in keys],
-                    *keys,
-                    *[F.col(f"_win.{o}").alias(o) for o in ords],
-                    (F.col("_win._op") == "delete").alias("_deleted"),
-                )
-                .select(*out_cols)
-            )
-        out = parts[0].select(*out_cols)
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _scan_ordered(self, spark: SparkSession, paths: list[str]) -> DataFrame:
-        df = self._with_ord_cols(self._scan(spark, paths))
-        if "_gen" not in df.columns:  # compacted/adopted base: generation -1
-            df = df.withColumn("_gen", F.lit(None).cast("long"))
-        # adopted CoW base rows (str-entry manifest conversion) carry no
-        # _op: an ordered-CoW base stores tombstones as a _deleted flag
-        # (which must stay deletes — blanket 'upsert' would resurrect
-        # them); a plain-CoW base is all live rows. Row-level coalesce,
-        # NOT a column-presence check — mergeSchema surfaces the missing
-        # column as NULL when adopted and native files mix in one scan.
-        from_flag = (
-            F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("upsert"))
-            if "_deleted" in df.columns
-            else F.lit("upsert")
+        # a base adopted from an ordered copy-on-write store holds no _op:
+        # its tombstones are the _deleted flag, and they must stay deletes
+        # (a plain copy-on-write base holds live rows only)
+        op = F.coalesce(
+            F.col("_op"),
+            F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("upsert")),
         )
-        if "_op" in df.columns:
-            df = df.withColumn("_op", F.coalesce(F.col("_op"), from_flag))
-        else:
-            df = df.withColumn("_op", from_flag)
-        return df.drop("_deleted") if "_deleted" in df.columns else df
+        plain = [e["base"] for e in manifest.values() if not e["deltas"] and e["base"]]
+        out = self._scan(spark, plain).select(
+            *spec_cols, *ords, (op == "delete").alias("_deleted")
+        )
+        folded = [e for e in manifest.values() if e["deltas"]]
+        if not folded:
+            return out
+        paths = [e["base"] for e in folded if e["base"]]
+        paths += [p for e in folded for p in e["deltas"]]
+        # order tuple first; write generation LAST so only exact ties fall
+        # through to latest-written-wins (CoW incoming-wins twin); a base
+        # row holds no _gen and ranks as generation -1
+        rank = F.struct(
+            *[F.col(o) for o in ords],
+            F.coalesce(F.col("_gen"), F.lit(-1)).alias("_gen"),
+        )
+        payload = F.struct(
+            op.alias("_op"),
+            *[F.col(c) for c in spec_cols],
+            *[F.col(o) for o in ords],
+        )
+        keys = list(self.spec.primary_key)
+        return out.unionByName(
+            self._scan(spark, paths)
+            .groupBy(*keys)
+            .agg(F.max_by(payload, rank).alias("_win"))
+            .select(
+                *[F.col(f"_win.{c}").alias(c) for c in spec_cols],
+                *[F.col(f"_win.{o}").alias(o) for o in ords],
+                (F.col("_win._op") == "delete").alias("_deleted"),
+            )
+        )
 
     # -- write ------------------------------------------------------------------
 
@@ -433,17 +355,20 @@ class OrderedMergeOnReadTarget(OrderedPolicy, MergeOnReadBucketedTarget):
         """Same net contract as the ordered CoW sink (key cols + ``op`` +
         ``after_<col>`` + order columns); writes only delta files."""
         self._adopt_layout(current_version)
-        delta = self._incoming(net, "_op").withColumn(
-            "_gen", F.lit(current_version + 1).cast("long")
-        )
-        return self._commit_delta(delta, current_version)
+        net = net.persist()  # touched-bucket pre-pass + delta write both consume it
+        try:
+            touched = self._touched_buckets(net)
+            delta = self._incoming(net, "_op").withColumn(
+                "_gen", F.lit(current_version + 1).cast("long")
+            )
+            return self._commit_buckets(delta, touched, current_version, delta=True)
+        finally:
+            net.unpersist()
 
     def _base_rows(self, rows: DataFrame, version: int) -> DataFrame:
         """Base rows keep the delta schema: winning rows INCLUDING
         tombstones, the ``_deleted`` flag of ``read_with_order`` turned
         back into ``_op``; no ``_gen`` (compacted rows rank as -1)."""
-        if "_deleted" not in rows.columns:
-            return rows
         return rows.withColumn(
             "_op",
             F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("upsert")),

@@ -325,7 +325,7 @@ class Replayer:
         # fold is the ledger-coordinated zero-event batch compact() runs.
         # DEFAULT for MoR targets: DEFAULT_AUTO_COMPACT (mor.py) — an
         # unmaintained store's fold cost grows linearly with chain length
-        # (tools/bench_mor_chain.py), so bounding it is opt-OUT
+        # (BENCH.md), so bounding it is opt-OUT
         # (auto_compact=0), not opt-in.
         from .mor import auto_compact_policy
 
@@ -593,23 +593,12 @@ class Replayer:
             *[F.lit(0).cast("long").alias(c) for c in ORDER_COLS],
         )
         rows = net.count()
-        last = self.ledger.last()
         version = self.target.merge(
             self.spark, net, self.ledger.current_snapshot_version()
         )
-        self.ledger.append(
-            LedgerEntry(
-                batch_id=self.ledger.next_batch_id(),
-                gtid_set_text=last.gtid_set_text,
-                max_file=last.max_file,
-                max_pos=int(last.max_pos),
-                snapshot_version=version,
-                committed_at=Ledger.now(),
-                partition_lineage=[],
-                metrics={"backfill_chunk": chunk_id, "backfill_rows": rows},
-            )
+        return self._commit_maintenance(
+            version, {"backfill_chunk": chunk_id, "backfill_rows": rows}
         )
-        return version
 
     # -- one micro-batch ----------------------------------------------------
 
@@ -1354,6 +1343,31 @@ class Replayer:
             self.target.gc(keep_latest=self.gc_keep)
         return int(n_events)
 
+    def _commit_maintenance(self, new_version: int, metrics: dict) -> int:
+        """Commit ``new_version`` as a zero-event ledger entry: the read
+        position and covered GTID set carry over from the last entry
+        unchanged, so a resume neither skips nor re-reads the stream.
+        Registered views then refresh to it and ``gc_keep`` retention
+        applies, as after a batch. Returns ``new_version``."""
+        last = self.ledger.last()
+        self.ledger.append(
+            LedgerEntry(
+                batch_id=self.ledger.next_batch_id(),
+                gtid_set_text=last.gtid_set_text if last else "",
+                max_file=last.max_file if last else "",
+                max_pos=last.max_pos if last else 0,
+                snapshot_version=new_version,
+                committed_at=Ledger.now(),
+                partition_lineage=[],
+                metrics=metrics,
+            )
+        )
+        for view in self.views:
+            view.refresh(self.spark, self.target, new_version)
+        if self.gc_keep and hasattr(self.target, "gc"):
+            self.target.gc(keep_latest=self.gc_keep)
+        return new_version
+
     def rebucket(self, new_buckets: int, bucket_cols: tuple | None = None) -> int:
         """Re-scale the target's bucket layout between batches (see
         ``BucketedParquetMergeTarget.rebucket``) and commit it as a
@@ -1373,24 +1387,9 @@ class Replayer:
         new_version = self.target.rebucket(
             self.spark, new_buckets, version, bucket_cols
         )
-        last = self.ledger.last()
-        self.ledger.append(
-            LedgerEntry(
-                batch_id=self.ledger.next_batch_id(),
-                gtid_set_text=last.gtid_set_text if last else "",
-                max_file=last.max_file if last else "",
-                max_pos=last.max_pos if last else 0,
-                snapshot_version=new_version,
-                committed_at=Ledger.now(),
-                partition_lineage=[],
-                metrics={"maintenance": "rebucket", "buckets": int(new_buckets)},
-            )
+        return self._commit_maintenance(
+            new_version, {"maintenance": "rebucket", "buckets": int(new_buckets)}
         )
-        for view in self.views:
-            view.refresh(self.spark, self.target, new_version)
-        if self.gc_keep and hasattr(self.target, "gc"):
-            self.target.gc(keep_latest=self.gc_keep)
-        return new_version
 
     def compact(self, min_deltas: int = 1, bucket_ids=None) -> int:
         """Fold a merge-on-read target's delta chains back into base files
@@ -1421,24 +1420,9 @@ class Replayer:
             )
         if new_version == version:
             return version  # no-op: no chain met the threshold
-        last = self.ledger.last()
-        self.ledger.append(
-            LedgerEntry(
-                batch_id=self.ledger.next_batch_id(),
-                gtid_set_text=last.gtid_set_text if last else "",
-                max_file=last.max_file if last else "",
-                max_pos=last.max_pos if last else 0,
-                snapshot_version=new_version,
-                committed_at=Ledger.now(),
-                partition_lineage=[],
-                metrics={"maintenance": "compact", "min_deltas": int(min_deltas)},
-            )
+        return self._commit_maintenance(
+            new_version, {"maintenance": "compact", "min_deltas": int(min_deltas)}
         )
-        for view in self.views:
-            view.refresh(self.spark, self.target, new_version)
-        if self.gc_keep and hasattr(self.target, "gc"):
-            self.target.gc(keep_latest=self.gc_keep)
-        return new_version
 
     def purge_keys(self, predicate: str, erase: bool = True) -> int:
         """Right-to-be-forgotten purge (GDPR art. 17 / CCPA delete): remove
@@ -1517,39 +1501,26 @@ class Replayer:
                 h_version = self.history.purge_keys(
                     self.spark, doomed, self.history.current_version()
                 )
-            last = self.ledger.last()
-            self.ledger.append(
-                LedgerEntry(
-                    batch_id=self.ledger.next_batch_id(),
-                    gtid_set_text=last.gtid_set_text if last else "",
-                    max_file=last.max_file if last else "",
-                    max_pos=last.max_pos if last else 0,
-                    snapshot_version=new_version,
-                    committed_at=Ledger.now(),
-                    partition_lineage=[],
-                    metrics={
-                        "maintenance": "purge",
-                        "rows_purged": int(n_purged),
-                        "erase": bool(erase),
-                        **(
-                            {"history_version": int(h_version)}
-                            if h_version is not None
-                            else {}
-                        ),
-                    },
-                )
-            )
             # views shed the purged contributions through the normal
             # change feed BEFORE older snapshots are erased
-            for view in self.views:
-                view.refresh(self.spark, self.target, new_version)
+            self._commit_maintenance(
+                new_version,
+                {
+                    "maintenance": "purge",
+                    "rows_purged": int(n_purged),
+                    "erase": bool(erase),
+                    **(
+                        {"history_version": int(h_version)}
+                        if h_version is not None
+                        else {}
+                    ),
+                },
+            )
             if erase:
                 if hasattr(self.target, "gc"):
                     self.target.gc(keep_latest=1)
                 if self.history is not None:
                     self.history.gc(keep_latest=1)
-            elif self.gc_keep and hasattr(self.target, "gc"):
-                self.target.gc(keep_latest=self.gc_keep)
             return new_version
         finally:
             doomed.unpersist()
@@ -1660,28 +1631,14 @@ class Replayer:
             new_version = self.target.merge(self.spark, net, cur_version)
         finally:
             net.unpersist()
-        last = self.ledger.last()
-        self.ledger.append(
-            LedgerEntry(
-                batch_id=self.ledger.next_batch_id(),
-                gtid_set_text=last.gtid_set_text if last else "",
-                max_file=last.max_file if last else "",
-                max_pos=last.max_pos if last else 0,
-                snapshot_version=new_version,
-                committed_at=Ledger.now(),
-                partition_lineage=[],
-                metrics={
-                    "maintenance": "flashback",
-                    "to_batch": int(to_batch),
-                    "restored_version": int(entry.snapshot_version),
-                },
-            )
+        return self._commit_maintenance(
+            new_version,
+            {
+                "maintenance": "flashback",
+                "to_batch": int(to_batch),
+                "restored_version": int(entry.snapshot_version),
+            },
         )
-        for view in self.views:
-            view.refresh(self.spark, self.target, new_version)
-        if self.gc_keep and hasattr(self.target, "gc"):
-            self.target.gc(keep_latest=self.gc_keep)
-        return new_version
 
     def checksum(
         self,
@@ -1775,29 +1732,13 @@ class Replayer:
             new_version = self.target.merge(self.spark, net, cur_version)
         finally:
             net.unpersist()
-        last = self.ledger.last()
-        self.ledger.append(
-            LedgerEntry(
-                batch_id=self.ledger.next_batch_id(),
-                gtid_set_text=last.gtid_set_text if last else "",
-                max_file=last.max_file if last else "",
-                max_pos=last.max_pos if last else 0,
-                snapshot_version=new_version,
-                committed_at=Ledger.now(),
-                partition_lineage=[],
-                metrics={
-                    "maintenance": "repair",
-                    "rows_fixed": int(n_fixed),
-                    "chunks": (
-                        [int(c) for c in chunk_ids]
-                        if chunk_ids is not None
-                        else "all"
-                    ),
-                },
-            )
+        return self._commit_maintenance(
+            new_version,
+            {
+                "maintenance": "repair",
+                "rows_fixed": int(n_fixed),
+                "chunks": (
+                    [int(c) for c in chunk_ids] if chunk_ids is not None else "all"
+                ),
+            },
         )
-        for view in self.views:
-            view.refresh(self.spark, self.target, new_version)
-        if self.gc_keep and hasattr(self.target, "gc"):
-            self.target.gc(keep_latest=self.gc_keep)
-        return new_version

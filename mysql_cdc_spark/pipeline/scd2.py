@@ -343,11 +343,10 @@ class Scd2HistoryMorStore(Scd2HistoryStore):
 
     _load_manifest = _MOR._load_manifest
     _manifest_refs = _MOR._manifest_refs
+    _stored_schema = _MOR._stored_schema
     read = _MOR.read
-    _resolve = _MOR._resolve
-    _commit_delta = _MOR._commit_delta
     _base_rows = _MOR._base_rows
-    _base_entry = _MOR._base_entry
+    _bucket_entry = _MOR._bucket_entry
     compact = _MOR.compact
     delta_stats = _MOR.delta_stats
     del _MOR
@@ -358,7 +357,7 @@ class Scd2HistoryMorStore(Scd2HistoryStore):
         pieces = self._batch_pieces(spark, d, current_version)
         if pieces is None:
             return current_version
-        _touched, _kept, closed, fresh = pieces
+        touched, _kept, closed, fresh = pieces
         ddl = {n: dd for n, dd, _ in self.spec.columns}
         out_cols = [n for n, _, _ in self.spec.columns]
         new_version = current_version + 1
@@ -371,4 +370,4 @@ class Scd2HistoryMorStore(Scd2HistoryStore):
             .withColumn("_cm", F.lit(-1).cast("long"))
             .withColumn("_seq", F.lit(new_version).cast("long"))
         )
-        return self._commit_delta(delta, current_version)
+        return self._commit_buckets(delta, touched, current_version, delta=True)

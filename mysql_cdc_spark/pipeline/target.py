@@ -41,11 +41,11 @@ from pyspark.sql import types as T
 from ..binlog.decoder import TableSpec, TRANSCRIPTS, _ddl_to_type
 
 
-def empty_state_df(spark: SparkSession, spec: TableSpec = TRANSCRIPTS) -> DataFrame:
-    schema = T.StructType(
+def state_schema(spec: TableSpec = TRANSCRIPTS) -> T.StructType:
+    """Spark schema of a table's rows: one nullable field per spec column."""
+    return T.StructType(
         [T.StructField(n, _ddl_to_type(d), True) for n, d, _ in spec.columns]
     )
-    return spark.createDataFrame([], schema)
 
 
 def snapshot_diff(
@@ -311,25 +311,28 @@ class BucketedParquetMergeTarget:
         cols = [F.col(k).cast(ddl[k]) for k in self.bucket_cols]
         return F.pmod(F.xxhash64(*cols), F.lit(self.buckets)).cast("int")
 
+    def _stored_schema(self) -> T.StructType:
+        """Every column a bucket file of this target family may hold: the
+        spec columns plus the family's own per-row state (subclasses add
+        theirs, and the columns of any family whose store they adopt).
+        The store's schema lives here, not in the parquet footers."""
+        return state_schema(self.spec)
+
     def _scan(self, spark: SparkSession, paths) -> DataFrame:
-        """One scan over store-relative data dirs. Buckets written before
-        a schema evolution lack the new columns: mergeSchema unions the
-        parquet footers (cheap: one per bucket dir) and the missing spec
-        columns read as NULL."""
+        """One scan over store-relative data dirs, read through
+        ``_stored_schema`` (Iceberg reads old data files through the table
+        schema the same way): a column a file predates — a bucket written
+        before an additive schema evolution, or a base adopted from
+        another family — reads as NULL, and planning the scan opens no
+        parquet footer. No paths read as an empty frame of that schema."""
         full = sorted({os.path.join(self.store_dir, p) for p in paths})
-        df = spark.read.option("mergeSchema", "true").parquet(*full)
-        for name, ddl, _ in self.spec.columns:
-            if name not in df.columns:
-                df = df.withColumn(name, F.lit(None).cast(ddl))
-        return df
+        return spark.read.schema(self._stored_schema()).parquet(*full)
 
     def read(self, spark: SparkSession, version: int, bucket_ids=None) -> DataFrame:
         """Read the table at ``version``; ``bucket_ids`` (a set) prunes the
         scan to those buckets' data dirs — the manifest is the metadata
         index, so pruning never touches unrelated files."""
         manifest = self._pruned_manifest(version, bucket_ids)
-        if not manifest:
-            return empty_state_df(spark, self.spec)
         return self._scan(spark, manifest.values()).select(
             *[n for n, _, _ in self.spec.columns]
         )
@@ -353,44 +356,52 @@ class BucketedParquetMergeTarget:
         extra per-row columns override)."""
         return rows
 
-    def _base_entry(self, rel: str):
-        """Manifest entry for a freshly written bucket data dir."""
+    def _bucket_entry(self, carried, rel: str, delta: bool):
+        """Manifest entry of a bucket this commit wrote ``rel`` into;
+        ``carried`` is the entry it had (None for a new bucket). A
+        copy-on-write bucket is its one data dir; merge-on-read overrides
+        to append delta writes to the chain."""
         return rel
 
     def _commit_buckets(
-        self, merged: DataFrame, touched: list, current_version: int,
-        carry_over: bool = True,
+        self, rows: DataFrame, touched: list, current_version: int,
+        carry_over: bool = True, delta: bool = False,
     ) -> int:
-        """Write touched buckets under the new snapshot, splice the
-        manifest (untouched entries carried over by reference), commit.
-        ``carry_over=False`` (rebucket) starts the manifest empty — every
-        live bucket of the new layout is written fresh. From a legacy
-        snapshot ``merged`` holds the whole table (its one entry is never
-        pruned), so every bucket of this layout is written."""
+        """The one bucket write: write ``rows`` partitioned by bucket under
+        snapshot version+1, splice the manifest, commit. A base write
+        (``data/``) replaces each touched bucket's entry, and a bucket
+        left with no rows writes no dir and drops out; a merge-on-read
+        delta write (``delta/``) adds to each touched bucket's entry.
+        Untouched entries carry over by reference; ``carry_over=False``
+        (rebucket) starts the manifest empty — every live bucket of the
+        new layout is written fresh. From a legacy snapshot ``rows`` holds
+        the whole table (its one entry is never pruned), so every bucket
+        of this layout is written."""
         if _is_legacy(self.snapshot_path(current_version)):
             touched = list(range(self.buckets))
         new_version = current_version + 1
-        data_dir = os.path.join(self._fresh_snapshot(new_version), "data")
+        out_dir = os.path.join(
+            self._fresh_snapshot(new_version), "delta" if delta else "data"
+        )
+        if not delta:
+            rows = self._base_rows(rows, new_version)
         (
-            self._base_rows(merged, new_version)
-            .withColumn("_bucket", self._bucket_expr())
+            rows.withColumn("_bucket", self._bucket_expr())
             .repartition(max(1, len(touched)), F.col("_bucket"))
             .write.partitionBy("_bucket")
-            .parquet(data_dir)
+            .parquet(out_dir)
         )
-        manifest = {}
-        if carry_over:
-            manifest = {
-                b: e
-                for b, e in self._load_manifest(current_version).items()
-                if b not in set(touched)
-            }
+        manifest = self._load_manifest(current_version) if carry_over else {}
         for b in touched:
-            bucket_dir = os.path.join(data_dir, f"_bucket={b}")
-            if os.path.isdir(bucket_dir):  # a fully-deleted bucket writes no dir
-                manifest[b] = self._base_entry(
-                    os.path.relpath(bucket_dir, self.store_dir)
+            bucket_dir = os.path.join(out_dir, f"_bucket={b}")
+            if os.path.isdir(bucket_dir):
+                manifest[b] = self._bucket_entry(
+                    manifest.get(b),
+                    os.path.relpath(bucket_dir, self.store_dir),
+                    delta,
                 )
+            elif not delta:
+                manifest.pop(b, None)
         self._write_meta(new_version, manifest)
         return new_version
 
@@ -501,7 +512,7 @@ class BucketedParquetMergeTarget:
 
         self._adopt_layout(version)
         if not key_values:
-            return empty_state_df(spark, self.spec)
+            return spark.createDataFrame([], state_schema(self.spec))
         ddl = {n: d for n, d, _ in self.spec.columns}
         probe = spark.createDataFrame(pd.DataFrame(key_values))
         probe = probe.select(
@@ -674,17 +685,13 @@ class OrderedPolicy:
     def _ord_names(self) -> list[str]:
         return [f"_ord_{c}" for c in self.order_cols]
 
-    def _with_ord_cols(self, df: DataFrame) -> DataFrame:
-        """Pad order columns a file predates (they read as NULL)."""
+    def _stored_schema(self) -> T.StructType:
+        """The layout's columns plus the order tuple (longs; NULL in a
+        file that predates them) and the tombstone flag."""
+        schema = super()._stored_schema()
         for o in self._ord_names():
-            if o not in df.columns:
-                df = df.withColumn(o, F.lit(None).cast("long"))
-        return df
-
-    def _empty_ordered(self, spark: SparkSession) -> DataFrame:
-        return self._with_ord_cols(empty_state_df(spark, self.spec)).withColumn(
-            "_deleted", F.lit(False)
-        )
+            schema = schema.add(o, T.LongType())
+        return schema.add("_deleted", T.BooleanType())
 
     def _incoming(self, net: DataFrame, op_col: str) -> DataFrame:
         """Net change rows in stored form: key and value columns cast to
@@ -774,13 +781,11 @@ class OrderedBucketedMergeTarget(OrderedPolicy, BucketedParquetMergeTarget):
         """Full stored form (spec columns + order tuple + tombstone flag),
         manifest-pruned to ``bucket_ids`` like ``read``."""
         manifest = self._pruned_manifest(version, bucket_ids)
-        if not manifest:
-            return self._empty_ordered(spark)
-        df = self._with_ord_cols(self._scan(spark, manifest.values()))
-        if "_deleted" not in df.columns:
-            df = df.withColumn("_deleted", F.lit(False))
-        return df.select(
-            *[n for n, _, _ in self.spec.columns], *self._ord_names(), "_deleted"
+        return self._scan(spark, manifest.values()).select(
+            *[n for n, _, _ in self.spec.columns],
+            *self._ord_names(),
+            # a file written before the flag holds live rows only
+            F.coalesce(F.col("_deleted"), F.lit(False)).alias("_deleted"),
         )
 
     def merge(self, spark: SparkSession, net: DataFrame, current_version: int) -> int:

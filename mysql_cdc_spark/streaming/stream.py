@@ -33,9 +33,9 @@ from ..pipeline.mor import auto_compact_policy
 from ..pipeline.order import ORDER_COLS, last_writer_wins, with_change_key
 from ..pipeline.target import (
     OrderedBucketedMergeTarget,
-    empty_state_df,
     latest_committed_version,
     open_store,
+    state_schema,
 )
 
 
@@ -85,11 +85,11 @@ def stream_apply(
     tombstones on the bucket-pruned CoW layout, so a steady-state trigger
     touching K conversations rewrites K buckets, not the table. Pass
     ``target=OrderedMergeOnReadTarget(...)`` for the delta-append form
-    (measured ~4× cheaper per trigger, tools/bench_ordered_mor.py). For
+    (measured ~4× cheaper per trigger, BENCH.md). For
     MoR targets ``auto_compact`` DEFAULTS to ``mor.DEFAULT_AUTO_COMPACT``
     (``mor.auto_compact_policy``): any bucket whose delta chain reaches
     the threshold folds back into base right after the trigger (read fold
-    cost grows with chain length — tools/bench_mor_chain.py); pass
+    cost grows with chain length — BENCH.md); pass
     ``auto_compact=0`` to opt out or another N to tune it. No ledger
     here: each trigger merges onto the store's newest COMMITTED snapshot
     (``target.latest_committed_version``), so a compacted version simply
@@ -273,5 +273,5 @@ def read_stream_state(spark: SparkSession, store_dir: str, spec: TableSpec = TRA
     the target family that wrote the store (``target.open_store``)."""
     target = open_store(store_dir, spec)
     if target is None:
-        return empty_state_df(spark, spec)
+        return spark.createDataFrame([], state_schema(spec))
     return target.read(spark, latest_committed_version(store_dir))

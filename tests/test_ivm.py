@@ -154,6 +154,7 @@ def test_bucketed_lookup_reads_one_bucket(spark, binlog_dir, tmp_path):
         spark, v, [{"conv_id": "no-such-conv", "turn_idx": 999}]
     )
     assert none.count() == 0
+    assert rep.target.lookup(spark, v, []).count() == 0
 
 
 def test_bucketed_target_view(spark, binlog_dir, tmp_path):
@@ -166,6 +167,30 @@ def test_bucketed_target_view(spark, binlog_dir, tmp_path):
     rep.replay(files_per_batch=1)
     view = MaterializedAggView(str(tmp_path / "view"), ["role"], MEASURES)
     view.refresh(spark, rep.target)
+    got = _pdf(view.read(spark))
+    want = _pdf(
+        view.recompute(spark, rep.target, rep.ledger.current_snapshot_version())
+    )
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_snapshot_chunk_refreshes_registered_views(spark, binlog_dir, tmp_path):
+    """An incremental-snapshot chunk commits like any maintenance batch: a
+    registered view folds the chunk's rows at the chunk commit, not at
+    the next stream batch."""
+    from datetime import datetime
+
+    view = MaterializedAggView(str(tmp_path / "view"), ["role"], MEASURES)
+    rep = Replayer(spark, binlog_dir, str(tmp_path / "store"), views=[view])
+    rep.run_batch(rep.pending_files()[:1])
+    chunk = spark.createDataFrame(
+        [(f"chunk-{i}", 0, "user", "backfilled", None, datetime(2024, 1, 1))
+         for i in range(3)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    rep.snapshot_chunk(chunk, rep.backfill_watermark(), chunk_id=0)
+    assert rep.ledger.last().metrics["backfill_rows"] == 3
     got = _pdf(view.read(spark))
     want = _pdf(
         view.recompute(spark, rep.target, rep.ledger.current_snapshot_version())

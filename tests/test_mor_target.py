@@ -450,7 +450,7 @@ class TestAutoCompact:
     def test_default_on_for_mor_targets(self, spark, changelog, tmp_path):
         """Auto-compact is opt-OUT on merge-on-read targets: an
         unmaintained store's read fold grows with chain length
-        (tools/bench_mor_chain.py), so the bounded-chain policy is the
+        (BENCH.md), so the bounded-chain policy is the
         default; auto_compact=0 disables, CoW targets stay None."""
         from mysql_cdc_spark.pipeline.mor import DEFAULT_AUTO_COMPACT
 

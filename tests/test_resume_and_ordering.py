@@ -297,9 +297,11 @@ class TestStatsMergeFilterParity:
 
 
 def test_resumed_batch_job_count(spark, tmp_path):
-    """Spark jobs a resumed one-segment batch and an empty batch run: the
-    decode tasks apply the gate, covered-GTID and position rules, so no
-    job checks the interval set and no broadcast anti-join runs."""
+    """Spark jobs a resumed one-segment batch, an empty batch and a state
+    read run: the decode tasks apply the gate, covered-GTID and position
+    rules, so no job checks the interval set and no broadcast anti-join
+    runs; store scans read through the declared schema, so none merges
+    parquet footers."""
     txns = generate_changelog(
         n_conversations=40, max_turns=6, n_extra_ops=200, seed=5,
         duplicate_txns=3,
@@ -311,18 +313,24 @@ def test_resumed_batch_job_count(spark, tmp_path):
     rep.run_batch(files[:-2])
     sc = spark.sparkContext
     jobs = {}
-    for tag, seg in (("batch", files[-2]), ("empty", files[-1])):
+    for tag, run in (
+        ("batch", lambda: rep.run_batch([files[-2]]).events),
+        ("empty", lambda: rep.run_batch([files[-1]]).events),
+        ("read", lambda: rep.read_state().count()),
+    ):
         sc.setJobGroup(tag, tag)
         try:
-            jobs[tag] = (rep.run_batch([seg]).events, len(
-                sc.statusTracker().getJobIdsForGroup(tag)))
+            jobs[tag] = (run(), len(sc.statusTracker().getJobIdsForGroup(tag)))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
     assert jobs["batch"][0] > 0 and jobs["empty"][0] == 0
     # decode+LWW count, touched buckets, merge write and the Spark
-    # internals they trigger; 12 and 6 with the Spark-side filters
-    assert jobs["batch"][1] <= 10
+    # internals they trigger; 12 and 6 with the Spark-side filters, and
+    # 10 while each store scan merged the parquet footers
+    assert jobs["batch"][1] <= 9
     assert jobs["empty"][1] <= 4
+    # the scan plans from the declared stored schema: no footer job
+    assert jobs["read"][1] <= 2
     _assert_texts_equal(_state_pdf(rep), apply_changelog_oracle(txns))
 
 

@@ -15,7 +15,9 @@ import os
 import shutil
 from datetime import datetime
 
-from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS
+import pytest
+
+from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS, TableSpec
 from mysql_cdc_spark.pipeline.mor import (
     MergeOnReadBucketedTarget,
     OrderedMergeOnReadTarget,
@@ -210,3 +212,72 @@ def test_open_store_is_none_for_fresh_or_torn_only_store(tmp_path):
     assert open_store(store, TRANSCRIPTS) is None
     os.makedirs(os.path.join(store, "snapshots", "v00000001", "data", "_bucket=0"))
     assert open_store(store, TRANSCRIPTS) is None
+
+
+# the schema before an additive evolution added ``tool``
+NARROW = TableSpec(
+    database=TRANSCRIPTS.database,
+    table=TRANSCRIPTS.table,
+    columns=tuple(c for c in TRANSCRIPTS.columns if c[0] != "tool"),
+    primary_key=TRANSCRIPTS.primary_key,
+)
+
+
+@pytest.mark.parametrize(
+    "cls",
+    [
+        BucketedParquetMergeTarget,
+        OrderedBucketedMergeTarget,
+        MergeOnReadBucketedTarget,
+        OrderedMergeOnReadTarget,
+    ],
+)
+def test_store_written_before_a_column_reads_through_the_wider_spec(
+    spark, tmp_path, cls
+):
+    """Every family reads files written before ``tool`` existed through
+    its declared stored schema: the missing column reads as NULL, a
+    tombstone stays deleted, and a merge-on-read delta still outranks the
+    base it was written over."""
+    store = str(tmp_path / "st")
+    narrow = cls(store, NARROW, buckets=4)
+    narrow_net = NET_SCHEMA.replace("after_tool string, ", "")
+
+    def merge(tgt, schema, rows, v):
+        return tgt.merge(spark, spark.createDataFrame(rows, schema), v)
+
+    v = merge(narrow, narrow_net, [
+        (f"k{i}", 0, "insert", "user", f"t{i}", TS, 1, 10 + i, 0)
+        for i in range(8)
+    ], 0)
+    if hasattr(narrow, "compact"):  # narrow base files under the deltas
+        v = narrow.compact(spark, v)
+    v = merge(narrow, narrow_net, [
+        ("k1", 0, "update", "user", "t1b", TS, 2, 20, 0),
+        ("k2", 0, "delete", None, None, None, 2, 21, 0),
+    ], v)
+
+    wide = cls(store, TRANSCRIPTS, buckets=4)
+    ordered = hasattr(wide, "order_cols")
+    net = [
+        ("k0", 0, "update", "user", "t0b", "grep", TS, 3, 30, 0),
+        ("k8", 0, "insert", "user", "t8", "ls", TS, 3, 31, 0),
+    ]
+    if ordered:  # a redelivered insert ranked below k2's tombstone
+        net.append(("k2", 0, "insert", "user", "zombie", None, TS, 1, 12, 0))
+    untouched = set(wide._load_manifest(v)) - set(
+        wide._touched_buckets(_net(spark, net))
+    )
+    assert untouched  # some buckets keep their narrow files by reference
+    v = merge(wide, NET_SCHEMA, net, v)
+
+    got = {
+        r["conv_id"]: (r["text"], r["tool"])
+        for r in wide.read(spark, v).collect()
+    }
+    want = {f"k{i}": (f"t{i}", None) for i in range(3, 8)}
+    want.update(k0=("t0b", "grep"), k1=("t1b", None), k8=("t8", "ls"))
+    assert got == want
+    if ordered:
+        full = {r["conv_id"]: r for r in wide.read_with_order(spark, v).collect()}
+        assert full["k2"]["_deleted"] and full["k2"]["_ord_gtid_seq"] == 2
