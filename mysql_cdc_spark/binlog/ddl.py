@@ -737,12 +737,14 @@ def discover_spec(spark, binlog_dir: str, spec) -> "TableSpec":  # noqa: F821
 
     import pandas as pd
 
-    from .decoder import _list_segments, _read_bytes, _segment_sort_key
-
-    paths = _list_segments(binlog_dir)
-    files = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        max(1, len(paths))
+    from .decoder import (
+        _list_segments,
+        _read_bytes,
+        _segment_sort_key,
+        segment_tasks,
     )
+
+    files = segment_tasks(spark, _list_segments(binlog_dir))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -2,11 +2,12 @@
 
 Spark-first layout:
 
-- **Across files** — parallel: ``spark.read.format("binaryFile")`` lists the
-  binlog directory; each file (a rotation segment) becomes one input row and
-  is decoded independently. At 100 TB the unit of parallelism is the
-  rotation segment (segments are bounded, typically ≤1 GiB), so a
-  1000-executor cluster decodes thousands of segments concurrently.
+- **Across files** — parallel: the driver lists the binlog directory and
+  packs its files (rotation segments) by size into one task per core
+  (``pack_segments``); each task reads its own segments and decodes each
+  independently. At 100 TB the unit of work is the rotation segment
+  (segments are bounded, typically ≤1 GiB), so a 1000-executor cluster
+  decodes thousands of segments concurrently.
 - **Within a file** — sequential by construction: headers chain via
   ``next_event_position`` (event_header.rs:24) and row events depend on the
   latest preceding TABLE_MAP (row_parser.rs:18-20,33-36) and GTID group
@@ -26,6 +27,7 @@ the canonical superset.
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass
 from typing import Iterator, Optional
@@ -884,10 +886,12 @@ def decode_binlog_dir(
 ) -> DataFrame:
     """binlog directory → change-event DataFrame (distributed decode).
 
-    ``binaryFile`` gives (path, content) rows; decode runs in mapInPandas —
-    one Arrow batch stream per file, parallel across files. Filter pushdown:
-    pass ``path_filter`` (glob) to prune segments at the listing, e.g. for
-    resume-from-file checkpoints.
+    The driver lists the segments and packs them by size into one task per
+    core (``pack_segments``); each task opens its segments executor-side
+    and decodes them one after another in mapInPandas, so segment bytes
+    never cross the network and decode within a segment stays sequential.
+    Filter pushdown: pass ``path_filter`` (glob) to prune segments at the
+    listing, e.g. for resume-from-file checkpoints.
 
     ``before_values="keys"`` (vectorized path) skips materializing
     non-key before-image values — column-pruning pushed into the byte
@@ -900,27 +904,10 @@ def decode_binlog_dir(
     facts once it has yielded the segment's last frame. Without it every
     decoded row is kept, uncommitted tails included (``xid`` NULL).
     """
-    # One file = one sequential decode unit, so decode parallelism must be
-    # one task per segment. ``binaryFile`` packs small segments into shared
-    # tasks (maxSplitBytes formula), so instead the *path list* (driver-side
-    # metadata, bytes-free) is distributed — repartition(n_files) shuffles
-    # only strings; each task then opens its own segment executor-side
-    # (local fs here; pyarrow.fs handles hdfs://, s3:// identically). Raw
-    # segment bytes never cross the network as shuffle data.
-    paths = _list_segments(binlog_dir, path_filter)
-    if not paths:
-        return spark.createDataFrame(
-            [], change_event_schema(spec, attach_origin_query, attach_partition_id)
-        )
-    # parallelize with numSlices=len(paths): exactly one path per partition,
-    # deterministic, zero shuffle (round-robin repartition leaves collision
-    # gaps; hash repartition is worse)
-    pdf_paths = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths], len(paths)),
-        "path string",
-    )
-
     schema = change_event_schema(spec, attach_origin_query, attach_partition_id)
+    sizes = _list_segments(binlog_dir, path_filter)
+    if not sizes:
+        return spark.createDataFrame([], schema)
     if vectorized is None:
         vectorized = os.environ.get("SPARK_CDC_SCALAR_DECODE", "") != "1"
 
@@ -969,7 +956,7 @@ def decode_binlog_dir(
                     frames = stats.applied(name, content, frames, spec)
                 yield from frames
 
-    return pdf_paths.mapInPandas(decode, schema=schema)
+    return segment_tasks(spark, sizes).mapInPandas(decode, schema=schema)
 
 
 def _segment_sort_key(name: str) -> tuple[str, int]:
@@ -984,23 +971,59 @@ def _segment_sort_key(name: str) -> tuple[str, int]:
     return (m.group(1), int(m.group(2))) if m else (name, -1)
 
 
-def list_dir_entries(binlog_dir: str) -> list[str]:
-    """File names (no directories) under a binlog dir — local path or any
-    pyarrow.fs URI (s3://, hdfs://, file://), mirroring ``_read_bytes`` so a
-    cluster deployment pointing at object storage lists the same way it
-    reads."""
+def pack_segments(sizes: dict[str, int], k: int) -> list[list[str]]:
+    """Segment paths packed into at most ``k`` decode tasks by byte size:
+    longest-processing-time first (each segment, largest first, joins the
+    lightest task so far), the static form of DS2's work stealing. Tasks
+    come heaviest first, so the longest one is scheduled first; inside a
+    task its segments keep rotation order."""
+    import heapq
+
+    heap = [(0, 0, i) for i in range(k)]
+    bins: list[list[str]] = [[] for _ in range(k)]
+    for path in sorted(sizes, key=lambda p: -sizes[p]):
+        load, n, i = heapq.heappop(heap)
+        bins[i].append(path)
+        heapq.heappush(heap, (load + sizes[path], n + 1, i))
+    loads = {i: load for load, _, i in heap}
+    return [
+        sorted(bins[i], key=lambda p: _segment_sort_key(os.path.basename(p)))
+        for i in sorted(range(k), key=lambda i: -loads[i])
+        if bins[i]
+    ]
+
+
+def segment_tasks(spark: SparkSession, sizes: dict[str, int]) -> DataFrame:
+    """The segments ``{path: bytes}`` as a one-column ``path`` frame, packed
+    into one task per core (``pack_segments``). Built in the JVM (a range
+    of task ids, each exploding its path list from one literal plan), so a
+    ``mapInPandas`` over it holds one Python worker per task and no Python
+    stage feeds it."""
+    tasks = pack_segments(
+        sizes, min(len(sizes), spark.sparkContext.defaultParallelism)
+    )
+    plan = F.from_json(F.lit(json.dumps(tasks)), "array<array<string>>")
+    return spark.range(0, len(tasks), 1, max(1, len(tasks))).select(
+        F.explode(plan[F.col("id").cast("int")]).alias("path")
+    )
+
+
+def list_dir_entries(binlog_dir: str) -> dict[str, int]:
+    """File names (no directories) under a binlog dir and their sizes in
+    bytes — local path or any pyarrow.fs URI (s3://, hdfs://, file://),
+    mirroring ``_read_bytes`` so a cluster deployment pointing at object
+    storage lists the same way it reads."""
     if "://" not in binlog_dir:
-        return [
-            n for n in os.listdir(binlog_dir)
-            if os.path.isfile(os.path.join(binlog_dir, n))
-        ]
+        with os.scandir(binlog_dir) as it:
+            return {e.name: e.stat().st_size for e in it if e.is_file()}
     from pyarrow import fs as pafs
 
     filesystem, p = pafs.FileSystem.from_uri(binlog_dir)
     infos = filesystem.get_file_info(pafs.FileSelector(p, recursive=False))
-    return [
-        info.base_name for info in infos if info.type == pafs.FileType.File
-    ]
+    return {
+        info.base_name: info.size
+        for info in infos if info.type == pafs.FileType.File
+    }
 
 
 def _join_dir(binlog_dir: str, name: str) -> str:
@@ -1009,14 +1032,17 @@ def _join_dir(binlog_dir: str, name: str) -> str:
     return binlog_dir.rstrip("/") + "/" + name
 
 
-def _list_segments(binlog_dir: str, path_filter: Optional[str] = None) -> list[str]:
+def _list_segments(
+    binlog_dir: str, path_filter: Optional[str] = None
+) -> dict[str, int]:
     """Driver-side segment listing (cheap metadata op — the same listing
-    the resume planner already does), in numeric-suffix segment order.
-    Glob filter mirrors binaryFile's pathGlobFilter. Works against local
-    dirs and pyarrow.fs URIs (s3://, hdfs://)."""
+    the resume planner already does): ``{path: bytes}`` in numeric-suffix
+    segment order. The glob filter mirrors Hadoop's GlobFilter. Works
+    against local dirs and pyarrow.fs URIs (s3://, hdfs://)."""
     import fnmatch
 
-    names = sorted(list_dir_entries(binlog_dir), key=_segment_sort_key)
+    sizes = list_dir_entries(binlog_dir)
+    names = sorted(sizes, key=_segment_sort_key)
     if path_filter:
         # brace-glob {a,b} support like Hadoop's GlobFilter
         if path_filter.startswith("{") and path_filter.endswith("}"):
@@ -1024,7 +1050,7 @@ def _list_segments(binlog_dir: str, path_filter: Optional[str] = None) -> list[s
             names = [n for n in names if n in allowed]
         else:
             names = [n for n in names if fnmatch.fnmatch(n, path_filter)]
-    return [_join_dir(binlog_dir, n) for n in names]
+    return {_join_dir(binlog_dir, n): sizes[n] for n in names}
 
 
 def _read_bytes(path: str) -> bytes:
@@ -1073,10 +1099,7 @@ def scan_table_maps(content: bytes) -> list[dict]:
 def discover_columns(spark: SparkSession, binlog_dir: str, spec: TableSpec) -> list[str]:
     """Two-pass schema discovery: union of TABLE_MAP column_names for the
     target table across all segments (additive evolution)."""
-    paths = _list_segments(binlog_dir)
-    files = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        max(1, len(paths))
-    )
+    files = segment_tasks(spark, _list_segments(binlog_dir))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

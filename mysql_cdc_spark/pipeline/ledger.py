@@ -67,8 +67,13 @@ class Ledger:
         return out
 
     def last(self) -> LedgerEntry | None:
-        entries = self.entries()
-        return entries[-1] if entries else None
+        """The newest entry; parses that one file only, so its cost does
+        not grow with the ledger."""
+        names = [n for n in os.listdir(self.dir) if n.endswith(".json")]
+        if not names:
+            return None
+        with open(os.path.join(self.dir, max(names))) as f:
+            return LedgerEntry.from_json(f.read())
 
     def next_batch_id(self) -> int:
         last = self.last()

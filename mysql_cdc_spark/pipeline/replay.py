@@ -4,7 +4,7 @@ resumable, metered.
 One micro-batch::
 
     list segment files (bounded by ledger position)          ST3
-      → decode_binlog_dir (mapInPandas, parallel per file)   E1 semantics
+      → decode_binlog_dir (mapInPandas, one task per core)   E1 semantics
         keeps committed rows (xid NOT NULL)                  ST2
         of GTIDs the ledger does not cover                   ST5 idempotence
         after the resume (file, pos): SegmentStats.applied   ST3
@@ -652,8 +652,8 @@ class Replayer:
 
         glob = "{" + ",".join(files) + "}" if len(files) > 1 else files[0]
         # XA pre-scan (xa="batch"): cross-file verdict map broadcast into
-        # the decode + the pending floor for the ledger. Runs as one
-        # header-walk task per segment; non-XA segments reject on a
+        # the decode + the pending floor for the ledger. Runs as header
+        # walks in one task per core; non-XA segments reject on a
         # C-level substring scan.
         xa_info = self._xa_scan_job(files) if self.xa == "batch" else None
         xa_verdicts = (xa_info or {}).get("verdicts") or None
@@ -1042,26 +1042,35 @@ class Replayer:
         return {k: (f, p) for k, (f, p) in pend.items()}
 
     def _xa_scan_job(self, files: list[str]) -> dict:
-        """Distributed XA control scan (xa="batch"): one header-walk task
-        per segment (row payloads untouched, non-XA segments reject on a
-        substring scan), collected driver-side — the result is O(#XA
-        transactions), never O(rows). Pending prepares at or before a
-        batch-0 seed position are discarded: the seed snapshot already
-        reflects them, and replaying a pre-seed transaction would regress
-        state the position predicate normally protects."""
-        from ..binlog.decoder import _join_dir, _read_bytes, _segment_sort_key
+        """Distributed XA control scan (xa="batch"): header walks in one
+        task per core (``segment_tasks``; row payloads untouched, non-XA
+        segments reject on a substring scan), collected driver-side — the
+        result is O(#XA transactions), never O(rows). Pending prepares at
+        or before a batch-0 seed position are discarded: the seed
+        snapshot already reflects them, and replaying a pre-seed
+        transaction would regress state the position predicate normally
+        protects."""
+        from ..binlog.decoder import (
+            _join_dir,
+            _read_bytes,
+            _segment_sort_key,
+            segment_tasks,
+        )
         from ..binlog.xa import merge_xa_scans, scan_xa
 
-        paths = [_join_dir(self.binlog_dir, n) for n in files]
+        paths = {
+            _join_dir(self.binlog_dir, n): self._file_size(n) for n in files
+        }
 
         def _scan(path: str):
             import os as _os
 
             return scan_xa(_read_bytes(path), _os.path.basename(path))
 
-        sc = self.spark.sparkContext
-        scans = sc.parallelize(paths, len(paths)).map(_scan).collect()
-        merged = merge_xa_scans(scans)
+        scans = dict(segment_tasks(self.spark, paths).rdd.map(
+            lambda r: (r.path, _scan(r.path))
+        ).collect())
+        merged = merge_xa_scans([scans[p] for p in paths])
         seed = self.ledger.seed_position()
         if seed is not None and merged["pending"]:
             seed_key = (_segment_sort_key(seed[0]), seed[1])

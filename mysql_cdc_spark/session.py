@@ -37,9 +37,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # spread small binlog segments across tasks instead of packing them
-        # into one partition (binaryFile decode parallelism; see decoder.py)
-        .config("spark.sql.files.openCostInBytes", str(32 * 1024 * 1024))
+        # a store scan passes every bucket and delta directory as a root
+        # path; list them on the driver rather than in a Spark job
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

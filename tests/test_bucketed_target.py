@@ -10,6 +10,8 @@ carried by manifest reference — and (c) manifest-aware GC.
 import json
 import os
 
+from datetime import datetime
+
 import pandas as pd
 import pytest
 
@@ -121,6 +123,31 @@ class TestEquality:
 
 
 class TestPruning:
+    def test_wide_scan_lists_on_the_driver(self, spark, tmp_path):
+        """A scan over more than 32 bucket dirs (the default threshold of
+        Spark's parallel file listing) lists them on the driver: one
+        ``read().count()`` runs no listing job."""
+        tgt = _bucketed(str(tmp_path / "wide"), buckets=40)
+        ts = datetime(2024, 1, 1)
+        net = spark.createDataFrame(
+            [(f"c{i}", 0, "insert", f"c{i}", 0, "user", "t", None, ts)
+             for i in range(400)],
+            "conv_id string, turn_idx int, op string, after_conv_id string, "
+            "after_turn_idx int, after_role string, after_text string, "
+            "after_tool string, after_ts timestamp",
+        )
+        v = tgt.merge(spark, net, 0)
+        assert len(set(tgt._load_manifest(v).values())) == 40
+        sc = spark.sparkContext
+        sc.setJobGroup("wide-read", "wide-read")
+        try:
+            n = tgt.read(spark, v).count()
+            jobs = len(sc.statusTracker().getJobIdsForGroup("wide-read"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the count's scan and its final aggregate; a listing job makes 3
+        assert n == 400 and jobs <= 2
+
     def test_batch_rewrites_only_touched_buckets(self, spark, changelog, tmp_path):
         _, outdir, _ = changelog
         store = str(tmp_path / "prune")
