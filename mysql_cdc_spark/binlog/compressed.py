@@ -25,8 +25,11 @@ so the schema-bearing head stays random-access):
   the row images are compressed.
 
 Inflating rewrites the event to its plain twin (type byte per
-``constants.COMPRESSED_TO_PLAIN``) so every existing decode path — scalar
-and vectorized — runs unchanged on the inflated bytes.
+``constants.COMPRESSED_TO_PLAIN``) so every decode path runs unchanged on
+the inflated bytes. Two callers inflate: ``inflate_segment`` rewrites a
+whole segment for the vectorized kernel, and ``reader.iter_frames`` — the
+one frame walk behind the scalar reader and every scanner — inflates
+frame by frame.
 
 Position exactness: ``inflate_segment`` returns, alongside the inflated
 stream, the *original on-disk start offset of every frame*. The decoders
@@ -35,10 +38,10 @@ report those as ``pos`` (and keep each header's untouched
 on-disk coordinates even though inflated frames are longer.
 
 Scale note: zlib inflate runs in C at hundreds of MB/s; the per-event
-Python overhead is one dict lookup on the type byte. Segments with no
+Python overhead is one lookup on the type byte. Segments with no
 compressed events (the common case) pay exactly that lookup — the numpy
-type-byte scan in the vectorized path and the existing dispatch in the
-scalar path — and are passed through untouched, zero-copy.
+type-byte scan in the vectorized path, the type test in
+``reader.iter_frames`` — and are passed through untouched.
 """
 
 from __future__ import annotations

@@ -23,10 +23,10 @@ kind-changing MODIFY, column moves) on the *tracked* table raises
 would corrupt state; failing loudly is the only safe behavior. DDL on
 other tables is ignored.
 
-Scale shape: the DDL scan is the same metadata-only pass as
-``decoder.scan_table_maps`` — one task per segment reads event headers
-and QUERY payloads only (row payloads are skipped wholesale), so at
-10^10 events it is I/O-bound and ~free next to decode. The fold of
+Scale shape: the DDL scan is a metadata-only pass over
+``reader.iter_frames``, like ``decoder.scan_table_maps`` — it parses
+QUERY payloads only (row payloads are never decoded), so at 10^10
+events it is I/O-bound and ~free next to decode. The fold of
 ALTER statements into a spec happens on the driver over the handful of
 DDL rows (a table's lifetime carries tens of ALTERs, not millions).
 """
@@ -37,15 +37,8 @@ import re
 import warnings
 from dataclasses import dataclass, replace
 
-from .constants import ChecksumType, EventType
-from .reader import (
-    EVENT_HEADER_SIZE,
-    FIRST_EVENT_POSITION,
-    MAGIC_NUMBER,
-    parse_event_header,
-    parse_format_description,
-    parse_query,
-)
+from .constants import EventType
+from .reader import iter_frames, parse_query
 
 
 class UnsupportedDdl(ValueError):
@@ -696,34 +689,17 @@ def spec_from_create_table(sql: str, database: str | None = None):
 def scan_ddl(content: bytes) -> list[dict]:
     """Metadata-only scan of one segment for QUERY events that parse as
     ALTER TABLE: returns [{"pos", "sql", "database"}] in file order. Row
-    payloads are never touched (same cost shape as scan_table_maps)."""
-    if content[:FIRST_EVENT_POSITION] != MAGIC_NUMBER:
-        raise ValueError("Invalid binary log file header")
+    payloads are never decoded; ``reader.iter_frames`` does the walk, so
+    a MariaDB-compressed (long) ALTER reads like a plain one."""
     out = []
-    checksum = ChecksumType.NONE
-    n = len(content)
-    pos = FIRST_EVENT_POSITION
-    while pos + EVENT_HEADER_SIZE <= n:
-        (_ts, etype, _sid, event_length, _next, _flags) = parse_event_header(
-            content, pos
-        )
-        end = pos + event_length
-        if end > n:
-            break
-        if etype == EventType.FORMAT_DESCRIPTION:
-            payload = content[pos + EVENT_HEADER_SIZE : end]
-            _, _, checksum = parse_format_description(payload, event_length)
-        elif etype == EventType.QUERY:
-            payload = content[pos + EVENT_HEADER_SIZE : end]
-            if checksum == ChecksumType.CRC32:
-                payload = payload[:-4]
+    for pos, header, payload, _error in iter_frames(content):
+        if header[1] == EventType.QUERY:
             q = parse_query(payload)
             sql = q["sql_statement"]
             if _ALTER_HEAD.match(sql):
                 out.append(
                     {"pos": pos, "sql": sql, "database": q.get("database_name")}
                 )
-        pos = end
     return out
 
 
@@ -937,96 +913,49 @@ def scan_truncates(
     strictly greater positions — even TRANSACTION_PAYLOAD-spliced frames,
     whose wrapper offsets are all later than the fence) and the gtid
     identifies the statement's own transaction for ledger idempotence
-    (``gtid_source`` None on GTID-less streams). Compressed wire forms
-    need no special casing: a MariaDB server only compresses frames whose
-    body reaches ``log_bin_compress_min_len`` (floor 256), so these short
-    statements' QUERY events always stay plain and the substring reject
-    is sound (compressed QUERY frames that do appear inflate in-walk);
-    MySQL never payload-compresses transactions containing DDL (WL#3549
-    restriction)."""
+    (``gtid_source`` None on GTID-less streams). ``reader.iter_frames``
+    does the walk, so compressed QUERY frames inflate and wrappers expand
+    as in every other scan. The substring reject on the raw bytes stays
+    sound: a MariaDB server only compresses bodies that reach
+    ``log_bin_compress_min_len`` (floor 256), so these short statements
+    stay plain, and MySQL never payload-compresses transactions containing
+    DDL (WL#3549 restriction)."""
     if not any(lit in content for lit in _FENCE_LITERALS):
         return []
-    from .compressed import inflate_event_body
-    from .constants import COMPRESSED_TO_PLAIN
     from .reader import parse_mariadb_gtid, parse_mysql_gtid
 
-    if content[:FIRST_EVENT_POSITION] != MAGIC_NUMBER:
-        raise ValueError("Invalid binary log file header")
     out: list[dict] = []
-    checksum = ChecksumType.NONE
     gtid_source: str | None = None
     gtid_seq: int | None = None
-    n = len(content)
-    pos = FIRST_EVENT_POSITION
-
-    def _handle_query(payload: bytes, event_pos: int, ts: int) -> None:
-        if not any(lit in payload for lit in _FENCE_LITERALS):
-            return
-        q = parse_query(payload)
-        sql = q["sql_statement"]
-        default_db = q.get("database_name") or None
-        parsed = parse_truncate(sql, default_db)
-        kind = "truncate"
-        if parsed is not None:
-            if parsed != (database, table):
-                return
-        else:
+    for pos, header, payload, _error in iter_frames(content):
+        etype = header[1]
+        if etype == EventType.MYSQL_GTID:
+            ev = parse_mysql_gtid(payload)
+            gtid_source = ev["source_uuid"]
+            gtid_seq = ev["transaction_id"]
+        elif etype == EventType.MARIADB_GTID:
+            ev = parse_mariadb_gtid(payload, header[2])
+            gtid_source = f"{ev['domain_id']}-{ev['server_id']}"
+            gtid_seq = ev["sequence"]
+        elif etype == EventType.QUERY and any(
+            lit in payload for lit in _FENCE_LITERALS
+        ):
+            q = parse_query(payload)
+            sql = q["sql_statement"]
+            default_db = q.get("database_name") or None
+            me = (database, table)
+            truncated = parse_truncate(sql, default_db)
             dropped = parse_drop_table(sql, default_db)
-            if dropped is not None:
-                if (database, table) not in dropped:
-                    return
-                kind = "drop"
+            if truncated is not None:
+                kind = "truncate" if truncated == me else None
+            elif dropped is not None:
+                kind = "drop" if me in dropped else None
             else:
-                renamed = parse_rename_table(sql, default_db)
-                if not renamed or not any(
-                    (database, table) in pair for pair in renamed
-                ):
-                    return
-                kind = "rename"
-        out.append(
-            {
-                "kind": kind,
-                "pos": event_pos,
-                "gtid_source": gtid_source,
-                "gtid_seq": gtid_seq,
-                "ts": ts,
-            }
-        )
-
-    while pos + EVENT_HEADER_SIZE <= n:
-        (ts, etype, sid, event_length, _next, _flags) = parse_event_header(
-            content, pos
-        )
-        end = pos + event_length
-        if end > n:
-            break  # truncated tail — same stop rule as the readers
-        if etype == EventType.FORMAT_DESCRIPTION:
-            payload = content[pos + EVENT_HEADER_SIZE : end]
-            _, _, checksum = parse_format_description(payload, event_length)
-        elif etype in (
-            EventType.MYSQL_GTID,
-            EventType.MARIADB_GTID,
-            EventType.QUERY,
-            EventType.MYSQL_TRANSACTION_PAYLOAD,
-        ) or etype in COMPRESSED_TO_PLAIN:
-            payload = content[pos + EVENT_HEADER_SIZE : end]
-            if checksum == ChecksumType.CRC32:
-                payload = payload[:-4]
-            if etype in COMPRESSED_TO_PLAIN:
-                etype, payload = inflate_event_body(etype, payload)
-            if etype == EventType.MYSQL_GTID:
-                ev = parse_mysql_gtid(payload)
-                gtid_source = ev["source_uuid"]
-                gtid_seq = ev["transaction_id"]
-            elif etype == EventType.MARIADB_GTID:
-                ev = parse_mariadb_gtid(payload, sid)
-                gtid_source = f"{ev['domain_id']}-{ev['server_id']}"
-                gtid_seq = ev["sequence"]
-            elif etype == EventType.QUERY:
-                _handle_query(payload, pos, ts)
-            # TRANSACTION_PAYLOAD wrappers are deliberately NOT walked:
-            # the server never compresses transactions containing DDL
-            # (WL#3549 restriction), so a TRUNCATE can only appear as a
-            # plain (or MariaDB per-event-compressed) QUERY frame
-        pos = end
+                renamed = parse_rename_table(sql, default_db) or ()
+                kind = "rename" if any(me in pair for pair in renamed) else None
+            if kind is not None:
+                out.append({
+                    "kind": kind, "pos": pos, "gtid_source": gtid_source,
+                    "gtid_seq": gtid_seq, "ts": header[0],
+                })
     return out

@@ -39,18 +39,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .constants import ChecksumType, ColumnType, EventType
+from .constants import EventType
 from .geometry import geometry_to_wkt as _geometry_to_wkt
 from .jsonb import jsonb_to_text as _jsonb_to_text
 from .xa import parse_xa_statement
-from .reader import (
-    BinlogFileReader,
-    parse_event_header,
-    parse_format_description,
-    parse_rotate,
-    parse_table_map,
-)
-from ..binlog.constants import EVENT_HEADER_SIZE, FIRST_EVENT_POSITION, MAGIC_NUMBER
+from .reader import BinlogFileReader, iter_frames, parse_table_map
 
 
 @dataclass(frozen=True)
@@ -908,55 +901,75 @@ def decode_binlog_dir(
     sizes = _list_segments(binlog_dir, path_filter)
     if not sizes:
         return spark.createDataFrame([], schema)
-    if vectorized is None:
-        vectorized = os.environ.get("SPARK_CDC_SCALAR_DECODE", "") != "1"
+    decode_segment = segment_decoder(
+        spec, vectorized, before_values, xa_outcomes, attach_origin_query,
+        attach_partition_id, on_error, quarantine_dir,
+    )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for path in pdf["path"]:
                 content = _read_bytes(path)
                 name = os.path.basename(path)
-                frames = None
-                if vectorized:
-                    from .vector import decode_segment_fast
-
-                    try:
-                        frames = decode_segment_fast(
-                            content, name, spec, before_values=before_values,
-                            xa_outcomes=xa_outcomes,
-                            attach_origin_query=attach_origin_query,
-                            attach_partition_id=attach_partition_id,
-                        )
-                    except Exception:
-                        # under the dead-letter policy a poisoned segment
-                        # re-decodes on the scalar path, which quarantines
-                        # at event grain; without it the error propagates
-                        if on_error != "quarantine":
-                            raise
-                        frames = None
-                if frames is not None:
-                    if quarantine_dir is not None:
-                        # fast path decoded the segment clean — drop any
-                        # stale dead-letter record a prior run left behind
-                        _FileDecoder(
-                            spec, on_error=on_error,
-                            quarantine_dir=quarantine_dir,
-                        )._write_quarantine(name)
-                else:
-                    # scalar fallback: constructs the fast path can't
-                    # express (rare types, partial images, wide tables)
-                    frames = _FileDecoder(
-                        spec, xa_outcomes=xa_outcomes,
-                        attach_origin_query=attach_origin_query,
-                        attach_partition_id=attach_partition_id,
-                        on_error=on_error,
-                        quarantine_dir=quarantine_dir,
-                    ).decode_file(path, content)
+                frames = decode_segment(name, content)
                 if stats is not None:
                     frames = stats.applied(name, content, frames, spec)
                 yield from frames
 
     return segment_tasks(spark, sizes).mapInPandas(decode, schema=schema)
+
+
+def segment_decoder(
+    spec: TableSpec,
+    vectorized: Optional[bool] = None,
+    before_values: str = "full",
+    xa_outcomes: Optional[dict] = None,
+    attach_origin_query: bool = False,
+    attach_partition_id: bool = False,
+    on_error: str = "fail",
+    quarantine_dir: Optional[str] = None,
+):
+    """The decode of one segment, ``decode(name, content)`` → its pandas
+    frames, shared by every decode task. Build it while planning the job,
+    not inside a task: ``vectorized=None`` then reads the planning
+    process's ``SPARK_CDC_SCALAR_DECODE`` (``"1"`` picks the scalar
+    decoder). The vectorized kernel (``vector.
+    decode_segment_fast``) decodes the segments it can express; the scalar
+    ``_FileDecoder`` takes the rest (rare types, partial images, wide
+    tables) and, under ``on_error="quarantine"``, any segment the kernel
+    fails on, since it quarantines at event grain."""
+    if vectorized is None:
+        vectorized = os.environ.get("SPARK_CDC_SCALAR_DECODE", "") != "1"
+
+    def decode(name: str, content: bytes):
+        frames = None
+        if vectorized:
+            from .vector import decode_segment_fast
+
+            try:
+                frames = decode_segment_fast(
+                    content, name, spec, before_values=before_values,
+                    xa_outcomes=xa_outcomes,
+                    attach_origin_query=attach_origin_query,
+                    attach_partition_id=attach_partition_id,
+                )
+            except Exception:
+                if on_error != "quarantine":
+                    raise
+        if frames is None:
+            return _FileDecoder(
+                spec, xa_outcomes=xa_outcomes,
+                attach_origin_query=attach_origin_query,
+                attach_partition_id=attach_partition_id,
+                on_error=on_error, quarantine_dir=quarantine_dir,
+            ).decode_file(name, content)
+        if quarantine_dir is not None:
+            # decoded clean: drop any stale dead-letter record a prior
+            # run left behind
+            _FileDecoder(spec, quarantine_dir=quarantine_dir)._write_quarantine(name)
+        return frames
+
+    return decode
 
 
 def _segment_sort_key(name: str) -> tuple[str, int]:
@@ -1066,33 +1079,16 @@ def _read_bytes(path: str) -> bytes:
 
 
 def scan_table_maps(content: bytes) -> list[dict]:
-    """Metadata-only scan: TABLE_MAP + FDE + ROTATE, skipping row payload
-    decode entirely. Used by the cheap schema-discovery pass (SURVEY.md §4
-    item 3) — at 100 TB this pass reads every frame header but decodes no
-    row cells, so it is I/O-bound and ~free relative to full decode."""
-    if content[:FIRST_EVENT_POSITION] != MAGIC_NUMBER:
-        raise ValueError("Invalid binary log file header")
+    """Metadata-only scan: every TABLE_MAP of a segment (those inside
+    TRANSACTION_PAYLOAD wrappers included, at the wrapper's position),
+    decoding no row cells. Used by the cheap schema-discovery pass
+    (SURVEY.md §4 item 3); ``reader.iter_frames`` does the walk."""
     out = []
-    checksum = ChecksumType.NONE
-    n = len(content)
-    pos = FIRST_EVENT_POSITION
-    while pos + EVENT_HEADER_SIZE <= n:
-        header = parse_event_header(content, pos)
-        (_ts, etype, _server_id, event_length, _next_pos, _flags) = header
-        end = pos + event_length
-        if end > n:
-            break
-        if etype == EventType.FORMAT_DESCRIPTION:
-            payload = content[pos + EVENT_HEADER_SIZE : end]
-            _, _, checksum = parse_format_description(payload, event_length)
-        elif etype == EventType.TABLE_MAP:
-            payload = content[pos + EVENT_HEADER_SIZE : end]
-            if checksum == ChecksumType.CRC32:
-                payload = payload[:-4]
+    for pos, header, payload, _error in iter_frames(content):
+        if header[1] == EventType.TABLE_MAP:
             tm = parse_table_map(payload)
             tm["pos"] = pos
             out.append(tm)
-        pos = end
     return out
 
 

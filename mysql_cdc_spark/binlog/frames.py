@@ -26,14 +26,13 @@ file path chunks by segment.
 
 from __future__ import annotations
 
-import os
-from typing import Iterator, Optional
+from typing import Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from .constants import MAGIC_NUMBER, EventType
-from .decoder import TRANSCRIPTS, TableSpec, change_event_schema
+from .decoder import TRANSCRIPTS, TableSpec, change_event_schema, segment_decoder
 
 
 def decode_event_frames(
@@ -59,13 +58,10 @@ def decode_event_frames(
     supply ``checksum_type``.
     """
     schema = change_event_schema(spec)
-    if vectorized is None:
-        vectorized = os.environ.get("SPARK_CDC_SCALAR_DECODE", "") != "1"
+    decode_segment = segment_decoder(spec, vectorized)
 
     def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .decoder import _FileDecoder
         from .encoder import BinlogWriter
-        from .vector import decode_segment_fast
 
         pdf = pdf.sort_values(offset_col, kind="mergesort")
         name = str(pdf[stream_col].iloc[0])
@@ -82,12 +78,7 @@ def decode_event_frames(
             blobs.insert(0, blobs[fde_i])  # checksum mode applies stream-wide
         elif fde_i is None and checksum_type is not None:
             blobs.insert(0, BinlogWriter.make_fde_frame(checksum_type))
-        content = MAGIC_NUMBER + b"".join(blobs)
-        out: Optional[list] = None
-        if vectorized:
-            out = decode_segment_fast(content, name, spec)
-        if out is None:
-            out = list(_FileDecoder(spec).decode_file(name, content))
+        out = list(decode_segment(name, MAGIC_NUMBER + b"".join(blobs)))
         if not out:
             return pd.DataFrame(columns=[f.name for f in schema.fields])
         return pd.concat(out, ignore_index=True) if len(out) > 1 else out[0]

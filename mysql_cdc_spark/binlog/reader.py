@@ -23,6 +23,11 @@ import struct
 from typing import Iterator, Optional
 
 from . import kernels as K
+from .compressed import (
+    CompressedEventError,
+    inflate_event_body,
+    inflate_transaction_payload,
+)
 from .constants import (
     COMPRESSED_TO_PLAIN,
     EVENT_HEADER_SIZE,
@@ -42,6 +47,73 @@ HEADER_STRUCT = struct.Struct("<IBIIIH")  # event_header.rs:32-42
 def parse_event_header(buf: bytes, off: int):
     """(timestamp, event_type, server_id, event_length, next_position, flags)."""
     return HEADER_STRUCT.unpack_from(buf, off)
+
+
+def iter_frames(content: bytes) -> Iterator[tuple[int, tuple, bytes, Optional[Exception]]]:
+    """Every event of one binlog segment, in order, as ``(pos, header,
+    payload, error)`` — the one walk of the frame format outside the
+    vector kernel (binlog_reader.rs:20-76).
+
+    - The magic is checked once; the walk stops at the first frame whose
+      ``event_length`` is shorter than a header or runs past the end (a
+      torn or zero-filled tail), like ``vector._frame_chain``.
+    - The FDE's checksum mode is tracked and CRC32 trailers are stripped
+      (event_parser.rs:47-50,113-115); the FDE payload is passed whole.
+    - MariaDB ``log_bin_compress`` frames come out inflated, typed as
+      their plain twin; a MySQL TRANSACTION_PAYLOAD wrapper comes out as
+      its embedded frames, each at the wrapper's on-disk ``pos`` with its
+      ``next_position`` (binlog/compressed.py).
+    - A frame that cannot be expanded (torn wrapper, corrupt zlib tail)
+      comes out as it is on disk with the exception as ``error``, which
+      is otherwise None: readers apply their dead-letter policy to it,
+      scanners pass over it.
+    """
+    if content[:FIRST_EVENT_POSITION] != MAGIC_NUMBER:
+        raise ValueError("Invalid binary log file header")
+    n = len(content)
+    trailer = 0
+    pos = FIRST_EVENT_POSITION
+    while pos + EVENT_HEADER_SIZE <= n:
+        header = HEADER_STRUCT.unpack_from(content, pos)
+        etype, length = header[1], header[3]
+        end = pos + length
+        if length < EVENT_HEADER_SIZE or end > n:
+            break
+        if etype == EventType.FORMAT_DESCRIPTION:
+            payload = content[pos + EVENT_HEADER_SIZE : end]
+            checksum = parse_format_description(payload, length)[2]
+            trailer = 4 if checksum == ChecksumType.CRC32 else 0
+            yield pos, header, payload, None
+        elif etype in COMPRESSED_TO_PLAIN or etype == EventType.MYSQL_TRANSACTION_PAYLOAD:
+            payload = content[pos + EVENT_HEADER_SIZE : end - trailer]
+            try:
+                if etype in COMPRESSED_TO_PLAIN:
+                    plain, body = inflate_event_body(etype, payload)
+                    frames = [((header[0], plain) + header[2:], body)]
+                else:
+                    # embedded frames carry no checksum; expand the whole
+                    # (atomic) transaction before yielding any of it
+                    inner, frames = inflate_transaction_payload(payload), []
+                    ipos, m = 0, len(inner)
+                    while ipos + EVENT_HEADER_SIZE <= m:
+                        ih = HEADER_STRUCT.unpack_from(inner, ipos)
+                        if ih[3] < EVENT_HEADER_SIZE or ipos + ih[3] > m:
+                            raise CompressedEventError(
+                                "corrupt embedded frame inside transaction payload"
+                            )
+                        frames.append((
+                            ih[:4] + (header[4], ih[5]),
+                            inner[ipos + EVENT_HEADER_SIZE : ipos + ih[3]],
+                        ))
+                        ipos += ih[3]
+            except Exception as e:
+                yield pos, header, payload, e
+            else:
+                for fh, body in frames:
+                    yield pos, fh, body, None
+        else:
+            yield pos, header, content[pos + EVENT_HEADER_SIZE : end - trailer], None
+        pos = end
 
 
 def parse_table_map(payload: bytes) -> dict:
@@ -706,7 +778,9 @@ class BinlogFileReader:
     """Sequential (header, event) iterator over one binlog file's bytes.
 
     Equivalent of BinlogReader (binlog_reader.rs:14-77) + EventParser state
-    (checksum type and table-map cache, event_parser.rs:25-31).
+    (event_parser.rs:25-31): ``iter_frames`` walks the frames and tracks
+    the checksum mode, this class keeps the table-map cache and types
+    each event.
     """
 
     def __init__(self, content: bytes, filename: str = "", on_error: str = "fail"):
@@ -717,7 +791,6 @@ class BinlogFileReader:
         self.content = content
         self.filename = filename
         self.on_error = on_error
-        self.checksum_type = ChecksumType.NONE
         self.table_map: dict[int, dict] = {}
         # payload-keyed memo: servers re-emit an identical TABLE_MAP before
         # every transaction (the reference re-parses each one,
@@ -735,98 +808,39 @@ class BinlogFileReader:
         'xa_prepare' (type 38, enumerated but never decoded by the
         reference; binlog/xa.py).
         """
-        content = self.content
-        n = len(content)
-        pos = FIRST_EVENT_POSITION
-        while pos + EVENT_HEADER_SIZE <= n:
-            header = parse_event_header(content, pos)
-            (_ts, etype, server_id, event_length, _next_pos, _flags) = header
-            payload_start = pos + EVENT_HEADER_SIZE
-            payload_end = pos + event_length
-            if payload_end > n:
-                break  # truncated tail — mirror EOF → stop (binlog_reader.rs:66-74)
-            payload = content[payload_start:payload_end]
-            if self.checksum_type == ChecksumType.CRC32 and etype != EventType.FORMAT_DESCRIPTION:
-                payload = payload[:-4]  # event_parser.rs:47-50
-
-            if etype == EventType.MYSQL_TRANSACTION_PAYLOAD:
-                # MySQL binlog_transaction_compression wrapper (beyond-
-                # reference): one frame carries a whole transaction;
-                # expand into the embedded events (checksum-free inside),
-                # all reported at the wrapper's on-disk position — a
-                # wrapped transaction is atomic, so frame-granular resume
-                # is exact (binlog/compressed.py)
-                from .compressed import inflate_transaction_payload
-
-                try:
-                    inner = inflate_transaction_payload(payload)
-                except Exception as e:
-                    # a torn wrapper loses its whole (atomic) transaction —
-                    # quarantine it as one record, or fail like before
-                    if self.on_error != "quarantine":
-                        raise
-                    yield header, pos, "quarantine", self._quarantine_event(
-                        etype, payload, e
-                    )
-                    pos = payload_end
-                    continue
-                ipos, m = 0, len(inner)
-                while ipos + EVENT_HEADER_SIZE <= m:
-                    (its, ietype, isid, ilen, _inext, iflags) = parse_event_header(
-                        inner, ipos
-                    )
-                    ibody = inner[ipos + EVENT_HEADER_SIZE : ipos + ilen]
-                    kind, event = self._parse_guarded(ietype, isid, ibody, ilen)
-                    yield (its, ietype, isid, ilen, _next_pos, iflags), pos, kind, event
-                    ipos += ilen
-                pos = payload_end
-                continue
-
-            kind, event = self._parse_guarded(etype, server_id, payload, event_length)
+        for pos, header, payload, error in iter_frames(self.content):
+            etype = header[1]
+            try:
+                if error is not None:
+                    raise error
+                kind, event = self._parse(etype, header[2], payload, header[3])
+            except BinlogEncryptionError:
+                raise  # not corruption: the stream is unreadable by design
+            except Exception as e:
+                # the dead-letter policy (Debezium's event.processing.
+                # failure.handling.mode): only a ROW event or a whole
+                # TRANSACTION_PAYLOAD wrapper is quarantinable — its loss
+                # is scoped to its own rows, and the length-prefixed frame
+                # chain resumes at the next header. A corrupt structural
+                # event (FDE, TABLE_MAP, GTID, QUERY, XID, …) would
+                # mis-decode everything after it, so it still raises.
+                plain = COMPRESSED_TO_PLAIN.get(etype, etype)
+                if self.on_error != "quarantine" or not (
+                    plain in ROW_EVENTS_V1
+                    or plain in ROW_EVENTS_V2
+                    or etype == EventType.MYSQL_PARTIAL_UPDATE_ROWS
+                    or etype == EventType.MYSQL_TRANSACTION_PAYLOAD
+                ):
+                    raise
+                kind, event = "quarantine", {
+                    "event_type": int(etype),
+                    "payload_len": len(payload),
+                    "error": f"{type(e).__name__}: {e}",
+                }
             yield header, pos, kind, event
-            pos = payload_end
-
-    def _quarantine_event(self, etype: int, payload: bytes, exc: Exception) -> dict:
-        return {
-            "event_type": int(etype),
-            "payload_len": len(payload),
-            "error": f"{type(exc).__name__}: {exc}",
-        }
-
-    def _parse_guarded(self, etype: int, server_id: int, payload: bytes, event_length: int):
-        """``_parse`` with the dead-letter policy applied (Debezium's
-        ``event.processing.failure.handling.mode``). Only ROW events are
-        quarantinable: their loss is scoped to their own rows, and the
-        length-prefixed frame chain lets decoding resume at the next
-        header. Structural events (FDE, TABLE_MAP, GTID, QUERY, XID, …)
-        still raise — a corrupt one would silently mis-decode or
-        mis-associate everything after it, which is worse than stopping."""
-        if self.on_error != "quarantine":
-            return self._parse(etype, server_id, payload, event_length)
-        try:
-            return self._parse(etype, server_id, payload, event_length)
-        except BinlogEncryptionError:
-            raise  # not corruption: the stream is unreadable by design
-        except Exception as e:
-            plain = COMPRESSED_TO_PLAIN.get(etype, etype)
-            row_scoped = (
-                plain in ROW_EVENTS_V1
-                or plain in ROW_EVENTS_V2
-                or etype == EventType.MYSQL_PARTIAL_UPDATE_ROWS
-            )
-            if not row_scoped:
-                raise
-            return "quarantine", self._quarantine_event(etype, payload, e)
 
     def _parse(self, etype: int, server_id: int, payload: bytes, event_length: int):
         E = EventType
-        if etype in COMPRESSED_TO_PLAIN:
-            # MariaDB log_bin_compress frame (beyond-reference; the CRC32
-            # trailer was already trimmed by __iter__): inflate the zlib
-            # tail and dispatch as the plain twin — binlog/compressed.py
-            from .compressed import inflate_event_body
-
-            etype, payload = inflate_event_body(etype, payload)
         if etype == E.MYSQL_PARTIAL_UPDATE_ROWS:
             # MySQL 8 binlog_row_value_options=PARTIAL_JSON (beyond-
             # reference): apply the after-image JSON diff vectors to the
@@ -840,7 +854,6 @@ class BinlogFileReader:
             binlog_version, server_version, checksum = parse_format_description(
                 payload, event_length
             )
-            self.checksum_type = checksum  # event_parser.rs:113-115
             return "format_description", {
                 "binlog_version": binlog_version,
                 "server_version": server_version,

@@ -42,13 +42,7 @@ import re
 import struct
 from typing import Optional
 
-from .constants import (
-    EVENT_HEADER_SIZE,
-    FIRST_EVENT_POSITION,
-    MAGIC_NUMBER,
-    ChecksumType,
-    EventType,
-)
+from .constants import FIRST_EVENT_POSITION, EventType
 
 
 def xid_key(format_id: int, gtrid: bytes, bqual: bytes) -> str:
@@ -143,30 +137,24 @@ def scan_xa(content: bytes, src_file: str = "") -> Optional[dict]:
     - ``prepares``: {xid_key: (src_file, group_pos)} for two-phase
       XA_PREPARE events / ``XA PREPARE`` queries, where group_pos is the
       position of the GTID event that opened the prepared transaction
-      (the replay floor must rewind to it).
+      (the replay floor must rewind to it). A TRANSACTION_PAYLOAD-wrapped
+      one resolves there too: its GTID event precedes the wrapper.
     """
     if b"XA" not in content:
         return None
-    from .compressed import inflate_event_body
-    from .constants import COMPRESSED_TO_PLAIN
-    from .reader import parse_event_header, parse_format_description, parse_query
+    from .reader import iter_frames, parse_query
 
-    if content[:FIRST_EVENT_POSITION] != MAGIC_NUMBER:
-        raise ValueError("Invalid binary log file header")
     verdicts: dict[str, bool] = {}
     prepares: dict[str, tuple[str, int]] = {}
-    checksum = ChecksumType.NONE
-    n = len(content)
-    pos = FIRST_EVENT_POSITION
-    last_gtid_pos = pos
-
-    def _handle(etype: int, payload: bytes, group_pos: int) -> None:
-        if etype == EventType.QUERY:
-            if b"XA" not in payload:
-                return
+    group_pos = FIRST_EVENT_POSITION
+    for pos, header, payload, _error in iter_frames(content):
+        etype = header[1]
+        if etype in (EventType.MYSQL_GTID, EventType.MARIADB_GTID):
+            group_pos = pos
+        elif etype == EventType.QUERY and b"XA" in payload:
             parsed = parse_xa_statement(parse_query(payload)["sql_statement"])
             if parsed is None or parsed[1] is None:
-                return
+                continue
             verb, key, one_phase = parsed
             if verb == "prepare":
                 prepares.setdefault(key, (src_file, group_pos))
@@ -178,47 +166,6 @@ def scan_xa(content: bytes, src_file: str = "") -> Optional[dict]:
             ev = parse_xa_prepare(payload)
             if not ev["one_phase"]:
                 prepares.setdefault(ev["xid_key"], (src_file, group_pos))
-
-    while pos + EVENT_HEADER_SIZE <= n:
-        header = parse_event_header(content, pos)
-        (_ts, etype, _sid, event_length, _next_pos, _flags) = header
-        payload_end = pos + event_length
-        if payload_end > n:
-            break  # truncated tail — same stop rule as the readers
-        if etype in (EventType.MYSQL_GTID, EventType.MARIADB_GTID):
-            last_gtid_pos = pos
-        elif etype == EventType.FORMAT_DESCRIPTION:
-            payload = content[pos + EVENT_HEADER_SIZE : payload_end]
-            _, _, checksum = parse_format_description(payload, event_length)
-        elif etype in (
-            EventType.QUERY,
-            EventType.MYSQL_XA_PREPARE,
-            EventType.MYSQL_TRANSACTION_PAYLOAD,
-        ) or etype in COMPRESSED_TO_PLAIN:
-            payload = content[pos + EVENT_HEADER_SIZE : payload_end]
-            if checksum == ChecksumType.CRC32:
-                payload = payload[:-4]
-            if etype in COMPRESSED_TO_PLAIN:
-                etype2, payload = inflate_event_body(etype, payload)
-                _handle(etype2, payload, last_gtid_pos)
-            elif etype == EventType.MYSQL_TRANSACTION_PAYLOAD:
-                from .compressed import inflate_transaction_payload
-
-                inner = inflate_transaction_payload(payload)
-                if b"XA" in inner:
-                    ipos, m = 0, len(inner)
-                    while ipos + EVENT_HEADER_SIZE <= m:
-                        (_its, ietype, _isid, ilen, _inext, _ifl) = (
-                            parse_event_header(inner, ipos)
-                        )
-                        ibody = inner[ipos + EVENT_HEADER_SIZE : ipos + ilen]
-                        # a wrapped transaction resolves at the
-                        # wrapper's on-disk position
-                        _handle(ietype, ibody, pos)
-                        ipos += ilen
-            else:
-                _handle(etype, payload, last_gtid_pos)
-        pos = payload_end
     if not verdicts and not prepares:
         return None
     return {"verdicts": verdicts, "prepares": prepares}

@@ -66,26 +66,30 @@ class Ledger:
                     out.append(LedgerEntry.from_json(f.read()))
         return out
 
-    def last(self) -> LedgerEntry | None:
-        """The newest entry; parses that one file only, so its cost does
-        not grow with the ledger."""
+    def _one(self, pick) -> LedgerEntry | None:
+        """The entry ``pick`` (``min``/``max``) chooses by batch id; parses
+        that one file only, so its cost does not grow with the ledger."""
         names = [n for n in os.listdir(self.dir) if n.endswith(".json")]
         if not names:
             return None
-        with open(os.path.join(self.dir, max(names))) as f:
+        with open(os.path.join(self.dir, pick(names))) as f:
             return LedgerEntry.from_json(f.read())
+
+    def last(self) -> LedgerEntry | None:
+        """The newest entry."""
+        return self._one(max)
 
     def next_batch_id(self) -> int:
         last = self.last()
         return (last.batch_id + 1) if last else 1
 
     def covered_gtid_set(self) -> GtidSet:
-        """Union of all committed batches' GTID sets."""
-        merged = GtidSet()
-        for e in self.entries():
-            if e.gtid_set_text:
-                merged = merged.union(GtidSet.parse(e.gtid_set_text))
-        return merged
+        """Union of all committed batches' GTID sets. Every writer records
+        the cumulative set, so this is the newest entry's."""
+        last = self.last()
+        if last is None or not last.gtid_set_text:
+            return GtidSet()
+        return GtidSet.parse(last.gtid_set_text)
 
     def current_snapshot_version(self) -> int:
         last = self.last()
@@ -99,9 +103,9 @@ class Ledger:
         """Position of the batch-0 seed entry (start strategy / bootstrap),
         or None when replay started from the beginning. Events at or before
         it must never (re-)apply — the seed snapshot already contains them."""
-        entries = self.entries()
-        if entries and entries[0].batch_id == 0:
-            return (entries[0].max_file, entries[0].max_pos)
+        first = self._one(min)
+        if first is not None and first.batch_id == 0:
+            return (first.max_file, first.max_pos)
         return None
 
     def resume_position(self) -> tuple[str, int]:
@@ -122,11 +126,9 @@ class Ledger:
             floor = (_segment_sort_key(ff), int(fp))
             cur = (_segment_sort_key(last.max_file), last.max_pos)
             if floor < cur:
-                # the resume predicate is strict (pos > anchor) and a
-                # TRANSACTION_PAYLOAD-wrapped transaction reports its rows
-                # AT the wrapper position == floor, so anchor one byte
-                # earlier to keep them (no event can sit at floor - 1: it
-                # would overlap the floor frame)
+                # the resume predicate is strict (pos > anchor), so anchor
+                # one byte before the floor to re-read the floor frame too
+                # (no event can sit at floor - 1: it would overlap it)
                 return (ff, int(fp) - 1)
         return (last.max_file, last.max_pos)
 

@@ -484,10 +484,10 @@ class Replayer:
             e for e in self.ledger.entries() if e.batch_id == since_batch_id
         )
         high_file, high_pos = self.ledger.max_position()
-        covered_low = GtidSet()
-        for e in self.ledger.entries():
-            if e.batch_id <= since_batch_id and e.gtid_set_text:
-                covered_low = covered_low.union(GtidSet.parse(e.gtid_set_text))
+        # every entry records the cumulative covered set
+        covered_low = (
+            GtidSet.parse(low.gtid_set_text) if low.gtid_set_text else GtidSet()
+        )
 
         names = sorted(list_dir_entries(self.binlog_dir), key=_segment_sort_key)
         lo_k = _segment_sort_key(low.max_file) if low.max_file else None

@@ -23,7 +23,6 @@ tail, and crash-recovery compose with it unchanged.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from ..gtid import GtidSet
@@ -141,18 +140,14 @@ def covered_gtids_until(binlog_dir: str, max_file: str, max_pos: int) -> str:
 def _scan_current_end(
     binlog_dir: str, until_file: str | None = None, until_pos: int | None = None
 ) -> tuple[str, str, int]:
-    from ..binlog.constants import (
-        EVENT_HEADER_SIZE,
-        FIRST_EVENT_POSITION,
-        MAGIC_NUMBER,
-        EventType,
+    from ..binlog.constants import FIRST_EVENT_POSITION, MAGIC_NUMBER, EventType
+    from ..binlog.decoder import (
+        _join_dir,
+        _read_bytes,
+        _segment_sort_key,
+        list_dir_entries,
     )
-    from ..binlog.decoder import _segment_sort_key, list_dir_entries
-    from ..binlog.reader import (
-        parse_event_header,
-        parse_mariadb_gtid,
-        parse_mysql_gtid,
-    )
+    from ..binlog.reader import iter_frames, parse_mariadb_gtid, parse_mysql_gtid
     from ..gtid import Gtid, Uuid
 
     gset = GtidSet()
@@ -162,32 +157,23 @@ def _scan_current_end(
         until_key = _segment_sort_key(until_file)
         names = [n for n in names if _segment_sort_key(n) <= until_key]
     for name in names:
-        with open(os.path.join(binlog_dir, name), "rb") as f:
-            content = f.read()
+        content = _read_bytes(_join_dir(binlog_dir, name))
         if content[:FIRST_EVENT_POSITION] != MAGIC_NUMBER:
             continue
-        pos = FIRST_EVENT_POSITION
-        n = len(content)
         pending: Gtid | None = None
-        while pos + EVENT_HEADER_SIZE <= n:
-            header = parse_event_header(content, pos)
-            (_ts, etype, sid, event_length, next_pos, _flags) = header
-            end = pos + event_length
-            if end > n:
-                break
+        for pos, header, payload, _error in iter_frames(content):
             if until_file and name == until_file and pos > (until_pos or 0):
                 # events past the bound replay normally (pos > max_pos
                 # passes the resume predicate) — their gtids must not seed
                 break
+            etype = header[1]
             if etype == EventType.MYSQL_GTID:
-                payload = content[pos + EVENT_HEADER_SIZE : end]
                 g = parse_mysql_gtid(payload)
                 pending = Gtid(Uuid.parse(g["source_uuid"]), g["transaction_id"])
             elif etype == EventType.MARIADB_GTID:
                 # seed key mirrors decoder.py's mariadb gtid_source
                 # ("{domain_id}-{server_id}") so the anti-join matches
-                payload = content[pos + EVENT_HEADER_SIZE : end]
-                g = parse_mariadb_gtid(payload, sid)
+                g = parse_mariadb_gtid(payload, header[2])
                 pending = Gtid(
                     Uuid.parse_lenient(f"{g['domain_id']}-{g['server_id']}"),
                     g["sequence"],
@@ -196,6 +182,5 @@ def _scan_current_end(
                 # flushed only at commit (binlog_client.rs:69-99)
                 gset.add_gtid(pending)
                 pending = None
-            pos = end
-            max_file, max_pos = name, next_pos
+            max_file, max_pos = name, header[4]
     return str(gset), max_file, max_pos
