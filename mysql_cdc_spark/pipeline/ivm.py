@@ -205,7 +205,7 @@ class MaterializedAggView:
         out = self._data_path(new_version)
         if os.path.exists(out):
             shutil.rmtree(out)  # orphan from a crashed refresh
-        folded.coalesce(1).write.parquet(out)
+        folded.coalesce(1).write.option("compression", "zstd").parquet(out)
         tmp = self._meta_path() + ".tmp"
         with open(tmp, "w") as f:
             json.dump(

@@ -75,6 +75,14 @@ class Ledger:
         with open(os.path.join(self.dir, pick(names))) as f:
             return LedgerEntry.from_json(f.read())
 
+    def entry(self, batch_id: int) -> LedgerEntry | None:
+        """The entry of ``batch_id``, or None; opens that one file only."""
+        try:
+            with open(os.path.join(self.dir, f"{batch_id:08d}.json")) as f:
+                return LedgerEntry.from_json(f.read())
+        except FileNotFoundError:
+            return None
+
     def last(self) -> LedgerEntry | None:
         """The newest entry."""
         return self._one(max)

@@ -480,9 +480,7 @@ class Replayer:
 
         spec = self.spec
         keys = list(spec.primary_key)
-        low = next(
-            e for e in self.ledger.entries() if e.batch_id == since_batch_id
-        )
+        low = self._entry(since_batch_id)
         high_file, high_pos = self.ledger.max_position()
         # every entry records the cumulative covered set
         covered_low = (
@@ -916,6 +914,7 @@ class Replayer:
             metrics["max_event_ts"] = int(max_event_ts)
             metrics["lag_s"] = round(time.time() - max_event_ts, 1)
         metrics.update(self._xa_metrics(xa_info))
+        metrics.update(self._write_metrics(current_version, new_version))
         self.ledger.append(
             LedgerEntry(
                 batch_id=batch_id,
@@ -940,6 +939,23 @@ class Replayer:
             batch_id, files, n_events, net_rows, seconds,
             metrics["events_per_sec"], str(merged_set), lineage,
         )
+
+    def _write_metrics(self, current_version: int, new_version: int) -> dict:
+        """``bytes_written`` and ``buckets_written`` of the snapshot dirs
+        versions ``current_version+1..new_version`` created (a truncate
+        fence batch creates two), from a driver-side file listing. Empty
+        for a target that commits inside its own engine (no
+        ``snapshot_path``)."""
+        if not hasattr(self.target, "snapshot_path"):
+            return {}
+        n_bytes = n_buckets = 0
+        for v in range(current_version + 1, new_version + 1):
+            for root, _dirs, names in os.walk(self.target.snapshot_path(v)):
+                n_bytes += sum(
+                    os.path.getsize(os.path.join(root, n)) for n in names
+                )
+                n_buckets += os.path.basename(root).startswith("_bucket=")
+        return {"bytes_written": n_bytes, "buckets_written": n_buckets}
 
     def _commit_empty_batch(
         self, batch_id: int, files: list[str], planned: dict[str, int],
@@ -1359,6 +1375,10 @@ class Replayer:
         Registered views then refresh to it and ``gc_keep`` retention
         applies, as after a batch. Returns ``new_version``."""
         last = self.ledger.last()
+        metrics = {
+            **metrics,
+            **self._write_metrics(last.snapshot_version if last else 0, new_version),
+        }
         self.ledger.append(
             LedgerEntry(
                 batch_id=self.ledger.next_batch_id(),
@@ -1534,15 +1554,20 @@ class Replayer:
         finally:
             doomed.unpersist()
 
+    def _entry(self, batch_id: int):
+        entry = self.ledger.entry(batch_id)
+        if entry is None:
+            raise KeyError(f"no ledger entry for batch {batch_id}")
+        return entry
+
     def state_at_batch(self, batch_id: int) -> DataFrame:
         """State as of a committed batch — the snapshot version its ledger
         entry names. Every commit point is a readable state, which is what
         the per-batch lineage is for (debugging a bad upstream batch,
         diffing consecutive states)."""
-        for e in self.ledger.entries():
-            if e.batch_id == batch_id:
-                return self.target.read(self.spark, e.snapshot_version)
-        raise KeyError(f"no ledger entry for batch {batch_id}")
+        return self.target.read(
+            self.spark, self._entry(batch_id).snapshot_version
+        )
 
     def read_changes(
         self, from_batch: int | None = None, to_batch: int | None = None
@@ -1561,10 +1586,7 @@ class Replayer:
         def _version_of(batch_id: int | None, default: int) -> int:
             if batch_id is None:
                 return default
-            for e in self.ledger.entries():
-                if e.batch_id == batch_id:
-                    return e.snapshot_version
-            raise KeyError(f"no ledger entry for batch {batch_id}")
+            return self._entry(batch_id).snapshot_version
 
         v_from = _version_of(from_batch, 0)
         v_to = _version_of(to_batch, self.ledger.current_snapshot_version())
@@ -1605,13 +1627,7 @@ class Replayer:
                 "semantics target (BucketedParquetMergeTarget / "
                 "MergeOnReadBucketedTarget)"
             )
-        entry = None
-        for e in self.ledger.entries():
-            if e.batch_id == to_batch:
-                entry = e
-                break
-        if entry is None:
-            raise KeyError(f"no ledger entry for batch {to_batch}")
+        entry = self._entry(to_batch)
         cur_version = self.ledger.current_snapshot_version()
         if entry.snapshot_version == cur_version:
             return cur_version

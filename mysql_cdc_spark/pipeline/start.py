@@ -137,6 +137,19 @@ def covered_gtids_until(binlog_dir: str, max_file: str, max_pos: int) -> str:
     return text
 
 
+def _closes_group(payload: bytes) -> bool:
+    """Whether a QUERY event ends its GTID group: every statement but the
+    ``BEGIN``, ``XA START`` and ``XA END`` that open or continue one."""
+    from ..binlog.reader import parse_query
+    from ..binlog.xa import parse_xa_statement
+
+    sql = parse_query(payload)["sql_statement"]
+    if sql.strip().upper() == "BEGIN":
+        return False
+    xa = parse_xa_statement(sql)
+    return xa is None or xa[0] not in ("start", "end")
+
+
 def _scan_current_end(
     binlog_dir: str, until_file: str | None = None, until_pos: int | None = None
 ) -> tuple[str, str, int]:
@@ -178,8 +191,13 @@ def _scan_current_end(
                     Uuid.parse_lenient(f"{g['domain_id']}-{g['server_id']}"),
                     g["sequence"],
                 )
-            elif etype == EventType.XID and pending is not None:
-                # flushed only at commit (binlog_client.rs:69-99)
+            elif pending is not None and (
+                etype in (EventType.XID, EventType.MYSQL_XA_PREPARE)
+                or (etype == EventType.QUERY and _closes_group(payload))
+            ):
+                # a GTID is executed once its group ends: an XID, an XA
+                # prepare, or a closing query (COMMIT, ROLLBACK, an
+                # autocommit DDL, an XA verdict), as in gtid_executed
                 gset.add_gtid(pending)
                 pending = None
             max_file, max_pos = name, header[4]

@@ -376,7 +376,16 @@ class BucketedParquetMergeTarget:
         (rebucket) starts the manifest empty — every live bucket of the
         new layout is written fresh. From a legacy snapshot ``rows`` holds
         the whole table (its one entry is never pruned), so every bucket
-        of this layout is written."""
+        of this layout is written.
+
+        Every file is zstd-compressed parquet with ``ts`` as INT64
+        TIMESTAMP(MICROS) (the session sets the timestamp type): a
+        copy-on-write commit rewrites each bucket it touches, so bytes per
+        file are bytes per commit, and zstd text pages are about a third
+        smaller than snappy's. INT96 is a legacy type Iceberg's spec does
+        not allow in data files. Files written earlier as snappy/INT96
+        read the same way (``_scan`` reads through ``_stored_schema``) and
+        take the new encoding when their bucket is next rewritten."""
         if _is_legacy(self.snapshot_path(current_version)):
             touched = list(range(self.buckets))
         new_version = current_version + 1
@@ -389,6 +398,7 @@ class BucketedParquetMergeTarget:
             rows.withColumn("_bucket", self._bucket_expr())
             .repartition(max(1, len(touched)), F.col("_bucket"))
             .write.partitionBy("_bucket")
+            .option("compression", "zstd")
             .parquet(out_dir)
         )
         manifest = self._load_manifest(current_version) if carry_over else {}

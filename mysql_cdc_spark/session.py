@@ -42,6 +42,9 @@ def get_spark(
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
+        # store files carry ts as INT64 TIMESTAMP(MICROS), not the legacy
+        # INT96 Iceberg disallows; Spark ignores a per-write option here
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -191,7 +191,7 @@ def test_plain_stream_reads_every_feature(baseline):
     assert [(k, s) for k, _src, s, _ts in want["fences"]] == [("truncate", 4)]
     key = xid_key(1, GTRID, b"")
     assert want["xa"] == ({key: True}, {key: NAME})
-    assert want["from_end"] == want["until"] == f"{SOURCE_UUID}:1:3:7"
+    assert want["from_end"] == want["until"] == f"{SOURCE_UUID}:1-7"
     assert sorted(set(want["rows"]["gtid_seq"])) == [1, 3, 5, 7]
     assert len(want["rows"]) == 9
 
@@ -339,9 +339,26 @@ def test_scanners_pass_over_a_frame_the_walk_cannot_expand(baseline, tmp_path):
         assert [(d["sql"], d["database"]) for d in scan_ddl(content)] == want["ddl"]
         fences = scan_truncates(content, NAME, "chat", "transcripts")
         assert [(t["kind"], t["gtid_seq"]) for t in fences] == [("truncate", 4)]
-        # transaction 3's TABLE_MAP and XID are lost with its wrapper
+        # transaction 3's TABLE_MAP and XID are lost with its wrapper, so
+        # its GTID is never closed
         assert len(scan_table_maps(content)) == len(want["table_maps"]) - 1
-        assert start_state(FromEnd(), str(tmp_path))[0] == f"{SOURCE_UUID}:1:7"
+        assert start_state(FromEnd(), str(tmp_path))[0] == f"{SOURCE_UUID}:1-2:4-7"
+
+
+def test_from_end_closes_groups_ended_by_a_query(tmp_path):
+    """A group closed by a ``COMMIT`` or ``ROLLBACK`` query (no XID: a
+    non-transactional engine) is executed, as in ``gtid_executed``; a
+    group still open at the end of the log is not."""
+    w = BinlogWriter(NAME, checksum=ChecksumType.CRC32)
+    for seq, end in ((1, "COMMIT"), (2, "ROLLBACK"), (3, None)):
+        w.write_mysql_gtid(SOURCE_UUID, seq, timestamp=TS0 + seq)
+        w.write_query("BEGIN", database="chat", timestamp=TS0 + seq)
+        _table_map(w, TS0 + seq)
+        w.write_rows(TABLE_ID_PRE, CTYPES, CMETA, _rows(seq, 1), timestamp=TS0 + seq)
+        if end:
+            w.write_query(end, database="chat", timestamp=TS0 + seq)
+    (tmp_path / NAME).write_bytes(w.getvalue())
+    assert start_state(FromEnd(), str(tmp_path))[0] == f"{SOURCE_UUID}:1-2"
 
 
 def test_start_strategies_read_a_uri_dir(baseline, tmp_path):

@@ -39,6 +39,10 @@ def test_last_opens_one_file(tmp_path, monkeypatch):
         opened.clear()
         assert led.seed_position() == ("bin.000000", 4)
         assert len(opened) == 1
+        opened.clear()
+        assert led.entry(1).max_file == "bin.000001"
+        assert len(opened) == 1
     # an unfinished append (its tmp file) is not an entry
     (tmp_path / "ledger" / "00000201.json.tmp").write_text("{")
     assert led.last().batch_id == 200 and led.resume_position() == ("bin.000200", 800)
+    assert led.entry(201) is None

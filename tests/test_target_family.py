@@ -1,4 +1,5 @@
-"""Persisted target-family stamping (``target_family.json``).
+"""Persisted target-family stamping (``target_family.json``), and the
+encoding every family writes its store files in.
 
 A store must be REOPENED with the target family that wrote it; sniffing
 manifest value shapes / parquet schemas cannot distinguish every case
@@ -18,6 +19,11 @@ from datetime import datetime
 import pytest
 
 from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS, TableSpec
+from mysql_cdc_spark.fixtures import (
+    apply_changelog_oracle,
+    generate_changelog,
+    write_binlog_files,
+)
 from mysql_cdc_spark.pipeline.mor import (
     MergeOnReadBucketedTarget,
     OrderedMergeOnReadTarget,
@@ -281,3 +287,153 @@ def test_store_written_before_a_column_reads_through_the_wider_spec(
     if ordered:
         full = {r["conv_id"]: r for r in wide.read_with_order(spark, v).collect()}
         assert full["k2"]["_deleted"] and full["k2"]["_ord_gtid_seq"] == 2
+
+
+# ------------------------------------------------------------ file encoding
+
+
+def _file_formats(paths) -> set:
+    """(codec, ts physical type, ts converted type) of every column chunk
+    of every parquet file under ``paths``, from the footers."""
+    import pyarrow.parquet as pq
+
+    out = set()
+    for top in paths:
+        for root, _dirs, names in os.walk(top):
+            for n in names:
+                if not n.endswith(".parquet"):
+                    continue
+                md = pq.ParquetFile(os.path.join(root, n)).metadata
+                ts = md.schema.column(md.schema.names.index("ts"))
+                for rg in range(md.num_row_groups):
+                    for c in range(md.num_columns):
+                        out.add((
+                            md.row_group(rg).column(c).compression,
+                            ts.physical_type,
+                            ts.converted_type,
+                        ))
+    return out
+
+
+NEW_FORMAT = {("ZSTD", "INT64", "TIMESTAMP_MICROS")}
+
+
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(root, n))
+        for root, _dirs, names in os.walk(path)
+        for n in names
+    )
+
+
+def _bucket_dirs(path: str) -> list:
+    return [
+        root for root, _dirs, _names in os.walk(path)
+        if os.path.basename(root).startswith("_bucket=")
+    ]
+
+
+@pytest.fixture(scope="module")
+def two_segments(tmp_path_factory):
+    txns = generate_changelog(
+        n_conversations=8, max_turns=4, n_extra_ops=30, seed=7
+    )
+    outdir = str(tmp_path_factory.mktemp("binlog_format"))
+    write_binlog_files(txns, outdir, txns_per_file=(len(txns) + 1) // 2)
+    assert len(os.listdir(outdir)) == 2
+    return outdir, apply_changelog_oracle(txns)
+
+
+@pytest.mark.parametrize(
+    "cls",
+    [
+        BucketedParquetMergeTarget,
+        OrderedBucketedMergeTarget,
+        MergeOnReadBucketedTarget,
+    ],
+)
+def test_every_store_write_is_zstd_with_micros_ts(spark, two_segments, tmp_path, cls):
+    """A two-batch replay (base, then a delta on merge-on-read) and a
+    maintenance rewrite (``compact`` on merge-on-read, ``rebucket``
+    otherwise): every file under ``snapshots/`` is zstd with ``ts`` as
+    INT64 TIMESTAMP_MICROS, and each ledger entry records the bytes and
+    bucket dirs of the snapshot dirs it created."""
+    outdir, oracle = two_segments
+    store = str(tmp_path / "st")
+    rep = Replayer(spark, outdir, store, target=cls(store, TRANSCRIPTS, buckets=4))
+    assert len(rep.replay(files_per_batch=1).batches) == 2
+    if hasattr(rep.target, "compact"):
+        assert any(e["deltas"] for e in rep.target._load_manifest(2).values())
+        rep.compact()
+    else:
+        rep.rebucket(2)
+
+    got = rep.read_state().orderBy("conv_id", "turn_idx").toPandas()
+    assert got["text"].tolist() == oracle["text"].tolist()
+    assert got["ts"].tolist() == oracle["ts"].tolist()
+    assert _file_formats([os.path.join(store, "snapshots")]) == NEW_FORMAT
+
+    entries = rep.ledger.entries()
+    assert [e.snapshot_version for e in entries] == [1, 2, 3]
+    for e in entries:
+        snap = rep.target.snapshot_path(e.snapshot_version)
+        assert e.metrics["bytes_written"] == _dir_bytes(snap) > 0
+        assert e.metrics["buckets_written"] == len(_bucket_dirs(snap)) > 0
+
+
+def test_snappy_int96_store_merges_under_the_new_writer(spark, tmp_path):
+    """A store whose files were written with Spark's default encoding
+    (snappy pages, INT96 ``ts``) needs no migration: a merge rewrites the
+    buckets it touches in the new encoding, keeps the others by reference,
+    and the mixed store reads back microsecond-exact."""
+    store = str(tmp_path / "st")
+    tgt = BucketedParquetMergeTarget(store, TRANSCRIPTS, buckets=4)
+
+    def ts(i):
+        return datetime(2024, 1, 1, 12, 0, i, 100_001 + 7 * i)
+
+    v1 = tgt.merge(spark, _net(spark, [
+        (f"k{i}", 0, "insert", "user", f"t{i}", None, ts(i), 1, 10 + i, 0)
+        for i in range(8)
+    ]), 0)
+    old = {
+        "spark.sql.parquet.compression.codec": "snappy",
+        "spark.sql.parquet.outputTimestampType": "INT96",
+    }
+    saved = {k: spark.conf.get(k) for k in old}
+    for k, val in old.items():
+        spark.conf.set(k, val)
+    try:
+        for d in _bucket_dirs(tgt.snapshot_path(v1)):
+            spark.read.parquet(d).write.parquet(d + ".old")
+            shutil.rmtree(d)
+            os.rename(d + ".old", d)
+    finally:
+        for k, val in saved.items():
+            spark.conf.set(k, val)
+    assert {f[:2] for f in _file_formats([tgt.snapshot_path(v1)])} == {
+        ("SNAPPY", "INT96")
+    }
+
+    net = [
+        ("k1", 0, "update", "user", "t1b", "grep", ts(41), 2, 20, 0),
+        ("k8", 0, "insert", "user", "t8", None, ts(8), 2, 21, 0),
+    ]
+    untouched = set(tgt._load_manifest(v1)) - set(
+        tgt._touched_buckets(_net(spark, net))
+    )
+    assert untouched
+    v2 = tgt.merge(spark, _net(spark, net), v1)
+
+    got = {
+        r["conv_id"]: (r["text"], r["tool"], r["ts"])
+        for r in tgt.read(spark, v2).collect()
+    }
+    want = {f"k{i}": (f"t{i}", None, ts(i)) for i in range(9)}
+    want["k1"] = ("t1b", "grep", ts(41))
+    assert got == want
+    assert _file_formats([tgt.snapshot_path(v2)]) == NEW_FORMAT
+    manifest = tgt._load_manifest(v2)
+    assert {f[:2] for f in _file_formats(
+        [os.path.join(store, manifest[b]) for b in untouched]
+    )} == {("SNAPPY", "INT96")}
