@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..binlog.decoder import TableSpec, TRANSCRIPTS
+from .target import micros_ts
 
 
 class MaterializedAggView:
@@ -205,7 +206,8 @@ class MaterializedAggView:
         out = self._data_path(new_version)
         if os.path.exists(out):
             shutil.rmtree(out)  # orphan from a crashed refresh
-        folded.coalesce(1).write.option("compression", "zstd").parquet(out)
+        with micros_ts(spark):
+            folded.coalesce(1).write.option("compression", "zstd").parquet(out)
         tmp = self._meta_path() + ".tmp"
         with open(tmp, "w") as f:
             json.dump(

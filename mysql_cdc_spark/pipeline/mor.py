@@ -1,17 +1,11 @@
-"""Merge-on-read bucketed target — the steady-state write path for
-high-frequency micro-batches.
+"""Merge-on-read bucketed target with equality deletes.
 
-``BucketedParquetMergeTarget`` (copy-on-write) rewrites every *touched*
-bucket in full: a batch that upserts 100 rows into a 10^8-row bucket
-reads and writes 10^8 rows. That is the right trade for large catch-up
-batches (read amplification zero, write amortized), but at steady state —
-a tail job committing every few seconds, each batch touching a handful of
-hot conversations — write amplification dominates: per-batch IO is
-O(touched-bucket data) however small the change set is.
-
-``MergeOnReadBucketedTarget`` flips the trade, the same way Iceberg v2's
-merge-on-read does with equality-delete files (format spec §Delete
-Formats; Hudi's MOR table type is the same idea):
+``MergeOnReadBucketedTarget`` writes a batch without reading stored rows,
+the same way Iceberg v2's merge-on-read does with equality-delete files
+(format spec §Delete Formats; Hudi's MOR table type is the same idea),
+and folds the deltas per key on read. (``BucketedParquetMergeTarget``
+appends with *position* deletes instead, which a read skips without a
+fold, but it must look the replaced rows up when it writes.)
 
 - ``merge`` writes the batch's **net change rows themselves** — key,
   op, after-image, carried-column mask — as a *delta file* per touched
@@ -38,15 +32,14 @@ with later re-inserts, additive schema evolution mid-chain, truncate,
 time travel, rebucket, manifest-aware GC.
 
 Scale shape at 10^10 rows: a steady-state batch touching K hot
-conversations writes O(rows-in-batch) bytes instead of O(K × bucket
-size); reads between compactions pay one extra key-partitioned fold
-over (touched base buckets + their deltas); ``compact(min_deltas=N)``
-runs on whatever cadence bounds the chain (e.g. hourly), costing one
-touched-bucket rewrite — exactly the IO the CoW path would have paid on
-*every* batch. Crash safety is unchanged: data lands under the new
-snapshot dir first, the manifest write is the snapshot's internal commit
-point, the pipeline commit point stays the ledger append, and a torn
-snapshot is an invisible orphan the retry overwrites.
+conversations writes O(rows-in-batch) bytes; reads between compactions
+pay one extra key-partitioned fold over (touched base buckets + their
+deltas); ``compact(min_deltas=N)`` runs on whatever cadence bounds the
+chain (e.g. hourly), costing one touched-bucket rewrite. Crash safety
+is unchanged: data lands under the new snapshot dir first, the manifest
+write is the snapshot's internal commit point, the pipeline commit
+point stays the ledger append, and a torn snapshot is an invisible
+orphan the retry overwrites.
 
 Reference parity note: the reference (rusuly/mysql_cdc) stops at decoded
 events (README.md:61) — every sink here is beyond-reference engineering;
@@ -64,6 +57,7 @@ from .target import (
     BucketedParquetMergeTarget,
     OrderedPolicy,
     _read_manifest,
+    delete_net,
     state_schema,
 )
 
@@ -111,6 +105,14 @@ class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
             if isinstance(v, str):  # copy-on-write entry (a store that
                 # started CoW, adopted here): base-only entry
                 v = {"base": v, "deltas": []}
+            elif "deltas" not in v:
+                raise ValueError(
+                    f"bucket {b} of snapshot v{version} holds position "
+                    "deletes of the copy-on-write store "
+                    "(BucketedParquetMergeTarget), which the merge-on-read "
+                    "family cannot read: open the store through open_store, "
+                    "or rewrite it there (rebucket) before adopting it"
+                )
             out[b] = {"base": v.get("base"), "deltas": list(v["deltas"])}
         return out
 
@@ -249,24 +251,23 @@ class MergeOnReadBucketedTarget(BucketedParquetMergeTarget):
         resolved = self._read_full(spark, current_version, set(chosen))
         return self._commit_buckets(resolved, sorted(chosen), current_version)
 
+    def purge_keys(
+        self, spark: SparkSession, keys_df: DataFrame, current_version: int
+    ) -> int:
+        """Delete every key of ``keys_df``, then compact the buckets holding
+        them: the delete alone is a delta, and the purged images would
+        stay in the retained base and delta files. Returns the version."""
+        version = self.merge(spark, delete_net(keys_df, self.spec), current_version)
+        return self.compact(
+            spark, version, min_deltas=1,
+            bucket_ids=set(self._touched_buckets(keys_df)),
+        )
+
     def delta_stats(self, version: int) -> dict:
         """{bucket: chain length} for monitoring / compact triggers."""
         return {
             b: len(e["deltas"]) for b, e in self._load_manifest(version).items()
         }
-
-    # -- maintenance -------------------------------------------------------------
-
-    def _manifest_refs(self, version: int) -> set:
-        """Live bucket-dir paths at ``version``: base AND delta files (the
-        parent's bucket-granular ``gc`` uses this — unreferenced delta
-        dirs are pruned the moment a compaction folds them away)."""
-        out = set()
-        for e in self._load_manifest(version).values():
-            if e["base"]:
-                out.add(e["base"])
-            out.update(e["deltas"])
-        return out
 
 
 class OrderedMergeOnReadTarget(OrderedPolicy, MergeOnReadBucketedTarget):

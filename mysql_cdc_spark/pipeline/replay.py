@@ -42,7 +42,13 @@ from .order import (
     last_writer_wins_partial,
     with_change_key,
 )
-from .target import BucketedParquetMergeTarget, open_store, snapshot_diff
+from .target import (
+    BucketedParquetMergeTarget,
+    delete_net,
+    open_store,
+    snapshot_diff,
+    write_decision,
+)
 
 
 def _after_position_predicate(max_file: str, max_pos: int):
@@ -726,7 +732,12 @@ class Replayer:
         # say the batch is non-empty, fence-free and stop-free does the
         # merge read the cached net. Nothing is written before that, so a
         # stop or an empty batch leaves the store untouched.
-        net = self._net_from_changes(changes).persist()
+        net = self._net_from_changes(changes)
+        if hasattr(self.target, "observe_buckets"):
+            # the count below also records the touched buckets, so the
+            # merge runs no job of its own to find them
+            net = self.target.observe_buckets(net, current_version)
+        net = net.persist()
         try:
             t_phase = time.time()
             net_rows = net.count()
@@ -943,7 +954,8 @@ class Replayer:
     def _write_metrics(self, current_version: int, new_version: int) -> dict:
         """``bytes_written`` and ``buckets_written`` of the snapshot dirs
         versions ``current_version+1..new_version`` created (a truncate
-        fence batch creates two), from a driver-side file listing. Empty
+        fence batch creates two), from a driver-side file listing, and the
+        write decision the manifests record (``write_decision``). Empty
         for a target that commits inside its own engine (no
         ``snapshot_path``)."""
         if not hasattr(self.target, "snapshot_path"):
@@ -955,7 +967,11 @@ class Replayer:
                     os.path.getsize(os.path.join(root, n)) for n in names
                 )
                 n_buckets += os.path.basename(root).startswith("_bucket=")
-        return {"bytes_written": n_bytes, "buckets_written": n_buckets}
+        return {
+            "bytes_written": n_bytes,
+            "buckets_written": n_buckets,
+            **write_decision(self.target.store_dir, current_version, new_version),
+        }
 
     def _commit_empty_batch(
         self, batch_id: int, files: list[str], planned: dict[str, int],
@@ -1471,11 +1487,13 @@ class Replayer:
 
         Physical erasure, per sink family:
 
-        - copy-on-write (Parquet/Bucketed): the delete-merge itself
-          rewrites exactly the buckets holding matching keys; the rows
-          then survive only in OLDER snapshots, which ``erase=True`` drops
-          (``gc(keep_latest=1)``) — destroying time travel *by design*;
-          pass ``erase=False`` to defer erasure to routine gc/retention.
+        - bucketed (``BucketedParquetMergeTarget.purge_keys``): the
+          delete-merge rewrites exactly the buckets holding matching keys
+          — never a position-delete append, which would leave the rows'
+          bytes in a listed file; the rows then survive only in OLDER
+          snapshots, which ``erase=True`` drops (``gc(keep_latest=1)``) —
+          destroying time travel *by design*; pass ``erase=False`` to
+          defer erasure to routine gc/retention.
         - merge-on-read: the delete lands as delta rows, so the purged
           images still sit in retained base/delta files — the purge
           therefore force-compacts the touched buckets (base rewritten
@@ -1509,21 +1527,13 @@ class Replayer:
             n_purged = doomed.count()
             if n_purged == 0:
                 return version
-            net = doomed.select(
-                *keys,
-                F.lit("delete").alias("op"),
-                *[
-                    F.lit(None).cast(d).alias(f"after_{c}")
-                    for c, d, _ in spec.columns
-                ],
-            )
-            new_version = self.target.merge(self.spark, net, version)
-            if hasattr(self.target, "compact"):
-                # merge-on-read: the delete is only a delta — rewrite the
-                # touched buckets' bases so no retained file keeps the rows
-                touched = set(self.target._touched_buckets(doomed))
-                new_version = self.target.compact(
-                    self.spark, new_version, min_deltas=1, bucket_ids=touched
+            if hasattr(self.target, "purge_keys"):
+                # the bucketed families rewrite the buckets holding the
+                # keys, so no file the new snapshot lists keeps the rows
+                new_version = self.target.purge_keys(self.spark, doomed, version)
+            else:
+                new_version = self.target.merge(
+                    self.spark, delete_net(doomed, spec), version
                 )
             h_version = None
             if self.history is not None:

@@ -342,7 +342,6 @@ class Scd2HistoryMorStore(Scd2HistoryStore):
     from .mor import MergeOnReadBucketedTarget as _MOR
 
     _load_manifest = _MOR._load_manifest
-    _manifest_refs = _MOR._manifest_refs
     _stored_schema = _MOR._stored_schema
     read = _MOR.read
     _base_rows = _MOR._base_rows

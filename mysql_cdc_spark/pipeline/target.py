@@ -9,10 +9,11 @@ interface (``merge`` / ``merge_partial`` / ``truncate`` / ``read``):
   catalog is configured on the session; this sandbox's pyspark has no
   Iceberg runtime jar, so tests exercise the fallback.
 - ``BucketedParquetMergeTarget`` — versioned-snapshot, bucket-pruned
-  copy-on-write MERGE: a batch rewrites only the hash buckets its net
-  change touches and splices the rest by manifest reference. The commit
-  point is the *ledger append*, not the snapshot write, so a torn write
-  is invisible. ``pipeline/mor.py`` holds its merge-on-read twin.
+  MERGE: a batch writes only the hash buckets its net change touches,
+  rewriting each one or appending to it with position deletes, and
+  splices the rest by manifest reference. The commit point is the
+  *ledger append*, not the snapshot write, so a torn write is invisible.
+  ``pipeline/mor.py`` holds its merge-on-read twin.
 
 ``OrderedPolicy`` adds the streaming tier's outrank guard (order tuples +
 tombstones) to either layout. ``open_store`` reopens an existing store
@@ -33,12 +34,56 @@ import json
 import os
 import re
 import shutil
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..binlog.decoder import TableSpec, TRANSCRIPTS, _ddl_to_type
+
+# Most stored positions one bucket's delete files may list. A merge that
+# would go past it rewrites the bucket instead, so a read's position
+# literal stays under ``buckets × POSITION_CAP`` entries at any table
+# size. Measured on 4 vCPUs, 16 buckets of 9,000 rows, median full read:
+# 0.28 s with no positions, 0.44 s at 2,048 per bucket, 0.68 s at 8,192
+# (each file's list is searched linearly); the cap keeps the filter
+# under 2× the unfiltered read. tests/test_position_deletes.py reports
+# the read at the cap.
+POSITION_CAP = 2048
+
+
+def _file_col():
+    """A scanned row's data file as its store-relative path,
+    ``snapshots/vN/data/_bucket=B/part-…``: the last five parts of the URI
+    Spark reports, so the store's own location (moved, or holding
+    characters a URI escapes) never enters it."""
+    return F.substring_index(F.col("_metadata.file_path"), "/", -5)
+
+
+@contextmanager
+def micros_ts(spark: SparkSession):
+    """Write ``ts`` as INT64 TIMESTAMP(MICROS) inside the block, whatever
+    the session says, and give the caller's value back after it. INT96
+    is a legacy type Iceberg's spec does not allow in data files, and
+    Spark ignores a per-write option for this setting."""
+    key = "spark.sql.parquet.outputTimestampType"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "TIMESTAMP_MICROS")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
+
+
+def delete_net(keys_df: DataFrame, spec: TableSpec) -> DataFrame:
+    """Net change rows that delete every key of ``keys_df``."""
+    keys = list(spec.primary_key)
+    return keys_df.select(
+        *keys,
+        F.lit("delete").alias("op"),
+        *[F.lit(None).cast(d).alias(f"after_{c}") for c, d, _ in spec.columns],
+    )
 
 
 def state_schema(spec: TableSpec = TRANSCRIPTS) -> T.StructType:
@@ -147,7 +192,8 @@ def latest_committed_version(store_dir: str) -> int:
 
 def _read_manifest(store_dir: str, version: int) -> dict:
     """Raw manifest of a committed snapshot: bucket id -> entry (a
-    store-relative path, or a merge-on-read ``{"base", "deltas"}`` dict).
+    store-relative path, a position-delete ``{"data", "rows", "deletes",
+    "deleted"}`` dict, or a merge-on-read ``{"base", "deltas"}`` dict).
     A legacy unbucketed snapshot reads as one bucket 0 holding the whole
     snapshot directory."""
     if version <= 0:
@@ -159,22 +205,92 @@ def _read_manifest(store_dir: str, version: int) -> dict:
         return {int(k): v for k, v in json.load(f).items()}
 
 
-class BucketedParquetMergeTarget:
-    """Bucket-pruned copy-on-write MERGE, the scale path for catalog-less
-    environments: per-batch IO is O(touched-bucket data), not O(table).
+def _entry_dirs(entry) -> list:
+    """Data dirs of a manifest entry of any bucketed family, oldest first:
+    a plain entry is one dir, a position-delete entry its ``data`` chain,
+    a merge-on-read entry its base and deltas."""
+    if isinstance(entry, str):
+        return [entry]
+    if "deltas" in entry:
+        return [p for p in (entry["base"], *entry["deltas"]) if p]
+    return list(entry["data"])
 
-    Layout mirrors Iceberg's copy-on-write over bucket partitioning:
+
+def write_decision(store_dir: str, old_version: int, new_version: int) -> dict:
+    """How the commits from ``old_version`` to ``new_version`` wrote their
+    buckets, from the two manifests alone (no Spark job, no data file
+    read): ``buckets_rewritten`` (an entry replaced, added or dropped),
+    ``buckets_appended`` (a chain extended in place, by position deletes
+    or merge-on-read deltas), ``positions_deleted`` (stored rows the new
+    delete files list) and ``max_chain`` (the most data dirs one bucket
+    of ``new_version`` reads)."""
+    old = _read_manifest(store_dir, old_version)
+    new = _read_manifest(store_dir, new_version)
+    rewritten = appended = positions = 0
+    for b in set(old) | set(new):
+        o, n = old.get(b), new.get(b)
+        if o == n:
+            continue
+        was = _entry_dirs(o) if o is not None else []
+        if o is not None and isinstance(n, dict) and (
+            _entry_dirs(n)[: len(was)] == was
+        ):
+            appended += 1
+            positions += n.get("deleted", 0) - (
+                o.get("deleted", 0) if isinstance(o, dict) else 0
+            )
+        else:
+            rewritten += 1
+    return {
+        "buckets_rewritten": rewritten,
+        "buckets_appended": appended,
+        "positions_deleted": positions,
+        "max_chain": max((len(_entry_dirs(e)) for e in new.values()), default=0),
+    }
+
+
+class BucketedParquetMergeTarget:
+    """Bucket-pruned MERGE, the scale path for catalog-less environments:
+    per-batch IO is O(touched-bucket data), not O(table).
+
+    Layout mirrors Iceberg's bucket partitioning, with copy-on-write and
+    position-delete commits side by side:
 
     - state is hash-bucketed by ``pmod(xxhash64(key cols), buckets)``;
-    - each snapshot version is a directory holding (a) the parquet data of
-      the buckets **this** batch rewrote (``data/_bucket=N/``) and (b) a
-      ``manifest.json`` mapping every live bucket to the snapshot-relative
-      path of its current data — untouched buckets keep pointing at the
-      version that last wrote them (no copy, no rewrite);
-    - ``merge`` reads ONLY the touched buckets' data (all rows that could
-      match a net key hash into those buckets), anti-joins ∪ upserts, and
-      writes only those buckets back. At 10^10 rows with 2^12+ buckets a
-      batch that touches 1% of keys reads and writes ~1% of the table.
+    - each snapshot version is a directory holding (a) the parquet data
+      **this** batch wrote per bucket (``data/_bucket=N/``), (b) at most
+      one delete file ``deletes.json`` and (c) a ``manifest.json`` mapping
+      every live bucket to its current files — untouched buckets keep
+      pointing at the version that last wrote them (no copy, no rewrite);
+    - ``merge`` decides per touched bucket whether to **rewrite** it (read
+      its rows, anti-join the net keys, write survivors ∪ upserts: the
+      entry becomes that one dir) or **append** to it (write the upserts
+      only, and record the positions of the stored rows they and the
+      deletes replace). A delete writes no row, only a position. Both
+      kinds go through the same partitioned write, so a batch that
+      touches 1% of keys at 10^10 rows reads and writes ~1% of the table
+      when it rewrites, and only its own rows when it appends.
+    - a bucket appends when (a) it has a stored entry in a bucketed
+      snapshot, (b) its chain of data dirs is shorter than
+      ``mor.DEFAULT_AUTO_COMPACT``, (c) after the batch its delta rows
+      plus deleted positions stay below its base dir's rows (the batch's
+      upserts taken as spread evenly over the touched buckets) and (d)
+      its deleted positions stay at most ``POSITION_CAP``. Sizes come
+      from the manifest and parquet footers; the replaced positions from
+      one lookup job over the appending buckets' key columns. Every other
+      touched bucket is rewritten, and a bucket left with no rows drops
+      out of the manifest;
+    - an appended bucket's entry is ``{"data": [dirs, oldest first],
+      "rows": [rows per dir], "deletes": [delete files], "deleted": n}``;
+      a rewritten one is its one dir, a plain string. A delete file maps
+      store-relative data-file paths to row indexes,
+      ``{"snapshots/v…/data/_bucket=3/part-….parquet": [4, 17]}`` — JSON,
+      a few kB per commit, and relative so the store can move. A read
+      scans every listed dir and drops the listed rows with one
+      constant-folded map lookup on ``_metadata.file_path`` /
+      ``_metadata.row_index``: no join and no exchange;
+    - ``purge_keys`` always rewrites: a position delete leaves the row's
+      bytes in its file, so erasure needs the rewrite;
     - the manifest write is the snapshot's internal commit point (data is
       written first); the *pipeline* commit point stays the ledger append,
       so a torn snapshot is invisible and the next commit overwrites it.
@@ -271,7 +387,8 @@ class BucketedParquetMergeTarget:
         self.buckets, self.bucket_cols = self._load_layout(version)
 
     def _load_manifest(self, version: int) -> dict:
-        """bucket id -> store-relative path of that bucket's parquet dir."""
+        """bucket id -> entry: the store-relative path of that bucket's
+        parquet dir, or its position-delete chain (class docstring)."""
         return _read_manifest(self.store_dir, version)
 
     def _pruned_manifest(self, version: int, bucket_ids) -> dict:
@@ -328,12 +445,50 @@ class BucketedParquetMergeTarget:
         full = sorted({os.path.join(self.store_dir, p) for p in paths})
         return spark.read.schema(self._stored_schema()).parquet(*full)
 
+    def _deleted_positions(self, entries) -> dict:
+        """{data-file path: [row index]} the delete files of ``entries``
+        list for their own data dirs (a delete file covers every bucket
+        its commit appended to)."""
+        entries = [e for e in entries if isinstance(e, dict)]
+        dirs = {d for e in entries for d in e["data"]}
+        out: dict = {}
+        for rel in sorted({p for e in entries for p in e["deletes"]}):
+            with open(os.path.join(self.store_dir, rel)) as f:
+                for path, rows in json.load(f).items():
+                    if path.rsplit("/", 1)[0] in dirs:
+                        out.setdefault(path, []).extend(rows)
+        return out
+
+    def _scan_live(self, spark: SparkSession, entries) -> DataFrame:
+        """``_scan`` over every data dir of manifest ``entries`` (either
+        shape), without the rows their delete files list: one filter on a
+        constant map (parsed once, at planning), not a join. A literal
+        built element by element from Python costs one py4j call each,
+        so the positions go in as one JSON string."""
+        entries = list(entries)
+        df = self._scan(spark, [d for e in entries for d in _entry_dirs(e)])
+        deleted = self._deleted_positions(entries)
+        if not deleted:
+            return df
+        positions = F.from_json(
+            F.lit(json.dumps(deleted)), "map<string,array<bigint>>"
+        )
+        return df.filter(
+            ~F.coalesce(
+                F.array_contains(
+                    F.element_at(positions, _file_col()),
+                    F.col("_metadata.row_index"),
+                ),
+                F.lit(False),
+            )
+        )
+
     def read(self, spark: SparkSession, version: int, bucket_ids=None) -> DataFrame:
         """Read the table at ``version``; ``bucket_ids`` (a set) prunes the
         scan to those buckets' data dirs — the manifest is the metadata
         index, so pruning never touches unrelated files."""
         manifest = self._pruned_manifest(version, bucket_ids)
-        return self._scan(spark, manifest.values()).select(
+        return self._scan_live(spark, manifest.values()).select(
             *[n for n, _, _ in self.spec.columns]
         )
 
@@ -345,10 +500,54 @@ class BucketedParquetMergeTarget:
         per-row state (order tuples, tombstones) override this."""
         return self.read(spark, version, bucket_ids)
 
-    def _touched_buckets(self, net: DataFrame) -> list:
-        # tiny driver-side action: ≤ ``buckets`` rows (bounded domain),
-        # and the result drives both the pruned scan and the manifest
-        rows = net.select(self._bucket_expr().alias("_b")).distinct().collect()
+    def observe_buckets(self, net: DataFrame, current_version: int) -> DataFrame:
+        """``net`` with an observation of the buckets it touches and its
+        upsert count under the layout of ``current_version``: the first
+        action on the returned frame (the caller's ``count()``) records
+        them, and a merge of that frame reads them instead of running a
+        job of its own."""
+        self._adopt_layout(current_version)
+        obs = Observation()
+        out = net.observe(
+            obs,
+            F.collect_set(self._bucket_expr()).alias("buckets"),
+            F.count_if(F.col("op") != "delete").alias("upserts"),
+        )
+        out._observed_buckets = ((self.buckets, self.bucket_cols), obs)
+        return out
+
+    def _observed(self, net: DataFrame):
+        """(sorted touched bucket ids, upsert rows) that ``net``'s
+        ``observe_buckets`` observation recorded, or None when it has
+        none or the layout changed since."""
+        seen = getattr(net, "_observed_buckets", None)
+        if seen is None or seen[0] != (self.buckets, self.bucket_cols):
+            return None
+        got = seen[1].get
+        return sorted(got["buckets"]), int(got["upserts"])
+
+    def _bucket_counts(self, net: DataFrame) -> tuple:
+        """(sorted touched bucket ids, upsert rows) of a net change: as
+        observed, else from one tiny driver-side action (≤ ``buckets``
+        rows)."""
+        seen = self._observed(net)
+        if seen is not None:
+            return seen
+        rows = (
+            net.groupBy(self._bucket_expr().alias("_b"))
+            .agg(F.count_if(F.col("op") != "delete").alias("n"))
+            .collect()
+        )
+        return sorted(r["_b"] for r in rows), sum(r["n"] for r in rows)
+
+    def _touched_buckets(self, df: DataFrame) -> list:
+        """Sorted bucket ids of ``df``'s keys: as observed, else from one
+        tiny driver-side action. The result drives both the pruned scan
+        and the manifest."""
+        seen = self._observed(df)
+        if seen is not None:
+            return seen[0]
+        rows = df.select(self._bucket_expr().alias("_b")).distinct().collect()
         return sorted(r["_b"] for r in rows)
 
     def _base_rows(self, rows: DataFrame, version: int) -> DataFrame:
@@ -363,53 +562,128 @@ class BucketedParquetMergeTarget:
         to append delta writes to the chain."""
         return rel
 
+    def _dir_rows(self, rel: str) -> int:
+        """Rows of a store-relative data dir, from its parquet footers."""
+        import pyarrow.parquet as pq
+
+        d = os.path.join(self.store_dir, rel)
+        return sum(
+            pq.read_metadata(os.path.join(d, n)).num_rows
+            for n in os.listdir(d)
+            if n.endswith(".parquet")
+        )
+
+    def _chain(self, entry) -> dict:
+        """A copy-on-write entry in position-delete form; a plain entry
+        reads its one dir's row count from the footers."""
+        if isinstance(entry, dict):
+            return entry
+        return {"data": [entry], "rows": [self._dir_rows(entry)],
+                "deletes": [], "deleted": 0}
+
+    @staticmethod
+    def _may_append(chain: dict, upserts: float, positions: int) -> bool:
+        """Rules (b)–(d) of the class docstring for a bucket whose batch
+        adds ``upserts`` rows and deletes ``positions`` stored rows."""
+        from .mor import DEFAULT_AUTO_COMPACT  # lazy: mor imports this module
+
+        deleted = chain["deleted"] + positions
+        return (
+            len(chain["data"]) < DEFAULT_AUTO_COMPACT
+            and sum(chain["rows"][1:]) + upserts + deleted < chain["rows"][0]
+            and deleted <= POSITION_CAP
+        )
+
+    def _replaced_positions(
+        self, spark: SparkSession, net: DataFrame, chains: dict
+    ) -> dict:
+        """{bucket: {data-file path: [row index]}}: the live stored rows of
+        the ``chains``' buckets whose keys ``net`` holds — one job over
+        their key columns, semi-joined with the net keys."""
+        keys = list(self.spec.primary_key)
+        hits = (
+            self._scan_live(spark, chains.values())
+            .select(
+                *keys,
+                _file_col().alias("_file"),
+                F.col("_metadata.row_index").alias("_row"),
+            )
+            .join(net.select(*keys), on=keys, how="left_semi")
+            .select("_file", "_row")
+            .collect()
+        )
+        bucket_of = {d: b for b, c in chains.items() for d in c["data"]}
+        out: dict = {b: {} for b in chains}
+        for r in hits:
+            b = bucket_of[r["_file"].rsplit("/", 1)[0]]
+            out[b].setdefault(r["_file"], []).append(r["_row"])
+        return out
+
     def _commit_buckets(
         self, rows: DataFrame, touched: list, current_version: int,
-        carry_over: bool = True, delta: bool = False,
+        carry_over: bool = True, delta: bool = False, appended=None,
     ) -> int:
         """The one bucket write: write ``rows`` partitioned by bucket under
         snapshot version+1, splice the manifest, commit. A base write
         (``data/``) replaces each touched bucket's entry, and a bucket
         left with no rows writes no dir and drops out; a merge-on-read
         delta write (``delta/``) adds to each touched bucket's entry.
-        Untouched entries carry over by reference; ``carry_over=False``
-        (rebucket) starts the manifest empty — every live bucket of the
-        new layout is written fresh. From a legacy snapshot ``rows`` holds
-        the whole table (its one entry is never pruned), so every bucket
-        of this layout is written.
+        ``appended`` maps the buckets a merge appends to onto (their
+        chain, {data-file path: [row index]} the batch replaces): their
+        dir, if any, extends the chain, and their positions go into the
+        commit's one ``deletes.json``. Untouched entries carry over by
+        reference; ``carry_over=False`` (rebucket) starts the manifest
+        empty — every live bucket of the new layout is written fresh. From
+        a legacy snapshot ``rows`` holds the whole table (its one entry is
+        never pruned), so every bucket of this layout is written.
 
         Every file is zstd-compressed parquet with ``ts`` as INT64
-        TIMESTAMP(MICROS) (the session sets the timestamp type): a
-        copy-on-write commit rewrites each bucket it touches, so bytes per
-        file are bytes per commit, and zstd text pages are about a third
-        smaller than snappy's. INT96 is a legacy type Iceberg's spec does
-        not allow in data files. Files written earlier as snappy/INT96
+        TIMESTAMP(MICROS), set here for the write (``micros_ts``): bytes
+        per file are bytes per commit, and zstd text pages are about a
+        third smaller than snappy's. Files written earlier as snappy/INT96
         read the same way (``_scan`` reads through ``_stored_schema``) and
-        take the new encoding when their bucket is next rewritten."""
+        take the new encoding when their bucket is next written."""
+        appended = appended or {}
         if _is_legacy(self.snapshot_path(current_version)):
             touched = list(range(self.buckets))
         new_version = current_version + 1
-        out_dir = os.path.join(
-            self._fresh_snapshot(new_version), "delta" if delta else "data"
-        )
+        snap = self._fresh_snapshot(new_version)
+        out_dir = os.path.join(snap, "delta" if delta else "data")
         if not delta:
             rows = self._base_rows(rows, new_version)
-        (
-            rows.withColumn("_bucket", self._bucket_expr())
-            .repartition(max(1, len(touched)), F.col("_bucket"))
-            .write.partitionBy("_bucket")
-            .option("compression", "zstd")
-            .parquet(out_dir)
+        with micros_ts(rows.sparkSession):
+            (
+                rows.withColumn("_bucket", self._bucket_expr())
+                .repartition(max(1, len(touched)), F.col("_bucket"))
+                .write.partitionBy("_bucket")
+                .option("compression", "zstd")
+                .parquet(out_dir)
+            )
+        deletes = {p: r for _, pos in appended.values() for p, r in pos.items()}
+        deletes_rel = os.path.relpath(
+            os.path.join(snap, "deletes.json"), self.store_dir
         )
+        if deletes:
+            with open(os.path.join(self.store_dir, deletes_rel), "w") as f:
+                json.dump(deletes, f)
         manifest = self._load_manifest(current_version) if carry_over else {}
         for b in touched:
             bucket_dir = os.path.join(out_dir, f"_bucket={b}")
-            if os.path.isdir(bucket_dir):
-                manifest[b] = self._bucket_entry(
-                    manifest.get(b),
-                    os.path.relpath(bucket_dir, self.store_dir),
-                    delta,
-                )
+            rel = os.path.relpath(bucket_dir, self.store_dir)
+            wrote = os.path.isdir(bucket_dir)
+            if b in appended:
+                chain, pos = appended[b]
+                chain = dict(chain)
+                if wrote:
+                    chain["data"] = chain["data"] + [rel]
+                    chain["rows"] = chain["rows"] + [self._dir_rows(rel)]
+                if pos:
+                    chain["deletes"] = chain["deletes"] + [deletes_rel]
+                    chain["deleted"] += sum(len(r) for r in pos.values())
+                if wrote or pos:
+                    manifest[b] = chain
+            elif wrote:
+                manifest[b] = self._bucket_entry(manifest.get(b), rel, delta)
             elif not delta:
                 manifest.pop(b, None)
         self._write_meta(new_version, manifest)
@@ -433,22 +707,59 @@ class BucketedParquetMergeTarget:
         write snapshot ``current_version + 1``. Returns the new version.
 
         ``net`` columns: key cols + ``op`` + ``after_<col>`` for every spec
-        column."""
+        column. Each touched bucket is rewritten or appended to (class
+        docstring)."""
+        return self._merge(spark, net, current_version, may_append=True)
+
+    def purge_keys(
+        self, spark: SparkSession, keys_df: DataFrame, current_version: int
+    ) -> int:
+        """Delete every key of ``keys_df`` and commit version+1 with the
+        buckets holding them rewritten, never appended to: a position
+        delete would leave the rows' bytes in a file the new snapshot
+        still lists. Returns the new version."""
+        return self._merge(
+            spark, delete_net(keys_df, self.spec), current_version,
+            may_append=False,
+        )
+
+    def _merge(
+        self, spark: SparkSession, net: DataFrame, current_version: int,
+        may_append: bool,
+    ) -> int:
         self._adopt_layout(current_version)
         keys = list(self.spec.primary_key)
         # net is the whole decode→gate→LWW pipeline, lazily. The touched-
-        # bucket pre-pass AND the merge write both consume it — without a
-        # persist the full pipeline would execute twice (measured ~2× on
-        # the 9M-event scaling corpus). Post-LWW net is one row per key,
-        # so the cache is keys-sized, not events-sized.
+        # bucket pre-pass, the position lookup AND the merge write all
+        # consume it — without a persist the full pipeline would execute
+        # again each time (measured ~2× on the 9M-event scaling corpus).
+        # Post-LWW net is one row per key, so the cache is keys-sized, not
+        # events-sized.
         net = net.persist()
         try:
-            touched = self._touched_buckets(net)
-            state = self.read(spark, current_version, bucket_ids=set(touched))
-            # MERGE-equivalent: untouched current rows ∪ upserts. The
-            # anti-join shuffles both sides by key; AQE handles skewed hot
-            # conversations (session conf).
-            upserts = net.filter(F.col("op") != "delete").select(
+            touched, upserts = self._bucket_counts(net)
+            appended: dict = {}
+            if may_append and not _is_legacy(self.snapshot_path(current_version)):
+                manifest = self._load_manifest(current_version)
+                per_bucket = upserts / max(1, len(touched))
+                chains = {
+                    b: self._chain(manifest[b]) for b in touched if b in manifest
+                }
+                chains = {
+                    b: c
+                    for b, c in chains.items()
+                    if self._may_append(c, per_bucket, 0)
+                }
+                if chains:
+                    found = self._replaced_positions(spark, net, chains)
+                    appended = {
+                        b: (c, found[b])
+                        for b, c in chains.items()
+                        if self._may_append(
+                            c, per_bucket, sum(map(len, found[b].values()))
+                        )
+                    }
+            merged = net.filter(F.col("op") != "delete").select(
                 *[
                     F.col(f"after_{n}").cast(d).alias(n)
                     if n not in keys
@@ -456,9 +767,18 @@ class BucketedParquetMergeTarget:
                     for n, d, _ in self.spec.columns
                 ]
             )
-            survivors = state.join(net.select(*keys), on=keys, how="left_anti")
-            merged = survivors.unionByName(upserts, allowMissingColumns=False)
-            return self._commit_buckets(merged, touched, current_version)
+            rewrite = set(touched) - set(appended)
+            if rewrite:
+                # MERGE-equivalent: untouched current rows ∪ upserts. The
+                # anti-join shuffles both sides by key; AQE handles skewed
+                # hot conversations (session conf).
+                state = self.read(spark, current_version, bucket_ids=rewrite)
+                merged = state.join(
+                    net.select(*keys), on=keys, how="left_anti"
+                ).unionByName(merged, allowMissingColumns=False)
+            return self._commit_buckets(
+                merged, touched, current_version, appended=appended
+            )
         finally:
             net.unpersist()
 
@@ -610,9 +930,14 @@ class BucketedParquetMergeTarget:
             raise
 
     def _manifest_refs(self, version: int) -> set:
-        """Store-relative bucket-dir paths the manifest at ``version``
-        references (subclasses with richer entries override)."""
-        return set(self._load_manifest(version).values())
+        """Store-relative data dirs and delete files the manifest at
+        ``version`` references, for every bucketed family's entries."""
+        refs = set()
+        for e in self._load_manifest(version).values():
+            refs.update(_entry_dirs(e))
+            if isinstance(e, dict):
+                refs.update(e.get("deletes", ()))
+        return refs
 
     def gc(self, keep_latest: int) -> None:
         """Retain the newest ``keep_latest`` versions fully readable and
@@ -620,8 +945,8 @@ class BucketedParquetMergeTarget:
         just whole snapshot dirs (Iceberg's expire-snapshots +
         remove-orphan-files in one pass): a snapshot dir that a kept
         manifest still points into survives, but the *unreferenced* bucket
-        dirs inside it (superseded copies of since-rewritten buckets) are
-        deleted. This is what makes ``Replayer.purge_keys``'s erasure
+        dirs inside it (superseded copies of since-rewritten buckets) and
+        its delete file, once no kept manifest lists it, are deleted. This is what makes ``Replayer.purge_keys``'s erasure
         guarantee hold — without the inner prune, a carried-over old
         snapshot dir would keep the purged keys' pre-delete bucket files."""
         if not keep_latest:
@@ -646,6 +971,11 @@ class BucketedParquetMergeTarget:
             if name not in keep and name not in live_snap_names:
                 shutil.rmtree(snap)
                 continue
+            deletes = os.path.join(snap, "deletes.json")
+            if os.path.exists(deletes) and os.path.normpath(
+                os.path.relpath(deletes, self.store_dir)
+            ) not in live:
+                os.remove(deletes)
             for sub in ("data", "delta"):
                 d = os.path.join(snap, sub)
                 if not os.path.isdir(d):
@@ -791,7 +1121,7 @@ class OrderedBucketedMergeTarget(OrderedPolicy, BucketedParquetMergeTarget):
         """Full stored form (spec columns + order tuple + tombstone flag),
         manifest-pruned to ``bucket_ids`` like ``read``."""
         manifest = self._pruned_manifest(version, bucket_ids)
-        return self._scan(spark, manifest.values()).select(
+        return self._scan_live(spark, manifest.values()).select(
             *[n for n, _, _ in self.spec.columns],
             *self._ord_names(),
             # a file written before the flag holds live rows only
@@ -981,20 +1311,17 @@ def target_class_for_family(family: str):
 
 def _sniff_family(store_dir: str, version: int) -> str:
     """Family of an unstamped store, from its snapshot at ``version``:
-    dict-valued manifest entries mean merge-on-read, path entries (or a
-    legacy bare parquet directory) copy-on-write, and ``_ord_*`` columns
-    in a referenced parquet file the ordered form."""
+    ``{"base", "deltas"}`` manifest entries mean merge-on-read, path and
+    position-delete entries (or a legacy bare parquet directory)
+    copy-on-write, and ``_ord_*`` columns in a referenced parquet file the
+    ordered form."""
     import glob
 
     import pyarrow.parquet as pq
 
     entries = list(_read_manifest(store_dir, version).values())
-    rels = [
-        r
-        for e in entries
-        for r in ([e] if isinstance(e, str) else [e.get("base"), *e["deltas"]])
-        if r
-    ]
+    mor = any(isinstance(e, dict) and "deltas" in e for e in entries)
+    rels = [r for e in entries for r in _entry_dirs(e)]
     ordered = False
     for rel in rels:
         files = glob.glob(os.path.join(store_dir, rel, "*.parquet"))
@@ -1002,7 +1329,6 @@ def _sniff_family(store_dir: str, version: int) -> str:
             names = pq.read_schema(files[0]).names
             ordered = any(n.startswith("_ord_") for n in names)
             break
-    mor = any(isinstance(e, dict) for e in entries)
     return ("ordered_" if ordered else "") + ("mor" if mor else "bucketed_cow")
 
 

@@ -60,6 +60,14 @@ def _bucketed(store: str, buckets: int = 8) -> BucketedParquetMergeTarget:
     return BucketedParquetMergeTarget(store, TRANSCRIPTS, buckets=buckets)
 
 
+def _entry_paths(entry) -> list:
+    """Store-relative paths a manifest entry references: a rewritten
+    bucket's one dir, or an appended bucket's data dirs and delete files."""
+    if isinstance(entry, str):
+        return [entry]
+    return entry["data"] + entry["deletes"]
+
+
 class TestEquality:
     def test_full_replay_matches_plain_target_and_oracle(
         self, spark, changelog, tmp_path
@@ -174,10 +182,16 @@ class TestPruning:
         )
         v2 = tgt.merge(spark, one, v1)
         man2 = tgt._load_manifest(v2)
-        rel_v2 = [p for p in man2.values() if f"v{v2:08d}" in p]
-        assert len(rel_v2) == 1  # exactly one bucket rewritten
-        carried = {b: p for b, p in man2.items() if f"v{v2:08d}" not in p}
-        assert carried == {b: p for b, p in man1.items() if p in carried.values()}
+        # exactly one bucket written (rewritten or appended to), and only
+        # its entry names v2's files
+        changed = [b for b in man2 if man2[b] != man1.get(b)]
+        assert len(changed) == 1 and set(man2) == set(man1)
+        assert [
+            b for b, e in man2.items()
+            if any(f"v{v2:08d}" in p for p in _entry_paths(e))
+        ] == changed
+        carried = {b: e for b, e in man2.items() if b not in changed}
+        assert carried == {b: e for b, e in man1.items() if b in carried}
         # physical check: the v2 data dir holds a single bucket partition
         data_dir = os.path.join(tgt.snapshot_path(v2), "data")
         bucket_dirs = [d for d in os.listdir(data_dir) if d.startswith("_bucket=")]
@@ -239,7 +253,11 @@ class TestGc:
         kept = sorted(os.listdir(root))
         # versions referenced by the latest manifest survive the GC
         with open(os.path.join(root, f"v{v:08d}", "manifest.json")) as f:
-            refs = {os.path.normpath(p).split(os.sep)[1] for p in json.load(f).values()}
+            refs = {
+                os.path.normpath(p).split(os.sep)[1]
+                for e in json.load(f).values()
+                for p in _entry_paths(e)
+            }
         assert refs <= set(kept)
         pd.testing.assert_frame_equal(_state_pdf(rep), before)
 
@@ -260,16 +278,16 @@ class TestGc:
         root = os.path.join(store, "snapshots")
         kept = sorted(os.listdir(root))
         newest = {f"v{v:08d}", f"v{v - 1:08d}"}
-        with open(os.path.join(root, f"v{v:08d}", "manifest.json")) as f:
-            refs = {
-                os.path.normpath(p).split(os.sep)[1]
-                for p in json.load(f).values()
-            }
-        with open(os.path.join(root, f"v{v - 1:08d}", "manifest.json")) as f:
-            refs |= {
-                os.path.normpath(p).split(os.sep)[1]
-                for p in json.load(f).values()
-            }
+        refs = set()
+        for kept_v in (v, v - 1):
+            with open(
+                os.path.join(root, f"v{kept_v:08d}", "manifest.json")
+            ) as f:
+                refs |= {
+                    os.path.normpath(p).split(os.sep)[1]
+                    for e in json.load(f).values()
+                    for p in _entry_paths(e)
+                }
         assert set(kept) == newest | refs
         # change feed between the two retained versions still reads
         assert tgt.read_changes(spark, v - 1, v).count() >= 0

@@ -437,3 +437,32 @@ def test_snappy_int96_store_merges_under_the_new_writer(spark, tmp_path):
     assert {f[:2] for f in _file_formats(
         [os.path.join(store, manifest[b]) for b in untouched]
     )} == {("SNAPPY", "INT96")}
+
+
+def test_int96_session_still_writes_micros(spark, tmp_path):
+    """The bucket write and the view write set ``ts`` to INT64
+    TIMESTAMP_MICROS for themselves: under a session that asks for INT96
+    both write micros, and the session reads INT96 again afterwards."""
+    from mysql_cdc_spark.pipeline.ivm import MaterializedAggView
+
+    key = "spark.sql.parquet.outputTimestampType"
+    store = str(tmp_path / "st")
+    tgt = BucketedParquetMergeTarget(store, TRANSCRIPTS, buckets=2)
+    view = MaterializedAggView(
+        str(tmp_path / "view"), group_cols=["ts"],
+        measures={"n_chars": "length(text)"},
+    )
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        v = tgt.merge(spark, _net(spark, [
+            (f"k{i}", 0, "insert", "user", f"t{i}", None, TS, 1, 10 + i, 0)
+            for i in range(4)
+        ]), 0)
+        view.refresh(spark, tgt, v)
+        assert spark.conf.get(key) == "INT96"
+    finally:
+        spark.conf.set(key, saved)
+    formats = _file_formats([store, str(tmp_path / "view")])
+    assert {f[1:] for f in formats} == {("INT64", "TIMESTAMP_MICROS")}
+    assert {r["ts"] for r in tgt.read(spark, v).collect()} == {TS}
