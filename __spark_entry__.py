@@ -175,7 +175,7 @@ def _replay_e2e(
 ) -> DataFrame:
     """Shared e2e body: deterministic transcript changelog →
     binlog-format bytes (per provider / row-image / row-metadata mode) →
-    distributed decode (mapInPandas) → transaction gate → LWW → MERGE →
+    distributed decode (mapInArrow) → transaction gate → LWW → MERGE →
     final transcript state, projected for cross-engine hashing."""
     from mysql_cdc_spark.fixtures import transcripts_pre_spec
     from mysql_cdc_spark.pipeline.replay import Replayer

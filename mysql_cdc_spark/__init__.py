@@ -4,7 +4,7 @@ Re-expresses the query & data-processing capabilities of the reference
 ``rusuly/mysql_cdc`` (a single-threaded Rust binlog client library) as an
 idiomatic, horizontally-scalable Spark pipeline:
 
-    binlog files --size-packed tasks--> vectorized Arrow decode (mapInPandas)
+    binlog files --size-packed tasks--> vectorized Arrow decode (mapInArrow)
       --> change-event DataFrame --> last-writer-wins windowed dedup
       --> salted merge-apply --> Iceberg/parquet MERGE upsert
       --> checkpointed GTID-set/offset ledger (exactly-once, resumable)

@@ -1140,7 +1140,7 @@ def vector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     column. The CDC route for embedding tables feeding the ANN ops.
 
     Scale shape: one writer + vectorized reader per Arrow batch inside
-    ``mapInPandas`` — a single codegen'd scan into one Python stage,
+    ``mapInArrow`` — a single codegen'd scan into one Python stage,
     zero shuffles, frame bytes never leave the task. The checksum
     (sum of floor(x*1000) over exactly-widened float32 values) is
     computed JVM-side on the decoded array, so any defect in the wire
@@ -1157,7 +1157,7 @@ def vector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def batch(it):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
         from ..binlog.constants import ColumnType
         from ..binlog.encoder import BinlogWriter
@@ -1165,26 +1165,29 @@ def vector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         ctypes = [ColumnType.LONGLONG, ColumnType.VECTOR]
         cmeta = [0, 4]
-        for pdf in it:
+        for rb in it:
             w = BinlogWriter("vec.000001")
             w.write_mysql_gtid("24bc7850-2c16-11e6-a073-0242ac110012", 1)
             w.write_query("BEGIN", database="ml")
             w.write_table_map(41, "ml", "emb", ctypes, cmeta, [False, True])
             rows = [
                 [int(vid), np.asarray(vec, dtype="<f4").tobytes()]
-                for vid, vec in zip(pdf["vec_id"], pdf["embedding"])
+                for vid, vec in zip(
+                    rb.column("vec_id").to_pylist(),
+                    rb.column("embedding").to_pylist(),
+                )
             ]
             w.write_rows(41, ctypes, cmeta, rows)
             w.write_xid(1)
-            frames = decode_segment_fast(w.getvalue(), "vec.000001", spec)
-            assert frames is not None, "vector kind fell back"
-            out = pd.concat(frames, ignore_index=True) if frames else None
-            yield pd.DataFrame({
-                "vec_id": out["after_vec_id"].astype("int64"),
-                "embedding": out["after_embedding"],
-            })
+            decoded = decode_segment_fast(w.getvalue(), "vec.000001", spec)
+            assert decoded is not None, "vector kind fell back"
+            for out in decoded:
+                yield pa.RecordBatch.from_arrays(
+                    [out.column("after_vec_id"), out.column("after_embedding")],
+                    names=["vec_id", "embedding"],
+                )
 
-    decoded = emb.mapInPandas(batch, "vec_id long, embedding array<float>")
+    decoded = emb.mapInArrow(batch, "vec_id long, embedding array<float>")
     return decoded.select(
         "vec_id",
         F.size("embedding").alias("dim"),

@@ -711,7 +711,7 @@ def discover_spec(spark, binlog_dir: str, spec) -> "TableSpec":  # noqa: F821
     streams, where TABLE_MAP carries no column names."""
     from collections.abc import Iterator
 
-    import pandas as pd
+    import pyarrow as pa
 
     from .decoder import (
         _list_segments,
@@ -722,27 +722,33 @@ def discover_spec(spark, binlog_dir: str, spec) -> "TableSpec":  # noqa: F821
 
     files = segment_tasks(spark, _list_segments(binlog_dir))
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def scan(tasks: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import numpy as np
+
+        from . import arrays as A
+
+        for task in tasks:
             rows = []
-            for path in pdf["path"]:
+            for path in task.column("path").to_pylist():
                 name = path.rsplit("/", 1)[-1]
                 for d in scan_ddl(_read_bytes(path)):
                     rows.append((name, d["pos"], d["sql"], d["database"]))
-            yield pd.DataFrame(
-                rows, columns=["src_file", "pos", "sql", "database"]
-            )
+            names, pos, sql, db = zip(*rows) if rows else ((), (), (), ())
+            yield pa.RecordBatch.from_pydict({
+                "src_file": A.from_objects(names, pa.string()),
+                "pos": A.from_numpy(np.array(pos, dtype=np.int64), pa.int64()),
+                "sql": A.from_objects(sql, pa.string()),
+                "database": A.from_objects(db, pa.string()),
+            })
 
-    found = files.mapInPandas(
-        scan, schema="src_file string, pos long, sql string, database string"
-    ).toPandas()
-    found = found.sort_values(
-        ["src_file", "pos"],
-        key=lambda s: s.map(_segment_sort_key) if s.name == "src_file" else s,
-        kind="mergesort",
+    found = sorted(
+        files.mapInArrow(
+            scan, schema="src_file string, pos long, sql string, database string"
+        ).collect(),
+        key=lambda r: (_segment_sort_key(r["src_file"]), r["pos"]),
     )
     alters = []
-    for _, r in found.iterrows():
+    for r in found:
         alter = parse_alter(r["sql"])
         if alter is None:
             continue

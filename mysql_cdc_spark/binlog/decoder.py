@@ -11,9 +11,10 @@ Spark-first layout:
 - **Within a file** — sequential by construction: headers chain via
   ``next_event_position`` (event_header.rs:24) and row events depend on the
   latest preceding TABLE_MAP (row_parser.rs:18-20,33-36) and GTID group
-  (binlog_client.rs:74-96). The per-file scan runs inside ``mapInPandas``;
-  output leaves the Python worker as Arrow batches, never per-row Python at
-  the DataFrame level.
+  (binlog_client.rs:74-96). The per-file scan runs inside ``mapInArrow``;
+  both decoders emit ``pa.RecordBatch`` of one declared schema
+  (``arrow_schema``), so output leaves the Python worker as the Arrow it
+  was built in, never per-row Python and never pandas.
 - **Transaction gating** (ST2, binlog_client.rs:69-99): row events buffer
   until their XID commit arrives; events of transactions whose commit is not
   in the file are emitted with ``xid = NULL`` so the exactly-once ledger can
@@ -30,15 +31,18 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+from functools import lru_cache
 from typing import Iterator, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from . import arrays as A
 from .constants import EventType
 from .geometry import geometry_to_wkt as _geometry_to_wkt
 from .jsonb import jsonb_to_text as _jsonb_to_text
@@ -163,6 +167,19 @@ def change_event_schema(
     return T.StructType(fields)
 
 
+@lru_cache(maxsize=None)
+def arrow_schema(
+    spec: TableSpec = TRANSCRIPTS, attach_origin_query: bool = False,
+    attach_partition_id: bool = False,
+) -> pa.Schema:
+    """``change_event_schema`` as the Arrow schema both decoders emit and
+    ``mapInArrow`` reads: timestamps as ``timestamp[us, tz=UTC]`` (NTZ
+    columns without a zone), the only timestamp unit Spark accepts."""
+    return to_arrow_schema(
+        change_event_schema(spec, attach_origin_query, attach_partition_id)
+    )
+
+
 def _ddl_to_type(ddl: str) -> T.DataType:
     import re
 
@@ -249,16 +266,10 @@ class _FileDecoder:
     """Sequential per-file decode with transaction buffering.
 
     Columnar accumulation: rows are buffered as compact tuples until their
-    transaction commits, then appended straight into per-column lists —
-    no per-row dicts, no per-row pandas objects. Timestamp columns are kept
-    as epoch ints and converted once per Arrow batch (vectorized
-    ``pd.to_datetime``)."""
-
-    _META_COLS = (
-        "src_file", "pos", "next_pos", "ts", "server_id", "op",
-        "gtid_source", "gtid_seq", "xid", "table_id", "db", "tbl",
-        "row_in_event",
-    )
+    transaction commits, then transposed once per Arrow batch into
+    per-column arrays of ``arrow_schema`` — no per-row dicts. Timestamp
+    columns are kept as epoch ints and scaled to microseconds at the
+    batch build."""
 
     def __init__(
         self,
@@ -292,18 +303,8 @@ class _FileDecoder:
         self._colmap_memo: dict[int, list] = {}
         # canonical presence masks, memoized per (table, presence) combo
         self._mask_memo: dict[tuple, int] = {}
-        # output columns: _META_COLS, presence masks, before_*/after_*
-        self.columns = (
-            list(self._META_COLS)
-            + ["before_present", "after_present"]
-            + [p + n for p in ("before_", "after_") for n in self.canonical]
-            + (["origin_query"] if attach_origin_query else [])
-            + (
-                ["partition_id", "source_partition_id"]
-                if attach_partition_id
-                else []
-            )
-        )
+        # output columns: metadata, presence masks, before_*/after_*
+        self.schema = arrow_schema(spec, attach_origin_query, attach_partition_id)
         # flat row tuples (everything except src_file/xid) + per-row xid;
         # one C-level zip(*) transpose per Arrow batch beats 25 list
         # appends per row by ~4×. Tuples always carry every slot (origin,
@@ -326,33 +327,35 @@ class _FileDecoder:
     def n_rows(self) -> int:
         return len(self._rows)
 
-    def _flush_frame(self) -> pd.DataFrame:
-        millis_cols = {
-            p + n for p in ("before_", "after_")
-            for n, k in self.kinds.items() if k == "ts_millis"
-        }
+    def _flush_batch(self) -> pa.RecordBatch:
+        # epoch ints → microseconds: header seconds, TIMESTAMP millis
+        scale = {"ts": 1_000_000}
+        for n, k in self.kinds.items():
+            if k == "ts_millis":
+                scale["before_" + n] = scale["after_" + n] = 1000
         cols = list(zip(*self._rows)) if self._rows else [
             () for _ in range(len(self._tuple_slots))
         ]
-        data = {}
-        for c in self.columns:
+        n_rows = len(self._xids)
+        arrays = []
+        for field in self.schema:
+            c = field.name
             if c == "src_file":
-                data[c] = self.src_file
+                arrays.append(A.repeat(self.src_file, field.type, n_rows))
                 continue
             if c == "xid":
-                data[c] = self._xids
-                continue
-            values = list(cols[self._slot[c]])
-            if c == "ts":
-                data[c] = pd.to_datetime(values, unit="s").values
-            elif c in millis_cols:
-                data[c] = pd.to_datetime(values, unit="ms").values
+                values = self._xids
             else:
-                data[c] = values
-        df = pd.DataFrame(data, columns=self.columns)
+                values = cols[self._slot[c]]
+                if c in scale:
+                    m = scale[c]
+                    values = [None if v is None else v * m for v in values]
+            # pa.array of Python values: pyarrow's pandas shim loads
+            # pandas here, on the scalar path only
+            arrays.append(pa.array(values, field.type))
         self._rows = []
         self._xids = []
-        return df
+        return pa.RecordBatch.from_arrays(arrays, schema=self.schema)
 
     def _colmap(self, table: dict) -> list:
         """For a table map: [(canonical_idx, image_idx | None, kind,
@@ -400,7 +403,7 @@ class _FileDecoder:
 
     def decode_file(
         self, path: str, content: bytes, batch_rows: int = 65536
-    ) -> Iterator[pd.DataFrame]:
+    ) -> Iterator[pa.RecordBatch]:
         src_file = os.path.basename(path)
         self.src_file = src_file
         reader = BinlogFileReader(content, src_file, on_error=self.on_error)
@@ -447,7 +450,7 @@ class _FileDecoder:
             return tuple(out)
 
         def emit_txn(xid):
-            # _rows/_xids are rebound by _flush_frame — resolve at call time
+            # _rows/_xids are rebound by _flush_batch — resolve at call time
             self._rows.extend(txn_buffer)
             self._xids.extend([xid] * len(txn_buffer))
 
@@ -539,7 +542,7 @@ class _FileDecoder:
                 cur_gtid_seq = None
                 cur_origin = None
                 if self.n_rows >= batch_rows:
-                    yield self._flush_frame()
+                    yield self._flush_batch()
             elif kind == "xa_prepare":
                 # two-phase prepare closes the row-carrying group; the
                 # verdict (XA COMMIT/ROLLBACK, own GTID, possibly another
@@ -557,7 +560,7 @@ class _FileDecoder:
                 cur_gtid_seq = None
                 cur_origin = None
                 if self.n_rows >= batch_rows:
-                    yield self._flush_frame()
+                    yield self._flush_batch()
             elif kind == "query":
                 # transaction-boundary predicate over sql_statement
                 # (binlog_client.rs:88-95): BEGIN opens, COMMIT closes,
@@ -580,7 +583,7 @@ class _FileDecoder:
                         cur_gtid_seq = None
                         cur_origin = None
                         if self.n_rows >= batch_rows:
-                            yield self._flush_frame()
+                            yield self._flush_batch()
                     elif verb == "prepare" and key is not None:
                         # statement-form prepare: same policy as the event
                         verdict = xa_verdicts.get(key)
@@ -608,7 +611,7 @@ class _FileDecoder:
                     cur_gtid_seq = None
                     cur_origin = None
                     if self.n_rows >= batch_rows:
-                        yield self._flush_frame()
+                        yield self._flush_batch()
                 elif sql.startswith("ROLLBACK"):
                     txn_buffer = []
                     cur_gtid_source = None
@@ -659,7 +662,7 @@ class _FileDecoder:
         if self.quarantine_dir is not None:
             self._write_quarantine(src_file)
         if self.n_rows:
-            yield self._flush_frame()
+            yield self._flush_batch()
 
     def _write_quarantine(self, src_file: str) -> None:
         """Persist this segment's dead-letter records as one parquet file
@@ -732,33 +735,46 @@ def covered_rows(sources, seqs, covered) -> np.ndarray:
     return hit
 
 
-def _segment_row_stats(frames, name) -> list:
-    """Ledger facts of the rows one segment yielded: per gtid_source the
-    row count, position bounds, collapsed GTID-seq islands and the newest
-    header timestamp. Islands via numpy unique+diff: the distributed form
-    of GtidSet.add_gtid's collapse (uuid_set.rs:29-98)."""
-    if not frames:
+def _segment_row_stats(batches, name) -> list:
+    """Ledger facts of the rows one segment yielded: per gtid_source (in
+    order of first appearance) the row count, position bounds, collapsed
+    GTID-seq islands and the newest header timestamp. Islands via numpy
+    unique+diff: the distributed form of GtidSet.add_gtid's collapse
+    (uuid_set.rs:29-98)."""
+    if not sum(len(b) for b in batches):
         return []
-    pdf = pd.concat(frames, ignore_index=True)
+    t = pa.Table.from_batches(batches)
+    src = t.column("gtid_source").combine_chunks().dictionary_encode()
+    names = src.dictionary.to_pylist() + [None]
+    codes = np.where(
+        A.is_null(src.indices), len(names) - 1, A.to_numpy(src.indices)
+    )
+    seq = A.to_numpy(t.column("gtid_seq"))
+    pos = A.to_numpy(t.column("pos"))
+    ts_valid = ~A.is_null(t.column("ts"))
+    ts_us = A.to_numpy(t.column("ts"))
+    uniq, first = np.unique(codes, return_index=True)
     out = []
-    for s, g in pdf.groupby("gtid_source", dropna=False, sort=False):
-        if pd.isna(s):
-            s, starts, ends = None, [], []
+    for code in uniq[np.argsort(first)]:
+        sel = codes == code
+        source = names[code]
+        if source is None:
+            starts, ends = [], []
         else:
-            seqs = np.unique(g["gtid_seq"].to_numpy(dtype="int64"))
+            seqs = np.unique(seq[sel])
             breaks = np.nonzero(np.diff(seqs) > 1)[0]
             starts = seqs[np.concatenate(([0], breaks + 1))].tolist()
             ends = seqs[np.concatenate((breaks, [len(seqs) - 1]))].tolist()
-        ts_max = g["ts"].max()
+        ts_sel = ts_us[sel & ts_valid]
         out.append({
             "src_file": name,
-            "gtid_source": s,
-            "events": len(g),
-            "min_pos": int(g["pos"].min()),
-            "max_pos": int(g["pos"].max()),
+            "gtid_source": source,
+            "events": int(sel.sum()),
+            "min_pos": int(pos[sel].min()),
+            "max_pos": int(pos[sel].max()),
             "starts": starts,
             "ends": ends,
-            "max_ts": 0 if pd.isna(ts_max) else int(pd.Timestamp(ts_max).value // 10**9),
+            "max_ts": int(ts_sel.max() // 10**6) if len(ts_sel) else 0,
         })
     return out
 
@@ -771,9 +787,11 @@ class SegmentStats:
     (``_segment_row_stats``) from exactly those rows and its
     TRUNCATE/DROP/RENAME fences (``ddl.scan_truncates`` on the bytes it
     already holds) after the resume position, and adds them to a
-    ``_LatestPerSegment`` accumulator under the segment's name. The
-    driver reads them with ``collect`` after an action has run every
-    decode task. One instance per batch; it empties the accumulator."""
+    ``_LatestPerSegment`` accumulator under the segment's name, with the
+    segment's decode facts (scalar fallback, bytes read). The driver
+    reads them with ``collect`` and ``decode_facts`` after an action has
+    run every decode task. One instance per batch; it empties the
+    accumulator."""
 
     COLS = ["gtid_source", "gtid_seq", "pos", "xid", "ts"]
 
@@ -792,13 +810,14 @@ class SegmentStats:
         self.resume_pos = resume_pos
 
     def applied(
-        self, name: str, content: bytes, frames, spec
-    ) -> Iterator[pd.DataFrame]:
-        """Executor side: the rows of segment ``name``'s decoded ``frames``
-        the batch applies, then its report. A row applies when it is
-        strictly after the resume ``(file, pos)`` (earlier segments yield
-        nothing), its transaction committed (``xid`` not NULL, ST2) and the
-        ledger's ``covered`` GtidSet does not hold its GTID (ST5).
+        self, name: str, content: bytes, batches, spec, scalar: bool = False
+    ) -> Iterator[pa.RecordBatch]:
+        """Executor side: the rows of segment ``name``'s decoded
+        ``batches`` the batch applies, then its report (``scalar``: the
+        scalar ``_FileDecoder`` decoded the segment). A row applies when
+        it is strictly after the resume ``(file, pos)`` (earlier segments
+        yield nothing), its transaction committed (``xid`` not NULL, ST2)
+        and the ledger's ``covered`` GtidSet does not hold its GTID (ST5).
 
         The position bound holds in addition to the GTID check. It is
         monotone and always safe: anything at or before the checkpoint is
@@ -820,23 +839,23 @@ class SegmentStats:
             after = self.resume_pos if key == self.resume_key else np.inf
         seen: list = []
         open_pos = None
-        for frame in frames:
-            pos = frame["pos"].to_numpy()
+        for batch in batches:
+            pos = A.to_numpy(batch.column("pos"))
             keep = pos > after
-            gated = keep & frame["xid"].isna().to_numpy()
+            gated = keep & A.is_null(batch.column("xid"))
             if gated.any():
                 first = int(pos[gated].min())
                 open_pos = first if open_pos is None else min(open_pos, first)
             keep &= ~gated
             if self.covered:
                 keep &= ~covered_rows(
-                    frame["gtid_source"].to_numpy(dtype=object),
-                    frame["gtid_seq"].to_numpy(), self.covered,
+                    A.to_objects(batch.column("gtid_source")),
+                    A.to_numpy(batch.column("gtid_seq")), self.covered,
                 )
             if not keep.all():
-                frame = frame[keep]
-            seen.append(frame[self.COLS])
-            yield frame
+                batch = batch.filter(A.mask(keep))
+            seen.append(batch.select(self.COLS))
+            yield batch
         from .ddl import scan_truncates
 
         fences = [
@@ -845,7 +864,7 @@ class SegmentStats:
             if t["pos"] > after
         ]
         rows = _segment_row_stats(seen, name)
-        self.acc.add({name: (rows, fences, open_pos)})
+        self.acc.add({name: (rows, fences, open_pos, (scalar, len(content)))})
 
     def collect(self, files: list[str]) -> tuple[list[dict], list[dict], dict]:
         """Driver side: (row stats, fences, ``{segment: open_pos}`` for
@@ -861,6 +880,16 @@ class SegmentStats:
             [t for f in files for t in got[f][1]],
             {f: got[f][2] for f in files if got[f][2] is not None},
         )
+
+    def decode_facts(self, files: list[str]) -> dict:
+        """Driver side, after ``collect``: how many of ``files`` the scalar
+        ``_FileDecoder`` decoded (``fallback_segments``) and the segment
+        bytes the decode tasks read (``bytes_read``)."""
+        facts = [self.acc.value[f][3] for f in files]
+        return {
+            "fallback_segments": sum(scalar for scalar, _ in facts),
+            "bytes_read": sum(size for _, size in facts),
+        }
 
 
 def decode_binlog_dir(
@@ -881,7 +910,7 @@ def decode_binlog_dir(
 
     The driver lists the segments and packs them by size into one task per
     core (``pack_segments``); each task opens its segments executor-side
-    and decodes them one after another in mapInPandas, so segment bytes
+    and decodes them one after another in mapInArrow, so segment bytes
     never cross the network and decode within a segment stays sequential.
     Filter pushdown: pass ``path_filter`` (glob) to prune segments at the
     listing, e.g. for resume-from-file checkpoints.
@@ -894,7 +923,7 @@ def decode_binlog_dir(
 
     ``stats``: each task yields only the rows this ``SegmentStats``
     applies (``SegmentStats.applied``) and reports its segment's ledger
-    facts once it has yielded the segment's last frame. Without it every
+    facts once it has yielded the segment's last batch. Without it every
     decoded row is kept, uncommitted tails included (``xid`` NULL).
     """
     schema = change_event_schema(spec, attach_origin_query, attach_partition_id)
@@ -906,17 +935,32 @@ def decode_binlog_dir(
         attach_partition_id, on_error, quarantine_dir,
     )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
+    def decode(tasks: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for task in tasks:
+            for path in task.column("path").to_pylist():
                 content = _read_bytes(path)
                 name = os.path.basename(path)
-                frames = decode_segment(name, content)
+                batches, scalar = decode_segment(name, content)
                 if stats is not None:
-                    frames = stats.applied(name, content, frames, spec)
-                yield from frames
+                    batches = stats.applied(name, content, batches, spec, scalar)
+                yield from batches
+        _trim_heap()
 
-    return segment_tasks(spark, sizes).mapInPandas(decode, schema=schema)
+    return segment_tasks(spark, sizes).mapInArrow(decode, schema=schema)
+
+
+def _trim_heap() -> None:
+    """Hand a finished decode task's freed heap back to the OS. glibc
+    keeps it mapped: once a large numpy temporary is freed, its mmap
+    threshold rises and later ones come from the heap, so a reused Python
+    worker would go on holding about 12 MiB of a backfill segment's decode
+    garbage between tasks. Not glibc: nothing to do."""
+    import ctypes
+
+    try:
+        ctypes.CDLL(None).malloc_trim(0)
+    except (AttributeError, OSError):
+        pass
 
 
 def segment_decoder(
@@ -929,8 +973,9 @@ def segment_decoder(
     on_error: str = "fail",
     quarantine_dir: Optional[str] = None,
 ):
-    """The decode of one segment, ``decode(name, content)`` → its pandas
-    frames, shared by every decode task. Build it while planning the job,
+    """The decode of one segment, ``decode(name, content)`` → (its
+    ``arrow_schema`` RecordBatches, whether the scalar decoder made them),
+    shared by every decode task. Build it while planning the job,
     not inside a task: ``vectorized=None`` then reads the planning
     process's ``SPARK_CDC_SCALAR_DECODE`` (``"1"`` picks the scalar
     decoder). The vectorized kernel (``vector.
@@ -942,12 +987,12 @@ def segment_decoder(
         vectorized = os.environ.get("SPARK_CDC_SCALAR_DECODE", "") != "1"
 
     def decode(name: str, content: bytes):
-        frames = None
+        batches = None
         if vectorized:
             from .vector import decode_segment_fast
 
             try:
-                frames = decode_segment_fast(
+                batches = decode_segment_fast(
                     content, name, spec, before_values=before_values,
                     xa_outcomes=xa_outcomes,
                     attach_origin_query=attach_origin_query,
@@ -956,18 +1001,18 @@ def segment_decoder(
             except Exception:
                 if on_error != "quarantine":
                     raise
-        if frames is None:
+        if batches is None:
             return _FileDecoder(
                 spec, xa_outcomes=xa_outcomes,
                 attach_origin_query=attach_origin_query,
                 attach_partition_id=attach_partition_id,
                 on_error=on_error, quarantine_dir=quarantine_dir,
-            ).decode_file(name, content)
+            ).decode_file(name, content), True
         if quarantine_dir is not None:
             # decoded clean: drop any stale dead-letter record a prior
             # run left behind
             _FileDecoder(spec, quarantine_dir=quarantine_dir)._write_quarantine(name)
-        return frames
+        return batches, False
 
     return decode
 
@@ -1010,7 +1055,7 @@ def segment_tasks(spark: SparkSession, sizes: dict[str, int]) -> DataFrame:
     """The segments ``{path: bytes}`` as a one-column ``path`` frame, packed
     into one task per core (``pack_segments``). Built in the JVM (a range
     of task ids, each exploding its path list from one literal plan), so a
-    ``mapInPandas`` over it holds one Python worker per task and no Python
+    ``mapInArrow`` over it holds one Python worker per task and no Python
     stage feeds it."""
     tasks = pack_segments(
         sizes, min(len(sizes), spark.sparkContext.defaultParallelism)
@@ -1097,26 +1142,27 @@ def discover_columns(spark: SparkSession, binlog_dir: str, spec: TableSpec) -> l
     target table across all segments (additive evolution)."""
     files = segment_tasks(spark, _list_segments(binlog_dir))
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            names: list[str] = []
-            for path in pdf["path"]:
+    def scan(tasks: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for task in tasks:
+            names: set[str] = set()
+            for path in task.column("path").to_pylist():
                 for tm in scan_table_maps(_read_bytes(path)):
                     if (
                         tm["database_name"] == spec.database
                         and tm["table_name"] == spec.table
                         and tm["column_names"]
                     ):
-                        for c in tm["column_names"]:
-                            names.append(c)
-            yield pd.DataFrame({"column_name": sorted(set(names))})
+                        names.update(tm["column_names"])
+            yield pa.RecordBatch.from_pydict(
+                {"column_name": A.from_objects(sorted(names), pa.string())}
+            )
 
-    found = (
-        files.mapInPandas(scan, schema="column_name string")
+    found = {
+        r["column_name"]
+        for r in files.mapInArrow(scan, schema="column_name string")
         .distinct()
-        .toPandas()["column_name"]
-        .tolist()
-    )
+        .collect()
+    }
     # preserve canonical order, drop unknowns
     ordered = [c[0] for c in spec.columns if c[0] in found]
     return ordered

@@ -7,7 +7,7 @@ COM_BINLOG_DUMP relay or a Debezium raw-passthrough produces). This
 source decodes that table directly:
 
     frames(stream string, offset bigint, frame binary)
-      → groupBy(stream) → applyInPandas:
+      → groupBy(stream) → applyInArrow:
            sort by offset, concatenate frames into a synthetic segment
            (magic + frames — byte-identical to the file form, since the
            19-byte headers already frame the events; binlog_reader.rs:39-58)
@@ -28,11 +28,17 @@ from __future__ import annotations
 
 from typing import Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from .constants import MAGIC_NUMBER, EventType
-from .decoder import TRANSCRIPTS, TableSpec, change_event_schema, segment_decoder
+from .decoder import (
+    TRANSCRIPTS,
+    TableSpec,
+    arrow_schema,
+    change_event_schema,
+    segment_decoder,
+)
 
 
 def decode_event_frames(
@@ -58,14 +64,15 @@ def decode_event_frames(
     supply ``checksum_type``.
     """
     schema = change_event_schema(spec)
+    out_schema = arrow_schema(spec)
     decode_segment = segment_decoder(spec, vectorized)
 
-    def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def decode_group(group: pa.Table) -> pa.Table:
         from .encoder import BinlogWriter
 
-        pdf = pdf.sort_values(offset_col, kind="mergesort")
-        name = str(pdf[stream_col].iloc[0])
-        blobs = [bytes(b) for b in pdf[frame_col]]
+        group = group.sort_by(offset_col)
+        name = group.column(stream_col)[0].as_py()
+        blobs = group.column(frame_col).to_pylist()
         fde_i = next(
             (
                 i
@@ -78,12 +85,10 @@ def decode_event_frames(
             blobs.insert(0, blobs[fde_i])  # checksum mode applies stream-wide
         elif fde_i is None and checksum_type is not None:
             blobs.insert(0, BinlogWriter.make_fde_frame(checksum_type))
-        out = list(decode_segment(name, MAGIC_NUMBER + b"".join(blobs)))
-        if not out:
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        return pd.concat(out, ignore_index=True) if len(out) > 1 else out[0]
+        batches, _scalar = decode_segment(name, MAGIC_NUMBER + b"".join(blobs))
+        return pa.Table.from_batches(list(batches), schema=out_schema)
 
-    return frames.groupBy(stream_col).applyInPandas(decode_group, schema=schema)
+    return frames.groupBy(stream_col).applyInArrow(decode_group, schema=schema)
 
 
 def split_segment_frames(content: bytes) -> list[tuple[int, bytes]]:

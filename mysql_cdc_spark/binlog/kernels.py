@@ -2,7 +2,7 @@
 
 Each kernel re-implements the exact decode semantics of the reference's Rust
 functions (cited per kernel) as offset-based functions over ``bytes`` —
-designed to be called inside Arrow-batched ``mapInPandas`` decode tasks, with
+designed to be called inside Arrow-batched ``mapInArrow`` decode tasks, with
 numpy used for the bitmap-heavy paths. The golden byte fixtures from the
 reference's inline unit tests pin byte-exactness (see tests/test_kernels.py).
 

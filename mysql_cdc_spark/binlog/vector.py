@@ -1,6 +1,7 @@
 """Vectorized (two-pass numpy) binlog segment decode — the decode hot
 loop's scale path (north_star: "decoded in batch via vectorized
-Arrow/pandas UDFs, never per-row Python").
+Arrow UDFs, never per-row Python"): segment bytes in, ``pa.RecordBatch``
+of the declared change-event schema out.
 
 Pass 1 — frame chain: a minimal sequential walk records each frame's
 offset (frames chain via ``event_length``; event_header.rs:24,
@@ -36,7 +37,7 @@ uncommitted tail (xid NULL) when its group reaches end-of-file.
 outside the fast path (decimals beyond decimal128's 38 digits, SET
 columns with >8 members when a string lookup is required, unsupported
 column types) — the caller falls back to the scalar ``_FileDecoder``,
-which remains the semantics reference; tests assert frame-level equality
+which remains the semantics reference; tests assert batch-level equality
 between the two. Partial row images decode as presence-pattern
 subgroups; tables wider than 64 columns use multi-word presence bitmaps;
 decimals with precision 19–38 accumulate in two 64-bit limbs — all on
@@ -48,8 +49,9 @@ from __future__ import annotations
 from typing import Iterator, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
+from . import arrays as A
 from .constants import (
     EVENT_HEADER_SIZE,
     FIRST_EVENT_POSITION,
@@ -798,23 +800,21 @@ def _concat_image_cols(step_cols: list, specs: list[_ColSpec]):
 def _strings_from_slices(
     data: np.ndarray, starts, lens, nulls, binary: bool = False,
     codec: Optional[str] = None,
-) -> np.ndarray:
+) -> pa.Array:
     """One-gather Arrow large_utf8/large_binary build from (start, len)
-    slices → object ndarray (str|bytes / None). The per-row Python objects
-    are materialized by Arrow's C path, not a Python loop.
+    slices: the bytes are gathered once into the data buffer, with no
+    per-row Python objects.
 
     ``codec``: non-UTF-8 charset lane (TABLE_MAP charset metadata) —
     builds the binary array on the same one-gather path, then decodes
-    through pandas' C-looped ``str.decode``. UTF-8 (the overwhelming
-    default) stays on the zero-copy Arrow validation path."""
-    import pyarrow as pa
-
+    each value in the column's charset. UTF-8 (the overwhelming default)
+    stays on the zero-copy Arrow validation path."""
     if codec is not None and codec != "utf-8" and not binary:
-        import pandas as pd
-
         raw = _strings_from_slices(data, starts, lens, nulls, binary=True)
-        s = pd.Series(raw, dtype=object).str.decode(codec)
-        return s.where(s.notna(), None).to_numpy()
+        return A.from_objects(
+            [None if b is None else b.decode(codec) for b in raw.to_pylist()],
+            pa.large_utf8(),
+        )
 
     lens = np.where(nulls, 0, lens)
     total = int(lens.sum())
@@ -836,7 +836,9 @@ def _strings_from_slices(
         ],
         null_count=int(nulls.sum()),
     )
-    return arr.to_numpy(zero_copy_only=False)
+    if not binary:
+        arr.validate(full=True)  # invalid UTF-8 raises, like bytes.decode
+    return arr
 
 
 def _jsonb_texts_from_slices(
@@ -951,7 +953,7 @@ def _jsonb_texts_from_slices(
                 texts = _strings_from_slices(
                     data, ps[plain], sl[plain],
                     np.zeros(len(plain), dtype=bool),
-                )
+                ).to_pylist()
                 quoted = np.array(
                     ['"' + s + '"' for s in texts], dtype=object
                 )
@@ -1015,8 +1017,6 @@ def _entry_value_texts(
     nesting, large containers, opaque values, and escape-carrying
     strings stay undone (``v_done=False``) for the recursive fallback.
     Returns (vtexts, v_done)."""
-    import pandas as pd
-
     from . import jsonb as J
 
     E = len(vtype)
@@ -1105,12 +1105,10 @@ def _entry_value_texts(
                 any_esc = np.zeros(len(sl), dtype=bool)
             plain = np.nonzero(~any_esc)[0]
             if len(plain):
-                sv = _strings_from_slices(
+                sv = A.to_objects(_strings_from_slices(
                     data, ps[plain], sl[plain], np.zeros(len(plain), dtype=bool)
-                )
-                vtexts[ssel[plain]] = (
-                    '"' + pd.Series(sv, dtype=object) + '"'
-                ).to_numpy()
+                ))
+                vtexts[ssel[plain]] = '"' + sv + '"'
                 v_done[ssel[plain]] = True
 
     # one nesting level: small-container values (arrays/objects of
@@ -1146,8 +1144,6 @@ def _flat_small_array_texts(
     elements decode through the shared entry-value lanes, ``reduceat``
     joins per array. Returns (texts, ok); failed rows defer to the
     recursive fallback."""
-    import pandas as pd
-
     from . import jsonb as J
 
     n = len(bases)
@@ -1195,16 +1191,11 @@ def _flat_small_array_texts(
         return texts, ok
 
     good_e = arr_ok[oi]
-    pieces = (
-        pd.Series(np.where(ek[good_e] == 0, "", ", "), dtype=object)
-        + pd.Series(vtexts[good_e], dtype=object)
-    ).to_numpy()
+    pieces = np.where(ek[good_e] == 0, "", ", ").astype(object) + vtexts[good_e]
     g_cnt = cnt[good_obj]
     g_start = np.concatenate(([0], np.cumsum(g_cnt)[:-1]))
     joined = np.add.reduceat(pieces, g_start)
-    texts[obj[good_obj]] = (
-        "[" + pd.Series(joined, dtype=object) + "]"
-    ).to_numpy()
+    texts[obj[good_obj]] = "[" + joined + "]"
     return texts, ok
 
 
@@ -1221,8 +1212,6 @@ def _flat_small_object_texts(
     escape-carrying or duplicate keys, >2-byte string headers, bound
     overruns) are left for the recursive fallback, whose output the fuzz
     corpus pins this lane against."""
-    import pandas as pd
-
     from . import jsonb as J
 
     n = len(bases)
@@ -1274,9 +1263,9 @@ def _flat_small_object_texts(
         key_bytes_ok[sel[bad]] = False
         good = sel[~bad]
         if len(good):
-            keys[good] = _strings_from_slices(
+            keys[good] = A.to_objects(_strings_from_slices(
                 data, kstart[good], klen[good], np.zeros(len(good), dtype=bool)
-            )
+            ))
     e_ok &= key_bytes_ok
 
     # duplicate stored keys would collapse through the recursive path's
@@ -1309,107 +1298,90 @@ def _flat_small_object_texts(
 
     good_e = obj_ok[oi]
     pieces = (
-        pd.Series(np.where(ek[good_e] == 0, "", ", "), dtype=object)
-        + '"' + pd.Series(keys[good_e], dtype=object) + '": '
-        + pd.Series(vtexts[good_e], dtype=object)
-    ).to_numpy()
+        np.where(ek[good_e] == 0, "", ", ").astype(object)
+        + '"' + keys[good_e] + '": ' + vtexts[good_e]
+    )
     g_cnt = cnt[good_obj]
     g_start = np.concatenate(([0], np.cumsum(g_cnt)[:-1]))
     joined = np.add.reduceat(pieces, g_start)
-    texts[obj[good_obj]] = (
-        "{" + pd.Series(joined, dtype=object) + "}"
-    ).to_numpy()
+    texts[obj[good_obj]] = "{" + joined + "}"
     return texts, ok
 
 
-def _decimals_from_unscaled(vals: np.ndarray, nulls: np.ndarray, p: int, s: int) -> np.ndarray:
-    """Arrow decimal128(p, s) build from int64 unscaled values → object
-    ndarray of decimal.Decimal / None (C-side materialization). The
+def _decimals_from_unscaled(vals: np.ndarray, nulls: np.ndarray, p: int, s: int) -> pa.Array:
+    """Arrow decimal128(p, s) build from int64 unscaled values. The
     128-bit buffer is little-endian two's complement: low word = the
     int64, high word = its sign extension."""
-    import pyarrow as pa
-
     buf = np.empty((len(vals), 2), dtype="<i8")
     buf[:, 0] = vals
     buf[:, 1] = np.where(vals < 0, -1, 0)
     validity = np.packbits(~nulls, bitorder="little")
-    arr = pa.Array.from_buffers(
+    return pa.Array.from_buffers(
         pa.decimal128(p, s),
         len(vals),
         [pa.py_buffer(validity.tobytes()), pa.py_buffer(buf.tobytes())],
         null_count=int(nulls.sum()),
     )
-    return arr.to_numpy(zero_copy_only=False)
 
 
 def _decimals_from_limbs(
     hi: np.ndarray, lo: np.ndarray, nulls: np.ndarray, p: int, s: int
-) -> np.ndarray:
+) -> pa.Array:
     """Arrow decimal128(p, s) build from two's-complement 64-bit limb
-    pairs (little-endian: low word, then high word) → object ndarray of
-    decimal.Decimal / None."""
-    import pyarrow as pa
-
+    pairs (little-endian: low word, then high word)."""
     buf = np.empty((len(lo), 2), dtype="<u8")
     buf[:, 0] = lo
     buf[:, 1] = hi
     validity = np.packbits(~nulls, bitorder="little")
-    arr = pa.Array.from_buffers(
+    return pa.Array.from_buffers(
         pa.decimal128(p, s),
         len(lo),
         [pa.py_buffer(validity.tobytes()), pa.py_buffer(buf.tobytes())],
         null_count=int(nulls.sum()),
     )
-    return arr.to_numpy(zero_copy_only=False)
 
 
-def _dates_from_days(days: np.ndarray, nulls: np.ndarray) -> np.ndarray:
-    """Arrow date32 build from civil-day numbers → object ndarray of
-    datetime.date / None (C-side materialization)."""
-    import pyarrow as pa
-
+def _dates_from_days(days: np.ndarray, nulls: np.ndarray) -> pa.Array:
+    """Arrow date32 build from civil-day numbers."""
     validity = np.packbits(~nulls, bitorder="little")
-    arr = pa.Array.from_buffers(
+    return pa.Array.from_buffers(
         pa.date32(),
         len(days),
         [pa.py_buffer(validity.tobytes()), pa.py_buffer(days.astype(np.int32).tobytes())],
         null_count=int(nulls.sum()),
     )
-    return arr.to_numpy(zero_copy_only=False)
 
 
-def _vectors_from_slices(data: np.ndarray, starts, lens, nulls) -> np.ndarray:
-    """Batch MySQL 9 VECTOR blob → list[float]. Each value is a packed
-    little-endian float32 array (WL#16081), so the whole lane is one
-    repeat-gather: every valid slice's bytes concatenate into a single
-    contiguous buffer viewed as <f4 and split back per row — no per-value
-    parse at all. Python floats from <f4 are exact widenings (bit-exact
-    round-trip through Arrow's float32 cast). A slice length not
-    divisible by 4 is corrupt and raises, like the scalar converter."""
-    n = len(starts)
+def _vectors_from_slices(data: np.ndarray, starts, lens, nulls) -> pa.Array:
+    """Batch MySQL 9 VECTOR blob → Arrow ``list<float>``. Each value is a
+    packed little-endian float32 array (WL#16081), so the whole lane is
+    one repeat-gather: every valid slice's bytes concatenate into the
+    list's float32 child buffer, and the slice lengths become its offsets
+    — no per-value parse at all, bit patterns kept exactly. A slice
+    length not divisible by 4 is corrupt and raises, like the scalar
+    converter."""
     starts = np.asarray(starts, dtype=np.int64)
-    lens = np.asarray(lens, dtype=np.int64)
-    out = np.empty(n, dtype=object)  # SQL NULL → None
-    valid = ~np.asarray(nulls)
-    idx = np.nonzero(valid)[0]
-    if not len(idx):
-        return out
-    vl = lens[idx]
-    if (vl % 4).any():
-        bad = idx[(vl % 4) != 0][0]
+    lens = np.where(np.asarray(nulls), 0, np.asarray(lens, dtype=np.int64))
+    if (lens % 4).any():
+        bad = np.nonzero(lens % 4)[0][0]
         raise ValueError(
             f"VECTOR payload length {int(lens[bad])} not divisible by 4"
         )
-    within = np.arange(int(vl.sum()), dtype=np.int64) - np.repeat(
-        np.cumsum(vl) - vl, vl
+    offsets = np.zeros(len(lens) + 1, dtype=np.int32)
+    np.cumsum(lens // 4, out=offsets[1:])
+    total = int(lens.sum())
+    within = np.arange(total, dtype=np.int64) - np.repeat(
+        np.cumsum(lens) - lens, lens
     )
-    packed = data[np.repeat(starts[idx], vl) + within]
-    floats = packed.tobytes()
-    values = np.frombuffer(floats, dtype="<f4")
-    bounds = np.cumsum(vl // 4)[:-1]
-    for i, chunk in zip(idx, np.split(values, bounds)):
-        out[i] = chunk.tolist()
-    return out
+    packed = data[np.repeat(starts, lens) + within]
+    floats = pa.Array.from_buffers(
+        pa.float32(), total // 4, [None, pa.py_buffer(packed.tobytes())]
+    )
+    bitmap, n_null = A.validity(np.asarray(nulls))
+    return pa.Array.from_buffers(
+        pa.list_(pa.field("element", pa.float32())), len(lens),
+        [bitmap, pa.py_buffer(offsets)], null_count=n_null, children=[floats],
+    )
 
 
 def _geometry_texts_from_slices(
@@ -1462,23 +1434,16 @@ def _geometry_texts_from_slices(
             pt, s, srid = pt[finite], s[finite], srid[finite]  # finite-only
             xs, ys = xs[finite], ys[finite]
             if len(pt):
-                import pandas as pd
-
-                # object-space concat (pandas' C string-add) — ~4× the
-                # throughput of an np.char.add chain, which rescans its
-                # widening U-dtype operands per call
-                tx = pd.Series(_wkt_coord_texts(xs), dtype=object)
-                ty = pd.Series(_wkt_coord_texts(ys), dtype=object)
-                texts = ("POINT(" + tx + " " + ty + ")").to_numpy()
+                # object-space concat (per-element str add in numpy's C
+                # loop) — ~4× the throughput of an np.char.add chain,
+                # which rescans its widening U-dtype operands per call
+                tx = _wkt_coord_texts(xs).astype(object)
+                ty = _wkt_coord_texts(ys).astype(object)
+                texts = "POINT(" + tx + " " + ty + ")"
                 with_srid = srid != 0
                 if with_srid.any():
-                    pre = pd.Series(
-                        srid[with_srid].astype("U10"), dtype=object
-                    )
-                    texts[with_srid] = (
-                        "SRID=" + pre + ";"
-                        + pd.Series(texts[with_srid], dtype=object)
-                    ).to_numpy()
+                    pre = srid[with_srid].astype("U10").astype(object)
+                    texts[with_srid] = "SRID=" + pre + ";" + texts[with_srid]
                 out[pt] = texts
                 handled[pt] = True
 
@@ -1503,21 +1468,13 @@ def _wkt_coord_texts(v: np.ndarray) -> np.ndarray:
 def _canonical_column(
     colref, kind: str, data: np.ndarray, n: int, codec: Optional[str] = None
 ):
-    """Convert a decoded image column to a canonical-kind descriptor:
-    ("obj", arr) | ("dt", arr) | ("f64", arr) | ("int_null", vals, mask),
-    or None on a kind/type mismatch (→ scalar fallback). ``codec`` is the
-    column's charset (string kinds only)."""
+    """Convert a decoded image column to a canonical-kind descriptor —
+    ("arrow", pa.Array) | ("obj", object ndarray) | ("num", values,
+    null mask) with timestamps as int64 microseconds | ("null", n) —
+    or None on a kind/type mismatch (→ scalar fallback). ``codec`` is
+    the column's charset (string kinds only)."""
     if colref is None:  # column absent from this table map → typed nulls
-        if kind in (
-            "str", "binary", "date", "decimal", "time", "json", "geometry",
-            "vector",
-        ):
-            return ("obj", np.full(n, None, dtype=object))
-        if kind in ("ts_millis", "datetime"):
-            return ("dt", np.full(n, np.datetime64("NaT"), dtype="datetime64[ms]"))
-        if kind == "double":
-            return ("f64", np.full(n, np.nan, dtype=np.float64))
-        return ("int_null", np.zeros(n, dtype=np.int64), np.ones(n, dtype=bool))
+        return ("null", n)
     ckind, a, b, nulls = colref
     if kind == "str":
         if ckind == "objv":  # ENUM/SET member strings, pre-materialized
@@ -1527,12 +1484,12 @@ def _canonical_column(
             # the column's charset (binary collation / metadata-less logs
             # default to utf-8 — scalar-path parity)
             return (
-                "obj",
+                "arrow",
                 _strings_from_slices(data, a, b, nulls, codec=codec or "utf-8"),
             )
         if ckind != "bytes":
             return None
-        return ("obj", _strings_from_slices(data, a, b, nulls, codec=codec))
+        return ("arrow", _strings_from_slices(data, a, b, nulls, codec=codec))
     if kind == "time":
         if ckind != "objv":
             return None
@@ -1540,7 +1497,7 @@ def _canonical_column(
     if kind == "binary":
         if ckind != "blob":
             return None
-        return ("obj", _strings_from_slices(data, a, b, nulls, binary=True))
+        return ("arrow", _strings_from_slices(data, a, b, nulls, binary=True))
     if kind == "json":
         if ckind != "blob":
             return None
@@ -1552,43 +1509,52 @@ def _canonical_column(
     if kind == "vector":
         if ckind != "blob":
             return None
-        return ("obj", _vectors_from_slices(data, a, b, nulls))
+        return ("arrow", _vectors_from_slices(data, a, b, nulls))
     if kind == "date":
         if ckind != "date32":
             return None
-        return ("obj", _dates_from_days(a, nulls))
+        return ("arrow", _dates_from_days(a, nulls))
     if kind == "decimal":
         if ckind == "dec":
-            return ("obj", _decimals_from_unscaled(a, nulls, b[0], b[1]))
+            return ("arrow", _decimals_from_unscaled(a, nulls, b[0], b[1]))
         if ckind == "dec128":
-            return ("obj", _decimals_from_limbs(a[0], a[1], nulls, b[0], b[1]))
+            return ("arrow", _decimals_from_limbs(a[0], a[1], nulls, b[0], b[1]))
         return None
     if kind == "ts_millis":
         if ckind != "i64":
             return None
-        out = a.astype("datetime64[ms]")
-        out[nulls] = np.datetime64("NaT")
-        return ("dt", out)
+        return ("num", np.where(nulls, 0, a * 1000), nulls)
     if kind == "datetime":
         if ckind != "wall_ms":
             return None
-        out = a.astype("datetime64[ms]")
-        out[nulls] = np.datetime64("NaT")
-        return ("dt", out)
+        return ("num", np.where(nulls, 0, a * 1000), nulls)
     if kind == "double":
         if ckind == "f64":
-            out = a.copy()
-        elif ckind == "i64":
-            out = a.astype(np.float64)
-        else:
-            return None
-        out[nulls] = np.nan
-        return ("f64", out)
+            return ("num", a, nulls)
+        if ckind == "i64":
+            return ("num", a.astype(np.float64), nulls)
+        return None
     if kind == "int":
         if ckind != "i64":
             return None
-        return ("int_null", a.astype(np.int64), nulls.copy())
+        return ("num", a.astype(np.int64), nulls)
     return None
+
+
+def _to_arrow(part, typ: pa.DataType) -> pa.Array:
+    """One group's column descriptor (``_canonical_column``'s, or the
+    metadata columns' ("const", value, n)) as an Arrow array of the
+    declared type ``typ``."""
+    tag = part[0]
+    if tag == "arrow":
+        return part[1] if part[1].type == typ else part[1].cast(typ)
+    if tag == "num":
+        return A.from_numpy(part[1], typ, part[2])
+    if tag == "const":
+        return A.repeat(part[1], typ, part[2])
+    if tag == "null":
+        return pa.nulls(part[1], typ)
+    return A.from_objects(part[1], typ)  # "obj": Python strings
 
 
 def _group_row_events(prep, data, etype, ps):
@@ -1916,8 +1882,10 @@ def decode_segment_fast(
     before_values: str = "full", xa_outcomes=None,
     attach_origin_query: bool = False,
     attach_partition_id: bool = False,
-) -> Optional[list[pd.DataFrame]]:
-    """Decode one segment fully vectorized; None → caller falls back.
+) -> Optional[list[pa.RecordBatch]]:
+    """Decode one segment fully vectorized into RecordBatches of the
+    declared change-event schema (``decoder.arrow_schema``); None →
+    caller falls back.
 
     ``before_values="keys"`` skips materializing before-image values for
     non-key columns (typed nulls instead): update before-images are
@@ -1982,7 +1950,7 @@ def decode_segment_fast(
     # partial row images decode as their own subgroups with a constant
     # column subset; O(schemas × 3 × patterns) subgroups total
     frames: list[dict] = []
-    srcs_lut = np.array(sources + [None], dtype=object)
+    srcs = A.from_objects(sources, pa.large_utf8())
     groups = _group_row_events(prep, data, etype, ps)
     if groups is None:
         return None
@@ -2037,21 +2005,22 @@ def decode_segment_fast(
         out: dict[str, tuple] = {}
         e_abs = ev[evt_local]
         l_abs = loc[evt_local]
-        out["pos"] = ("i64", fr["pos_out"][e_abs])
-        out["next_pos"] = ("i64", fr["next_pos"][e_abs])
-        hts = fr["ts"][e_abs]
-        tsv = hts.astype("datetime64[s]").astype("datetime64[ms]")
-        tsv[hts == 0] = np.datetime64("NaT")
-        out["ts"] = ("dt", tsv)
-        out["server_id"] = ("i64", fr["server_id"][e_abs])
-        out["op"] = ("obj", np.full(n_rows, op, dtype=object))
-        out["gtid_source"] = ("obj", srcs_lut[src_k[l_abs]])
-        out["gtid_seq"] = ("int_null", seq_k[l_abs].astype(np.int64), src_k[l_abs] < 0)
-        out["xid"] = ("int_null", xid_k[l_abs].astype(np.int64), ~hx_k[l_abs])
-        out["table_id"] = ("i64", np.full(n_rows, tm["table_id"], dtype=np.int64))
-        out["db"] = ("obj", np.full(n_rows, tm["database_name"], dtype=object))
-        out["tbl"] = ("obj", np.full(n_rows, tm["table_name"], dtype=object))
-        out["row_in_event"] = ("i32", row_in_event)
+        out["pos"] = ("num", fr["pos_out"][e_abs], None)
+        out["next_pos"] = ("num", fr["next_pos"][e_abs], None)
+        hts = fr["ts"][e_abs].astype(np.int64)
+        out["ts"] = ("num", hts * 1_000_000, hts == 0)
+        out["server_id"] = ("num", fr["server_id"][e_abs], None)
+        out["op"] = ("const", op, n_rows)
+        src = src_k[l_abs]
+        out["gtid_source"] = (
+            "arrow", srcs.take(A.from_numpy(src, pa.int64(), src < 0))
+        )
+        out["gtid_seq"] = ("num", seq_k[l_abs].astype(np.int64), src < 0)
+        out["xid"] = ("num", xid_k[l_abs].astype(np.int64), ~hx_k[l_abs])
+        out["table_id"] = ("const", tm["table_id"], n_rows)
+        out["db"] = ("const", tm["database_name"], n_rows)
+        out["tbl"] = ("const", tm["table_name"], n_rows)
+        out["row_in_event"] = ("num", row_in_event, None)
 
         # canonical presence masks from this subgroup's pattern
         # (schema-evolution: canonical columns absent from this map stay 0)
@@ -2064,8 +2033,8 @@ def decode_segment_fast(
                 bm |= 1 << ci
             if mi in rank_a:
                 am |= 1 << ci
-        out["before_present"] = ("i64", np.full(n_rows, bm, dtype=np.int64))
-        out["after_present"] = ("i64", np.full(n_rows, am, dtype=np.int64))
+        out["before_present"] = ("const", bm, n_rows)
+        out["after_present"] = ("const", am, n_rows)
 
         for prefix, img, rank in (
             ("before_", img_before, rank_b),
@@ -2093,29 +2062,20 @@ def decode_segment_fast(
             out["origin_query"] = ("obj", origin_k[l_abs])
         if part_k is not None:
             pk = part_k[l_abs]
-            out["partition_id"] = ("int_null", pk, pk < 0)
+            out["partition_id"] = ("num", pk, pk < 0)
             spk = srcpart_k[l_abs]
-            out["source_partition_id"] = ("int_null", spk, spk < 0)
-        out["_evt"] = ("i64", e_abs)
+            out["source_partition_id"] = ("num", spk, spk < 0)
+        out["_evt"] = ("num", e_abs, None)
         frames.append(out)
 
     if not frames:
         return []
 
-    # single final assembly: concatenate each column's numpy parts across
-    # groups, order globally by (event, row), build ONE DataFrame — no
-    # per-group pandas objects, no pd.concat object-NA scans
-    def _col(name):
-        parts = [g[name] for g in frames]
-        tag = parts[0][0]
-        if tag == "int_null":
-            vals = np.concatenate([p[1] for p in parts])
-            mask = np.concatenate([p[2] for p in parts])
-            return tag, vals, mask
-        return tag, np.concatenate([p[1] for p in parts]), None
-
-    _, evt_all, _ = _col("_evt")
-    _, row_all, _ = _col("row_in_event")
+    # single final assembly: each column's group parts become Arrow arrays
+    # of the declared type, concatenate, and reorder globally by (event,
+    # row) — one RecordBatch, no Python objects for the common kinds
+    evt_all = np.concatenate([g["_evt"][1] for g in frames])
+    row_all = np.concatenate([g["row_in_event"][1] for g in frames])
     order = np.lexsort((row_all, evt_all))
 
     # TRANSACTION_PAYLOAD splices give every embedded frame its wrapper's
@@ -2134,24 +2094,24 @@ def decode_segment_fast(
         offset = csum - csum[run_first]  # rows in earlier frames of the run
         row_adj = (row_all.astype(np.int64) + offset[evt_all]).astype(np.int32)
 
-    names = [k for k in frames[0] if k != "_evt"]
-    cols: dict[str, object] = {"src_file": np.full(len(order), src_file, dtype=object)}
-    for name in names:
-        if name == "row_in_event" and row_adj is not None:
-            cols[name] = row_adj[order]
+    from .decoder import arrow_schema
+
+    schema = arrow_schema(spec, attach_origin_query, attach_partition_id)
+    n = len(order)
+    take = (
+        None if bool((order == np.arange(n)).all())
+        else A.from_numpy(order, pa.int64())
+    )
+    arrays = [A.repeat(src_file, schema.field(0).type, n)]
+    for field in list(schema)[1:]:
+        if field.name == "row_in_event" and row_adj is not None:
+            arrays.append(A.from_numpy(row_adj[order], field.type))
             continue
-        tag, vals, mask = _col(name)
-        if tag == "int_null":
-            cols[name] = pd.arrays.IntegerArray(vals[order], mask=mask[order])
-        else:
-            cols[name] = vals[order]
-    df = pd.DataFrame(cols, copy=False)
-    if len(df) > batch_rows:
-        return [
-            df.iloc[i : i + batch_rows].reset_index(drop=True)
-            for i in range(0, len(df), batch_rows)
-        ]
-    return [df]
+        parts = [_to_arrow(g[field.name], field.type) for g in frames]
+        arr = parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
+        arrays.append(arr if take is None else arr.take(take))
+    batch = pa.RecordBatch.from_arrays(arrays, schema=schema)
+    return [batch.slice(i, batch_rows) for i in range(0, n, batch_rows)]
 
 
 def segment_row_stats(
@@ -2161,7 +2121,7 @@ def segment_row_stats(
     covered: Optional[list] = None,
     min_pos_exclusive: Optional[int] = None,
     xa_outcomes: Optional[dict] = None,
-) -> Optional[pd.DataFrame]:
+) -> Optional["pandas.DataFrame"]:
     """Stats-only decode: per-(file, gtid_source) committed-row counts,
     position bounds, and collapsed GTID-seq islands — the ledger/lineage
     inputs — WITHOUT materializing any column values (the wavefront runs
@@ -2174,6 +2134,8 @@ def segment_row_stats(
     ``min_pos_exclusive``. Returns None when the segment needs the scalar
     fallback.
     """
+    import pandas as pd
+
     prep = _prepare_segment(content, spec, xa_outcomes, src_file)
     empty = pd.DataFrame(
         {

@@ -4,7 +4,7 @@ resumable, metered.
 One micro-batch::
 
     list segment files (bounded by ledger position)          ST3
-      → decode_binlog_dir (mapInPandas, one task per core)   E1 semantics
+      → decode_binlog_dir (mapInArrow, one task per core)    E1 semantics
         keeps committed rows (xid NOT NULL)                  ST2
         of GTIDs the ledger does not cover                   ST5 idempotence
         after the resume (file, pos): SegmentStats.applied   ST3
@@ -743,6 +743,9 @@ class Replayer:
             net_rows = net.count()
             phase_t["decode_lww_s"] = round(time.time() - t_phase, 2)
             stats, markers, open_pos = seg_stats.collect(files)
+            # scalar-fallback segments and bytes read, from the same
+            # accumulator: no extra Spark action
+            decode_facts = seg_stats.decode_facts(files)
 
             # -- TRUNCATE/DROP/RENAME fences. A truncate clears ALL state
             # logged before it; rows after it rebuild from empty —
@@ -831,7 +834,8 @@ class Replayer:
             n_events = sum(r["events"] for r in stats)
             if n_events == 0:
                 self._commit_empty_batch(
-                    batch_id, files, planned, open_pos, covered, xa_info, t0
+                    batch_id, files, planned, open_pos, covered, xa_info, t0,
+                    decode_facts,
                 )
                 self._planned_sizes = planned
                 return BatchMetrics(
@@ -920,6 +924,7 @@ class Replayer:
             "seconds": round(seconds, 3),
             "events_per_sec": round(n_events / seconds, 1) if seconds else 0.0,
             **phase_t,
+            **decode_facts,
         }
         if max_event_ts > 0:
             metrics["max_event_ts"] = int(max_event_ts)
@@ -976,6 +981,7 @@ class Replayer:
     def _commit_empty_batch(
         self, batch_id: int, files: list[str], planned: dict[str, int],
         open_pos: dict[str, int], covered, xa_info, t0: float,
+        decode_facts: dict,
     ) -> None:
         """Ledger entry for a batch whose rows were ALL filtered out
         (covered duplicates, pre-seed events, or still-pending XA
@@ -1011,7 +1017,8 @@ class Replayer:
         else:
             cand_name, cand_pos = last_name, cand[1]
         metrics = {"events": 0, "net_rows": 0,
-                   "seconds": round(time.time() - t0, 3), "events_per_sec": 0.0}
+                   "seconds": round(time.time() - t0, 3), "events_per_sec": 0.0,
+                   **decode_facts}
         metrics.update(self._xa_metrics(xa_info))
         self.ledger.append(
             LedgerEntry(

@@ -13,8 +13,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
-
 import pytest
 
 from mysql_cdc_spark.binlog.charset import (
@@ -25,6 +23,7 @@ from mysql_cdc_spark.binlog.charset import (
 from mysql_cdc_spark.binlog.constants import ColumnType
 from mysql_cdc_spark.binlog.decoder import TableSpec, decode_binlog_dir
 from mysql_cdc_spark.binlog.encoder import BinlogWriter
+from decoded import to_pandas
 
 UUID = "24bc7850-2c16-11e6-a073-0242ac110001"
 
@@ -216,12 +215,12 @@ def test_fast_path_handles_charsets_without_fallback(tmp_path):
     frames = decode_segment_fast(content, "cs.000001", SPEC)
     assert frames is not None, "unexpected scalar fallback"
     fast = (
-        pd.concat(frames)
+        to_pandas(frames)
         .sort_values("after_id")
         .reset_index(drop=True)
     )
     dec = _FileDecoder(SPEC)
-    scalar = pd.concat(list(dec.decode_file(path, content))).sort_values(
+    scalar = to_pandas(dec.decode_file(path, content)).sort_values(
         "after_id"
     ).reset_index(drop=True)
     for col in ("after_name", "after_notes", "after_title", "after_payload"):

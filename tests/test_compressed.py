@@ -214,7 +214,7 @@ def _fixture_file(tmp_path, seed=21):
 
 def _concat(frames) -> pd.DataFrame:
     frames = list(frames)
-    return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame()
+    return to_pandas(frames)
 
 
 class TestVectorizedPath:
@@ -331,6 +331,7 @@ from mysql_cdc_spark.binlog.compressed import (  # noqa: E402
     parse_payload_fields,
     wrap_transaction_payload_segment,
 )
+from decoded import to_pandas
 
 
 class TestPayloadFields:

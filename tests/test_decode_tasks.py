@@ -4,14 +4,18 @@ the JVM.
 Pins (a) the packing rule (every segment once, at most ``k`` tasks,
 largest segments first, rotation order inside a task), (b) the plan
 shape — a Range source, no Python RDD stage, ``min(segments, cores)``
-tasks — and (c) that a packed decode yields the rows and ``SegmentStats``
-of a one-task-per-segment decode.
+tasks — (c) that a packed decode yields the rows and ``SegmentStats``
+of a one-task-per-segment decode, and (d) that a decode task on the
+vectorized path never imports pandas.
 """
 
 from __future__ import annotations
 
 import os
 import random
+import subprocess
+import sys
+import textwrap
 
 import pandas as pd
 
@@ -122,3 +126,44 @@ def test_packed_decode_matches_one_task_per_segment(spark, tmp_path):
         [t for _, s in one for t in s[1]],
         {k: v for _, s in one for k, v in s[2].items()},
     )
+
+
+def test_decode_task_never_imports_pandas(tmp_path):
+    """What a decode worker runs on a UTF-8 segment, in a fresh
+    interpreter: the decoder modules, ``segment_decoder`` and
+    ``SegmentStats.applied``. None of it loads pandas, so a Python worker
+    on the vectorized path holds only numpy and pyarrow."""
+    outdir = _binlog(tmp_path, 2)
+    path = os.path.join(outdir, sorted(os.listdir(outdir), key=_segment_sort_key)[0])
+    probe = textwrap.dedent(f"""
+        import os, sys
+        from mysql_cdc_spark.binlog import decoder, vector
+        from mysql_cdc_spark.binlog.decoder import (
+            TRANSCRIPTS, SegmentStats, segment_decoder,
+        )
+
+        class Acc:  # the accumulator's executor-side surface
+            value = {{}}
+
+            def add(self, v):
+                self.value.update(v)
+
+        path = {path!r}
+        name = os.path.basename(path)
+        content = open(path, "rb").read()
+        batches, scalar = segment_decoder(TRANSCRIPTS)(name, content)
+        stats = SegmentStats(Acc(), [], "", 0)
+        rows = sum(len(b) for b in stats.applied(
+            name, content, batches, TRANSCRIPTS, scalar))
+        assert not scalar and rows > 0, (scalar, rows)
+        assert stats.acc.value[name][0], "no ledger facts reported"
+        print("pandas" in sys.modules)
+    """)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root}
+    out = subprocess.run(
+        [sys.executable, "-c", probe], env=env, capture_output=True,
+        text=True, check=True,
+    )
+    assert out.stdout.strip() == "False"
+

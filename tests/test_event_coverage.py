@@ -8,6 +8,7 @@ from mysql_cdc_spark.binlog.constants import ColumnType
 from mysql_cdc_spark.binlog.encoder import BinlogWriter
 from mysql_cdc_spark.binlog.reader import BinlogFileReader
 from mysql_cdc_spark.gtid import MariaGtid
+from decoded import to_pandas
 
 
 def _decode_kinds(writer: BinlogWriter) -> list[tuple[str, object]]:
@@ -144,7 +145,6 @@ class TestTimeKind:
     def test_time2_decodes_via_spec(self):
         from mysql_cdc_spark.binlog.decoder import TableSpec, _FileDecoder
         from mysql_cdc_spark.binlog.vector import decode_segment_fast
-        import pandas as pd
 
         spec = TableSpec(
             database="db", table="t",
@@ -161,11 +161,11 @@ class TestTimeKind:
         w.write_xid(1)
         content = w.getvalue()
         frames = list(_FileDecoder(spec).decode_file("b", content))
-        got = pd.concat(frames, ignore_index=True)
+        got = to_pandas(frames)
         assert got["after_dur"].tolist() == ["13:45:59.250", "00:00:01.000"]
         fast = decode_segment_fast(content, "b", spec)
         assert fast is not None
-        fgot = pd.concat(fast, ignore_index=True)
+        fgot = to_pandas(fast)
         assert fgot["after_dur"].tolist() == got["after_dur"].tolist()
 
 

@@ -54,6 +54,7 @@ from mysql_cdc_spark.pipeline.start import (
     seed_ledger,
     start_state,
 )
+from decoded import to_pandas
 
 CTYPES = [COLUMN_TYPES[c][0] for c in PRE_COLUMNS]
 CMETA = [COLUMN_TYPES[c][1] for c in PRE_COLUMNS]
@@ -151,7 +152,7 @@ def _read_all(content: bytes, binlog_dir) -> dict:
     (binlog_dir / NAME).write_bytes(content)
     tms = scan_table_maps(content)
     xa = scan_xa(content, NAME) or {"verdicts": {}, "prepares": {}}
-    decoded = pd.concat(list(_FileDecoder(SPEC).decode_file(NAME, content)))
+    decoded = to_pandas(_FileDecoder(SPEC).decode_file(NAME, content))
     return {
         "reader": [(k, ev) for _h, _p, k, ev in BinlogFileReader(content, NAME)],
         "table_maps": [{k: v for k, v in t.items() if k != "pos"} for t in tms],
@@ -243,7 +244,7 @@ def _frames(content: bytes):
 def _decode(content: bytes, on_error: str) -> tuple[pd.DataFrame, list]:
     dec = _FileDecoder(SPEC, on_error=on_error)
     frames = list(dec.decode_file(NAME, content))
-    return pd.concat(frames, ignore_index=True), dec.quarantine
+    return to_pandas(frames), dec.quarantine
 
 
 def _torn_wrapper(content: bytes) -> tuple[bytes, int]:

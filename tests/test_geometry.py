@@ -11,7 +11,6 @@ from __future__ import annotations
 import os
 import struct
 
-import pandas as pd
 import pytest
 
 from mysql_cdc_spark.binlog import geometry as G
@@ -20,6 +19,7 @@ from mysql_cdc_spark.binlog.decoder import TableSpec, _FileDecoder
 from mysql_cdc_spark.binlog.encoder import BinlogWriter
 from mysql_cdc_spark.binlog.vector import decode_segment_fast
 from mysql_cdc_spark.pipeline.replay import Replayer
+from decoded import to_pandas
 
 
 def test_point_golden():
@@ -157,13 +157,10 @@ def test_geometry_scalar_vector_parity(tmp_path):
     _write_geo_stream(outdir)
     with open(os.path.join(outdir, "geo.000001"), "rb") as f:
         content = f.read()
-    sc = pd.concat(
-        list(_FileDecoder(PLACES).decode_file("geo.000001", content)),
-        ignore_index=True,
-    )
+    sc = to_pandas(_FileDecoder(PLACES).decode_file("geo.000001", content))
     fast_frames = decode_segment_fast(content, "geo.000001", PLACES)
     assert fast_frames is not None, "geometry kind fell back to scalar decode"
-    fa = pd.concat(fast_frames, ignore_index=True)
+    fa = to_pandas(fast_frames)
     assert len(sc) == len(fa)
     for col in ("after_place_id", "after_loc", "op"):
         assert sc[col].tolist() == fa[col].tolist(), f"{col} differs"

@@ -25,6 +25,7 @@ from mysql_cdc_spark.fixtures import (
     TABLE_ID_PRE,
     transcripts_pre_spec,
 )
+from decoded import to_pandas
 
 CTYPES = [COLUMN_TYPES[c][0] for c in PRE_COLUMNS]
 CMETA = [COLUMN_TYPES[c][1] for c in PRE_COLUMNS]
@@ -115,14 +116,9 @@ class TestDecodeStops:
         # INCIDENT_NONE (number 0) carries no loss signal — decode proceeds
         content = _stream(incident_number=0, message="")
         fast = decode_segment_fast(content, "binlog.000001", SPEC)
-        import pandas as pd
-
-        rows = pd.concat(fast, ignore_index=True)
+        rows = to_pandas(fast)
         assert sorted(rows["after_conv_id"]) == ["c1", "c2"]
-        slow = pd.concat(
-            _FileDecoder(SPEC).decode_file("binlog.000001", content),
-            ignore_index=True,
-        )
+        slow = to_pandas(_FileDecoder(SPEC).decode_file("binlog.000001", content))
         assert sorted(slow["after_conv_id"]) == ["c1", "c2"]
 
 
@@ -195,14 +191,6 @@ class TestHeartbeatV2:
         content = w.getvalue()
         kinds = {k: ev for _h, _p, k, ev in BinlogFileReader(content, "f")}
         assert kinds["heartbeat"]["binlog_position"] == 4096
-        import pandas as pd
-
-        fast = pd.concat(
-            decode_segment_fast(content, "binlog.000001", SPEC),
-            ignore_index=True,
-        )
-        slow = pd.concat(
-            _FileDecoder(SPEC).decode_file("binlog.000001", content),
-            ignore_index=True,
-        )
+        fast = to_pandas(decode_segment_fast(content, "binlog.000001", SPEC))
+        slow = to_pandas(_FileDecoder(SPEC).decode_file("binlog.000001", content))
         assert len(fast) == len(slow) == 1  # heartbeat contributes no rows

@@ -13,7 +13,6 @@ from __future__ import annotations
 import os
 from decimal import Decimal
 
-import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
 
@@ -23,6 +22,7 @@ from mysql_cdc_spark.binlog.decoder import TableSpec, _FileDecoder
 from mysql_cdc_spark.binlog.encoder import BinlogWriter
 from mysql_cdc_spark.binlog.vector import decode_segment_fast
 from mysql_cdc_spark.pipeline.replay import Replayer
+from decoded import to_pandas
 
 
 # ------------------------------------------------------- golden vectors
@@ -343,10 +343,10 @@ def test_json_scalar_vector_parity(tmp_path):
             content = f.read()
         d = _FileDecoder(DOCS)
         sc_frames = list(d.decode_file(name, content))
-        sc = pd.concat(sc_frames, ignore_index=True) if sc_frames else pd.DataFrame()
+        sc = to_pandas(sc_frames)
         fast_frames = decode_segment_fast(content, name, DOCS)
         assert fast_frames is not None, "json kind fell back to scalar decode"
-        fa = pd.concat(fast_frames, ignore_index=True)
+        fa = to_pandas(fast_frames)
         assert len(sc) == len(fa)
         for col in ("before_doc_id", "after_doc_id", "before_body", "after_body", "op"):
             assert sc[col].tolist() == fa[col].tolist(), f"{col} differs"

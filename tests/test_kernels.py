@@ -253,7 +253,7 @@ class TestTemporal:
 
 def test_decode_file_multi_flush_no_row_loss():
     """Regression: rows after the first Arrow-batch flush were lost (the
-    emit path aliased self.out across _flush_frame's rebind)."""
+    emit path aliased self.out across _flush_batch's rebind)."""
     from mysql_cdc_spark.binlog.decoder import _FileDecoder, TRANSCRIPTS
     from mysql_cdc_spark.fixtures import (
         count_change_events,

@@ -20,6 +20,7 @@ from mysql_cdc_spark.fixtures import (
     write_binlog_files,
 )
 from mysql_cdc_spark.pipeline.replay import Replayer
+from decoded import to_pandas
 
 UUID = "24bc7850-2c16-11e6-a073-0242ac110001"
 
@@ -138,11 +139,8 @@ def test_minimal_segments_take_the_fast_path(spark, minimal_stream):
             content = f.read()
         frames = decode_segment_fast(content, name, TRANSCRIPTS)
         assert frames is not None, f"{name}: unexpected scalar fallback"
-        b = pd.concat(frames, ignore_index=True)
-        a = pd.concat(
-            list(_FileDecoder(TRANSCRIPTS).decode_file(name, content)),
-            ignore_index=True,
-        )
+        b = to_pandas(frames)
+        a = to_pandas(_FileDecoder(TRANSCRIPTS).decode_file(name, content))
         assert len(a) == len(b)
         for col in a.columns:
             av = a[col]

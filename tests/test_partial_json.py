@@ -43,6 +43,7 @@ from mysql_cdc_spark.binlog.partial import (
 )
 from mysql_cdc_spark.binlog.reader import BinlogFileReader
 from mysql_cdc_spark.binlog.vector import decode_segment_fast
+from decoded import to_pandas
 
 # ------------------------------------------------------------------ paths
 
@@ -260,7 +261,7 @@ def _events(content: bytes):
 
 def _concat(frames) -> pd.DataFrame:
     frames = list(frames)
-    return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame()
+    return to_pandas(frames)
 
 
 # ------------------------------------------------------------- scalar reader

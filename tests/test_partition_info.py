@@ -27,6 +27,7 @@ from mysql_cdc_spark.fixtures import (
     TABLE_ID_PRE,
     transcripts_pre_spec,
 )
+from decoded import to_pandas
 
 CTYPES = [COLUMN_TYPES[c][0] for c in PRE_COLUMNS]
 CMETA = [COLUMN_TYPES[c][1] for c in PRE_COLUMNS]
@@ -103,36 +104,26 @@ class TestPartitionInfo:
             _stream(), "binlog.000001", SPEC, attach_partition_id=True
         )
         assert frames is not None
-        df = pd.concat(frames, ignore_index=True)
+        df = to_pandas(frames)
         assert _norm(df) == EXPECT
 
     def test_scalar_path(self):
         dec = _FileDecoder(SPEC, attach_partition_id=True)
-        df = pd.concat(
-            dec.decode_file("binlog.000001", _stream()), ignore_index=True
-        )
+        df = to_pandas(dec.decode_file("binlog.000001", _stream()))
         assert _norm(df) == EXPECT
 
     def test_scalar_partition_without_origin(self):
         # slot-indexed flush: opting into a later tuple slot without the
         # earlier origin_query one must not shift column consumption
         dec = _FileDecoder(SPEC, attach_partition_id=True)
-        df = pd.concat(
-            dec.decode_file("binlog.000001", _stream()), ignore_index=True
-        )
+        df = to_pandas(dec.decode_file("binlog.000001", _stream()))
         assert "origin_query" not in df.columns
         assert df["after_text"].iloc[0] == "born in p7"
 
     def test_off_by_default(self):
-        fast = pd.concat(
-            decode_segment_fast(_stream(), "binlog.000001", SPEC),
-            ignore_index=True,
-        )
+        fast = to_pandas(decode_segment_fast(_stream(), "binlog.000001", SPEC))
         assert "partition_id" not in fast.columns
-        slow = pd.concat(
-            _FileDecoder(SPEC).decode_file("binlog.000001", _stream()),
-            ignore_index=True,
-        )
+        slow = to_pandas(_FileDecoder(SPEC).decode_file("binlog.000001", _stream()))
         assert "partition_id" not in slow.columns
         assert "partition_id" not in change_event_schema(SPEC).fieldNames()
         assert change_event_schema(
@@ -143,9 +134,7 @@ class TestPartitionInfo:
         dec = _FileDecoder(
             SPEC, attach_origin_query=True, attach_partition_id=True
         )
-        df = pd.concat(
-            dec.decode_file("binlog.000001", _stream()), ignore_index=True
-        )
+        df = to_pandas(dec.decode_file("binlog.000001", _stream()))
         assert list(df.columns[-3:]) == [
             "origin_query", "partition_id", "source_partition_id"
         ]

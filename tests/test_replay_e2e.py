@@ -399,3 +399,46 @@ def test_lag_metric_in_ledger(spark, tmp_path):
         )
     # the final batch's high-water mark is the stream's newest event
     assert entries[-1].metrics["max_event_ts"] == expected_max
+
+
+def test_decode_facts_in_ledger(spark, tmp_path):
+    """A batch's entry records how many of its segments the scalar
+    decoder took and the segment bytes its decode tasks read, from the
+    decode tasks' own report. A SET column with more than 8 members and
+    a string lookup is outside the vectorized kernel; with 3 members it
+    is inside."""
+    from mysql_cdc_spark.binlog.constants import ColumnType
+    from mysql_cdc_spark.binlog.decoder import TableSpec
+    from mysql_cdc_spark.binlog.encoder import BinlogWriter
+    from mysql_cdc_spark.binlog.vector import decode_segment_fast
+
+    spec = TableSpec(
+        database="db", table="t",
+        columns=(("k", "string", "str"), ("flags", "string", "str")),
+        primary_key=("k",),
+    )
+    ctypes = [ColumnType.VARCHAR, ColumnType.SET]
+    binlog = tmp_path / "binlog"
+    binlog.mkdir()
+    for seq, members in ((1, [f"m{i}" for i in range(12)]), (2, ["a", "b", "c"])):
+        cmeta = [16, 2 if len(members) > 8 else 1]
+        w = BinlogWriter(f"b.00000{seq}")
+        w.write_mysql_gtid("24bc7850-2c16-11e6-a073-0242ac110001", seq)
+        w.write_table_map(3, "db", "t", ctypes, cmeta, [False, True],
+                          column_names=["k", "flags"],
+                          set_string_values=[members])
+        w.write_rows(3, ctypes, cmeta, [[f"r{seq}", 0b101]])
+        w.write_xid(seq)
+        (binlog / f"b.00000{seq}").write_bytes(w.getvalue())
+    segments = sorted(os.listdir(binlog))
+    contents = [(binlog / n).read_bytes() for n in segments]
+    assert [decode_segment_fast(c, n, spec) is None
+            for c, n in zip(contents, segments)] == [True, False]
+
+    rep = Replayer(spark, str(binlog), str(tmp_path / "store"), spec=spec)
+    assert rep.run_batch(segments).events == 2
+    metrics = rep.ledger.last().metrics
+    assert metrics["fallback_segments"] == 1
+    assert metrics["bytes_read"] == sum(len(c) for c in contents)
+    state = rep.read_state().orderBy("k").toPandas()
+    assert state["flags"].tolist() == ["m0,m2", "a,c"]

@@ -27,6 +27,7 @@ from mysql_cdc_spark.fixtures import (
     TABLE_ID_PRE,
     transcripts_pre_spec,
 )
+from decoded import to_pandas
 
 CTYPES = [COLUMN_TYPES[c][0] for c in PRE_COLUMNS]
 CMETA = [COLUMN_TYPES[c][1] for c in PRE_COLUMNS]
@@ -101,29 +102,21 @@ class TestAttribution:
         frames = decode_segment_fast(
             content, "binlog.000001", SPEC, attach_origin_query=True
         )
-        df = pd.concat(frames, ignore_index=True)
+        df = to_pandas(frames)
         assert _origin_map(df) == EXPECT
 
     @pytest.mark.parametrize("annotate", [False, True])
     def test_scalar_path(self, annotate):
         content = _stream(annotate)
         dec = _FileDecoder(SPEC, attach_origin_query=True)
-        df = pd.concat(
-            dec.decode_file("binlog.000001", content), ignore_index=True
-        )
+        df = to_pandas(dec.decode_file("binlog.000001", content))
         assert _origin_map(df) == EXPECT
 
     def test_off_by_default(self):
         content = _stream()
-        fast = pd.concat(
-            decode_segment_fast(content, "binlog.000001", SPEC),
-            ignore_index=True,
-        )
+        fast = to_pandas(decode_segment_fast(content, "binlog.000001", SPEC))
         assert "origin_query" not in fast.columns
-        slow = pd.concat(
-            _FileDecoder(SPEC).decode_file("binlog.000001", content),
-            ignore_index=True,
-        )
+        slow = to_pandas(_FileDecoder(SPEC).decode_file("binlog.000001", content))
         assert "origin_query" not in slow.columns
         assert "origin_query" not in change_event_schema(SPEC).fieldNames()
         assert (
@@ -135,12 +128,9 @@ class TestAttribution:
         # a query logged in txn 1 must not attach to txn 2's rows even
         # though no other ROWS_QUERY intervenes
         content = _stream()
-        df = pd.concat(
-            decode_segment_fast(
-                content, "binlog.000001", SPEC, attach_origin_query=True
-            ),
-            ignore_index=True,
-        )
+        df = to_pandas(decode_segment_fast(
+            content, "binlog.000001", SPEC, attach_origin_query=True
+        ))
         assert _origin_map(df)["c"] is None
 
     def test_long_statement_text_survives(self):
@@ -158,16 +148,12 @@ class TestAttribution:
         _rows(w, "x", "long", 1001)
         w.write_xid(1, timestamp=1001)
         content = w.getvalue()
-        fast = pd.concat(
-            decode_segment_fast(
-                content, "binlog.000001", SPEC, attach_origin_query=True
-            ),
-            ignore_index=True,
-        )
-        slow = pd.concat(
+        fast = to_pandas(decode_segment_fast(
+            content, "binlog.000001", SPEC, attach_origin_query=True
+        ))
+        slow = to_pandas(
             _FileDecoder(SPEC, attach_origin_query=True)
-            .decode_file("binlog.000001", content),
-            ignore_index=True,
+            .decode_file("binlog.000001", content)
         )
         assert fast["origin_query"].iloc[0] == sql
         assert slow["origin_query"].iloc[0] == sql
@@ -201,7 +187,7 @@ class TestFixtureCorpus:
                         attach_origin_query=True,
                     )
                 )
-        got = pd.concat(frames, ignore_index=True)
+        got = to_pandas(frames)
         got_set = sorted(
             zip(
                 got["gtid_seq"],

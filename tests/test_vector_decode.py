@@ -10,26 +10,35 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from mysql_cdc_spark.binlog.constants import ColumnType, EventType
-from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS, _FileDecoder
+from mysql_cdc_spark.binlog.decoder import (
+    TRANSCRIPTS,
+    TableSpec,
+    _FileDecoder,
+    change_event_schema,
+    decode_binlog_dir,
+)
 from mysql_cdc_spark.binlog.encoder import BinlogWriter
 from mysql_cdc_spark.binlog.vector import decode_segment_fast
 from mysql_cdc_spark.fixtures import generate_changelog, write_binlog_files
+from decoded import to_pandas
 
 
 def _scalar(content: bytes, name: str) -> pd.DataFrame:
     d = _FileDecoder(TRANSCRIPTS)
     frames = list(d.decode_file(name, content))
-    return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame()
+    return to_pandas(frames)
 
 
 def _fast(content: bytes, name: str):
     frames = decode_segment_fast(content, name, TRANSCRIPTS)
     if frames is None:
         return None
-    return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame()
+    return to_pandas(frames)
 
 
 def _canon(df: pd.DataFrame) -> dict:
@@ -57,17 +66,21 @@ def _canon(df: pd.DataFrame) -> dict:
     return out
 
 
-def _assert_parity(content: bytes, name: str):
-    a = _scalar(content, name)
-    b = _fast(content, name)
-    assert b is not None, "unexpected fallback"
-    assert len(a) == len(b)
-    if len(a) == 0:
-        return
-    assert list(a.columns) == list(b.columns)
-    ca, cb = _canon(a), _canon(b)
-    for col in ca:
-        assert ca[col] == cb[col], f"column {col} differs"
+def _assert_parity(content: bytes, name: str, spec=TRANSCRIPTS, **opts):
+    """Both decoders emit RecordBatches of exactly the declared schema,
+    ``to_arrow_schema(change_event_schema(spec, ...))``, holding the same
+    rows (``to_pylist``)."""
+    scalar = list(_FileDecoder(spec, **opts).decode_file(name, content))
+    fast = decode_segment_fast(content, name, spec, **opts)
+    assert fast is not None, "unexpected fallback"
+    schema = to_arrow_schema(change_event_schema(
+        spec, opts.get("attach_origin_query", False),
+        opts.get("attach_partition_id", False),
+    ))
+    for batch in scalar + fast:
+        assert batch.schema == schema
+    rows = [pa.Table.from_batches(b, schema).to_pylist() for b in (scalar, fast)]
+    assert rows[0] == rows[1]
 
 
 @pytest.fixture(scope="module")
@@ -81,9 +94,12 @@ def standard_files(tmp_path_factory):
 
 
 def test_parity_standard_stream(standard_files):
+    opt_in = {"attach_origin_query": True, "attach_partition_id": True}
     for p in standard_files:
         with open(p, "rb") as f:
-            _assert_parity(f.read(), os.path.basename(p))
+            content = f.read()
+        for opts in ({}, opt_in):
+            _assert_parity(content, os.path.basename(p), **opts)
 
 
 def test_parity_mariadb_and_no_begin(tmp_path):
@@ -224,8 +240,8 @@ class TestWidenedTypes:
         scalar_frames = list(_FileDecoder(spec).decode_file("b.000001", content))
         fast_frames = decode_segment_fast(content, "b.000001", spec)
         assert fast_frames is not None, "fast path should handle these types"
-        a = pd.concat(scalar_frames, ignore_index=True)
-        b = pd.concat(fast_frames, ignore_index=True)
+        a = to_pandas(scalar_frames)
+        b = to_pandas(fast_frames)
         assert len(a) == len(b) == 4
         ca, cb = _canon(a), _canon(b)
         for col in ca:
@@ -305,10 +321,10 @@ class TestPropertyParity:
             content = w.getvalue()
             d = _FileDecoder(spec)
             sf = list(d.decode_file("b.000001", content))
-            a = pd.concat(sf, ignore_index=True) if sf else pd.DataFrame()
+            a = to_pandas(sf)
             ff = decode_segment_fast(content, "b.000001", spec)
             assert ff is not None
-            b = pd.concat(ff, ignore_index=True) if ff else pd.DataFrame()
+            b = to_pandas(ff)
             assert len(a) == len(b)
             if len(a):
                 ca, cb = _canon(a), _canon(b)
@@ -345,10 +361,10 @@ class TestDecimalFastPath:
 
         from mysql_cdc_spark.binlog.decoder import _FileDecoder
 
-        a = pd.concat(list(_FileDecoder(spec).decode_file("b", content)), ignore_index=True)
+        a = to_pandas(_FileDecoder(spec).decode_file("b", content))
         frames = decode_segment_fast(content, "b", spec)
         assert frames is not None
-        b = pd.concat(frames, ignore_index=True)
+        b = to_pandas(frames)
         got_a = [None if v is None else Decimal(v) for v in a["after_amt"]]
         got_b = [None if v is None else Decimal(v) for v in b["after_amt"]]
         assert got_a == got_b
@@ -476,12 +492,10 @@ class TestWideTable:
     @pytest.mark.parametrize("minimal_update", [False, True])
     def test_70_column_fast_path_parity(self, minimal_update):
         content, spec = self._fixture(minimal_update)
-        a = pd.concat(
-            list(_FileDecoder(spec).decode_file("b", content)), ignore_index=True
-        )
+        a = to_pandas(_FileDecoder(spec).decode_file("b", content))
         frames = decode_segment_fast(content, "b", spec)
         assert frames is not None, "70-column table fell back to scalar"
-        b = pd.concat(frames, ignore_index=True)
+        b = to_pandas(frames)
         assert len(a) == len(b) == 6
         assert list(a.columns) == list(b.columns)
         ca, cb = _canon(a), _canon(b)
@@ -540,10 +554,10 @@ class TestDatetimeKind:
         w.write_xid(1)
         content = w.getvalue()
 
-        a = pd.concat(list(_FileDecoder(spec).decode_file("b", content)), ignore_index=True)
+        a = to_pandas(_FileDecoder(spec).decode_file("b", content))
         frames = decode_segment_fast(content, "b", spec)
         assert frames is not None, "datetime should be on the fast path"
-        b = pd.concat(frames, ignore_index=True)
+        b = to_pandas(frames)
         for col in ("after_dt2", "after_dt1"):
             av = [None if (v is None or pd.isna(v)) else pd.Timestamp(v) for v in a[col]]
             bv = [None if pd.isna(v) else pd.Timestamp(v) for v in b[col]]
@@ -601,10 +615,10 @@ class TestEnumSetTimeFastPath:
         )
 
     def _parity(self, content, spec):
-        a = pd.concat(list(_FileDecoder(spec).decode_file("b", content)), ignore_index=True)
+        a = to_pandas(_FileDecoder(spec).decode_file("b", content))
         frames = decode_segment_fast(content, "b", spec)
         assert frames is not None, "expected fast path"
-        b = pd.concat(frames, ignore_index=True)
+        b = to_pandas(frames)
         assert len(a) == len(b)
         ca, cb = _canon(a), _canon(b)
         for col in ca:
@@ -632,12 +646,9 @@ def test_before_values_keys_mode(standard_files):
     pipeline never reads them); update/delete keys still resolve."""
     with open(standard_files[0], "rb") as f:
         content = f.read()
-    full = pd.concat(
-        decode_segment_fast(content, "x", TRANSCRIPTS), ignore_index=True
-    )
-    keys_only = pd.concat(
-        decode_segment_fast(content, "x", TRANSCRIPTS, before_values="keys"),
-        ignore_index=True,
+    full = to_pandas(decode_segment_fast(content, "x", TRANSCRIPTS))
+    keys_only = to_pandas(
+        decode_segment_fast(content, "x", TRANSCRIPTS, before_values="keys")
     )
     assert len(full) == len(keys_only)
     ca, cb = _canon(full), _canon(keys_only)
@@ -693,3 +704,111 @@ class TestMulAdd128Property:
             assert got == acc * mult + add
 
         check()
+
+
+class TestEveryKernelKind:
+    """One table with a column of every canonical kind, through inserts,
+    updates, deletes and NULLs: both decoders emit the declared Arrow
+    schema with the same rows, and ``mapInArrow`` takes those batches
+    as they are (no type error on any column, timestamps included)."""
+
+    SPEC = TableSpec(
+        database="db", table="t",
+        columns=(
+            ("k", "string", "str"),
+            ("n", "int", "int"),
+            ("big", "bigint", "int"),
+            ("ts", "timestamp", "ts_millis"),
+            ("d", "double", "double"),
+            ("blob", "binary", "binary"),
+            ("day", "date", "date"),
+            ("amt", "decimal(12,3)", "decimal"),
+            ("wall", "timestamp_ntz", "datetime"),
+            ("dur", "string", "time"),
+            ("doc", "string", "json"),
+            ("loc", "string", "geometry"),
+            ("emb", "array<float>", "vector"),
+        ),
+        primary_key=("k",),
+    )
+    CTYPES = [
+        ColumnType.VARCHAR, ColumnType.LONG, ColumnType.LONGLONG,
+        ColumnType.TIMESTAMP2, ColumnType.DOUBLE, ColumnType.BLOB,
+        ColumnType.DATE, ColumnType.NEWDECIMAL, ColumnType.DATETIME2,
+        ColumnType.TIME2, ColumnType.JSON, ColumnType.GEOMETRY,
+        ColumnType.VECTOR,
+    ]
+    CMETA = [40, 0, 0, 3, 8, 2, 0, 12 | (3 << 8), 3, 3, 4, 4, 4]
+
+    @staticmethod
+    def _row(i: int, null: bool = False):
+        from mysql_cdc_spark.binlog import geometry as G
+        from mysql_cdc_spark.binlog import jsonb as J
+
+        if null:
+            return [f"k{i}"] + [None] * 12
+        return [
+            f"k{i}", 100 + i, (1 << 40) + i, 1700000000000 + 7 * i, i / 3,
+            bytes(range(i, i + 5)), (2024, 2, 1 + i), f"{i}.125",
+            (2023, 12, 31, 23, 59, i, 250), (i, 2, 3, 4),
+            J.encode_jsonb({"i": i, "tags": ["a", "b"], "ok": True}),
+            G.encode_geometry(("point", (i + 0.5, -i)), srid=4326 * (i % 2)),
+            np.arange(i, i + 3, dtype="<f4").tobytes(),
+        ]
+
+    def _segment(self) -> bytes:
+        names = [c[0] for c in self.SPEC.columns]
+        w = BinlogWriter("b.000001")
+        uuid = "24bc7850-2c16-11e6-a073-0242ac110001"
+        w.write_mysql_gtid(uuid, 1)
+        w.write_table_map(5, "db", "t", self.CTYPES, self.CMETA,
+                          [False] + [True] * 12, column_names=names)
+        w.write_rows(5, self.CTYPES, self.CMETA,
+                     [self._row(i) for i in range(1, 5)] + [self._row(9, True)])
+        w.write_xid(1)
+        w.write_mysql_gtid(uuid, 2)
+        w.write_table_map(5, "db", "t", self.CTYPES, self.CMETA,
+                          [False] + [True] * 12, column_names=names)
+        w.write_update_rows(5, self.CTYPES, self.CMETA,
+                            [(self._row(1), self._row(1, True)),
+                             (self._row(9, True), self._row(7))])
+        w.write_rows(5, self.CTYPES, self.CMETA, [self._row(2)],
+                     event_type=EventType.MYSQL_DELETE_ROWS_V2)
+        w.write_xid(2)
+        return w.getvalue()
+
+    def test_parity_on_pylist(self):
+        _assert_parity(self._segment(), "b.000001", self.SPEC)
+        rows = pa.Table.from_batches(
+            decode_segment_fast(self._segment(), "b.000001", self.SPEC)
+        ).to_pylist()
+        assert len(rows) == 8
+        assert rows[0]["after_ts"].tzinfo is not None  # UTC instant
+        assert rows[0]["after_wall"].tzinfo is None    # wall time (NTZ)
+        assert rows[0]["after_emb"] == [1.0, 2.0, 3.0]
+
+    @pytest.mark.parametrize("vectorized", [True, False])
+    def test_decode_binlog_dir_under_map_in_arrow(
+        self, spark, tmp_path, vectorized
+    ):
+        content = self._segment()
+        (tmp_path / "b.000001").write_bytes(content)
+        df = decode_binlog_dir(
+            spark, str(tmp_path), self.SPEC, vectorized=vectorized
+        )
+        assert df.count() == 8
+        want = pa.Table.from_batches(
+            decode_segment_fast(content, "b.000001", self.SPEC)
+        ).to_pylist()
+        got = [r.asDict() for r in df.orderBy("pos", "row_in_event").collect()]
+        plain = [c for c in df.columns if "ts" not in c and "wall" not in c]
+        assert [{c: r[c] for c in plain} for r in got] == [
+            {c: r[c] for c in plain} for r in want
+        ]
+        # session time zone UTC: the instants come back as the same epoch
+        epoch = df.selectExpr("unix_micros(after_ts) AS us").collect()
+        assert sorted(r.us for r in epoch if r.us is not None) == sorted(
+            int(r["after_ts"].timestamp() * 10**6)
+            for r in want if r["after_ts"] is not None
+        )
+

@@ -13,7 +13,6 @@ import os
 import struct
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from mysql_cdc_spark.binlog.constants import ColumnType
@@ -21,6 +20,7 @@ from mysql_cdc_spark.binlog.decoder import TableSpec, _FileDecoder, _vector_to_f
 from mysql_cdc_spark.binlog.encoder import BinlogWriter
 from mysql_cdc_spark.binlog.vector import _vectors_from_slices, decode_segment_fast
 from mysql_cdc_spark.pipeline.replay import Replayer
+from decoded import to_pandas
 
 
 def _pack(vals) -> bytes:
@@ -114,13 +114,10 @@ def test_vector_scalar_fast_parity(tmp_path):
     _write_vec_stream(outdir)
     with open(os.path.join(outdir, "vec.000001"), "rb") as f:
         content = f.read()
-    sc = pd.concat(
-        list(_FileDecoder(EMB).decode_file("vec.000001", content)),
-        ignore_index=True,
-    )
+    sc = to_pandas(_FileDecoder(EMB).decode_file("vec.000001", content))
     fast_frames = decode_segment_fast(content, "vec.000001", EMB)
     assert fast_frames is not None, "vector kind fell back to scalar decode"
-    fa = pd.concat(fast_frames, ignore_index=True)
+    fa = to_pandas(fast_frames)
     assert len(sc) == len(fa)
     for col in ("after_vec_id", "after_embedding", "op"):
         assert sc[col].tolist() == fa[col].tolist(), f"{col} differs"
@@ -157,7 +154,7 @@ def test_batch_lane_fuzz():
         pos += len(b) if b else 0
     got = _vectors_from_slices(
         buf, np.array(starts), np.array(lens), np.array(nulls)
-    )
+    ).to_pylist()
     for g, b in zip(got, blobs):
         if b is None:
             assert g is None
