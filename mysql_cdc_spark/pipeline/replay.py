@@ -8,9 +8,10 @@ One micro-batch::
         keeps committed rows (xid NOT NULL)                  ST2
         of GTIDs the ledger does not cover                   ST5 idempotence
         after the resume (file, pos): SegmentStats.applied   ST3
-      → net change per key: salted last-writer-wins          W1 + skew
-      → target MERGE (Iceberg or parquet snapshot)           S7
-      → ledger append (gtid set ∪, offsets, lineage, rates)  S6/ST1
+      → apply.py, the path every writer shares:
+        net change per key: salted last-writer-wins          W1 + skew
+        target MERGE (Iceberg or parquet snapshot)           S7
+        ledger append (gtid set ∪, offsets, lineage, rates)  S6/ST1
 
 The ledger append is the atomicity point: crash anywhere before it and the
 batch replays with identical results (deterministic total order ⇒ idempotent
@@ -34,20 +35,15 @@ from ..binlog.decoder import (
     decode_binlog_dir,
 )
 from ..gtid import GtidSet, Gtid, Uuid
+from . import apply
 from .ledger import Ledger, LedgerEntry
-from .order import (
-    ORDER_COLS,
-    gate_complete_transactions,
-    last_writer_wins,
-    last_writer_wins_partial,
-    with_change_key,
-)
+from .order import ORDER_COLS, gate_complete_transactions, with_change_key
 from .target import (
     BucketedParquetMergeTarget,
     delete_net,
+    diff_net,
+    insert_net,
     open_store,
-    snapshot_diff,
-    write_decision,
 )
 
 
@@ -213,10 +209,9 @@ class Replayer:
         transaction gate but BEFORE dedup/merge; positions and the GTID
         ledger still advance over them (skip-and-advance, exactly like a
         replica's SQL thread discarding an event after the IO thread
-        stored it) — so resume never re-reads skipped ranges. Batch
-        Replayer scope (like the statement fences); the streaming apply
-        tier consumes pre-decoded frames where the filter composes
-        upstream.
+        stored it) — so resume never re-reads skipped ranges. The
+        changelog streaming tier takes the same filter
+        (``stream_apply(ignore_server_ids=...)``).
 
         ``column_transforms``: ingest-time column rewrites — ``{column:
         SQL expression over the spec's column names}``, applied to every
@@ -268,20 +263,7 @@ class Replayer:
             if on_decode_error == "quarantine"
             else None
         )
-        if column_transforms:
-            key_hits = set(column_transforms) & set(spec.primary_key)
-            if key_hits:
-                raise ValueError(
-                    f"column_transforms must not rewrite primary-key "
-                    f"columns {sorted(key_hits)}: dedup and bucket "
-                    "placement key on the stored values"
-                )
-            unknown = set(column_transforms) - {c for c, _, _ in spec.columns}
-            if unknown:
-                raise ValueError(
-                    f"column_transforms for unknown columns: {sorted(unknown)}"
-                )
-        self.column_transforms = dict(column_transforms or {})
+        self.column_transforms = apply.check_transforms(spec, column_transforms)
         self.ledger = Ledger(store_dir)
         self._stats_acc = SegmentStats.accumulator(spark)  # one per Replayer
         self._planned_sizes: dict[str, int] = {}  # last commit's file sizes
@@ -415,23 +397,13 @@ class Replayer:
             # anti-join, so the bootstrap seed must cover the committed
             # GTIDs the snapshot embodies (header-only bounded scan).
             gtid_text = covered_gtids_until(self.binlog_dir, max_file, max_pos)
-        spec = self.spec
-        keys = list(spec.primary_key)
-        net = base_df.select(
-            *[F.col(k).cast(d).alias(k) for k, d, _ in spec.columns if k in keys],
-            F.lit("insert").alias("op"),
-            *[
-                F.col(n).cast(d).alias(f"after_{n}")
-                for n, d, _ in spec.columns
-                if n not in keys
-            ],
-            *[F.lit(0).cast("long").alias(c) for c in ORDER_COLS],
-        )
         rows = base_df.count()
         version = self.target.merge(
-            self.spark, net, self.ledger.current_snapshot_version()
+            self.spark, insert_net(base_df, self.spec),
+            self.ledger.current_snapshot_version(),
         )
-        self.ledger.append(
+        apply.commit(
+            self,
             LedgerEntry(
                 batch_id=0,
                 gtid_set_text=gtid_text,
@@ -444,7 +416,7 @@ class Replayer:
                     "bootstrap_rows": rows,
                     "start_strategy": type(at).__name__,
                 },
-            )
+            ),
         )
         return version
 
@@ -506,29 +478,13 @@ class Replayer:
                 [], ", ".join(f"{k} {d}" for k, d, _ in spec.columns
                               if k in keys)
             )
-        glob = (
-            "{" + ",".join(window_files) + "}"
-            if len(window_files) > 1 else window_files[0]
-        )
-        xa_verdicts = None
-        if self.xa == "batch":
-            xa_verdicts = (self._xa_scan_job(window_files) or {}).get(
-                "verdicts"
-            ) or None
-        ev = decode_binlog_dir(
-            self.spark, self.binlog_dir, spec, path_filter=glob,
-            before_values="keys", xa_outcomes=xa_verdicts,
-            on_error=self.on_decode_error,
-            quarantine_dir=self.quarantine_dir,
-            stats=SegmentStats(
+        ev = self._decode(
+            window_files, self._xa_scan_job(window_files),
+            SegmentStats(
                 self._stats_acc, covered_low.to_intervals(),
                 low.max_file, int(low.max_pos),
             ),
         )
-        if self.ignore_server_ids:
-            ev = ev.filter(
-                ~F.col("server_id").isin(list(self.ignore_server_ids))
-            )
         ev = ev.filter(
             ~_after_position_predicate(high_file, int(high_pos))
         )
@@ -586,16 +542,7 @@ class Replayer:
             .join(state_keys, on=keys, how="left_anti")
             .join(touched, on=keys, how="left_anti")
         )
-        net = survivors.select(
-            *[F.col(k) for k in keys],
-            F.lit("insert").alias("op"),
-            *[
-                F.col(n).alias(f"after_{n}")
-                for n, _, _ in spec.columns
-                if n not in keys
-            ],
-            *[F.lit(0).cast("long").alias(c) for c in ORDER_COLS],
-        )
+        net = insert_net(survivors, spec)
         rows = net.count()
         version = self.target.merge(
             self.spark, net, self.ledger.current_snapshot_version()
@@ -606,40 +553,31 @@ class Replayer:
 
     # -- one micro-batch ----------------------------------------------------
 
-    def _net_from_changes(self, changes: DataFrame) -> DataFrame:
-        """Net change per key — lazy plan. FULL images: whole-row LWW
-        (optionally salted); MINIMAL images: per-column LWW + carried
-        mask (order.last_writer_wins_partial)."""
-        spec = self.spec
-        keys = list(spec.primary_key)
-        if self.row_image == "minimal":
-            return last_writer_wins_partial(
-                changes, key_cols=keys, spec=spec, order_cols=self.order_cols
-            )
-        payload_cols = list(
-            dict.fromkeys(
-                ["op"]
-                + [f"after_{n}" for n, _, _ in spec.columns]
-                + self.order_cols
-                + ["src_file", "pos", "gtid_source", "gtid_seq", "xid"]
-            )
+    def _decode(
+        self, files: list[str], xa_info, stats=None, on_error=None
+    ) -> DataFrame:
+        """Change rows of ``files`` under the XA verdicts of ``xa_info``,
+        minus foreign server ids."""
+        glob = "{" + ",".join(files) + "}" if len(files) > 1 else files[0]
+        # before_values="keys": the merge pipeline reads only keys + after
+        # images (apply.prepare drops before_* right after keying), so the
+        # decoder skips the non-key before-image value builds — column
+        # pruning pushed into the byte decoder
+        changes = decode_binlog_dir(
+            self.spark, self.binlog_dir, self.spec, path_filter=glob,
+            before_values="keys",
+            xa_outcomes=(xa_info or {}).get("verdicts") or None,
+            on_error=on_error or self.on_decode_error,
+            quarantine_dir=self.quarantine_dir, stats=stats,
         )
-        return last_writer_wins(
-            changes,
-            key_cols=keys,
-            order_cols=self.order_cols,
-            payload_cols=payload_cols,
-            salt_buckets=self.salt_buckets,
-        )
-
-    def _apply_column_defaults(self, changes: DataFrame) -> DataFrame:
-        """Instant-ADD-COLUMN DEFAULT decode (see
-        ``order.apply_column_defaults``); spec defaults come from the DDL
-        registry (``binlog/ddl.py``, MINIMAL-metadata streams) or a
-        user-supplied ``TableSpec.defaults``."""
-        from .order import apply_column_defaults
-
-        return apply_column_defaults(changes, self.spec, self.row_image)
+        if self.ignore_server_ids:
+            # circular-replication guard (see __init__): drop foreign-
+            # origin rows after decode; the decode stats still count
+            # them, so positions and GTID coverage advance over them
+            changes = changes.filter(
+                ~F.col("server_id").isin(list(self.ignore_server_ids))
+            )
+        return changes
 
     def run_batch(self, files: list[str]) -> BatchMetrics:
         spark = self.spark
@@ -654,13 +592,9 @@ class Replayer:
         # read, or a retry would skip a grown file it never applied
         planned = {n: self._file_size(n) for n in files}
 
-        glob = "{" + ",".join(files) + "}" if len(files) > 1 else files[0]
         # XA pre-scan (xa="batch"): cross-file verdict map broadcast into
-        # the decode + the pending floor for the ledger. Runs as header
-        # walks in one task per core; non-XA segments reject on a
-        # C-level substring scan.
-        xa_info = self._xa_scan_job(files) if self.xa == "batch" else None
-        xa_verdicts = (xa_info or {}).get("verdicts") or None
+        # the decode + the pending floor for the ledger
+        xa_info = self._xa_scan_job(files)
         covered = self.ledger.covered_gtid_set()
         max_file, max_pos = self.ledger.resume_position()
         # the decode tasks yield only the rows this batch applies (the xid
@@ -670,58 +604,13 @@ class Replayer:
         seg_stats = SegmentStats(
             self._stats_acc, covered.to_intervals(), max_file, max_pos
         )
-        # before_values="keys": the merge pipeline reads only keys + after
-        # images (before_* are dropped right after with_change_key), so
-        # the decoder skips the non-key before-image value builds —
-        # column pruning pushed into the byte decoder
-        changes = decode_binlog_dir(
-            spark, self.binlog_dir, spec, path_filter=glob,
-            before_values="keys", xa_outcomes=xa_verdicts,
-            on_error=self.on_decode_error,
-            quarantine_dir=self.quarantine_dir,
-            stats=seg_stats,
+        changes = apply.prepare(
+            self._decode(files, xa_info, seg_stats), spec,
+            self.column_transforms, self.row_image,
         )
-        if self.ignore_server_ids:
-            # circular-replication guard (see __init__): drop foreign-
-            # origin rows after decode; the decode stats still count
-            # them, so positions and GTID coverage advance over them
-            changes = changes.filter(
-                ~F.col("server_id").isin(list(self.ignore_server_ids))
-            )
-
-        keys = list(spec.primary_key)
-        changes = with_change_key(changes, keys)
-        # before-images exist only to key deletes (row_data.rs:18-24); after
-        # with_change_key they are dead weight — drop them so every
-        # downstream shuffle carries half the text volume
-        changes = changes.select(
-            *keys,
-            "src_file", "pos", "next_pos", "ts", "server_id", "op",
-            "gtid_source", "gtid_seq", "xid", "table_id", "db", "tbl",
-            "row_in_event", "after_present",
-            *[f"after_{n}" for n, _, _ in spec.columns],
-        )
-        if self.column_transforms:
-            # ingest-time rewrites (see __init__): bind the spec's logical
-            # names over the after-images so user expressions read
-            # naturally, evaluate, write back — all codegen projections,
-            # no extra exchange
-            temps = [c for c, _, _ in spec.columns if c not in keys]
-            for c in temps:
-                changes = changes.withColumn(c, F.col(f"after_{c}"))
-            for col, expr in self.column_transforms.items():
-                changes = changes.withColumn(f"after_{col}", F.expr(expr))
-            changes = changes.drop(*temps)
-        changes = self._apply_column_defaults(changes)
 
         phase_t = {}
         current_version = self.ledger.current_snapshot_version()
-        merge_fn = (
-            self.target.merge_partial
-            if self.row_image == "minimal"
-            else self.target.merge
-        )
-
         # audit and history read the changes again after the merge: cache
         # them for those two, so the one decode pass below fills the cache
         # (the default path never caches the event stream)
@@ -732,7 +621,8 @@ class Replayer:
         # say the batch is non-empty, fence-free and stop-free does the
         # merge read the cached net. Nothing is written before that, so a
         # stop or an empty batch leaves the store untouched.
-        net = self._net_from_changes(changes)
+        net_args = (self.row_image, self.order_cols, self.salt_buckets)
+        net = apply.net_change(changes, spec, *net_args)
         if hasattr(self.target, "observe_buckets"):
             # the count below also records the touched buckets, so the
             # merge runs no job of its own to find them
@@ -776,7 +666,6 @@ class Replayer:
                     f"{d['kind'].upper()} involving {spec.database}.{spec.table}",
                 )
 
-            t_phase = time.time()
             base_version = current_version
             if fences:
                 # net was computed WITHOUT the fence: clear first
@@ -806,10 +695,11 @@ class Replayer:
                     .distinct()
                 )
                 net.unpersist()
-                net = self._net_from_changes(
+                net = apply.net_change(
                     changes.filter(after_fence).join(
                         pre_gtids, on=["gtid_source", "gtid_seq"], how="left_anti"
-                    )
+                    ),
+                    spec, *net_args,
                 ).persist()
                 net_rows = net.count()
                 phase_t["truncate_fences"] = len(fences)
@@ -844,58 +734,19 @@ class Replayer:
                 )
             # rows of ignored server ids count as events but leave net
             # empty: nothing to merge, the batch still advances the ledger
-            new_version = (
-                merge_fn(spark, net, base_version) if net_rows else base_version
+            new_version = apply.publish(
+                spark, self.target, net if net_rows else None, current_version,
+                base_version=base_version, row_image=self.row_image,
+                audit=self.audit, history=self.history, changes=changes,
+                batch_id=batch_id, phases=phase_t,
             )
-            phase_t["merge_s"] = round(time.time() - t_phase, 2)
-            t_phase = time.time()
-
-            # -- write-audit-publish window (pipeline/audit.py): the staged
-            # snapshot exists on disk but the ledger does not name it yet.
-            # Audit it now; a rejection unlinks every version this batch
-            # staged (merge, or truncate+merge on a fence batch) and raises
-            # with the store untouched — no ledger entry, no history rows, no
-            # view refresh, so a retry after the upstream fix starts clean.
-            if self.audit is not None:
-                from .audit import AuditContext
-
-                ctx = AuditContext(
-                    spark=spark,
-                    batch_id=batch_id,
-                    staged=self.target.read(spark, new_version),
-                    previous=self.target.read(spark, current_version),
-                    changes=changes,
-                    primary_key=tuple(spec.primary_key),
-                )
-                try:
-                    self.audit(ctx)
-                except BaseException:
-                    import shutil
-
-                    for v in range(current_version + 1, new_version + 1):
-                        shutil.rmtree(
-                            self.target.snapshot_path(v), ignore_errors=True
-                        )
-                    raise
-                phase_t["audit_s"] = round(time.time() - t_phase, 2)
-                t_phase = time.time()
-
-            # -- optional SCD2 history sink, BEFORE the ledger append: a crash
-            # between history commit and ledger leaves the batch un-acked, and
-            # the replay re-applies idempotently (scd2.apply_batch's outrank
-            # guard + (key, valid_from) anti-join)
-            if self.history is not None:
-                self.history.apply_batch(
-                    spark, changes, self.history.current_version()
-                )
-                phase_t["history_s"] = round(time.time() - t_phase, 2)
-                t_phase = time.time()
         finally:
             net.unpersist()
             changes.unpersist()
 
         # -- ledger gtid-set update (driver-side splice of the per-file
         # islands already collected with the stats — no extra job)
+        t_phase = time.time()
         batch_set = self._gtid_set_from_islands(stats)
         merged_set = covered.union(batch_set)
         phase_t["ledger_s"] = round(time.time() - t_phase, 2)
@@ -930,8 +781,8 @@ class Replayer:
             metrics["max_event_ts"] = int(max_event_ts)
             metrics["lag_s"] = round(time.time() - max_event_ts, 1)
         metrics.update(self._xa_metrics(xa_info))
-        metrics.update(self._write_metrics(current_version, new_version))
-        self.ledger.append(
+        apply.commit(
+            self,
             LedgerEntry(
                 batch_id=batch_id,
                 gtid_set_text=str(merged_set),
@@ -941,42 +792,13 @@ class Replayer:
                 committed_at=Ledger.now(),
                 partition_lineage=lineage,
                 metrics=metrics,
-            )
+            ),
         )
         self._planned_sizes = planned
-        for view in self.views:
-            view.refresh(self.spark, self.target, new_version)
-        # retention AFTER ledger + views: gc never touches the newest
-        # gc_keep versions, so the just-committed state (and everything a
-        # recovery fold can still need) stays readable
-        if self.gc_keep and hasattr(self.target, "gc"):
-            self.target.gc(keep_latest=self.gc_keep)
         return BatchMetrics(
             batch_id, files, n_events, net_rows, seconds,
             metrics["events_per_sec"], str(merged_set), lineage,
         )
-
-    def _write_metrics(self, current_version: int, new_version: int) -> dict:
-        """``bytes_written`` and ``buckets_written`` of the snapshot dirs
-        versions ``current_version+1..new_version`` created (a truncate
-        fence batch creates two), from a driver-side file listing, and the
-        write decision the manifests record (``write_decision``). Empty
-        for a target that commits inside its own engine (no
-        ``snapshot_path``)."""
-        if not hasattr(self.target, "snapshot_path"):
-            return {}
-        n_bytes = n_buckets = 0
-        for v in range(current_version + 1, new_version + 1):
-            for root, _dirs, names in os.walk(self.target.snapshot_path(v)):
-                n_bytes += sum(
-                    os.path.getsize(os.path.join(root, n)) for n in names
-                )
-                n_buckets += os.path.basename(root).startswith("_bucket=")
-        return {
-            "bytes_written": n_bytes,
-            "buckets_written": n_buckets,
-            **write_decision(self.target.store_dir, current_version, new_version),
-        }
 
     def _commit_empty_batch(
         self, batch_id: int, files: list[str], planned: dict[str, int],
@@ -1020,7 +842,8 @@ class Replayer:
                    "seconds": round(time.time() - t0, 3), "events_per_sec": 0.0,
                    **decode_facts}
         metrics.update(self._xa_metrics(xa_info))
-        self.ledger.append(
+        apply.commit(
+            self,
             LedgerEntry(
                 batch_id=batch_id,
                 gtid_set_text=str(covered),
@@ -1030,7 +853,7 @@ class Replayer:
                 committed_at=Ledger.now(),
                 partition_lineage=[],
                 metrics=metrics,
-            )
+            ),
         )
 
     def _file_size(self, name: str) -> int:
@@ -1080,15 +903,17 @@ class Replayer:
         pend = (last.metrics or {}).get("xa_pending_xids", {}) if last else {}
         return {k: (f, p) for k, (f, p) in pend.items()}
 
-    def _xa_scan_job(self, files: list[str]) -> dict:
-        """Distributed XA control scan (xa="batch"): header walks in one
-        task per core (``segment_tasks``; row payloads untouched, non-XA
-        segments reject on a substring scan), collected driver-side — the
-        result is O(#XA transactions), never O(rows). Pending prepares at
-        or before a batch-0 seed position are discarded: the seed
-        snapshot already reflects them, and replaying a pre-seed
-        transaction would regress state the position predicate normally
-        protects."""
+    def _xa_scan_job(self, files: list[str]) -> dict | None:
+        """Distributed XA control scan (xa="batch"; None otherwise):
+        header walks in one task per core (``segment_tasks``; row
+        payloads untouched, non-XA segments reject on a substring scan),
+        collected to the caller — the result is O(#XA transactions),
+        never O(rows). Pending prepares at or before a batch-0 seed position
+        are discarded: the seed snapshot already reflects them, and
+        replaying a pre-seed transaction would regress state the position
+        predicate normally protects."""
+        if self.xa != "batch":
+            return None
         from ..binlog.decoder import (
             _join_dir,
             _read_bytes,
@@ -1198,12 +1023,6 @@ class Replayer:
                 rewound = [n for n in rewound if n in keep]
             fpb = files_per_batch or max(1, len(new))
             result.batches.append(self.run_batch(rewound + new[:fpb]))
-            if self.auto_compact is not None:
-                stats = self.target.delta_stats(
-                    self.ledger.current_snapshot_version()
-                )
-                if any(n >= self.auto_compact for n in stats.values()):
-                    self.compact(min_deltas=self.auto_compact)
         return result
 
     def read_state(self, version: int | None = None) -> DataFrame:
@@ -1256,7 +1075,10 @@ class Replayer:
         dead-letter records are cleared by the re-decode itself (a clean
         segment decode rewrites-or-removes its record file). Records
         whose bytes are STILL broken re-quarantine and stay pending.
-        Audited like any publish when ``audit`` is set."""
+        Audited like any publish when ``audit`` is set; refused with an
+        SCD2 ``history`` attached, whose ``apply_batch`` closes each
+        stored current row with the batch's first event per key and so
+        cannot take an out-of-order one."""
         rows = self.read_quarantine().collect()  # tiny by construction
         if not rows:
             return 0
@@ -1267,46 +1089,28 @@ class Replayer:
                 "re-driving applies events out of order, and only the "
                 "outrank guard can do that without regressing newer state"
             )
+        if self.history is not None:
+            raise TypeError(
+                "redrive_quarantine cannot extend an SCD2 history: the "
+                "history closes each key's stored current row with a "
+                "batch's first event, so an out-of-order re-driven event "
+                "would leave history and live state disagreeing"
+            )
         spark = self.spark
-        spec = self.spec
         t0 = time.time()
         files = sorted({r["src_file"] for r in rows})
-        glob = "{" + ",".join(files) + "}" if len(files) > 1 else files[0]
-        xa_verdicts = None
-        if self.xa == "batch":
-            xa_verdicts = (self._xa_scan_job(files) or {}).get("verdicts") or None
-        ev = decode_binlog_dir(
-            spark, self.binlog_dir, spec, path_filter=glob,
-            before_values="keys", xa_outcomes=xa_verdicts,
-            on_error="quarantine", quarantine_dir=self.quarantine_dir,
+        ev = gate_complete_transactions(
+            self._decode(files, self._xa_scan_job(files), on_error="quarantine")
         )
-        ev = gate_complete_transactions(ev)
-        if self.ignore_server_ids:
-            ev = ev.filter(
-                ~F.col("server_id").isin(list(self.ignore_server_ids))
-            )
         # keep ONLY rows at the recorded dead-letter positions
         positions = spark.createDataFrame(
             [(r["src_file"], int(r["pos"])) for r in rows],
             "src_file string, pos long",
         )
         ev = ev.join(F.broadcast(positions), on=["src_file", "pos"], how="left_semi")
-        keys = list(spec.primary_key)
-        ev = with_change_key(ev, keys)
-        changes = ev.select(
-            *keys,
-            "src_file", "pos", "next_pos", "ts", "server_id", "op",
-            "gtid_source", "gtid_seq", "xid", "table_id", "db", "tbl",
-            "row_in_event", "after_present",
-            *[f"after_{n}" for n, _, _ in spec.columns],
+        changes = apply.prepare(
+            ev, self.spec, self.column_transforms, self.row_image
         )
-        if self.column_transforms:
-            temps = [c for c, _, _ in spec.columns if c not in keys]
-            for c in temps:
-                changes = changes.withColumn(c, F.col(f"after_{c}"))
-            for col, expr in self.column_transforms.items():
-                changes = changes.withColumn(f"after_{col}", F.expr(expr))
-            changes = changes.drop(*temps)
 
         # one action for counts + applied gtids (bounded by the record set)
         applied = (
@@ -1319,33 +1123,20 @@ class Replayer:
             return 0  # bytes still broken (re-quarantined) — stay pending
 
         batch_id = self.ledger.next_batch_id()
-        current_version = self.ledger.current_snapshot_version()
-        merge_fn = (
-            self.target.merge_partial
-            if self.row_image == "minimal"
-            else self.target.merge
-        )
-        new_version = merge_fn(spark, self._net_from_changes(changes), current_version)
-
-        if self.audit is not None:
-            from .audit import AuditContext
-
-            ctx = AuditContext(
-                spark=spark, batch_id=batch_id,
-                staged=self.target.read(spark, new_version),
-                previous=self.target.read(spark, current_version),
-                changes=changes, primary_key=tuple(spec.primary_key),
+        phases = {}
+        net = apply.net_change(
+            changes, self.spec, self.row_image, self.order_cols,
+            self.salt_buckets,
+        ).persist()
+        try:
+            net_rows = net.count()
+            new_version = apply.publish(
+                spark, self.target, net, self.ledger.current_snapshot_version(),
+                row_image=self.row_image, audit=self.audit, changes=changes,
+                batch_id=batch_id, phases=phases,
             )
-            try:
-                self.audit(ctx)
-            except BaseException:
-                import shutil
-
-                shutil.rmtree(
-                    self.target.snapshot_path(new_version), ignore_errors=True
-                )
-                raise
-
+        finally:
+            net.unpersist()
         stats = [
             {
                 "gtid_source": r["gtid_source"],
@@ -1358,7 +1149,8 @@ class Replayer:
         merged_set = covered.union(self._gtid_set_from_islands(stats))
         max_file, max_pos = self.ledger.max_position()
         seconds = time.time() - t0
-        self.ledger.append(
+        apply.commit(
+            self,
             LedgerEntry(
                 batch_id=batch_id,
                 gtid_set_text=str(merged_set),
@@ -1377,32 +1169,28 @@ class Replayer:
                 ],
                 metrics={
                     "events": int(n_events),
+                    "net_rows": net_rows,
                     "seconds": round(seconds, 3),
                     "events_per_sec": (
                         round(n_events / seconds, 1) if seconds else 0.0
                     ),
+                    **phases,
                     "redrive": True,
                 },
-            )
+            ),
         )
-        for view in self.views:
-            view.refresh(spark, self.target, new_version)
-        if self.gc_keep and hasattr(self.target, "gc"):
-            self.target.gc(keep_latest=self.gc_keep)
         return int(n_events)
 
     def _commit_maintenance(self, new_version: int, metrics: dict) -> int:
         """Commit ``new_version`` as a zero-event ledger entry: the read
         position and covered GTID set carry over from the last entry
         unchanged, so a resume neither skips nor re-reads the stream.
-        Registered views then refresh to it and ``gc_keep`` retention
-        applies, as after a batch. Returns ``new_version``."""
+        The commit is a batch's (``apply.commit``). Returns the version
+        the store is at afterwards: ``new_version``, or the fold of it
+        when a chain reached the auto-compact threshold."""
         last = self.ledger.last()
-        metrics = {
-            **metrics,
-            **self._write_metrics(last.snapshot_version if last else 0, new_version),
-        }
-        self.ledger.append(
+        apply.commit(
+            self,
             LedgerEntry(
                 batch_id=self.ledger.next_batch_id(),
                 gtid_set_text=last.gtid_set_text if last else "",
@@ -1411,14 +1199,10 @@ class Replayer:
                 snapshot_version=new_version,
                 committed_at=Ledger.now(),
                 partition_lineage=[],
-                metrics=metrics,
-            )
+                metrics=dict(metrics),
+            ),
         )
-        for view in self.views:
-            view.refresh(self.spark, self.target, new_version)
-        if self.gc_keep and hasattr(self.target, "gc"):
-            self.target.gc(keep_latest=self.gc_keep)
-        return new_version
+        return self.ledger.current_snapshot_version()
 
     def rebucket(self, new_buckets: int, bucket_cols: tuple | None = None) -> int:
         """Re-scale the target's bucket layout between batches (see
@@ -1648,25 +1432,10 @@ class Replayer:
         cur_version = self.ledger.current_snapshot_version()
         if entry.snapshot_version == cur_version:
             return cur_version
-        spec = self.target.spec
-        keys = list(spec.primary_key)
         old_state = self.target.read(self.spark, entry.snapshot_version)
         cur_state = self.target.read(self.spark, cur_version)
-        # reversed diff: old=current, new=restored → "applied" images ARE
-        # the net to merge (insert/update carry the restored image, delete
-        # carries the since-inserted row we must remove)
-        inverse = snapshot_diff(cur_state, old_state, spec)
-        net = inverse.select(
-            *keys,
-            F.when(F.col("change_type") == "delete", F.lit("delete"))
-            .otherwise(F.lit("upsert"))
-            .alias("op"),
-            *[
-                F.col(c).alias(f"after_{c}")
-                for c, _, _ in spec.columns
-                if c not in keys
-            ],
-        ).persist()
+        # reversed diff: current → restored (rows inserted since delete)
+        net = diff_net(cur_state, old_state, self.target.spec).persist()
         try:
             if not net.head(1):
                 return cur_version  # states already identical — no commit
@@ -1740,7 +1509,6 @@ class Replayer:
         from .integrity import chunk_expr
 
         spec = self.target.spec
-        keys = list(spec.primary_key)
         key_col = key_col or spec.primary_key[0]
         cur_version = self.ledger.current_snapshot_version()
         cur_state = self.target.read(self.spark, cur_version)
@@ -1753,20 +1521,7 @@ class Replayer:
             )
             cur_state = cur_state.where(pred)
             truth = truth.where(pred)
-        # current → truth diff IS the net to merge (same machinery the
-        # flashback rewind uses; snapshot_diff is change-feed-pinned)
-        delta = snapshot_diff(cur_state, truth, spec)
-        net = delta.select(
-            *keys,
-            F.when(F.col("change_type") == "delete", F.lit("delete"))
-            .otherwise(F.lit("upsert"))
-            .alias("op"),
-            *[
-                F.col(c).alias(f"after_{c}")
-                for c, _, _ in spec.columns
-                if c not in keys
-            ],
-        ).persist()
+        net = diff_net(cur_state, truth, spec).persist()
         try:
             if not net.head(1):
                 return cur_version  # already consistent — no commit

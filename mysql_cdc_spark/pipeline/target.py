@@ -86,6 +86,39 @@ def delete_net(keys_df: DataFrame, spec: TableSpec) -> DataFrame:
     )
 
 
+def insert_net(rows: DataFrame, spec: TableSpec) -> DataFrame:
+    """Net change rows that insert every spec-shaped row of ``rows`` at
+    order tuple 0, which any real event outranks (snapshot seeds:
+    ``bootstrap`` and incremental-snapshot chunks)."""
+    from .order import ORDER_COLS
+
+    keys = list(spec.primary_key)
+    ddl = {n: d for n, d, _ in spec.columns}
+    return rows.select(
+        *[F.col(k).cast(ddl[k]).alias(k) for k in keys],
+        F.lit("insert").alias("op"),
+        *[F.col(n).cast(d).alias(f"after_{n}") for n, d, _ in spec.columns
+          if n not in keys],
+        *[F.lit(0).cast("long").alias(c) for c in ORDER_COLS],
+    )
+
+
+def diff_net(old: DataFrame, new: DataFrame, spec: TableSpec) -> DataFrame:
+    """Net change rows that take state ``old`` to state ``new``: keys
+    missing from ``new`` delete, the rest upsert their ``new`` image
+    (``flashback`` and ``repair``; ``snapshot_diff`` is
+    change-feed-pinned)."""
+    keys = list(spec.primary_key)
+    return snapshot_diff(old, new, spec).select(
+        *keys,
+        F.when(F.col("change_type") == "delete", F.lit("delete"))
+        .otherwise(F.lit("upsert"))
+        .alias("op"),
+        *[F.col(c).alias(f"after_{c}") for c, _, _ in spec.columns
+          if c not in keys],
+    )
+
+
 def state_schema(spec: TableSpec = TRANSCRIPTS) -> T.StructType:
     """Spark schema of a table's rows: one nullable field per spec column."""
     return T.StructType(

@@ -28,9 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..binlog.decoder import TRANSCRIPTS, TableSpec, change_event_schema
-from ..pipeline.audit import AuditContext, require_snapshot_target
+from ..pipeline import apply
+from ..pipeline.audit import require_snapshot_target
 from ..pipeline.mor import auto_compact_policy
-from ..pipeline.order import ORDER_COLS, last_writer_wins, with_change_key
 from ..pipeline.target import (
     OrderedBucketedMergeTarget,
     latest_committed_version,
@@ -96,106 +96,44 @@ def stream_apply(
     becomes the next base, a crash between merge and compact just leaves
     the chain one trigger longer, and a trigger that crashed mid-write
     leaves an orphan the next trigger overwrites."""
-    keys = list(spec.primary_key)
-    if column_transforms:
-        key_hits = set(column_transforms) & set(keys)
-        if key_hits:
-            raise ValueError(
-                f"column_transforms must not rewrite primary-key columns "
-                f"{sorted(key_hits)}"
-            )
-        unknown = set(column_transforms) - {c for c, _, _ in spec.columns}
-        if unknown:
-            raise ValueError(
-                f"column_transforms for unknown columns: {sorted(unknown)}"
-            )
-    target = target or OrderedBucketedMergeTarget(
-        store_dir, spec, order_cols=tuple(ORDER_COLS)
-    )
+    column_transforms = apply.check_transforms(spec, column_transforms)
+    target = target or OrderedBucketedMergeTarget(store_dir, spec)
     if audit is not None:
         require_snapshot_target(target)
     auto_compact = auto_compact_policy(target, auto_compact)
-    payload_cols = list(
-        dict.fromkeys(
-            ["op"]
-            + [f"after_{n}" for n, _, _ in spec.columns]
-            + ORDER_COLS
-            + ["src_file", "pos", "gtid_source", "gtid_seq", "xid"]
-        )
-    )
 
     reader = spark.readStream.schema(change_event_schema(spec))
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(changelog_dir)
 
-    # transaction gate + key derivation, same operators as the batch path
+    # transaction gate + the batch path's prepare step
     stream = stream.filter(F.col("xid").isNotNull())
     if ignore_server_ids:
         stream = stream.filter(
             ~F.col("server_id").isin([int(s) for s in ignore_server_ids])
         )
-    stream = with_change_key(stream, keys)
-    if column_transforms:
-        temps = [c for c, _, _ in spec.columns if c not in keys]
-        for c in temps:
-            stream = stream.withColumn(c, F.col(f"after_{c}"))
-        for col, expr in column_transforms.items():
-            stream = stream.withColumn(f"after_{col}", F.expr(expr))
-        stream = stream.drop(*temps)
-    # instant-ADD-COLUMN DEFAULTs (TableSpec.defaults), same fill as the
-    # batch path — the streaming tier applies FULL images only
-    from ..pipeline.order import apply_column_defaults
-
-    stream = apply_column_defaults(stream, spec, "full")
+    stream = apply.prepare(stream, spec, column_transforms)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        net = last_writer_wins(
-            batch_df, key_cols=keys, order_cols=ORDER_COLS,
-            payload_cols=payload_cols,
-        )
+        spark = batch_df.sparkSession
         # versions advance per trigger; a replayed trigger re-merges the
         # same net-change idempotently (equal rank → incoming wins → same
-        # row), and an out-of-order older file cannot outrank stored state
-        current = latest_committed_version(store_dir)
-        new_version = target.merge(batch_df.sparkSession, net, current)
-        if audit is not None:
-            ctx = AuditContext(
-                spark=batch_df.sparkSession,
-                batch_id=batch_id,
-                staged=target.read(batch_df.sparkSession, new_version),
-                previous=target.read(batch_df.sparkSession, current),
-                changes=batch_df,
-                primary_key=tuple(spec.primary_key),
-            )
-            try:
-                audit(ctx)
-            except BaseException:
-                import shutil
-
-                shutil.rmtree(
-                    target.snapshot_path(new_version), ignore_errors=True
-                )
-                raise  # fail the query: the trigger is never checkpointed
-        if auto_compact is not None:
-            stats = target.delta_stats(new_version)
-            if any(n >= auto_compact for n in stats.values()):
-                target.compact(
-                    batch_df.sparkSession, new_version,
-                    min_deltas=auto_compact,
-                )
-
-    writer = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or f"{store_dir}/_stream_checkpoint",
+        # row), and an out-of-order older file cannot outrank stored state.
+        # An audit rejection fails the query: the trigger is never
+        # checkpointed
+        new_version = apply.publish(
+            spark, target, apply.net_change(batch_df, spec),
+            latest_committed_version(store_dir), audit=audit,
+            changes=batch_df, batch_id=batch_id,
         )
-        .outputMode("update")
+        if apply.compact_due(target, new_version, auto_compact):
+            target.compact(spark, new_version, min_deltas=auto_compact)
+
+    return _start(
+        stream, apply_batch,
+        checkpoint_dir or f"{store_dir}/_stream_checkpoint", available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_apply_frames(
@@ -226,18 +164,7 @@ def stream_apply_frames(
       this path requires GTID-enabled streams."""
     from ..binlog.frames import decode_event_frames
 
-    target = target or OrderedBucketedMergeTarget(
-        store_dir, spec, order_cols=tuple(ORDER_COLS)
-    )
-    keys = list(spec.primary_key)
-    payload_cols = list(
-        dict.fromkeys(
-            ["op"]
-            + [f"after_{n}" for n, _, _ in spec.columns]
-            + ORDER_COLS
-            + ["src_file", "pos", "gtid_source", "gtid_seq", "xid"]
-        )
-    )
+    target = target or OrderedBucketedMergeTarget(store_dir, spec)
     reader = spark.readStream.schema("stream string, offset long, frame binary")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -245,22 +172,23 @@ def stream_apply_frames(
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         changes = decode_event_frames(batch_df, spec)
-        changes = changes.filter(F.col("xid").isNotNull())
-        changes = with_change_key(changes, keys)
-        net = last_writer_wins(
-            changes, key_cols=keys, order_cols=ORDER_COLS,
-            payload_cols=payload_cols,
-        )
-        target.merge(
-            batch_df.sparkSession, net, latest_committed_version(store_dir)
+        changes = apply.prepare(changes.filter(F.col("xid").isNotNull()), spec)
+        apply.publish(
+            batch_df.sparkSession, target, apply.net_change(changes, spec),
+            latest_committed_version(store_dir),
         )
 
+    return _start(
+        stream, apply_batch,
+        checkpoint_dir or f"{store_dir}/_frames_checkpoint", available_now,
+    )
+
+
+def _start(stream: DataFrame, apply_batch, checkpoint: str, available_now: bool):
+    """Run ``apply_batch`` on every trigger of ``stream``."""
     writer = (
         stream.writeStream.foreachBatch(apply_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or f"{store_dir}/_frames_checkpoint",
-        )
+        .option("checkpointLocation", checkpoint)
         .outputMode("update")
     )
     if available_now:

@@ -264,6 +264,15 @@ def test_redrive_after_upstream_fix(spark, tmp_path):
     # the re-driven txn's gtid is covered now; nothing left to redrive
     last = rep.ledger.last()
     assert last.metrics.get("redrive") is True
+    # the entry records a batch entry's write facts
+    for key in (
+        "net_rows", "merge_s", "bytes_written", "buckets_written",
+        "buckets_rewritten", "buckets_appended", "positions_deleted",
+        "max_chain",
+    ):
+        assert key in last.metrics, key
+    assert last.metrics["net_rows"] == len({tuple((o.after or o.before)[:2]) for o in t.ops})
+    assert last.metrics["bytes_written"] > 0 and last.metrics["buckets_written"] > 0
     covered = rep.ledger.covered_gtid_set()
     src = [s for s in covered.uuid_sets][0]
     assert covered.contains(src, t.seq)
@@ -287,3 +296,104 @@ def test_redrive_requires_ordered_target(spark, poisoned, tmp_path):
     rep.replay()
     with pytest.raises(TypeError):
         rep.redrive_quarantine()
+
+
+def test_redrive_refuses_scd2_history(spark, tmp_path):
+    """An SCD2 history closes each stored current row with a batch's
+    first event per key, so it cannot take a re-driven (out-of-order)
+    event: redrive raises before it decodes anything — the record names
+    a segment that does not exist, so any decode would fail otherwise."""
+    from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS
+    from mysql_cdc_spark.pipeline.scd2 import Scd2HistoryStore
+    from mysql_cdc_spark.pipeline.target import OrderedBucketedMergeTarget
+
+    store = str(tmp_path / "s")
+    os.makedirs(tmp_path / "binlog")
+    rep = Replayer(
+        spark, str(tmp_path / "binlog"), store,
+        target=OrderedBucketedMergeTarget(store, buckets=2),
+        history=Scd2HistoryStore(str(tmp_path / "h"), TRANSCRIPTS, buckets=2),
+        on_decode_error="quarantine",
+    )
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.join(store, "quarantine"))
+    pq.write_table(
+        pa.table({
+            "src_file": ["binlog.000099"],
+            "pos": pa.array([4], pa.int64()),
+            "event_type": pa.array([30], pa.int32()),
+            "payload_len": pa.array([64], pa.int32()),
+            "gtid_source": pa.array([None], pa.string()),
+            "gtid_seq": pa.array([None], pa.int64()),
+            "error": ["corrupt rows event"],
+        }),
+        os.path.join(store, "quarantine", "binlog.000099.parquet"),
+    )
+    assert rep.read_quarantine().count() == 1
+    with pytest.raises(TypeError, match="SCD2 history"):
+        rep.redrive_quarantine()
+
+
+@pytest.mark.parametrize("writer", ["redrive", "frames"])
+def test_writer_applies_column_defaults(spark, tmp_path, writer):
+    """A row logged before an instant ``ADD COLUMN ... DEFAULT`` reads
+    the default through every writer, as it does through ``run_batch``:
+    re-driven from quarantine, and streamed from the frame source."""
+    import dataclasses
+
+    from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS
+    from mysql_cdc_spark.binlog.frames import split_segment_frames
+    from mysql_cdc_spark.fixtures import Op, Txn, _row
+    from mysql_cdc_spark.pipeline.target import OrderedBucketedMergeTarget
+    from mysql_cdc_spark.streaming.stream import (
+        read_stream_state,
+        stream_apply_frames,
+    )
+
+    spec = dataclasses.replace(TRANSCRIPTS, defaults=(("tool", "'none'"),))
+    txns = [
+        Txn(seq=1, ops=[Op("insert", None, _row("a", 0, "user", "x" * 40, 1_000))]),
+        Txn(seq=2, ops=[Op("insert", None, _row("b", 0, "user", "y" * 40, 2_000))]),
+        Txn(seq=3, evolved=True, ops=[Op(
+            "insert", None,
+            _row("c", 0, "user", "z", 3_000, tool="search", evolved=True),
+        )]),
+    ]
+    d = str(tmp_path / "binlog")
+    paths = write_binlog_files(txns, d, txns_per_file=10)
+    store = str(tmp_path / "store")
+    target = OrderedBucketedMergeTarget(store, spec, buckets=2)
+    if writer == "redrive":
+        path, pos, elen = _locate_event(d, 2, "write_rows")
+        with open(path, "rb") as f:
+            clean = f.read()
+        _corrupt(path, pos, elen)
+        rep = Replayer(
+            spark, d, store, spec=spec, target=target,
+            on_decode_error="quarantine",
+        )
+        rep.replay()
+        with open(path, "wb") as f:
+            f.write(clean)
+        assert rep.redrive_quarantine() == 1
+        state = rep.read_state()
+    else:
+        rows = []
+        for p in paths:
+            with open(p, "rb") as f:
+                rows += [
+                    (os.path.basename(p), off, bytearray(frame))
+                    for off, frame in split_segment_frames(f.read())
+                ]
+        frames_dir = str(tmp_path / "frames")
+        spark.createDataFrame(
+            rows, "stream string, offset long, frame binary"
+        ).coalesce(1).write.parquet(frames_dir)
+        stream_apply_frames(
+            spark, frames_dir, store, spec=spec, target=target
+        ).awaitTermination(180)
+        state = read_stream_state(spark, store, spec)
+    got = {r["conv_id"]: r["tool"] for r in state.collect()}
+    assert got == {"a": "none", "b": "none", "c": "search"}
