@@ -477,19 +477,19 @@ def cdc_replay_default_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cdc_replay_mor_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge-on-read end-to-end (beyond-reference — Iceberg v2
-    equality-delete semantics, pipeline/mor.py): every batch appends the
-    net change rows as per-bucket delta files (write IO = O(changes),
-    nothing rewritten), reads fold base ∪ deltas per key under a delete
-    fence with per-column carried-bit resolution, and a mid-replay
-    ``Replayer.compact()`` folds the first half's chains into fresh base
-    files as a zero-event maintenance commit — so the final state is
-    resolved across base + post-compact deltas. The logical stream is
-    identical to the plain replay → same sequential-replay oracle; a
-    mis-folded delta chain, a delete resurrected across the fence, or a
-    compact that loses/duplicates rows all hash-mismatch."""
-    from mysql_cdc_spark.pipeline.mor import MergeOnReadBucketedTarget
+    """Merge-on-read end-to-end on the default store (beyond-reference —
+    Iceberg v2 position-delete semantics): a batch appends its upserts to
+    each bucket it may append to, plus the positions of the stored rows
+    they and its deletes replace, and a read skips those positions. A
+    mid-replay ``Replayer.compact(min_deltas=1)`` rewrites the first
+    half's chains into plain bucket dirs as a zero-event maintenance
+    commit, so the final state is read across compacted dirs and the
+    second half's appends. The logical stream is identical to the plain
+    replay → same sequential-replay oracle; a misplaced position, a
+    delete resurrected across an append, or a compact that loses or
+    duplicates rows all hash-mismatch."""
     from mysql_cdc_spark.pipeline.replay import Replayer
+    from mysql_cdc_spark.pipeline.target import BucketedParquetMergeTarget
 
     _ensure_e2e_oracle_parquet()
     binlog_dir = _ensure_e2e_binlog()
@@ -497,12 +497,13 @@ def cdc_replay_mor_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = os.path.join(tmp, "store")
     rep = Replayer(
         spark, binlog_dir, store, salt_buckets=4,
-        target=MergeOnReadBucketedTarget(store, buckets=16),
+        target=BucketedParquetMergeTarget(store, buckets=16),
     )
     pend = rep.pending_files()
     half = max(1, len(pend) // 2)
-    rep.run_batch(pend[:half])
-    rep.compact(min_deltas=1)  # fold the first half's chains into base
+    for f in pend[:half]:  # one segment a batch, so later ones append
+        rep.run_batch([f])
+    rep.compact(min_deltas=1)  # rewrite the first half's chains
     rep.replay(files_per_batch=max(1, len(pend) - half))
     return rep.read_state().select(
         "conv_id", "turn_idx", "role", "text",

@@ -11,7 +11,7 @@ Subcommands:
     state      print the current merged table state row count + sample
     ledger     print the checkpoint ledger (GTID set, positions, metrics)
     purge      right-to-be-forgotten removal (state + history + files)
-    compact    fold a merge-on-read store's delta chains into base
+    compact    rewrite a bucketed store's position-delete chains
 """
 
 from __future__ import annotations
@@ -71,7 +71,8 @@ def main(argv: list[str] | None = None) -> int:
 
     sp = sub.add_parser(
         "compact",
-        help="fold a merge-on-read store's delta chains into base files",
+        help="rewrite a bucketed store's position-delete chains into "
+        "plain bucket dirs",
     )
     sp.add_argument("--binlog-dir", required=True)
     sp.add_argument("--store-dir", required=True)

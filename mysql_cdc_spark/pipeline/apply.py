@@ -4,11 +4,11 @@
               instant-ADD-COLUMN defaults
     net       last-writer-wins per key (FULL: whole rows; MINIMAL: per column)
     publish   merge → write-audit-publish → SCD2 history
-    commit    ledger append → views refresh → gc_keep → auto-compact
+    commit    ledger append → views refresh → gc_keep
 
 A writer owns only where its change rows come from and what its ledger
-entry says. The streaming tier has no ledger: it shares prepare, net,
-publish and ``compact_due``. Maintenance commits merge a net built by
+entry says. The streaming tier has no ledger: it shares prepare, net
+and publish. Maintenance commits merge a net built by
 ``target.insert_net`` / ``diff_net`` / ``delete_net``.
 """
 
@@ -173,21 +173,11 @@ def write_facts(target, old_version: int, new_version: int) -> dict:
     }
 
 
-def compact_due(target, version: int, threshold: int | None) -> bool:
-    """Whether a delta chain at ``version`` reached the auto-compact
-    ``threshold`` (``mor.auto_compact_policy``; None: never)."""
-    return threshold is not None and any(
-        n >= threshold for n in target.delta_stats(version).values()
-    )
-
-
 def commit(rep, entry) -> None:
     """Publish ``entry`` for the Replayer ``rep``: add the write facts of
     the versions it adds, append it to the ledger (the atomicity point),
     refresh the views (a crash before that leaves them one batch stale;
-    the next refresh folds both), apply ``gc_keep`` retention, then fold
-    the chains at the auto-compact threshold (the fold commits here too
-    and leaves none at it)."""
+    the next refresh folds both), then apply ``gc_keep`` retention."""
     entry.metrics.update(
         write_facts(
             rep.target, rep.ledger.current_snapshot_version(),
@@ -199,5 +189,3 @@ def commit(rep, entry) -> None:
         view.refresh(rep.spark, rep.target, entry.snapshot_version)
     if rep.gc_keep and hasattr(rep.target, "gc"):
         rep.target.gc(keep_latest=rep.gc_keep)
-    if compact_due(rep.target, entry.snapshot_version, rep.auto_compact):
-        rep.compact(min_deltas=rep.auto_compact)

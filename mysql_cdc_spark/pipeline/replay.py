@@ -124,7 +124,6 @@ class Replayer:
         column_transforms: dict[str, str] | None = None,
         on_decode_error: str = "fail",
         audit: object | None = None,
-        auto_compact: int | None = None,
     ):
         """``start``: optional start strategy (pipeline.start: FromStart /
         FromEnd / FromPosition / FromGtid — ST3, binlog_options.rs:33-85);
@@ -258,11 +257,6 @@ class Replayer:
                 f"{on_decode_error}"
             )
         self.on_decode_error = on_decode_error
-        self.quarantine_dir = (
-            os.path.join(store_dir, "quarantine")
-            if on_decode_error == "quarantine"
-            else None
-        )
         self.column_transforms = apply.check_transforms(spec, column_transforms)
         self.ledger = Ledger(store_dir)
         self._stats_acc = SegmentStats.accumulator(spark)  # one per Replayer
@@ -307,17 +301,6 @@ class Replayer:
 
             require_snapshot_target(self.target)
         self.audit = audit
-        # auto_compact: for merge-on-read targets, fold any bucket whose
-        # delta chain reached this length after each batch — bounds read
-        # amplification without an external maintenance scheduler; each
-        # fold is the ledger-coordinated zero-event batch compact() runs.
-        # DEFAULT for MoR targets: DEFAULT_AUTO_COMPACT (mor.py) — an
-        # unmaintained store's fold cost grows linearly with chain length
-        # (BENCH.md), so bounding it is opt-OUT
-        # (auto_compact=0), not opt-in.
-        from .mor import auto_compact_policy
-
-        self.auto_compact = auto_compact_policy(self.target, auto_compact)
         if start is not None:
             from .start import seed_ledger
 
@@ -557,7 +540,10 @@ class Replayer:
         self, files: list[str], xa_info, stats=None, on_error=None
     ) -> DataFrame:
         """Change rows of ``files`` under the XA verdicts of ``xa_info``,
-        minus foreign server ids."""
+        minus foreign server ids. Under the quarantine policy (this
+        Replayer's, or ``on_error``'s) dead letters go to
+        ``<store>/quarantine``, where ``read_quarantine`` reads them."""
+        on_error = on_error or self.on_decode_error
         glob = "{" + ",".join(files) + "}" if len(files) > 1 else files[0]
         # before_values="keys": the merge pipeline reads only keys + after
         # images (apply.prepare drops before_* right after keying), so the
@@ -567,8 +553,12 @@ class Replayer:
             self.spark, self.binlog_dir, self.spec, path_filter=glob,
             before_values="keys",
             xa_outcomes=(xa_info or {}).get("verdicts") or None,
-            on_error=on_error or self.on_decode_error,
-            quarantine_dir=self.quarantine_dir, stats=stats,
+            on_error=on_error,
+            quarantine_dir=(
+                os.path.join(self.store_dir, "quarantine")
+                if on_error == "quarantine" else None
+            ),
+            stats=stats,
         )
         if self.ignore_server_ids:
             # circular-replication guard (see __init__): drop foreign-
@@ -1064,8 +1054,8 @@ class Replayer:
         corpus), and only rows at the recorded (src_file, pos) positions
         are applied. Re-driving is out-of-order application — later
         events for the same keys may already be in the table — so it
-        requires an order-carrying target (``OrderedBucketedMergeTarget``
-        / ``OrderedMergeOnReadTarget``): the outrank guard applies a
+        requires an order-carrying target (``OrderedBucketedMergeTarget``):
+        the outrank guard applies a
         re-driven row only where it still wins. Choose one when deploying
         with ``on_decode_error='quarantine'`` if re-drive matters.
 
@@ -1085,7 +1075,7 @@ class Replayer:
         if not hasattr(self.target, "read_with_order"):
             raise TypeError(
                 "redrive_quarantine needs an order-carrying target "
-                "(OrderedBucketedMergeTarget / OrderedMergeOnReadTarget): "
+                "(OrderedBucketedMergeTarget): "
                 "re-driving applies events out of order, and only the "
                 "outrank guard can do that without regressing newer state"
             )
@@ -1185,9 +1175,8 @@ class Replayer:
         """Commit ``new_version`` as a zero-event ledger entry: the read
         position and covered GTID set carry over from the last entry
         unchanged, so a resume neither skips nor re-reads the stream.
-        The commit is a batch's (``apply.commit``). Returns the version
-        the store is at afterwards: ``new_version``, or the fold of it
-        when a chain reached the auto-compact threshold."""
+        The commit is a batch's (``apply.commit``). Returns
+        ``new_version``."""
         last = self.ledger.last()
         apply.commit(
             self,
@@ -1202,7 +1191,7 @@ class Replayer:
                 metrics=dict(metrics),
             ),
         )
-        return self.ledger.current_snapshot_version()
+        return new_version
 
     def rebucket(self, new_buckets: int, bucket_cols: tuple | None = None) -> int:
         """Re-scale the target's bucket layout between batches (see
@@ -1227,29 +1216,30 @@ class Replayer:
             new_version, {"maintenance": "rebucket", "buckets": int(new_buckets)}
         )
 
-    def compact(self, min_deltas: int = 1, bucket_ids=None) -> int:
-        """Fold a merge-on-read target's delta chains back into base files
-        (see ``MergeOnReadBucketedTarget.compact``) and commit the rewrite
-        as a zero-event maintenance batch, exactly like ``rebucket``: the
-        ledger's read high-water mark and covered GTID set are unchanged,
-        only the snapshot version advances — so the next merge's
-        ``current_version`` is the compacted snapshot and a crash anywhere
-        leaves the pre-compact chain live. Run it on whatever cadence (or
-        ``delta_stats`` trigger) bounds read amplification. Returns the
-        new snapshot version (unchanged if no chain met ``min_deltas`` —
-        then no ledger entry is written either)."""
+    def compact(self, min_deltas: int = 1) -> int:
+        """Rewrite the bucketed store's position-delete chains into plain
+        bucket dirs (see ``BucketedParquetMergeTarget.compact``) and
+        commit the rewrite as a zero-event maintenance batch, exactly like
+        ``rebucket``: the ledger's read high-water mark and covered GTID
+        set are unchanged, only the snapshot version advances — so the
+        next merge's ``current_version`` is the compacted snapshot and a
+        crash anywhere leaves the pre-compact chain live. A merge already
+        rewrites a chain at its cap; run this for buckets that stopped
+        changing. An attached SCD2 history compacts on the same call.
+        Returns the new snapshot version (unchanged if no chain
+        qualified — then no ledger entry is written either)."""
         if not hasattr(self.target, "compact"):
             raise TypeError(
-                f"{type(self.target).__name__} has no delta chains to "
-                "compact; compact() needs MergeOnReadBucketedTarget"
+                f"{type(self.target).__name__} commits inside its own "
+                "engine and has no snapshot layout to compact"
             )
         version = self.ledger.current_snapshot_version()
         new_version = self.target.compact(
-            self.spark, version, min_deltas=min_deltas, bucket_ids=bucket_ids
+            self.spark, version, min_deltas=min_deltas
         )
-        if self.history is not None and hasattr(self.history, "compact"):
-            # a merge-on-read history store versions independently; fold
-            # its chains on the same maintenance cadence
+        if self.history is not None:
+            # the history store versions independently; rewrite its
+            # chains on the same maintenance cadence
             self.history.compact(
                 self.spark, self.history.current_version(),
                 min_deltas=min_deltas,
@@ -1284,11 +1274,8 @@ class Replayer:
           bytes in a listed file; the rows then survive only in OLDER
           snapshots, which ``erase=True`` drops (``gc(keep_latest=1)``) —
           destroying time travel *by design*; pass ``erase=False`` to
-          defer erasure to routine gc/retention.
-        - merge-on-read: the delete lands as delta rows, so the purged
-          images still sit in retained base/delta files — the purge
-          therefore force-compacts the touched buckets (base rewritten
-          without the keys, chains cleared) before the erase gc.
+          defer erasure to routine gc/retention. The SCD2 history store
+          rewrites its touched buckets the same way.
         - ordered (streaming) targets are refused: their delete tombstones
           persist the key itself past the merge, so field-level erasure
           doesn't hold — purge through the batch tier that owns the store.
@@ -1301,7 +1288,7 @@ class Replayer:
 
         Scale shape at 10^10 rows: one predicate scan of current state
         (O(table) read — a compliance op, not a hot path), then a delete
-        MERGE + compaction pruned to the matched keys' buckets
+        MERGE pruned to the matched keys' buckets
         (O(touched-bucket data)), then metadata-only gc."""
         if hasattr(self.target, "read_with_order"):
             raise TypeError(
@@ -1425,8 +1412,7 @@ class Replayer:
             raise TypeError(
                 f"{type(self.target).__name__} outrank-guards stale "
                 "images (streaming sink); flashback needs a snapshot-"
-                "semantics target (BucketedParquetMergeTarget / "
-                "MergeOnReadBucketedTarget)"
+                "semantics target (BucketedParquetMergeTarget)"
             )
         entry = self._entry(to_batch)
         cur_version = self.ledger.current_snapshot_version()

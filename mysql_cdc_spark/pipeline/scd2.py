@@ -9,13 +9,18 @@ batch events only), then MERGE it into the stored history — the batch's
 first event per key closes that key's previous ``is_current`` row, and
 batch version numbers continue from the stored per-key maximum.
 
-Storage reuses the bucket-pruned copy-on-write layout of
-``BucketedParquetMergeTarget`` (manifest splice, touched-bucket
-rewrite): a batch touching K conversations reads and rewrites only the
-buckets those keys hash into — O(touched-bucket history), not O(all
-history). The reference hands events to user code (README.md:61);
-history tables are one of the two things users build with them (the
-other being the LWW upsert the main merge tier does).
+Storage is the bucketed layout of ``BucketedParquetMergeTarget``
+(manifest splice, rewrite or append per touched bucket). History is
+append-mostly: a batch adds its new rows and closes at most one stored
+row per touched key. So a bucket that may append (the layout's rules
+(b)–(d)) gets exactly that: the fresh rows, the closed images of the
+rows the batch closed, and those stored rows' positions. Its per-batch
+write stays O(batch) however old the table grows. A rewritten bucket
+(the first batches, or a chain at its cap) reads and rewrites only the
+buckets the batch's keys hash into. ``compact`` (inherited) rewrites
+chains on a cadence. The reference hands events to user code
+(README.md:61); history tables are one of the two things users build
+with them (the other being the LWW upsert the main merge tier does).
 
 Exactly-once: ``apply_batch`` is idempotent. Batch rows are anti-joined
 on (key, valid_from order tuple) against stored history, and a stored
@@ -24,12 +29,6 @@ current row is only closed by a batch-first event that *outranks* its
 commit and the ledger append re-applies as a no-op. The pipeline commit
 point stays the Replayer's ledger append; the history store versions
 independently (its manifest write is its internal commit point).
-
-``Scd2HistoryMorStore`` (bottom of module) moves the storage tier to the
-merge-on-read layout: since history per bucket grows without bound, the
-copy-on-write rewrite's per-batch cost grows with table age — the
-delta-append form keeps it O(batch) forever, with ``compact`` bounding
-read amplification.
 """
 
 from __future__ import annotations
@@ -39,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..binlog.decoder import TableSpec
 from .order import ORDER_COLS, scd2_history
-from .target import BucketedParquetMergeTarget, latest_committed_version
+from .target import BucketedParquetMergeTarget, _file_col, latest_committed_version
 
 # Spark DDL of the decode tier's meta columns (change_event_schema) that
 # can serve as order columns
@@ -101,8 +100,8 @@ def history_spec(
 class Scd2HistoryStore(BucketedParquetMergeTarget):
     """Bucket-pruned incremental SCD2 history table.
 
-    Inherits the versioned manifest/copy-on-write machinery; ``merge``/
-    ``merge_partial`` (net-per-key semantics) do not apply to a
+    Inherits the versioned manifest and append/rewrite machinery;
+    ``merge``/``merge_partial`` (net-per-key semantics) do not apply to a
     multi-row-per-key history and raise."""
 
     def __init__(
@@ -129,6 +128,10 @@ class Scd2HistoryStore(BucketedParquetMergeTarget):
         )
         hspec = history_spec(spec, self.value_cols, self.order_cols)
         super().__init__(store_dir, hspec, buckets, bucket_cols=tuple(keys))
+
+    def _adds(self):
+        """Every touched key: it adds at least its batch's first row."""
+        return F.lit(True)
 
     def merge(self, *a, **kw):  # pragma: no cover - guard
         raise NotImplementedError("history store applies batches, not net rows")
@@ -167,25 +170,65 @@ class Scd2HistoryStore(BucketedParquetMergeTarget):
         pieces = self._batch_pieces(spark, d, current_version)
         if pieces is None:
             return current_version
-        touched, kept, _closed, fresh = pieces
+        touched, adds, kept, closed, fresh = pieces
         ddl = {n: dd for n, dd, _ in self.spec.columns}
-        out_cols = [n for n, _, _ in self.spec.columns]
-        merged = (
-            kept.select(*[F.col(c).cast(ddl[c]).alias(c) for c in out_cols])
-            .unionByName(
-                fresh.select(*[F.col(c).cast(ddl[c]).alias(c) for c in out_cols])
-            )
+        names = [n for n, _, _ in self.spec.columns]
+        cols = [F.col(c).cast(ddl[c]).alias(c) for c in names]
+        # pre-check on the per-bucket estimate, as the plain merge does
+        chains = self._append_candidates(
+            touched, current_version, adds / len(touched)
         )
-        return self._commit_buckets(merged, touched, current_version)
+        if not chains:
+            # every touched bucket is rewritten: all its stored rows,
+            # closes applied, and the fresh rows
+            return self._commit_buckets(
+                kept.select(*cols).unionByName(fresh.select(*cols)),
+                touched, current_version,
+            )
+        bucket = self._bucket_expr()
+        # the batch's own rows: the closed images, with the positions of
+        # the stored rows they replace, and the fresh rows. Batch-sized;
+        # the positions job and the write both read it
+        delta = (
+            closed.select(*cols, "_file", "_row")
+            .unionByName(
+                fresh.select(
+                    *cols,
+                    F.lit(None).cast("string").alias("_file"),
+                    F.lit(None).cast("long").alias("_row"),
+                )
+            )
+            .persist()
+        )
+        try:
+            appended = self._appending(delta, chains)
+            # a rewritten bucket, as above
+            rows = rewritten = kept.select(*cols).unionByName(
+                delta.filter(F.col("_file").isNull()).select(*names)
+            )
+            if appended:
+                rewrite = sorted(set(touched) - set(appended))
+                rows = delta.filter(bucket.isin(list(appended))).select(*names)
+                if rewrite:
+                    rows = rows.unionByName(
+                        rewritten.filter(bucket.isin(rewrite))
+                    )
+            return self._commit_buckets(
+                rows, touched, current_version, appended=appended
+            )
+        finally:
+            delta.unpersist()
 
     def _batch_pieces(
         self, spark: SparkSession, d: DataFrame, current_version: int
     ):
-        """Shared batch computation: returns ``(touched, kept, closed,
-        fresh)`` — ``kept`` = ALL stored rows of the touched buckets with
-        this batch's closes applied (what the copy-on-write commit
-        rewrites), ``closed`` = ONLY the rows the batch actually closed
-        (what the merge-on-read commit appends as superseding deltas),
+        """The batch computation: returns ``(touched, adds, kept, closed,
+        fresh)`` — ``adds`` = the keys the batch touches (each adds at
+        least one history row), ``kept`` = ALL stored rows of the touched
+        buckets with this batch's closes applied (what a rewritten bucket
+        holds), ``closed`` = ONLY the rows the batch actually closed, with
+        the stored row's data file ``_file`` and row index ``_row`` (what
+        an appending bucket writes, and the positions it deletes),
         ``fresh`` = the batch's new history rows. None when the batch
         touches nothing."""
         keys = list(self.base_spec.primary_key)
@@ -211,10 +254,15 @@ class Scd2HistoryStore(BucketedParquetMergeTarget):
             )
         )
 
-        touched = self._touched_buckets(firsts)
+        touched, adds = self._bucket_counts(firsts)
         if not touched:
             return None
-        state = self.read(spark, current_version, bucket_ids=set(touched))
+        manifest = self._pruned_manifest(current_version, set(touched))
+        state = self._scan_live(spark, manifest.values()).select(
+            *[n for n, _, _ in self.spec.columns],
+            _file_col().alias("_file"),
+            F.col("_metadata.row_index").alias("_row"),
+        )
 
         joined = state.join(firsts, on=keys, how="left")
         first_ord = F.struct(*[F.col(f"_first_{c}") for c in oc])
@@ -251,6 +299,8 @@ class Scd2HistoryStore(BucketedParquetMergeTarget):
             *[F.col(f"_first_{c}").alias(f"valid_to_{c}") for c in oc],
             F.lit(False).alias("is_current"),
             (F.col("_first_op") == "delete").alias("closed_by_delete"),
+            "_file",
+            "_row",
         )
 
         prev_max = state.groupBy(*keys).agg(F.max("version").alias("_pmax"))
@@ -271,7 +321,7 @@ class Scd2HistoryStore(BucketedParquetMergeTarget):
             )
         )
 
-        return touched, kept, closed, fresh
+        return touched, adds, kept, closed, fresh
 
     def read_history(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         return self.read(spark, self.current_version() if version is None else version)
@@ -299,74 +349,3 @@ class Scd2HistoryStore(BucketedParquetMergeTarget):
             return self._commit_buckets(kept, touched, current_version)
         finally:
             probe.unpersist()
-
-
-class Scd2HistoryMorStore(Scd2HistoryStore):
-    """SCD2 history on the merge-on-read layout — the append-shaped fix
-    for the history tier's write amplification.
-
-    History is append-mostly: each batch adds O(batch) new rows and
-    updates (closes) at most one stored row per touched key, yet the
-    copy-on-write store rewrites every touched bucket's FULL history per
-    batch — and history per bucket grows without bound, so at 10^10
-    events the per-batch cost grows linearly with table age. This store
-    appends exactly the batch's effect instead: the new history rows plus
-    superseding images of only the rows the batch closed, as per-bucket
-    delta files. Read-time resolution folds per HISTORY-ROW identity —
-    ``(key cols, valid_from order tuple)`` — last write wins, so a close
-    supersedes its open row; ``compact`` (inherited) folds chains into
-    base on whatever cadence bounds read amplification, and
-    ``Replayer.compact`` runs it alongside the main target's.
-
-    Same ``apply_batch`` contract and idempotence argument as the CoW
-    store (the batch computation is shared — ``_batch_pieces``); equality
-    across both stores is pinned in tests/test_scd2_mor.py."""
-
-    def __init__(self, *a, **kw):
-        super().__init__(*a, **kw)
-        # the fold identity is the history ROW (key + valid_from tuple),
-        # not the conversation key: a close must supersede exactly its
-        # own open row. Bucket placement stays by the base keys (a
-        # primary-key prefix), so touched-bucket math is unchanged.
-        row_pk = tuple(self.base_spec.primary_key) + tuple(
-            f"valid_from_{c}" for c in self.order_cols
-        )
-        self.spec = TableSpec(
-            database=self.spec.database,
-            table=self.spec.table,
-            columns=self.spec.columns,
-            primary_key=row_pk,
-        )
-
-    # storage tier: borrow the merge-on-read machinery wholesale
-    from .mor import MergeOnReadBucketedTarget as _MOR
-
-    _load_manifest = _MOR._load_manifest
-    _stored_schema = _MOR._stored_schema
-    read = _MOR.read
-    _base_rows = _MOR._base_rows
-    _bucket_entry = _MOR._bucket_entry
-    compact = _MOR.compact
-    delta_stats = _MOR.delta_stats
-    del _MOR
-
-    def _apply_batch_cached(
-        self, spark: SparkSession, d: DataFrame, current_version: int
-    ) -> int:
-        pieces = self._batch_pieces(spark, d, current_version)
-        if pieces is None:
-            return current_version
-        touched, _kept, closed, fresh = pieces
-        ddl = {n: dd for n, dd, _ in self.spec.columns}
-        out_cols = [n for n, _, _ in self.spec.columns]
-        new_version = current_version + 1
-        delta = (
-            closed.select(*[F.col(c).cast(ddl[c]).alias(c) for c in out_cols])
-            .unionByName(
-                fresh.select(*[F.col(c).cast(ddl[c]).alias(c) for c in out_cols])
-            )
-            .withColumn("_op", F.lit("upsert"))
-            .withColumn("_cm", F.lit(-1).cast("long"))
-            .withColumn("_seq", F.lit(new_version).cast("long"))
-        )
-        return self._commit_buckets(delta, touched, current_version, delta=True)

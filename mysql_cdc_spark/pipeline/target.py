@@ -13,11 +13,12 @@ interface (``merge`` / ``merge_partial`` / ``truncate`` / ``read``):
   rewriting each one or appending to it with position deletes, and
   splices the rest by manifest reference. The commit point is the
   *ledger append*, not the snapshot write, so a torn write is invisible.
-  ``pipeline/mor.py`` holds its merge-on-read twin.
+- ``OrderedBucketedMergeTarget`` — the same layout with the streaming
+  tier's outrank guard (order tuples + tombstones).
 
-``OrderedPolicy`` adds the streaming tier's outrank guard (order tuples +
-tombstones) to either layout. ``open_store`` reopens an existing store
-through the target family that wrote it.
+``scd2.Scd2HistoryStore`` keeps SCD2 history on the same layout.
+``open_store`` reopens an existing store through the target family that
+wrote it.
 
 Scale notes (100 TB target, 10^8-row net changes per batch):
 - the anti-join of current-state × touched-keys shuffles on the key; the
@@ -51,6 +52,11 @@ from ..binlog.decoder import TableSpec, TRANSCRIPTS, _ddl_to_type
 # under 2× the unfiltered read. tests/test_position_deletes.py reports
 # the read at the cap.
 POSITION_CAP = 2048
+
+# Most data dirs one bucket's chain may hold: a merge that would extend a
+# chain this long rewrites the bucket instead, so a read opens at most
+# this many dirs per bucket whether or not anyone runs ``compact``.
+DEFAULT_AUTO_COMPACT = 16
 
 
 def _file_col():
@@ -188,12 +194,11 @@ def snapshot_diff(
 
 def snapshot_committed(snap_dir: str) -> bool:
     """True when a snapshot directory finished its write. The bucketed
-    and merge-on-read layouts write ``manifest.json`` last, so it is their
-    commit point. A legacy unbucketed snapshot (the retired full-rewrite
-    layout) has no manifest, but the Spark committer wrote ``_SUCCESS``
-    directly inside it. A torn bucketed snapshot holds only ``data/`` or
-    ``delta/`` (the committer's ``_SUCCESS`` lands in there), so it never
-    reads as legacy."""
+    layout writes ``manifest.json`` last, so it is its commit point. A
+    legacy unbucketed snapshot (the retired full-rewrite layout) has no
+    manifest, but the Spark committer wrote ``_SUCCESS`` directly inside
+    it. A torn bucketed snapshot holds only ``data/`` (the committer's
+    ``_SUCCESS`` lands in there), so it never reads as legacy."""
     return os.path.exists(os.path.join(snap_dir, "manifest.json")) or (
         os.path.exists(os.path.join(snap_dir, "_SUCCESS"))
     )
@@ -225,27 +230,42 @@ def latest_committed_version(store_dir: str) -> int:
 
 def _read_manifest(store_dir: str, version: int) -> dict:
     """Raw manifest of a committed snapshot: bucket id -> entry (a
-    store-relative path, a position-delete ``{"data", "rows", "deletes",
-    "deleted"}`` dict, or a merge-on-read ``{"base", "deltas"}`` dict).
-    A legacy unbucketed snapshot reads as one bucket 0 holding the whole
-    snapshot directory."""
+    store-relative path, or a position-delete ``{"data", "rows",
+    "deletes", "deleted"}`` dict). A legacy unbucketed snapshot reads as
+    one bucket 0 holding the whole snapshot directory."""
     if version <= 0:
         return {}
     snap = os.path.join(store_dir, "snapshots", f"v{version:08d}")
     if _is_legacy(snap):
         return {0: os.path.relpath(snap, store_dir)}
     with open(os.path.join(snap, "manifest.json")) as f:
-        return {int(k): v for k, v in json.load(f).items()}
+        return {
+            int(k): _retired_entry(v, k, version) for k, v in json.load(f).items()
+        }
+
+
+def _retired_entry(entry, bucket, version: int):
+    """A manifest entry of the retired equality-delete layout (families
+    ``mor`` / ``ordered_mor``) as a plain dir: a compacted bucket,
+    ``{"base": p, "deltas": []}``, is just its base ``p``. A bucket with
+    equality deltas would need their fold, which no reader has any more."""
+    if not (isinstance(entry, dict) and "deltas" in entry):
+        return entry
+    if entry["deltas"] or not entry["base"]:
+        raise ValueError(
+            f"bucket {bucket} of snapshot v{version} holds equality-delete "
+            "deltas of the retired merge-on-read layout: compact the store "
+            "(Replayer.compact) with an engine build that still writes "
+            "that layout, then open it here"
+        )
+    return entry["base"]
 
 
 def _entry_dirs(entry) -> list:
-    """Data dirs of a manifest entry of any bucketed family, oldest first:
-    a plain entry is one dir, a position-delete entry its ``data`` chain,
-    a merge-on-read entry its base and deltas."""
+    """Data dirs of a manifest entry, oldest first: a plain entry is one
+    dir, a position-delete entry its ``data`` chain."""
     if isinstance(entry, str):
         return [entry]
-    if "deltas" in entry:
-        return [p for p in (entry["base"], *entry["deltas"]) if p]
     return list(entry["data"])
 
 
@@ -253,8 +273,8 @@ def write_decision(store_dir: str, old_version: int, new_version: int) -> dict:
     """How the commits from ``old_version`` to ``new_version`` wrote their
     buckets, from the two manifests alone (no Spark job, no data file
     read): ``buckets_rewritten`` (an entry replaced, added or dropped),
-    ``buckets_appended`` (a chain extended in place, by position deletes
-    or merge-on-read deltas), ``positions_deleted`` (stored rows the new
+    ``buckets_appended`` (a chain extended in place: a data dir, deleted
+    positions or both), ``positions_deleted`` (stored rows the new
     delete files list) and ``max_chain`` (the most data dirs one bucket
     of ``new_version`` reads)."""
     old = _read_manifest(store_dir, old_version)
@@ -305,7 +325,7 @@ class BucketedParquetMergeTarget:
       when it rewrites, and only its own rows when it appends.
     - a bucket appends when (a) it has a stored entry in a bucketed
       snapshot, (b) its chain of data dirs is shorter than
-      ``mor.DEFAULT_AUTO_COMPACT``, (c) after the batch its delta rows
+      ``DEFAULT_AUTO_COMPACT``, (c) after the batch its delta rows
       plus deleted positions stay below its base dir's rows (the batch's
       upserts taken as spread evenly over the touched buckets) and (d)
       its deleted positions stay at most ``POSITION_CAP``. Sizes come
@@ -324,6 +344,8 @@ class BucketedParquetMergeTarget:
       ``_metadata.row_index``: no join and no exchange;
     - ``purge_keys`` always rewrites: a position delete leaves the row's
       bytes in its file, so erasure needs the rewrite;
+    - ``compact`` rewrites the chains a merge left, for a bucket that
+      stops changing (Iceberg's ``rewrite_data_files``);
     - the manifest write is the snapshot's internal commit point (data is
       written first); the *pipeline* commit point stays the ledger append,
       so a torn snapshot is invisible and the next commit overwrites it.
@@ -347,8 +369,8 @@ class BucketedParquetMergeTarget:
     # persisted store-level family tag (``<store>/target_family.json``),
     # written at commit: resuming a store MUST reopen it with the same
     # target family, and sniffing the manifest/file shapes cannot
-    # distinguish e.g. a truncated merge-on-read store (empty {} manifest)
-    # from copy-on-write. Subclasses override.
+    # distinguish e.g. a truncated ordered store (empty {} manifest) from
+    # the plain one. Subclasses override.
     FAMILY = "bucketed_cow"
 
     def __init__(
@@ -374,10 +396,9 @@ class BucketedParquetMergeTarget:
     def _record_family(self) -> None:
         """Stamp the store's target family at commit time — LAST writer
         wins: a store is owned by whichever family last committed to it,
-        so an intentional migration (e.g. a merge-on-read target
-        ADOPTING a copy-on-write store's manifest) re-stamps on its
-        first commit and later auto-detection reopens through the new
-        family. Readers never write the stamp."""
+        so a store of a retired family (``mor``, opened as this class)
+        re-stamps on its first commit and later auto-detection reopens
+        through the committing family. Readers never write the stamp."""
         p = os.path.join(self.store_dir, "target_family.json")
         if os.path.exists(p):
             with open(p) as f:
@@ -544,7 +565,7 @@ class BucketedParquetMergeTarget:
         out = net.observe(
             obs,
             F.collect_set(self._bucket_expr()).alias("buckets"),
-            F.count_if(F.col("op") != "delete").alias("upserts"),
+            F.count_if(self._adds()).alias("upserts"),
         )
         out._observed_buckets = ((self.buckets, self.bucket_cols), obs)
         return out
@@ -559,16 +580,21 @@ class BucketedParquetMergeTarget:
         got = seen[1].get
         return sorted(got["buckets"]), int(got["upserts"])
 
+    def _adds(self):
+        """The net rows a merge adds to the store: its upserts (a delete
+        only removes)."""
+        return F.col("op") != "delete"
+
     def _bucket_counts(self, net: DataFrame) -> tuple:
-        """(sorted touched bucket ids, upsert rows) of a net change: as
-        observed, else from one tiny driver-side action (≤ ``buckets``
-        rows)."""
+        """(sorted touched bucket ids, rows ``_adds`` counts) of a net
+        change: as observed, else from one tiny driver-side action
+        (≤ ``buckets`` rows)."""
         seen = self._observed(net)
         if seen is not None:
             return seen
         rows = (
             net.groupBy(self._bucket_expr().alias("_b"))
-            .agg(F.count_if(F.col("op") != "delete").alias("n"))
+            .agg(F.count_if(self._adds()).alias("n"))
             .collect()
         )
         return sorted(r["_b"] for r in rows), sum(r["n"] for r in rows)
@@ -582,18 +608,6 @@ class BucketedParquetMergeTarget:
             return seen[0]
         rows = df.select(self._bucket_expr().alias("_b")).distinct().collect()
         return sorted(r["_b"] for r in rows)
-
-    def _base_rows(self, rows: DataFrame, version: int) -> DataFrame:
-        """Rows as written into a bucket's data file (layouts that store
-        extra per-row columns override)."""
-        return rows
-
-    def _bucket_entry(self, carried, rel: str, delta: bool):
-        """Manifest entry of a bucket this commit wrote ``rel`` into;
-        ``carried`` is the entry it had (None for a new bucket). A
-        copy-on-write bucket is its one data dir; merge-on-read overrides
-        to append delta writes to the chain."""
-        return rel
 
     def _dir_rows(self, rel: str) -> int:
         """Rows of a store-relative data dir, from its parquet footers."""
@@ -618,14 +632,58 @@ class BucketedParquetMergeTarget:
     def _may_append(chain: dict, upserts: float, positions: int) -> bool:
         """Rules (b)–(d) of the class docstring for a bucket whose batch
         adds ``upserts`` rows and deletes ``positions`` stored rows."""
-        from .mor import DEFAULT_AUTO_COMPACT  # lazy: mor imports this module
-
         deleted = chain["deleted"] + positions
         return (
             len(chain["data"]) < DEFAULT_AUTO_COMPACT
             and sum(chain["rows"][1:]) + upserts + deleted < chain["rows"][0]
             and deleted <= POSITION_CAP
         )
+
+    def _append_candidates(
+        self, touched: list, version: int, upserts: float = 0
+    ) -> dict:
+        """{bucket: chain} of the ``touched`` buckets that may append
+        ``upserts`` rows before their replaced positions are known (rule
+        (a): none of a legacy snapshot's)."""
+        if _is_legacy(self.snapshot_path(version)):
+            return {}
+        manifest = self._load_manifest(version)
+        chains = {b: self._chain(manifest[b]) for b in touched if b in manifest}
+        return {
+            b: c for b, c in chains.items() if self._may_append(c, upserts, 0)
+        }
+
+    def _appending(self, rows: DataFrame, chains: dict) -> dict:
+        """{bucket: (chain, {data-file path: [row index]})} for the
+        ``chains`` that may append ``rows`` — the rows each bucket would
+        append, every one counted (rule (c)), with the data file
+        ``_file`` and row index ``_row`` of the stored row it replaces
+        (NULL for none). One job counts them and collects the positions
+        per bucket."""
+        bucket = self._bucket_expr()
+        found = {b: (0, {}) for b in chains}
+        for r in (
+            rows.filter(bucket.isin(list(chains)))
+            .groupBy(bucket.alias("_b"))
+            .agg(
+                F.count("*").alias("n"),
+                F.collect_list(
+                    F.when(
+                        F.col("_file").isNotNull(), F.struct("_file", "_row")
+                    )
+                ).alias("pos"),
+            )
+            .collect()
+        ):
+            pos: dict = {}
+            for p in r["pos"]:
+                pos.setdefault(p["_file"], []).append(p["_row"])
+            found[r["_b"]] = (r["n"], pos)
+        return {
+            b: (chains[b], pos)
+            for b, (n, pos) in found.items()
+            if self._may_append(chains[b], n, sum(map(len, pos.values())))
+        }
 
     def _replaced_positions(
         self, spark: SparkSession, net: DataFrame, chains: dict
@@ -654,17 +712,16 @@ class BucketedParquetMergeTarget:
 
     def _commit_buckets(
         self, rows: DataFrame, touched: list, current_version: int,
-        carry_over: bool = True, delta: bool = False, appended=None,
+        carry_over: bool = True, appended=None,
     ) -> int:
         """The one bucket write: write ``rows`` partitioned by bucket under
-        snapshot version+1, splice the manifest, commit. A base write
-        (``data/``) replaces each touched bucket's entry, and a bucket
-        left with no rows writes no dir and drops out; a merge-on-read
-        delta write (``delta/``) adds to each touched bucket's entry.
-        ``appended`` maps the buckets a merge appends to onto (their
-        chain, {data-file path: [row index]} the batch replaces): their
-        dir, if any, extends the chain, and their positions go into the
-        commit's one ``deletes.json``. Untouched entries carry over by
+        snapshot version+1 (``data/``), splice the manifest, commit. Each
+        touched bucket's entry becomes the dir written for it, and a
+        bucket left with no rows writes no dir and drops out. ``appended``
+        maps the buckets a merge appends to onto (their chain, {data-file
+        path: [row index]} the batch replaces): their dir, if any, extends
+        the chain, and their positions go into the commit's one
+        ``deletes.json``. Untouched entries carry over by
         reference; ``carry_over=False`` (rebucket) starts the manifest
         empty — every live bucket of the new layout is written fresh. From
         a legacy snapshot ``rows`` holds the whole table (its one entry is
@@ -681,9 +738,7 @@ class BucketedParquetMergeTarget:
             touched = list(range(self.buckets))
         new_version = current_version + 1
         snap = self._fresh_snapshot(new_version)
-        out_dir = os.path.join(snap, "delta" if delta else "data")
-        if not delta:
-            rows = self._base_rows(rows, new_version)
+        out_dir = os.path.join(snap, "data")
         with micros_ts(rows.sparkSession):
             (
                 rows.withColumn("_bucket", self._bucket_expr())
@@ -716,8 +771,8 @@ class BucketedParquetMergeTarget:
                 if wrote or pos:
                     manifest[b] = chain
             elif wrote:
-                manifest[b] = self._bucket_entry(manifest.get(b), rel, delta)
-            elif not delta:
+                manifest[b] = rel
+            else:
                 manifest.pop(b, None)
         self._write_meta(new_version, manifest)
         return new_version
@@ -734,6 +789,29 @@ class BucketedParquetMergeTarget:
         self._fresh_snapshot(new_version)
         self._write_meta(new_version, {})
         return new_version
+
+    def compact(
+        self, spark: SparkSession, current_version: int, min_deltas: int = 1
+    ) -> int:
+        """Rewrite, as snapshot version+1, every bucket whose chain holds
+        at least ``min_deltas`` appended dirs or any deleted position: a
+        deleted position costs every read a filter. The rewrite carries
+        the family's whole stored form (``_read_full``: an ordered store
+        keeps its tombstones, which ``prune_tombstones`` ages out), and
+        the other buckets carry over by reference. Returns the new
+        version, or ``current_version`` when no bucket qualifies (no
+        empty commit)."""
+        self._adopt_layout(current_version)
+        chosen = sorted(
+            b
+            for b, e in self._load_manifest(current_version).items()
+            if isinstance(e, dict)
+            and (len(e["data"]) - 1 >= max(1, min_deltas) or e["deleted"])
+        )
+        if not chosen:
+            return current_version
+        rows = self._read_full(spark, current_version, set(chosen))
+        return self._commit_buckets(rows, chosen, current_version)
 
     def merge(self, spark: SparkSession, net: DataFrame, current_version: int) -> int:
         """Apply net changes (one row per key: final op + after image) and
@@ -772,17 +850,11 @@ class BucketedParquetMergeTarget:
         try:
             touched, upserts = self._bucket_counts(net)
             appended: dict = {}
-            if may_append and not _is_legacy(self.snapshot_path(current_version)):
-                manifest = self._load_manifest(current_version)
+            if may_append:
                 per_bucket = upserts / max(1, len(touched))
-                chains = {
-                    b: self._chain(manifest[b]) for b in touched if b in manifest
-                }
-                chains = {
-                    b: c
-                    for b, c in chains.items()
-                    if self._may_append(c, per_bucket, 0)
-                }
+                chains = self._append_candidates(
+                    touched, current_version, per_bucket
+                )
                 if chains:
                     found = self._replaced_positions(spark, net, chains)
                     appended = {
@@ -1009,24 +1081,23 @@ class BucketedParquetMergeTarget:
                 os.path.relpath(deletes, self.store_dir)
             ) not in live:
                 os.remove(deletes)
-            for sub in ("data", "delta"):
-                d = os.path.join(snap, sub)
-                if not os.path.isdir(d):
-                    continue
-                for bd in os.listdir(d):
-                    p = os.path.join(d, bd)
-                    if not (os.path.isdir(p) and bd.startswith("_bucket=")):
-                        continue  # committer markers (_SUCCESS etc.)
-                    rel = os.path.normpath(os.path.relpath(p, self.store_dir))
-                    if rel not in live:
-                        shutil.rmtree(p)
-                if not any(e.startswith("_bucket=") for e in os.listdir(d)):
-                    shutil.rmtree(d)
+            d = os.path.join(snap, "data")
+            if not os.path.isdir(d):
+                continue
+            for bd in os.listdir(d):
+                p = os.path.join(d, bd)
+                if not (os.path.isdir(p) and bd.startswith("_bucket=")):
+                    continue  # committer markers (_SUCCESS etc.)
+                rel = os.path.normpath(os.path.relpath(p, self.store_dir))
+                if rel not in live:
+                    shutil.rmtree(p)
+            if not any(e.startswith("_bucket=") for e in os.listdir(d)):
+                shutil.rmtree(d)
 
 
-class OrderedPolicy:
-    """The outrank guard, shared by the ordered sinks on both layouts
-    (``OrderedBucketedMergeTarget`` here, ``mor.OrderedMergeOnReadTarget``).
+class OrderedBucketedMergeTarget(BucketedParquetMergeTarget):
+    """Order-aware MERGE on the bucketed layout — the streaming apply
+    tier's default sink: the outrank guard.
 
     Every stored row carries its winning order tuple (``_ord_<col>``
     longs) and an incoming row replaces it only when its tuple outranks
@@ -1034,15 +1105,32 @@ class OrderedPolicy:
     Spark's file-stream source does not promise changelog files arrive in
     commit order across triggers, and an at-least-once redelivery of an
     old decode output must not regress state to older images. Exact ties
-    resolve to the latest write — idempotent, since equal rank implies the
-    identical event. Deletes persist as **tombstones**: without them, a
-    delete applied before its out-of-order insert arrives would leave
-    nothing to outrank the insert and the row would resurrect.
+    (NULL order values included) resolve to the incoming row —
+    idempotent, since equal rank implies the identical event. Deletes
+    persist as **tombstones** (``_deleted``): without them, a delete
+    applied before its out-of-order insert arrives would leave nothing to
+    outrank the insert and the row would resurrect.
 
-    Mixed in before a bucketed layout class, which supplies
-    ``read_with_order`` (spec columns + order tuple + ``_deleted``) and
-    the tie-break: copy-on-write ranks the incoming row above the stored
-    one (``_prio``), merge-on-read ranks by write generation (``_gen``)."""
+    Per touched bucket a merge rewrites or appends, under the plain
+    layout's rules (b)–(d), with every winning row, tombstones included,
+    counted as an appended row:
+
+    - a rewritten bucket is one union of its stored rows with the
+      incoming ones and one ``max_by`` over (order tuple, incoming
+      priority) per key;
+    - an appended bucket gets the incoming rows that outrank (or tie)
+      the stored row of their key, plus the positions of the stored rows
+      they replace. One join of the incoming rows with the appending
+      buckets' stored order tuples, persisted (it is net-sized), feeds
+      both the positions and the write. As in the plain merge, a bucket
+      whose share of the batch's rows already fails rule (c) is
+      rewritten without that join.
+
+    Layout persistence, ``rebucket``, ``compact``, ``gc`` and the change
+    feed are the plain layout's; ``_read_full`` carries order tuples and
+    tombstones forward verbatim."""
+
+    FAMILY = "ordered_bucketed_cow"
 
     def __init__(
         self,
@@ -1058,17 +1146,23 @@ class OrderedPolicy:
     def _ord_names(self) -> list[str]:
         return [f"_ord_{c}" for c in self.order_cols]
 
+    def _adds(self):
+        """Every net row: a winning delete is stored as a tombstone."""
+        return F.lit(True)
+
     def _stored_schema(self) -> T.StructType:
-        """The layout's columns plus the order tuple (longs; NULL in a
-        file that predates them) and the tombstone flag."""
+        """The spec columns plus the order tuple (longs; NULL in a file
+        that predates them) and the tombstone flag. A base compacted by
+        the retired ordered merge-on-read layout flags its tombstones as
+        ``_op = 'delete'`` instead."""
         schema = super()._stored_schema()
         for o in self._ord_names():
             schema = schema.add(o, T.LongType())
-        return schema.add("_deleted", T.BooleanType())
+        return schema.add("_deleted", T.BooleanType()).add("_op", T.StringType())
 
-    def _incoming(self, net: DataFrame, op_col: str) -> DataFrame:
+    def _incoming(self, net: DataFrame) -> DataFrame:
         """Net change rows in stored form: key and value columns cast to
-        the spec, the op as ``op_col``, the order tuple as longs."""
+        the spec, the order tuple as longs, ``_deleted`` for a delete."""
         spec = self.spec
         keys = list(spec.primary_key)
         return net.select(
@@ -1078,11 +1172,26 @@ class OrderedPolicy:
                 for c, d, _ in spec.columns
                 if c not in keys
             ],
-            F.col("op").alias(op_col),
             *[
                 F.col(c).cast("long").alias(o)
                 for c, o in zip(self.order_cols, self._ord_names())
             ],
+            (F.col("op") == "delete").alias("_deleted"),
+        )
+
+    def read_with_order(
+        self, spark: SparkSession, version: int, bucket_ids=None
+    ) -> DataFrame:
+        """Full stored form (spec columns + order tuple + tombstone flag),
+        manifest-pruned to ``bucket_ids`` like ``read``."""
+        manifest = self._pruned_manifest(version, bucket_ids)
+        return self._scan_live(spark, manifest.values()).select(
+            *[n for n, _, _ in self.spec.columns],
+            *self._ord_names(),
+            # a file written before the flag holds live rows only
+            F.coalesce(
+                F.col("_deleted"), F.col("_op") == "delete", F.lit(False)
+            ).alias("_deleted"),
         )
 
     def read(self, spark: SparkSession, version: int, bucket_ids=None) -> DataFrame:
@@ -1102,6 +1211,85 @@ class OrderedPolicy:
             "MINIMAL row images need whole-row state the outrank guard "
             "cannot reconstruct per column; use the batch path "
             "(Replayer(row_image='minimal')) for MINIMAL streams"
+        )
+
+    def merge(self, spark: SparkSession, net: DataFrame, current_version: int) -> int:
+        """``net`` must carry key cols + ``op`` + ``after_<col>`` + the
+        order columns. Winner per key = max over (order tuple, incoming
+        priority); a winning delete leaves a tombstone."""
+        self._adopt_layout(current_version)
+        keys = list(self.spec.primary_key)
+        ords = self._ord_names()
+        stored_cols = [*[n for n, _, _ in self.spec.columns], *ords, "_deleted"]
+        net = net.persist()  # touched buckets, the join and the write read it
+        joined = None
+        try:
+            touched, adds = self._bucket_counts(net)
+            incoming = self._incoming(net)
+            # pre-check on the per-bucket estimate, as the plain merge
+            # does: a batch too large to append skips the join
+            chains = self._append_candidates(
+                touched, current_version, adds / max(1, len(touched))
+            )
+            appended: dict = {}
+            rows = None
+            if chains:
+                joined = self._outranking(spark, incoming, chains)
+                appended = self._appending(joined.filter("_wins"), chains)
+            if appended:
+                rows = joined.filter(
+                    self._bucket_expr().isin(list(appended)) & F.col("_wins")
+                ).select(*stored_cols)
+            rewrite = sorted(set(touched) - set(appended))
+            if rewrite or rows is None:
+                stored = self.read_with_order(spark, current_version, set(rewrite))
+                rank = F.struct(*[F.col(o) for o in ords], F.col("_prio"))
+                payload = F.struct(*[F.col(c) for c in stored_cols if c not in keys])
+                winners = (
+                    stored.withColumn("_prio", F.lit(0))
+                    .unionByName(
+                        incoming.filter(self._bucket_expr().isin(rewrite))
+                        .withColumn("_prio", F.lit(1))
+                    )
+                    .groupBy(*keys)
+                    .agg(F.max_by(payload, rank).alias("_win"))
+                    .select(*keys, "_win.*")
+                    .select(*stored_cols)
+                )
+                rows = winners if rows is None else rows.unionByName(winners)
+            return self._commit_buckets(
+                rows, touched, current_version, appended=appended
+            )
+        finally:
+            if joined is not None:
+                joined.unpersist()
+            net.unpersist()
+
+    def _outranking(
+        self, spark: SparkSession, incoming: DataFrame, chains: dict
+    ) -> DataFrame:
+        """The incoming rows of the ``chains``' buckets joined, once, with
+        the live stored row of their key: its order tuple, ``_file`` and
+        ``_row``. ``_wins`` marks a row that outranks or ties its stored
+        row, or has none. Persisted (net-sized): the positions job and
+        the write both read it."""
+        keys = list(self.spec.primary_key)
+        ords = self._ord_names()
+        stored = self._scan_live(spark, chains.values()).select(
+            *keys,
+            *[F.col(o).alias(f"_s{o}") for o in ords],
+            _file_col().alias("_file"),
+            F.col("_metadata.row_index").alias("_row"),
+        )
+        wins = F.col("_file").isNull() | (
+            F.struct(*[F.col(o) for o in ords])
+            >= F.struct(*[F.col(f"_s{o}") for o in ords])
+        )
+        return (
+            incoming.filter(self._bucket_expr().isin(list(chains)))
+            .join(stored, on=keys, how="left")
+            .withColumn("_wins", wins)
+            .persist()
         )
 
     def prune_tombstones(
@@ -1131,79 +1319,6 @@ class OrderedPolicy:
         return self._commit_buckets(
             kept, list(range(self.buckets)), current_version, carry_over=False
         )
-
-
-class OrderedBucketedMergeTarget(OrderedPolicy, BucketedParquetMergeTarget):
-    """Order-aware MERGE on the bucket-pruned copy-on-write layout — the
-    streaming apply tier's default sink (see ``OrderedPolicy``).
-
-    Every stored row carries its winning order tuple (``_ord_<col>``) and
-    tombstone flag (``_deleted``), buckets splice through manifests, and a
-    trigger's merge unions ONLY the touched buckets' stored rows with the
-    incoming net change — per-trigger IO is O(touched-bucket data). Plan
-    shape per merge: one union + one ``max_by`` aggregate over touched
-    buckets. Same layout persistence / ``rebucket`` / ``gc`` / change-feed
-    machinery as the plain layout (a rebucket carries order tuples and
-    tombstones forward verbatim via ``_read_full``)."""
-
-    FAMILY = "ordered_bucketed_cow"
-
-    def read_with_order(
-        self, spark: SparkSession, version: int, bucket_ids=None
-    ) -> DataFrame:
-        """Full stored form (spec columns + order tuple + tombstone flag),
-        manifest-pruned to ``bucket_ids`` like ``read``."""
-        manifest = self._pruned_manifest(version, bucket_ids)
-        return self._scan_live(spark, manifest.values()).select(
-            *[n for n, _, _ in self.spec.columns],
-            *self._ord_names(),
-            # a file written before the flag holds live rows only
-            F.coalesce(F.col("_deleted"), F.lit(False)).alias("_deleted"),
-        )
-
-    def merge(self, spark: SparkSession, net: DataFrame, current_version: int) -> int:
-        """``net`` must carry key cols + ``op`` + ``after_<col>`` + the
-        order columns. Winner per key = max over (order tuple, incoming
-        priority); a winning delete leaves a tombstone."""
-        self._adopt_layout(current_version)
-        keys = list(self.spec.primary_key)
-        value_cols = [n for n, _, _ in self.spec.columns if n not in keys]
-        ords = self._ord_names()
-
-        net = net.persist()  # touched-bucket pre-pass + merge both consume it
-        try:
-            touched = self._touched_buckets(net)
-            incoming = self._incoming(net, "op").withColumn("_prio", F.lit(1))
-            stored = self.read_with_order(
-                spark, current_version, set(touched)
-            ).select(
-                *keys, *value_cols,
-                F.when(F.col("_deleted"), F.lit("delete"))
-                .otherwise(F.lit("keep"))
-                .alias("op"),
-                *ords,
-                F.lit(0).alias("_prio"),
-            )
-            rank = F.struct(*[F.col(o) for o in ords], F.col("_prio"))
-            payload = F.struct(
-                F.col("op"),
-                *[F.col(c) for c in value_cols],
-                *[F.col(o) for o in ords],
-            )
-            winners = (
-                stored.unionByName(incoming)
-                .groupBy(*keys)
-                .agg(F.max_by(payload, rank).alias("_win"))
-                .select(
-                    *keys,
-                    *[F.col(f"_win.{c}").alias(c) for c in value_cols],
-                    *[F.col(f"_win.{o}").alias(o) for o in ords],
-                    (F.col("_win.op") == "delete").alias("_deleted"),
-                )
-            )
-            return self._commit_buckets(winners, touched, current_version)
-        finally:
-            net.unpersist()
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -1327,33 +1442,30 @@ def load_target_family(store_dir: str) -> str | None:
 def target_class_for_family(family: str):
     """Dispatch a stamped family back to its target class. The retired
     unbucketed families (``cow``, ``ordered_cow``) open through the
-    bucketed classes, which read their snapshots as one bucket. Raises
+    bucketed classes, which read their snapshots as one bucket; the
+    retired merge-on-read families (``mor``, ``ordered_mor``) too, whose
+    compacted buckets read as plain dirs (``_retired_entry``). Raises
     KeyError for an unknown stamp — opening a store through a guessed
     loader is exactly the failure the stamp exists to prevent."""
-    from . import mor  # lazy: mor imports this module
-
     return {
         "cow": BucketedParquetMergeTarget,
         "bucketed_cow": BucketedParquetMergeTarget,
+        "mor": BucketedParquetMergeTarget,
         "ordered_cow": OrderedBucketedMergeTarget,
         "ordered_bucketed_cow": OrderedBucketedMergeTarget,
-        "mor": mor.MergeOnReadBucketedTarget,
-        "ordered_mor": mor.OrderedMergeOnReadTarget,
+        "ordered_mor": OrderedBucketedMergeTarget,
     }[family]
 
 
 def _sniff_family(store_dir: str, version: int) -> str:
     """Family of an unstamped store, from its snapshot at ``version``:
-    ``{"base", "deltas"}`` manifest entries mean merge-on-read, path and
-    position-delete entries (or a legacy bare parquet directory)
-    copy-on-write, and ``_ord_*`` columns in a referenced parquet file the
-    ordered form."""
+    ``_ord_*`` columns in a referenced parquet file mean the ordered form,
+    anything else the plain one."""
     import glob
 
     import pyarrow.parquet as pq
 
     entries = list(_read_manifest(store_dir, version).values())
-    mor = any(isinstance(e, dict) and "deltas" in e for e in entries)
     rels = [r for e in entries for r in _entry_dirs(e)]
     ordered = False
     for rel in rels:
@@ -1362,7 +1474,7 @@ def _sniff_family(store_dir: str, version: int) -> str:
             names = pq.read_schema(files[0]).names
             ordered = any(n.startswith("_ord_") for n in names)
             break
-    return ("ordered_" if ordered else "") + ("mor" if mor else "bucketed_cow")
+    return "ordered_bucketed_cow" if ordered else "bucketed_cow"
 
 
 def open_store(store_dir: str, spec: TableSpec = TRANSCRIPTS):

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from ..binlog.decoder import TRANSCRIPTS, TableSpec, change_event_schema
 from ..pipeline import apply
 from ..pipeline.audit import require_snapshot_target
-from ..pipeline.mor import auto_compact_policy
 from ..pipeline.target import (
     OrderedBucketedMergeTarget,
     latest_committed_version,
@@ -57,7 +56,6 @@ def stream_apply(
     ignore_server_ids: tuple[int, ...] = (),
     column_transforms: dict[str, str] | None = None,
     audit: object | None = None,
-    auto_compact: int | None = None,
 ):
     """Run the apply tier as a Structured Streaming query; returns the
     StreamingQuery (caller awaits termination). Applies FULL row images
@@ -82,25 +80,16 @@ def stream_apply(
     true ledger gap with no such window.
 
     Default sink: ``OrderedBucketedMergeTarget`` — the outrank guard and
-    tombstones on the bucket-pruned CoW layout, so a steady-state trigger
-    touching K conversations rewrites K buckets, not the table. Pass
-    ``target=OrderedMergeOnReadTarget(...)`` for the delta-append form
-    (measured ~4× cheaper per trigger, BENCH.md). For
-    MoR targets ``auto_compact`` DEFAULTS to ``mor.DEFAULT_AUTO_COMPACT``
-    (``mor.auto_compact_policy``): any bucket whose delta chain reaches
-    the threshold folds back into base right after the trigger (read fold
-    cost grows with chain length — BENCH.md); pass
-    ``auto_compact=0`` to opt out or another N to tune it. No ledger
-    here: each trigger merges onto the store's newest COMMITTED snapshot
-    (``target.latest_committed_version``), so a compacted version simply
-    becomes the next base, a crash between merge and compact just leaves
-    the chain one trigger longer, and a trigger that crashed mid-write
-    leaves an orphan the next trigger overwrites."""
+    tombstones on the bucketed layout, so a steady-state trigger touching
+    K conversations appends to (or rewrites) K buckets, not the table; a
+    chain at its cap is rewritten by the merge itself. No ledger here:
+    each trigger merges onto the store's newest COMMITTED snapshot
+    (``target.latest_committed_version``), and a trigger that crashed
+    mid-write leaves an orphan the next trigger overwrites."""
     column_transforms = apply.check_transforms(spec, column_transforms)
     target = target or OrderedBucketedMergeTarget(store_dir, spec)
     if audit is not None:
         require_snapshot_target(target)
-    auto_compact = auto_compact_policy(target, auto_compact)
 
     reader = spark.readStream.schema(change_event_schema(spec))
     if max_files_per_trigger:
@@ -122,13 +111,11 @@ def stream_apply(
         # row), and an out-of-order older file cannot outrank stored state.
         # An audit rejection fails the query: the trigger is never
         # checkpointed
-        new_version = apply.publish(
+        apply.publish(
             spark, target, apply.net_change(batch_df, spec),
             latest_committed_version(store_dir), audit=audit,
             changes=batch_df, batch_id=batch_id,
         )
-        if apply.compact_due(target, new_version, auto_compact):
-            target.compact(spark, new_version, min_deltas=auto_compact)
 
     return _start(
         stream, apply_batch,

@@ -108,12 +108,13 @@ def test_cli_bootstrap_then_replay(spark, fixture_dirs, tmp_path, capsys):
 
 
 def test_cli_purge_and_compact(spark, tmp_path, capsys):
-    """Operator surface for the compliance + maintenance ops: replay a
-    merge-on-read store via the library, purge one conversation and
-    compact through the CLI (which must autodetect the MoR layout), and
-    verify the row is gone and chains folded."""
-    from mysql_cdc_spark.pipeline.mor import MergeOnReadBucketedTarget
+    """Operator surface for the compliance + maintenance ops: replay the
+    default store via the library until a batch appends, compact and
+    purge one conversation through the CLI (which reopens the store
+    through its stamp), and verify the chains are rewritten and the row
+    is gone."""
     from mysql_cdc_spark.pipeline.replay import Replayer
+    from mysql_cdc_spark.pipeline.target import BucketedParquetMergeTarget
 
     txns = generate_changelog(
         n_conversations=10, max_turns=4, n_extra_ops=30, seed=41,
@@ -123,9 +124,10 @@ def test_cli_purge_and_compact(spark, tmp_path, capsys):
     store = str(tmp_path / "store")
     rep = Replayer(
         spark, binlog, store,
-        target=MergeOnReadBucketedTarget(store, buckets=4),
+        target=BucketedParquetMergeTarget(store, buckets=2),
     )
     rep.replay(files_per_batch=1)
+    assert any(e.metrics.get("buckets_appended") for e in rep.ledger.entries())
     victim = rep.read_state().toPandas()["conv_id"].iloc[0]
 
     rc = main([
@@ -135,6 +137,8 @@ def test_cli_purge_and_compact(spark, tmp_path, capsys):
     assert rc == 0
     out = _first_json(capsys.readouterr().out)
     assert out["compacted"] is True
+    manifest = rep.target._load_manifest(out["snapshot_version"])
+    assert all(isinstance(e, str) for e in manifest.values())
 
     rc = main([
         "purge", "--binlog-dir", binlog, "--store-dir", store,

@@ -92,10 +92,6 @@ def test_internal_commit_target_merge_deferred_until_stats(tmp_path, spark):
     back, and a snapshot sink stages no version."""
     from mysql_cdc_spark.binlog.decoder import TRANSCRIPTS
     from mysql_cdc_spark.fixtures import generate_changelog, write_binlog_files
-    from mysql_cdc_spark.pipeline.mor import (
-        MergeOnReadBucketedTarget,
-        OrderedMergeOnReadTarget,
-    )
     from mysql_cdc_spark.pipeline.replay import Replayer
     from mysql_cdc_spark.pipeline.target import (
         BucketedParquetMergeTarget,
@@ -122,7 +118,6 @@ def test_internal_commit_target_merge_deferred_until_stats(tmp_path, spark):
     for cls in (
         InternalCommitTarget, BucketedParquetMergeTarget,
         OrderedBucketedMergeTarget,
-        MergeOnReadBucketedTarget, OrderedMergeOnReadTarget,
     ):
         store = str(tmp_path / cls.__name__)
         tgt = cls(store, TRANSCRIPTS, buckets=2)

@@ -1,18 +1,22 @@
-"""MergeOnReadBucketedTarget: delta-append MERGE with read-time fold.
+"""The default store's merge-on-read side: position-delete appends,
+``compact`` and the retired ``mor`` stamp.
 
-Pins (a) state equality with the copy-on-write targets across full
-replays (full + MINIMAL row images, deletes, mid-stream schema
-evolution, resume), (b) the merge-on-read property itself — a merge
-writes ONLY delta files (no base rewrite; untouched buckets carried by
-manifest reference), (c) compaction — fold deltas into fresh base,
-state unchanged, chains cleared, fast-path reads after, (d) rebucket
-over a live delta chain, (e) manifest-aware GC keeps every base and
-delta a live manifest references, (f) truncate as a metadata-only
-fence.
+Pins (a) state equality between an appending replay and a rewrite-only
+one (chain cap shrunk to 1) across full replays (full + MINIMAL row
+images, deletes, mid-stream schema evolution, resume), (b) the append
+property itself — an appending merge writes only the batch's rows and
+leaves the chain's older dirs in place (untouched buckets carried by
+manifest reference), (c) compaction — chains rewritten into plain dirs,
+state unchanged, no position filter after, (d) rebucket over a live
+chain, (e) manifest-aware GC keeps every dir and delete file a live
+manifest references, (f) truncate as a metadata-only fence, (g) the
+chain cap bounds every replay's chains with no maintenance call, and
+(h) a store stamped ``mor`` continues as this store.
 """
 
 import json
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -23,9 +27,14 @@ from mysql_cdc_spark.fixtures import (
     generate_changelog,
     write_binlog_files,
 )
-from mysql_cdc_spark.pipeline.mor import MergeOnReadBucketedTarget
+import mysql_cdc_spark.pipeline.target as target_mod
 from mysql_cdc_spark.pipeline.replay import Replayer
-from mysql_cdc_spark.pipeline.target import BucketedParquetMergeTarget
+from mysql_cdc_spark.pipeline.target import (
+    DEFAULT_AUTO_COMPACT,
+    BucketedParquetMergeTarget,
+    IcebergMergeTarget,
+    open_store,
+)
 
 
 def _state_pdf(rep: Replayer) -> pd.DataFrame:
@@ -54,21 +63,64 @@ def changelog(tmp_path_factory):
     return txns, outdir, apply_changelog_oracle(txns)
 
 
-def _mor(store: str, buckets: int = 8) -> MergeOnReadBucketedTarget:
-    return MergeOnReadBucketedTarget(store, TRANSCRIPTS, buckets=buckets)
+def _mor(store: str, buckets: int = 8) -> BucketedParquetMergeTarget:
+    return BucketedParquetMergeTarget(store, TRANSCRIPTS, buckets=buckets)
+
+
+@pytest.fixture(scope="module")
+def replayed(spark, changelog, tmp_path_factory):
+    """One appending replay of the changelog (a batch per file) into an
+    8-bucket store; the tests that only read, compact, gc or rewind such
+    a store take a copy of it (``_replayed``)."""
+    _, outdir, _ = changelog
+    store = str(tmp_path_factory.mktemp("replayed") / "store")
+    Replayer(spark, outdir, store, target=_mor(store)).replay(files_per_batch=1)
+    return store
+
+
+def _replayed(spark, changelog, replayed, dest: str) -> tuple:
+    """(Replayer, target) over a copy of the ``replayed`` store at ``dest``."""
+    shutil.copytree(replayed, dest)
+    tgt = _mor(dest)
+    return Replayer(spark, changelog[1], dest, target=tgt), tgt
+
+
+def _appends(rep: Replayer) -> tuple:
+    """(buckets appended, positions deleted) over the ledger's entries."""
+    ms = [e.metrics for e in rep.ledger.entries()]
+    return (
+        sum(m.get("buckets_appended", 0) for m in ms),
+        sum(m.get("positions_deleted", 0) for m in ms),
+    )
+
+
+NET_SCHEMA = (
+    "conv_id string, turn_idx int, op string, after_role string, "
+    "after_text string, after_tool string, after_ts timestamp"
+)
+
+
+def _inserts(spark, keys):
+    return spark.createDataFrame(
+        [(c, 0, "insert", "user", c, None, None) for c in keys], NET_SCHEMA
+    )
 
 
 class TestEquality:
     def test_full_replay_matches_cow_target_and_oracle(
-        self, spark, changelog, tmp_path
+        self, spark, changelog, replayed, tmp_path, monkeypatch
     ):
+        """An appending replay equals a replay whose chain cap of 1 makes
+        every merge rewrite, and the oracle."""
         _, outdir, oracle = changelog
         cow_store = str(tmp_path / "cow")
         cow = Replayer(spark, outdir, cow_store)
-        mor_store = str(tmp_path / "mor")
-        mor = Replayer(spark, outdir, mor_store, target=_mor(mor_store))
-        cow.replay(files_per_batch=1)
-        mor.replay(files_per_batch=1)
+        mor, _ = _replayed(spark, changelog, replayed, str(tmp_path / "mor"))
+        with monkeypatch.context() as m:
+            m.setattr(target_mod, "DEFAULT_AUTO_COMPACT", 1)
+            cow.replay(files_per_batch=1)
+        assert _appends(cow) == (0, 0)
+        assert all(n > 0 for n in _appends(mor))
         a, b = _state_pdf(cow), _state_pdf(mor)
         pd.testing.assert_frame_equal(a, b)
         assert b["text"].tolist() == oracle["text"].tolist()
@@ -76,9 +128,8 @@ class TestEquality:
 
     def test_minimal_row_image_matches_cow(self, spark, tmp_path):
         """MINIMAL images: updates carry only PK + changed columns — the
-        read-time fold must apply per-COLUMN carried bits, not whole
-        images (an uncarried column falls through to the last
-        contribution that did carry it)."""
+        per-column merge (which always rewrites) must keep an uncarried
+        column's stored value, whatever the store's bucket count."""
         txns = generate_changelog(
             n_conversations=20, max_turns=5, n_extra_ops=80, seed=13,
             evolve_after_frac=0.5,
@@ -107,8 +158,7 @@ class TestEquality:
 
     def test_delete_then_reinsert_across_batches(self, spark, tmp_path):
         """A key deleted in one batch and re-inserted in a later one: the
-        delete fence must void older contributions but not the newer
-        insert."""
+        delete must void the older image but not the newer insert."""
         from mysql_cdc_spark.fixtures import Op, Txn, _row
 
         txns = [
@@ -142,34 +192,30 @@ class TestEquality:
 
 
 class TestMergeOnReadProperty:
-    def test_merge_writes_only_deltas(self, spark, changelog, tmp_path):
-        """After the first batch establishes state, later merges must not
-        rewrite any base data: every snapshot dir beyond v1 contains only
-        a delta/ dir, and each bucket's base pointer is unchanged."""
-        _, outdir, _ = changelog
-        store = str(tmp_path / "prop")
-        tgt = _mor(store)
-        rep = Replayer(spark, outdir, store, target=tgt)
-        rep.replay(files_per_batch=1)
+    def test_merge_writes_only_deltas(self, spark, changelog, replayed, tmp_path):
+        """An appending merge leaves the chain's older dirs in place and
+        adds at most one dir, written under its own snapshot."""
+        rep, tgt = _replayed(spark, changelog, replayed, str(tmp_path / "prop"))
         last = rep.ledger.last().snapshot_version
         assert last >= 3
-        snaps_root = os.path.join(store, "snapshots")
-        for v in range(1, last + 1):
-            snap = os.path.join(snaps_root, f"v{v:08d}")
-            assert not os.path.exists(os.path.join(snap, "data")), (
-                f"v{v} rewrote base data — not merge-on-read"
-            )
-        # base pointers never move across merge-only versions (no base yet
-        # at all here: the chain starts from an empty table, so every
-        # entry's base is None and all state lives in deltas)
-        with open(os.path.join(snaps_root, f"v{last:08d}", "manifest.json")) as f:
-            man = json.load(f)
-        assert all(e["base"] is None for e in man.values())
-        assert sum(len(e["deltas"]) for e in man.values()) > 0
+        n_appends = 0
+        for v in range(2, last + 1):
+            old, new = tgt._load_manifest(v - 1), tgt._load_manifest(v)
+            for b, e in new.items():
+                if not isinstance(e, dict) or old.get(b) in (None, e):
+                    continue
+                was = tgt._chain(old[b])["data"]
+                if e["data"][: len(was)] != was:
+                    continue  # rewritten, then appended to later
+                n_appends += 1
+                added = e["data"][len(was):]
+                assert len(added) <= 1
+                assert all(f"v{v:08d}" in d for d in added)
+        assert n_appends > 0
 
     def test_untouched_buckets_carried_by_reference(self, spark, tmp_path):
-        """A second batch touching one conversation must append a delta to
-        only that conversation's bucket; every other bucket's entry is
+        """A second batch touching one conversation must append to only
+        that conversation's bucket; every other bucket's entry is
         byte-identical to the previous manifest."""
         from mysql_cdc_spark.fixtures import Op, Txn, _row
 
@@ -184,7 +230,7 @@ class TestMergeOnReadProperty:
         outdir = str(tmp_path / "binlog_carry")
         write_binlog_files(txns1 + txns2, outdir, txns_per_file=16)
         store = str(tmp_path / "carry")
-        tgt = _mor(store)
+        tgt = _mor(store, buckets=2)
         rep = Replayer(spark, outdir, store, target=tgt)
         rep.replay(files_per_batch=1)
         m1 = tgt._load_manifest(1)
@@ -192,24 +238,21 @@ class TestMergeOnReadProperty:
         changed = [b for b in set(m1) | set(m2) if m1.get(b) != m2.get(b)]
         assert len(changed) == 1
         b = changed[0]
-        assert m2[b]["deltas"][: len(m1[b]["deltas"])] == m1[b]["deltas"]
-        assert len(m2[b]["deltas"]) == len(m1[b]["deltas"]) + 1
+        assert m2[b]["data"][:1] == [m1[b]]
+        assert len(m2[b]["data"]) == 2 and m2[b]["deleted"] == 1
 
-    def test_fast_path_after_compact(self, spark, changelog, tmp_path):
-        """compact() folds every chain; the post-compact read must not
-        contain the fold (no delta scan, no aggregate) — plan check via
-        the absence of delta paths in the read's file sources."""
-        _, outdir, oracle = changelog
-        store = str(tmp_path / "fast")
-        tgt = _mor(store)
-        rep = Replayer(spark, outdir, store, target=tgt)
-        rep.replay(files_per_batch=1)
+    def test_fast_path_after_compact(self, spark, changelog, replayed, tmp_path):
+        """compact() rewrites every chain; the post-compact read is a
+        plain scan — no position filter in its plan."""
+        oracle = changelog[2]
+        rep, tgt = _replayed(spark, changelog, replayed, str(tmp_path / "fast"))
         v = rep.ledger.last().snapshot_version
+        assert any(isinstance(e, dict) for e in tgt._load_manifest(v).values())
         v2 = tgt.compact(spark, v, min_deltas=1)
         assert v2 == v + 1
-        assert all(n == 0 for n in tgt.delta_stats(v2).values())
+        assert all(isinstance(e, str) for e in tgt._load_manifest(v2).values())
         plan = tgt.read(spark, v2)._jdf.queryExecution().executedPlan().toString()
-        assert "max_by" not in plan
+        assert "row_index" not in plan
         state = (
             tgt.read(spark, v2)
             .orderBy("conv_id", "turn_idx")
@@ -220,12 +263,10 @@ class TestMergeOnReadProperty:
 
 
 class TestCompact:
-    def test_compact_preserves_state_and_prunes(self, spark, changelog, tmp_path):
-        _, outdir, _ = changelog
-        store = str(tmp_path / "cmp")
-        tgt = _mor(store)
-        rep = Replayer(spark, outdir, store, target=tgt)
-        rep.replay(files_per_batch=1)
+    def test_compact_preserves_state_and_prunes(
+        self, spark, changelog, replayed, tmp_path
+    ):
+        rep, tgt = _replayed(spark, changelog, replayed, str(tmp_path / "cmp"))
         v = rep.ledger.last().snapshot_version
         before = (
             tgt.read(spark, v)
@@ -234,6 +275,7 @@ class TestCompact:
             .reset_index(drop=True)
         )
         v2 = tgt.compact(spark, v, min_deltas=1)
+        assert v2 == v + 1
         after = (
             tgt.read(spark, v2)
             .orderBy("conv_id", "turn_idx")
@@ -251,28 +293,28 @@ class TestCompact:
         pd.testing.assert_frame_equal(before, old)
 
     def test_compact_threshold_and_selection(self, spark, tmp_path):
-        """min_deltas above every chain length → no-op (same version, no
-        empty commit); bucket_ids restricts the rewrite."""
-        from mysql_cdc_spark.fixtures import Op, Txn, _row
-
-        txns = [
-            Txn(seq=s, ops=[Op("insert", None, _row(f"c{s}", 0, "user", f"v{s}", s * 100))])
-            for s in range(1, 9)
-        ]
-        outdir = str(tmp_path / "binlog_thr")
-        write_binlog_files(txns, outdir, txns_per_file=4)
-        store = str(tmp_path / "thr")
-        tgt = _mor(store, buckets=4)
-        rep = Replayer(spark, outdir, store, target=tgt)
-        rep.replay(files_per_batch=1)
-        v = rep.ledger.last().snapshot_version
-        assert tgt.compact(spark, v, min_deltas=99) == v
-        chains = tgt.delta_stats(v)
-        one = next(b for b, n in chains.items() if n > 0)
-        v2 = tgt.compact(spark, v, min_deltas=1, bucket_ids={one})
-        stats = tgt.delta_stats(v2)
-        assert stats[one] == 0
-        assert any(n > 0 for b, n in stats.items() if b != one)
+        """Insert-only appends (no deleted positions): min_deltas above
+        every chain's appended dirs → no-op (same version, no empty
+        commit); min_deltas at the longest chain rewrites only the chains
+        that long."""
+        tgt = _mor(str(tmp_path / "thr"), buckets=4)
+        v = tgt.merge(spark, _inserts(spark, [f"s{i:03d}" for i in range(200)]), 0)
+        for i in range(8):
+            v = tgt.merge(spark, _inserts(spark, [f"c{i}"]), v)
+        chains = {
+            b: len(e["data"]) - 1
+            for b, e in tgt._load_manifest(v).items() if isinstance(e, dict)
+        }
+        assert len(chains) >= 2
+        assert tgt.compact(spark, v, min_deltas=max(chains.values()) + 1) == v
+        top = max(chains.values())
+        assert min(chains.values()) < top
+        v2 = tgt.compact(spark, v, min_deltas=top)
+        m2 = tgt._load_manifest(v2)
+        assert all(
+            isinstance(m2[b], str) == (n == top) for b, n in chains.items()
+        )
+        assert tgt.read(spark, v2).count() == 208
 
     def test_merge_after_compact_continues_chain(self, spark, tmp_path):
         from mysql_cdc_spark.fixtures import Op, Txn, _row
@@ -319,7 +361,8 @@ class TestReplayerIntegration:
         rep = Replayer(spark, outdir, store, target=tgt)
         files = rep.pending_files()
         half = max(1, len(files) // 2)
-        rep.run_batch(files[:half])
+        for f in files[:half]:  # one segment a batch, so later ones append
+            rep.run_batch([f])
         v_before = rep.ledger.current_snapshot_version()
         v_c = rep.compact(min_deltas=1)
         assert v_c == v_before + 1
@@ -331,23 +374,23 @@ class TestReplayerIntegration:
         assert state["text"].tolist() == oracle["text"].tolist()
         assert state["tool"].fillna("-").tolist() == oracle["tool"].fillna("-").tolist()
 
-    def test_compact_noop_writes_no_ledger_entry(self, spark, changelog, tmp_path):
-        _, outdir, _ = changelog
-        store = str(tmp_path / "noop")
-        tgt = _mor(store)
-        rep = Replayer(spark, outdir, store, target=tgt)
-        rep.replay(files_per_batch=1)
+    def test_compact_noop_writes_no_ledger_entry(
+        self, spark, changelog, replayed, tmp_path
+    ):
+        """Once every chain is rewritten, a second compact is a no-op."""
+        rep, _ = _replayed(spark, changelog, replayed, str(tmp_path / "noop"))
+        rep.compact()
         n_entries = len(list(rep.ledger.entries()))
-        v = rep.compact(min_deltas=99)
+        v = rep.compact(min_deltas=1)
         assert v == rep.ledger.current_snapshot_version()
         assert len(list(rep.ledger.entries())) == n_entries
 
     def test_compact_requires_mor_target(self, spark, changelog, tmp_path):
+        """A sink that commits inside its own engine has no chains."""
         _, outdir, _ = changelog
-        store = str(tmp_path / "cowc")
         rep = Replayer(
-            spark, outdir, store,
-            target=BucketedParquetMergeTarget(store, TRANSCRIPTS, buckets=4),
+            spark, outdir, str(tmp_path / "ice"),
+            target=IcebergMergeTarget("cdc.db.t", TRANSCRIPTS),
         )
         with pytest.raises(TypeError, match="compact"):
             rep.compact()
@@ -361,6 +404,7 @@ class TestMaintenance:
         rep = Replayer(spark, outdir, store, target=tgt)
         rep.replay(files_per_batch=1)
         v = rep.ledger.last().snapshot_version
+        assert any(isinstance(e, dict) for e in tgt._load_manifest(v).values())
         v2 = tgt.rebucket(spark, 16, v)
         state = (
             tgt.read(spark, v2)
@@ -369,33 +413,37 @@ class TestMaintenance:
             .reset_index(drop=True)
         )
         assert state["text"].tolist() == oracle["text"].tolist()
-        assert all(n == 0 for n in tgt.delta_stats(v2).values())
+        assert all(isinstance(e, str) for e in tgt._load_manifest(v2).values())
         assert tgt._load_layout(v2) == (16, ("conv_id", "turn_idx"))
 
-    def test_gc_keeps_referenced_deltas(self, spark, changelog, tmp_path):
-        """GC must keep every snapshot dir a kept manifest references for
-        base OR delta data — early delta files live under early snapshot
-        dirs but stay live until compaction folds them."""
-        _, outdir, oracle = changelog
-        store = str(tmp_path / "gc")
-        tgt = _mor(store)
-        rep = Replayer(spark, outdir, store, target=tgt)
-        rep.replay(files_per_batch=1)
+    def test_gc_keeps_referenced_deltas(self, spark, changelog, replayed, tmp_path):
+        """GC must keep every dir and delete file a kept manifest
+        references — a chain's older dirs live under early snapshot dirs
+        but stay live until a rewrite or compact replaces them."""
+        oracle = changelog[2]
+        rep, tgt = _replayed(spark, changelog, replayed, str(tmp_path / "gc"))
         tgt.gc(keep_latest=1)
         state = _state_pdf(rep)
         assert state["text"].tolist() == oracle["text"].tolist()
 
-    def test_gc_drops_orphans_after_compact(self, spark, changelog, tmp_path):
-        _, outdir, oracle = changelog
+    def test_gc_drops_orphans_after_compact(
+        self, spark, changelog, replayed, tmp_path
+    ):
+        oracle = changelog[2]
         store = str(tmp_path / "gc2")
-        tgt = _mor(store)
-        rep = Replayer(spark, outdir, store, target=tgt)
-        rep.replay(files_per_batch=1)
+        rep, tgt = _replayed(spark, changelog, replayed, store)
         v = rep.ledger.last().snapshot_version
         v2 = tgt.compact(spark, v, min_deltas=1)
         tgt.gc(keep_latest=1)
-        snaps = sorted(os.listdir(os.path.join(store, "snapshots")))
-        assert snaps == [f"v{v2:08d}"]  # nothing else referenced anymore
+        root = os.path.join(store, "snapshots")
+        # only v2 and the snapshots its plain entries point into remain,
+        # and no delete file (no chain is left)
+        refs = {p.split(os.sep)[1] for p in tgt._manifest_refs(v2)}
+        assert set(os.listdir(root)) == refs | {f"v{v2:08d}"}
+        assert not any(
+            os.path.exists(os.path.join(root, n, "deletes.json"))
+            for n in os.listdir(root)
+        )
         state = (
             tgt.read(spark, v2)
             .orderBy("conv_id", "turn_idx")
@@ -404,12 +452,10 @@ class TestMaintenance:
         )
         assert state["text"].tolist() == oracle["text"].tolist()
 
-    def test_truncate_is_metadata_only_fence(self, spark, changelog, tmp_path):
-        _, outdir, _ = changelog
-        store = str(tmp_path / "trunc")
-        tgt = _mor(store)
-        rep = Replayer(spark, outdir, store, target=tgt)
-        rep.replay(files_per_batch=1)
+    def test_truncate_is_metadata_only_fence(
+        self, spark, changelog, replayed, tmp_path
+    ):
+        rep, tgt = _replayed(spark, changelog, replayed, str(tmp_path / "trunc"))
         v = rep.ledger.last().snapshot_version
         v2 = tgt.truncate(spark, v)
         snap = tgt.snapshot_path(v2)
@@ -419,79 +465,39 @@ class TestMaintenance:
 
 
 class TestAutoCompact:
-    def test_replay_bounds_chains(self, spark, changelog, tmp_path):
-        """Replayer(auto_compact=N): after every batch any chain at length
-        >= N folds, so the post-replay store never carries a chain longer
-        than N-1 deltas on top of the last fold; state still matches the
-        oracle and the ledger records the maintenance batches."""
+    def test_replay_bounds_chains(self, spark, changelog, tmp_path, monkeypatch):
+        """With the chain cap shrunk to 2, every merge rewrites a bucket
+        whose chain reached it: no entry's snapshot holds a longer chain,
+        buckets still append, and no maintenance batch is needed."""
+        monkeypatch.setattr(target_mod, "DEFAULT_AUTO_COMPACT", 2)
         _, outdir, oracle = changelog
         store = str(tmp_path / "auto")
-        tgt = _mor(store)
-        rep = Replayer(
-            spark, outdir, store, target=tgt, auto_compact=2,
-        )
+        rep = Replayer(spark, outdir, store, target=_mor(store))
         rep.replay(files_per_batch=1)
-        stats = tgt.delta_stats(rep.ledger.current_snapshot_version())
-        assert max(stats.values(), default=0) < 2
-        kinds = [
-            (e.metrics or {}).get("maintenance") for e in rep.ledger.entries()
-        ]
-        assert "compact" in kinds
+        entries = list(rep.ledger.entries())
+        assert max(e.metrics["max_chain"] for e in entries) <= 2
+        assert _appends(rep)[0] > 0
+        assert not any(e.metrics.get("maintenance") for e in entries)
         state = _state_pdf(rep)
         assert state["text"].tolist() == oracle["text"].tolist()
 
-    def test_requires_mor_target(self, spark, changelog, tmp_path):
-        _, outdir, _ = changelog
-        with pytest.raises(TypeError, match="auto_compact"):
-            Replayer(
-                spark, outdir, str(tmp_path / "cow"), auto_compact=2,
-            )
-
-    def test_default_on_for_mor_targets(self, spark, changelog, tmp_path):
-        """Auto-compact is opt-OUT on merge-on-read targets: an
-        unmaintained store's read fold grows with chain length
-        (BENCH.md), so the bounded-chain policy is the
-        default; auto_compact=0 disables, CoW targets stay None."""
-        from mysql_cdc_spark.pipeline.mor import DEFAULT_AUTO_COMPACT
-
-        _, outdir, _ = changelog
-        rep = Replayer(
-            spark, outdir, str(tmp_path / "d1"),
-            target=_mor(str(tmp_path / "d1")),
-        )
-        assert rep.auto_compact == DEFAULT_AUTO_COMPACT
-        rep0 = Replayer(
-            spark, outdir, str(tmp_path / "d2"),
-            target=_mor(str(tmp_path / "d2")), auto_compact=0,
-        )
-        assert rep0.auto_compact is None
-        cow = Replayer(spark, outdir, str(tmp_path / "d3"))
-        assert cow.auto_compact is None
-
-    def test_default_policy_bounds_replay_chains(
-        self, spark, changelog, tmp_path, monkeypatch
-    ):
-        """With no auto_compact argument at all, a one-file-per-batch
-        replay must keep every chain under the default threshold
-        (shrunk here so the fixture-sized corpus crosses it)."""
-        import mysql_cdc_spark.pipeline.mor as mor_mod
-
-        monkeypatch.setattr(mor_mod, "DEFAULT_AUTO_COMPACT", 2)
+    def test_default_policy_bounds_replay_chains(self, spark, changelog, tmp_path):
+        """With no maintenance call at all, a one-file-per-batch replay
+        keeps every chain within the default cap."""
         _, outdir, oracle = changelog
         store = str(tmp_path / "dflt")
-        tgt = _mor(store)
-        rep = Replayer(spark, outdir, store, target=tgt)
-        assert rep.auto_compact == 2
+        rep = Replayer(spark, outdir, store)
         rep.replay(files_per_batch=1)
-        stats = tgt.delta_stats(rep.ledger.current_snapshot_version())
-        assert max(stats.values(), default=0) < 2
+        entries = list(rep.ledger.entries())
+        assert max(e.metrics["max_chain"] for e in entries) <= DEFAULT_AUTO_COMPACT
+        assert _appends(rep)[0] > 0
         state = _state_pdf(rep)
         assert state["text"].tolist() == oracle["text"].tolist()
 
 
 class TestCrashSafety:
     def test_torn_snapshot_is_invisible_and_overwritten(self, spark, tmp_path):
-        """A crash after the delta write but before the manifest leaves a
+        """A crash after the data write but before the manifest leaves a
         snapshot dir without a manifest: readers never see it (the
         manifest is the internal commit point) and the retry's merge
         overwrites it cleanly."""
@@ -507,8 +513,8 @@ class TestCrashSafety:
         v = rep.ledger.current_snapshot_version()
         # simulate the torn v+1: data on disk, no manifest
         torn = tgt.snapshot_path(v + 1)
-        os.makedirs(os.path.join(torn, "delta", "_bucket=0"), exist_ok=True)
-        with open(os.path.join(torn, "delta", "_bucket=0", "junk"), "w") as f:
+        os.makedirs(os.path.join(torn, "data", "_bucket=0"), exist_ok=True)
+        with open(os.path.join(torn, "data", "_bucket=0", "junk"), "w") as f:
             f.write("torn")
         # reads at the committed version are unaffected
         assert tgt.read(spark, v).count() == 1
@@ -528,16 +534,16 @@ class TestCrashSafety:
         v2 = tgt.merge(spark, net, v)
         assert v2 == v + 1
         assert not os.path.exists(
-            os.path.join(torn, "delta", "_bucket=0", "junk")
+            os.path.join(torn, "data", "_bucket=0", "junk")
         )
         assert tgt.read(spark, v2).count() == 2
 
 
 class TestDerivedConsumers:
     """The read-side machinery built on snapshot diffs — change feed,
-    incremental views, flashback — must work identically over the
-    merge-on-read layout (its manifest diff marks a bucket changed when
-    a delta lands OR a compact repoints the base)."""
+    incremental views, flashback — must work identically over appended
+    chains (a manifest diff marks a bucket changed when its chain grows
+    OR a compact repoints it)."""
 
     def test_incremental_view_over_mor(self, spark, changelog, tmp_path):
         from mysql_cdc_spark.pipeline.ivm import MaterializedAggView
@@ -551,6 +557,7 @@ class TestDerivedConsumers:
         )
         rep = Replayer(spark, outdir, store, target=tgt, views=[view])
         rep.replay(files_per_batch=1)
+        assert _appends(rep)[0] > 0
         rep.compact(min_deltas=1)  # maintenance refresh must be a no-op fold
         got = (
             view.read(spark)
@@ -573,14 +580,10 @@ class TestDerivedConsumers:
         assert got["n_rows"].tolist() == expect["n_rows"].tolist()
         assert got["chars"].astype("int64").tolist() == expect["chars"].astype("int64").tolist()
 
-    def test_change_feed_over_mor(self, spark, changelog, tmp_path):
-        """read_changes between two committed batches on the MoR store
-        equals the brute-force diff of the two states."""
-        _, outdir, _ = changelog
-        store = str(tmp_path / "cdf")
-        tgt = _mor(store)
-        rep = Replayer(spark, outdir, store, target=tgt)
-        rep.replay(files_per_batch=1)
+    def test_change_feed_over_mor(self, spark, changelog, replayed, tmp_path):
+        """read_changes between two committed batches over appended
+        chains equals the brute-force diff of the two states."""
+        rep, tgt = _replayed(spark, changelog, replayed, str(tmp_path / "cdf"))
         entries = list(rep.ledger.entries())
         assert len(entries) >= 3
         b_from, b_to = entries[0].batch_id, entries[-1].batch_id
@@ -600,14 +603,10 @@ class TestDerivedConsumers:
         pd.testing.assert_frame_equal(a, b)
         assert len(a) > 0
 
-    def test_flashback_over_mor(self, spark, changelog, tmp_path):
-        """Point-in-time rewind on the MoR store: flashback to the first
-        batch's commit must equal the state that batch produced."""
-        _, outdir, _ = changelog
-        store = str(tmp_path / "fb")
-        tgt = _mor(store)
-        rep = Replayer(spark, outdir, store, target=tgt)
-        rep.replay(files_per_batch=1)
+    def test_flashback_over_mor(self, spark, changelog, replayed, tmp_path):
+        """Point-in-time rewind over appended chains: flashback to the
+        first batch's commit must equal the state that batch produced."""
+        rep, tgt = _replayed(spark, changelog, replayed, str(tmp_path / "fb"))
         first = next(iter(rep.ledger.entries()))
         want = (
             tgt.read(spark, first.snapshot_version)
@@ -624,24 +623,39 @@ class TestDerivedConsumers:
 
 class TestStoreConversion:
     def test_cow_store_continues_as_mor(self, spark, changelog, tmp_path):
-        """A store written by the copy-on-write target can be adopted by
-        the MoR target mid-history (the str-entry manifest conversion):
-        subsequent merges append deltas over the adopted base and the
-        fold treats the base as seq-0 — final state equals a pure-CoW
-        continuation."""
+        """A store of the retired merge-on-read family — stamp ``mor``,
+        compacted entries ``{"base": p, "deltas": []}`` — opens as the
+        default store, reads each entry as its base dir, continues to the
+        oracle and re-stamps on its first commit. An entry with equality
+        deltas raises, naming the retired layout."""
         _, outdir, oracle = changelog
         store = str(tmp_path / "conv")
-        cow_rep = Replayer(
-            spark, outdir, store,
-            target=BucketedParquetMergeTarget(store, TRANSCRIPTS, buckets=8),
-        )
+        cow_rep = Replayer(spark, outdir, store, target=_mor(store))
         files = cow_rep.pending_files()
         half = max(1, len(files) // 2)
         cow_rep.run_batch(files[:half])
-        # adopt: same store, merge-on-read target (explicit — autodetect
-        # keeps CoW for CoW-shaped manifests)
-        mor_rep = Replayer(spark, outdir, store, target=_mor(store))
+        v = cow_rep.ledger.current_snapshot_version()
+        manifest = os.path.join(store, "snapshots", f"v{v:08d}", "manifest.json")
+        with open(manifest) as f:
+            entries = json.load(f)
+        assert all(isinstance(e, str) for e in entries.values())
+        with open(manifest, "w") as f:
+            json.dump({b: {"base": e, "deltas": []} for b, e in entries.items()}, f)
+        with open(os.path.join(store, "target_family.json"), "w") as f:
+            json.dump({"family": "mor"}, f)
+
+        assert type(open_store(store, TRANSCRIPTS)) is BucketedParquetMergeTarget
+        mor_rep = Replayer(spark, outdir, store)
+        assert type(mor_rep.target) is BucketedParquetMergeTarget
         mor_rep.replay(files_per_batch=1)
         state = _state_pdf(mor_rep)
         assert state["text"].tolist() == oracle["text"].tolist()
         assert state["tool"].fillna("-").tolist() == oracle["tool"].fillna("-").tolist()
+        with open(os.path.join(store, "target_family.json")) as f:
+            assert json.load(f)["family"] == "bucketed_cow"
+
+        b = next(iter(entries))
+        with open(manifest, "w") as f:
+            json.dump({b: {"base": entries[b], "deltas": [entries[b]]}}, f)
+        with pytest.raises(ValueError, match="retired merge-on-read"):
+            mor_rep.target.read(spark, v)

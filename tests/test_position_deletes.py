@@ -29,7 +29,6 @@ from mysql_cdc_spark.fixtures import (
     generate_changelog,
     write_binlog_files,
 )
-from mysql_cdc_spark.pipeline.mor import MergeOnReadBucketedTarget
 from mysql_cdc_spark.pipeline.replay import Replayer
 from mysql_cdc_spark.pipeline.target import (
     POSITION_CAP,
@@ -190,8 +189,8 @@ def test_moved_store_reads(spark, replayed, tmp_path):
     """Delete files hold store-relative paths and a read keys on the
     relative tail of Spark's file URI: a store moved under a name with a
     space and an ``=`` (both change that URI) reads the same rows. Without
-    its family stamp the store still sniffs as copy-on-write, and the
-    merge-on-read family refuses its entries."""
+    its family stamp the store still sniffs as the default store, and
+    under the retired ``mor`` stamp it opens as that store too."""
     rep, entries, oracles, _, _ = replayed
     moved = str(tmp_path / "moved store=1")
     shutil.copytree(rep.target.store_dir, moved)
@@ -204,8 +203,12 @@ def test_moved_store_reads(spark, replayed, tmp_path):
     tgt = open_store(moved, TRANSCRIPTS)
     assert type(tgt) is BucketedParquetMergeTarget
     assert _rows(tgt.read(spark, v)) == oracles[v]
-    with pytest.raises(ValueError, match="position deletes"):
-        MergeOnReadBucketedTarget(moved, TRANSCRIPTS).read(spark, v)
+    # under the retired merge-on-read stamp it opens as the same store
+    with open(os.path.join(moved, "target_family.json"), "w") as f:
+        f.write('{"family": "mor"}')
+    tgt = open_store(moved, TRANSCRIPTS)
+    assert type(tgt) is BucketedParquetMergeTarget
+    assert _rows(tgt.read(spark, v)) == oracles[v]
 
 
 def test_read_at_the_position_cap(spark, tmp_path, record_property):

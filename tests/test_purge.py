@@ -25,10 +25,12 @@ from mysql_cdc_spark.fixtures import (
     generate_changelog,
     write_binlog_files,
 )
-from mysql_cdc_spark.pipeline.mor import MergeOnReadBucketedTarget
 from mysql_cdc_spark.pipeline.replay import Replayer
 from mysql_cdc_spark.pipeline.scd2 import Scd2HistoryStore
-from mysql_cdc_spark.pipeline.target import OrderedBucketedMergeTarget
+from mysql_cdc_spark.pipeline.target import (
+    BucketedParquetMergeTarget,
+    OrderedBucketedMergeTarget,
+)
 
 PURGED = ["conv-00003", "conv-00007"]
 PREDICATE = "conv_id IN ('conv-00003', 'conv-00007')"
@@ -153,16 +155,17 @@ class TestCopyOnWrite:
 
 class TestMergeOnRead:
     def test_purge_compacts_touched_buckets(self, spark, changelog, tmp_path):
-        """On the MoR sink the delete alone is just a delta — the purge
-        must force-compact the touched buckets so no retained base or
-        delta file keeps the rows."""
+        """Over appended chains a position delete would leave the rows in
+        a listed file — the purge must rewrite the touched buckets so no
+        retained data file keeps the rows."""
         _, outdir, oracle = changelog
         store = str(tmp_path / "mor")
-        rep = Replayer(
-            spark, outdir, store,
-            target=MergeOnReadBucketedTarget(store, buckets=8),
+        tgt = BucketedParquetMergeTarget(store, TRANSCRIPTS, buckets=4)
+        rep = Replayer(spark, outdir, store, target=tgt)
+        rep.replay(files_per_batch=1)
+        assert any(
+            (e.metrics or {}).get("buckets_appended") for e in rep.ledger.entries()
         )
-        rep.replay(files_per_batch=2)
         rep.purge_keys(PREDICATE)
         state = _state(rep)
         expected = _expected_after_purge(oracle)

@@ -288,6 +288,37 @@ def test_redrive_after_upstream_fix(spark, tmp_path):
     assert _state_pdf(rep2)["text"].tolist() == want["text"].tolist()
 
 
+def test_redrive_from_a_default_policy_replayer(spark, tmp_path):
+    """A store reopened with the default 'fail' policy re-drives its dead
+    letters from <store>/quarantine and clears them there: the second
+    redrive finds nothing and commits nothing."""
+    from mysql_cdc_spark.pipeline.target import OrderedBucketedMergeTarget
+
+    txns = _gen_txns()
+    t = _find_single_run_txn(txns)
+    d = str(tmp_path / "binlog")
+    write_binlog_files(txns, d, txns_per_file=25)
+    path, pos, elen = _locate_event(d, t.seq, _KIND_OF[t.ops[0].kind])
+    with open(path, "rb") as f:
+        clean = f.read()
+    _corrupt(path, pos, elen)
+    store = str(tmp_path / "store")
+    Replayer(
+        spark, d, store, target=OrderedBucketedMergeTarget(store, buckets=8),
+        on_decode_error="quarantine",
+    ).replay()
+    with open(path, "wb") as f:
+        f.write(clean)
+
+    rep = Replayer(spark, d, store, target=OrderedBucketedMergeTarget(store, buckets=8))
+    assert rep.read_quarantine().count() == 1
+    assert rep.redrive_quarantine() == len(t.ops)
+    n_entries = len(rep.ledger.entries())
+    assert rep.redrive_quarantine() == 0
+    assert len(rep.ledger.entries()) == n_entries
+    assert rep.read_quarantine().count() == 0
+
+
 def test_redrive_requires_ordered_target(spark, poisoned, tmp_path):
     rep = Replayer(
         spark, poisoned["dir_a"], str(tmp_path / "s"), salt_buckets=2,

@@ -3,9 +3,9 @@ encoding every family writes its store files in.
 
 A store must be REOPENED with the target family that wrote it; sniffing
 manifest value shapes / parquet schemas cannot distinguish every case
-(the canonical hole: a truncated merge-on-read store's empty ``{}``
-manifest looks exactly like copy-on-write). Each family stamps the store
-at commit time (last committing family wins — adoption re-stamps) and
+(the canonical hole: a truncated ordered store's empty ``{}`` manifest
+looks exactly like the plain store's). Each family stamps the store at
+commit time (last committing family wins — adoption re-stamps) and
 ``target.open_store`` — behind ``Replayer._detect_target`` and
 ``read_stream_state`` — dispatches on the stamp, falling back to the
 layout sniff only for pre-stamp stores.
@@ -23,10 +23,6 @@ from mysql_cdc_spark.fixtures import (
     apply_changelog_oracle,
     generate_changelog,
     write_binlog_files,
-)
-from mysql_cdc_spark.pipeline.mor import (
-    MergeOnReadBucketedTarget,
-    OrderedMergeOnReadTarget,
 )
 from mysql_cdc_spark.pipeline.replay import Replayer
 from mysql_cdc_spark.pipeline.target import (
@@ -58,90 +54,91 @@ def test_first_commit_stamps_family(spark, tmp_path):
     for cls, family in [
         (BucketedParquetMergeTarget, "bucketed_cow"),
         (OrderedBucketedMergeTarget, "ordered_bucketed_cow"),
-        (MergeOnReadBucketedTarget, "mor"),
-        (OrderedMergeOnReadTarget, "ordered_mor"),
     ]:
         store = str(tmp_path / family)
         tgt = cls(store, TRANSCRIPTS, buckets=4)
         tgt.merge(spark, _net(spark, [_row()]), 0)
         assert load_target_family(store) == family
         assert target_class_for_family(family) is cls
+    # the retired merge-on-read stamps open through the same two classes
+    assert target_class_for_family("mor") is BucketedParquetMergeTarget
+    assert target_class_for_family("ordered_mor") is OrderedBucketedMergeTarget
 
 
 def test_stamp_is_stable_for_same_family(spark, tmp_path):
     store = str(tmp_path / "st")
-    tgt = MergeOnReadBucketedTarget(store, TRANSCRIPTS, buckets=4)
+    tgt = BucketedParquetMergeTarget(store, TRANSCRIPTS, buckets=4)
     v = tgt.merge(spark, _net(spark, [_row()]), 0)
     tgt.merge(spark, _net(spark, [_row("u", 2)]), v)
-    assert load_target_family(store) == "mor"
+    assert load_target_family(store) == "bucketed_cow"
 
 
 def test_adoption_restamps_to_the_committing_family(spark, tmp_path):
-    """A CoW-started store ADOPTED by a merge-on-read target (the
-    documented str-entry manifest conversion) must re-stamp on the MoR
-    commit — last committing family owns the store — so a later resume
-    without explicit target= reopens it through the MoR loader (a stale
-    CoW stamp would read the dict-valued manifest as paths)."""
+    """A plain store ADOPTED by the ordered target (its rows read with
+    NULL order tuples, which any real row outranks) must re-stamp on the
+    ordered commit — last committing family owns the store — so a later
+    resume without explicit target= reopens it through the ordered
+    loader (a stale plain stamp would drop its tombstones)."""
     store = str(tmp_path / "st")
     cow = BucketedParquetMergeTarget(store, TRANSCRIPTS, buckets=4)
     v = cow.merge(spark, _net(spark, [_row("base", 1)]), 0)
     assert load_target_family(store) == "bucketed_cow"
-    mor = MergeOnReadBucketedTarget(store, TRANSCRIPTS, buckets=4)
-    v2 = mor.merge(spark, _net(spark, [_row("delta", 2)]), v)
-    assert load_target_family(store) == "mor"
+    ordered = OrderedBucketedMergeTarget(store, TRANSCRIPTS, buckets=4)
+    v2 = ordered.merge(spark, _net(spark, [_row("newer", 2)]), v)
+    assert load_target_family(store) == "ordered_bucketed_cow"
     picked = Replayer._detect_target(store, TRANSCRIPTS, spark)
-    assert type(picked) is MergeOnReadBucketedTarget
-    assert picked.read(spark, v2).toPandas()["text"].tolist() == ["delta"]
+    assert type(picked) is OrderedBucketedMergeTarget
+    assert picked.read(spark, v2).toPandas()["text"].tolist() == ["newer"]
 
 
 def test_truncated_mor_store_resumes_as_mor(spark, tmp_path):
-    """The sniffing hole the stamp closes: an empty {} MoR manifest is
-    indistinguishable from CoW by shape, so a truncated MoR store resumed
-    without explicit target= used to continue as copy-on-write, breaking
-    time travel over the earlier dict-manifest snapshots."""
+    """The sniffing hole the stamp closes: an empty {} manifest of the
+    ordered store is indistinguishable from the plain one's by shape, so
+    a truncated ordered store resumed without explicit target= would
+    continue as the plain store and read its tombstones as rows."""
     store = str(tmp_path / "st")
-    tgt = MergeOnReadBucketedTarget(store, TRANSCRIPTS, buckets=4)
+    tgt = OrderedBucketedMergeTarget(store, TRANSCRIPTS, buckets=4)
     v = tgt.merge(spark, _net(spark, [_row()]), 0)
     # metadata-only truncate: a fresh empty manifest commit
     tgt._write_meta(v + 1, {})
     with open(tgt._manifest_path(v + 1)) as f:
         assert json.load(f) == {}
     picked = Replayer._detect_target(store, TRANSCRIPTS, spark)
-    assert type(picked) is MergeOnReadBucketedTarget
+    assert type(picked) is OrderedBucketedMergeTarget
     # and the pre-truncate snapshot stays time-travel-readable
     assert picked.read(spark, v).count() == 1
 
 
 def test_detect_prefers_stamp_over_sniff(spark, tmp_path):
     store = str(tmp_path / "st")
-    tgt = OrderedMergeOnReadTarget(store, TRANSCRIPTS, buckets=4)
+    tgt = OrderedBucketedMergeTarget(store, TRANSCRIPTS, buckets=4)
     tgt.merge(spark, _net(spark, [_row()]), 0)
     picked = Replayer._detect_target(store, TRANSCRIPTS, spark)
-    assert type(picked) is OrderedMergeOnReadTarget
+    assert type(picked) is OrderedBucketedMergeTarget
 
 
 def test_legacy_store_without_stamp_still_sniffs(spark, tmp_path):
     """Stores written before stamping existed carry no marker — the
     layout sniff must still resolve them."""
     store = str(tmp_path / "st")
-    tgt = MergeOnReadBucketedTarget(store, TRANSCRIPTS, buckets=4)
+    tgt = OrderedBucketedMergeTarget(store, TRANSCRIPTS, buckets=4)
     tgt.merge(spark, _net(spark, [_row()]), 0)
     os.remove(os.path.join(store, "target_family.json"))
     picked = Replayer._detect_target(store, TRANSCRIPTS, spark)
-    assert type(picked) is MergeOnReadBucketedTarget
+    assert type(picked) is OrderedBucketedMergeTarget
 
 
 def test_read_stream_state_dispatches_on_stamp(spark, tmp_path):
     from mysql_cdc_spark.streaming.stream import read_stream_state
 
     store = str(tmp_path / "st")
-    tgt = OrderedMergeOnReadTarget(store, TRANSCRIPTS, buckets=4)
+    tgt = OrderedBucketedMergeTarget(store, TRANSCRIPTS, buckets=4)
     v = tgt.merge(spark, _net(spark, [_row("hello", 5)]), 0)
     # mirror the stream layout: snapshots under <store>/snapshots/vNNNNNNNN
     got = read_stream_state(spark, store)
     assert got.count() == 1
     assert got.toPandas()["text"].tolist() == ["hello"]
-    # truncate to an empty manifest: stamp keeps the MoR loader
+    # truncate to an empty manifest: stamp keeps the ordered loader
     tgt._write_meta(v + 1, {})
     assert read_stream_state(spark, store).count() == 0
 
@@ -234,17 +231,14 @@ NARROW = TableSpec(
     [
         BucketedParquetMergeTarget,
         OrderedBucketedMergeTarget,
-        MergeOnReadBucketedTarget,
-        OrderedMergeOnReadTarget,
     ],
 )
 def test_store_written_before_a_column_reads_through_the_wider_spec(
     spark, tmp_path, cls
 ):
     """Every family reads files written before ``tool`` existed through
-    its declared stored schema: the missing column reads as NULL, a
-    tombstone stays deleted, and a merge-on-read delta still outranks the
-    base it was written over."""
+    its declared stored schema: the missing column reads as NULL and a
+    tombstone stays deleted."""
     store = str(tmp_path / "st")
     narrow = cls(store, NARROW, buckets=4)
     narrow_net = NET_SCHEMA.replace("after_tool string, ", "")
@@ -256,8 +250,6 @@ def test_store_written_before_a_column_reads_through_the_wider_spec(
         (f"k{i}", 0, "insert", "user", f"t{i}", TS, 1, 10 + i, 0)
         for i in range(8)
     ], 0)
-    if hasattr(narrow, "compact"):  # narrow base files under the deltas
-        v = narrow.compact(spark, v)
     v = merge(narrow, narrow_net, [
         ("k1", 0, "update", "user", "t1b", TS, 2, 20, 0),
         ("k2", 0, "delete", None, None, None, 2, 21, 0),
@@ -349,24 +341,18 @@ def two_segments(tmp_path_factory):
     [
         BucketedParquetMergeTarget,
         OrderedBucketedMergeTarget,
-        MergeOnReadBucketedTarget,
     ],
 )
 def test_every_store_write_is_zstd_with_micros_ts(spark, two_segments, tmp_path, cls):
-    """A two-batch replay (base, then a delta on merge-on-read) and a
-    maintenance rewrite (``compact`` on merge-on-read, ``rebucket``
-    otherwise): every file under ``snapshots/`` is zstd with ``ts`` as
+    """A two-batch replay and a maintenance rewrite (``rebucket``):
+    every file under ``snapshots/`` is zstd with ``ts`` as
     INT64 TIMESTAMP_MICROS, and each ledger entry records the bytes and
     bucket dirs of the snapshot dirs it created."""
     outdir, oracle = two_segments
     store = str(tmp_path / "st")
     rep = Replayer(spark, outdir, store, target=cls(store, TRANSCRIPTS, buckets=4))
     assert len(rep.replay(files_per_batch=1).batches) == 2
-    if hasattr(rep.target, "compact"):
-        assert any(e["deltas"] for e in rep.target._load_manifest(2).values())
-        rep.compact()
-    else:
-        rep.rebucket(2)
+    rep.rebucket(2)
 
     got = rep.read_state().orderBy("conv_id", "turn_idx").toPandas()
     assert got["text"].tolist() == oracle["text"].tolist()
